@@ -39,9 +39,9 @@ def test_window_has_no_duplicates():
 
 
 def test_window_head_is_rotation_order():
-    # queries() is the driver-facing order (computed at access time, so
-    # it is independent of test-import order — REGISTRY's raw dict
-    # order is not guaranteed under the operator-module import cycle).
+    # queries() is the driver-facing order (computed at access time;
+    # REGISTRY's raw order follows whichever module a process imported
+    # first).
     head = list(queries())[:CERT_WINDOW]
     assert head == list(certification_window())
 

@@ -1,13 +1,13 @@
 """Every operator module must be importable as a process's FIRST import.
 
-The operator modules and ``plans/queries.py`` import each other; the
-registry's eager module-import block used to make queries.py the only
-safe entry point — ``import operators.similarity`` in a fresh process
-raised ImportError from a partially-initialized sibling.  The lazy
-registry (``plans/queries.py _LazyRegistry``) fixed that; these tests
-pin the property with real fresh interpreters, for the two modules at
-the extremes of the dependency order (the hub everyone imports from,
-and the leaf that imports from the most siblings).
+Operator modules register into ``plans/registry.py``, which imports no
+operator module, and ``plans/queries.py`` imports all of them.  An
+operator module that imported ``plans/queries.py`` would close an import
+cycle, and importing it first in a fresh process would raise ImportError
+from a partially-initialized sibling.  These tests pin the property
+with real fresh interpreters, for the two modules at the extremes of the
+dependency order (the hub everyone imports from, and the leaf that
+imports from the most siblings).
 """
 
 import subprocess

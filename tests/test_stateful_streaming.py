@@ -1,31 +1,9 @@
-"""applyInPandasWithState snapshot diff: two micro-batches through a
-file stream with a shared checkpoint — keys from batch 1 must come
-back "repeated" in batch 2, with state recovered from the checkpoint
-across separate query runs (the restart-safety the reference's
-in-memory list never had).
+"""Spark-native streaming dedup: ``dropDuplicatesWithinWatermark``
+suppresses a repeated key across micro-batches of separate query runs
+that share a checkpoint, with its state bounded by the watermark.
 """
 
 from __future__ import annotations
-
-import pandas as pd
-
-from transitdata_omm_cancellation_source_spark.streaming.stateful import (
-    run_available_now,
-)
-
-
-def _write_batch(spark, path: str, rows: list[tuple[str, int]]) -> None:
-    spark.createDataFrame(rows, "dvj_id string, ts_epoch_ms long").write.mode(
-        "append"
-    ).parquet(path)
-
-
-def _stream(spark, path: str):
-    return (
-        spark.readStream.schema("dvj_id string, ts_epoch_ms long")
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(path)
-    )
 
 
 def test_drop_duplicates_within_watermark_across_batches(spark, tmp_path):
@@ -76,31 +54,3 @@ def test_drop_duplicates_within_watermark_across_batches(spark, tmp_path):
     # watermark -> suppressed by recovered state; "c" is new
     write([("a", 3), ("c", 5)])
     assert run() == [("a", 0), ("b", 2), ("c", 5)]
-
-
-def test_two_batch_state_across_restarts(spark, tmp_path):
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    sink = str(tmp_path / "sink")
-
-    _write_batch(spark, src, [("a", 1), ("a", 2), ("b", 3)])
-    run_available_now(_stream(spark, src), ckpt, sink)
-    got1 = {
-        (r["dvj_id"], r["times_seen"]): r
-        for r in spark.read.parquet(sink).collect()
-    }
-    assert set(got1) == {("a", 1), ("b", 1)}
-    assert got1[("a", 1)]["is_new"] and got1[("a", 1)]["n_rows"] == 2
-    assert got1[("b", 1)]["is_new"] and got1[("b", 1)]["n_rows"] == 1
-
-    # second batch: "a" repeats, "c" is new; fresh query run, same
-    # checkpoint -> state restored from the state store
-    _write_batch(spark, src, [("a", 4), ("c", 5)])
-    run_available_now(_stream(spark, src), ckpt, sink)
-    got2 = {
-        (r["dvj_id"], r["times_seen"]): r
-        for r in spark.read.parquet(sink).collect()
-    }
-    assert set(got2) == {("a", 1), ("b", 1), ("a", 2), ("c", 1)}
-    assert not got2[("a", 2)]["is_new"] and got2[("a", 2)]["n_rows"] == 1
-    assert got2[("c", 1)]["is_new"]

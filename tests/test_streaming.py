@@ -99,6 +99,44 @@ def test_snapshot_store_versioning(spark, tmp_path):
     assert store.read(spark).count() == 2
 
 
+def test_torn_pointer_write_keeps_previous_version(spark, tmp_path, monkeypatch):
+    """A crash while LATEST is being written must not lose the pointer:
+    the next cycle would otherwise see no snapshot, count every row as
+    new and overwrite v1."""
+    import builtins
+
+    from transitdata_omm_cancellation_source_spark.streaming import poller
+
+    store = SnapshotStore(str(tmp_path / "snap"))
+    store.replace(spark.range(3).withColumnRenamed("id", "dvj_id"))
+    assert store.current_version() == 1
+
+    class _TornFile:
+        def __init__(self, fh):
+            self._fh = fh
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._fh.close()
+
+        def write(self, _data):
+            raise OSError("disk full")
+
+    def torn_open(path, mode="r", *args, **kwargs):
+        fh = builtins.open(path, mode, *args, **kwargs)
+        return _TornFile(fh) if "w" in mode else fh
+
+    monkeypatch.setattr(poller, "open", torn_open, raising=False)
+    with pytest.raises(OSError, match="disk full"):
+        store.replace(spark.range(2).withColumnRenamed("id", "dvj_id"))
+    monkeypatch.undo()
+
+    assert store.current_version() == 1
+    assert store.read(spark).count() == 3
+
+
 def test_poller_streaming_query(spark, tmp_path):
     """The scheduler loop as a real StreamingQuery: fires >=1 cycle."""
     load_tables(spark, SF_SMOKE)

@@ -107,10 +107,9 @@ def _views_current(spark: SparkSession, app_id: str, key: tuple) -> bool:
 def views_key(spark: SparkSession) -> tuple | None:
     """The cache key whose base views are currently registered for this
     session (None before the first ``load_tables``).  Downstream
-    plan-object memos (the OMM view registration, the cancellation
-    pipeline frame) fold this into THEIR keys so an sf_dir switch or a
-    source rewrite — anything that re-points the base views — evicts
-    them in the same breath.  Carries the same shadowing contract as
+    plan-object memos (the OMM view registration) fold this into THEIR
+    keys so an sf_dir switch or a source rewrite — anything that
+    re-points the base views — evicts them in the same breath.  Carries the same shadowing contract as
     ``_views_current``: a caller who shadows a view owns that name
     until it drops it; the key cannot see shadows."""
     return _VIEWS_REGISTERED.get(spark.sparkContext.applicationId)

@@ -1,13 +1,8 @@
 """Shared planted-duplicate corpus construction for the dedup and
 corpus-prep operator families.
 
-Lives under ``functions/`` (registry-free) so operator modules can
-share it without import cycles: operator modules import
-``plans.queries`` at module level for registration, so any helper
-imported BY two operator modules must not itself live in one of them
-(the module that happens to be imported first would still be
-partially initialized when the registry import chain loops back into
-it).
+Lives under ``functions/`` so the two operator families share it
+without one operator module importing the other.
 """
 
 from __future__ import annotations

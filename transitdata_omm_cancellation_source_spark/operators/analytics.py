@@ -26,8 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
-from ..plans.queries import QuerySpec, register
-from ..plans.queries import registered_query as _q
+from ..plans.registry import QuerySpec, register
+from ..plans.registry import registered_query as _q
 
 
 def _dec(col: str) -> F.Column:
@@ -703,9 +703,9 @@ def _upsert_merge(spark, t):
 
     Scale shape (100 TB): MERGE is ONE full-outer shuffle join on the
     key — both sides key-partitioned, no broadcast of the fact side;
-    with the day-partitioned layout (`sources/partitioned.py`) the
-    real-world version prunes the join to the partitions the change
-    batch touches (the standard MERGE + partition-pruning combo).
+    with a day-partitioned fact layout the real-world version prunes
+    the join to the partitions the change batch touches (the standard
+    MERGE + partition-pruning combo).
     """
     o = t["orders"]
     dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731

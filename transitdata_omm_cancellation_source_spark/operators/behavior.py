@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.queries import registered_query as _q
+from ..plans.registry import registered_query as _q
 
 _FUNNEL_WINDOW = "INTERVAL 7 DAYS"  # Spark spelling
 _FUNNEL_WINDOW_D = "INTERVAL 7 DAY"  # DuckDB spelling

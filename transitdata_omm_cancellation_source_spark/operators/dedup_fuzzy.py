@@ -35,24 +35,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: embedding-cosine near-dup threshold — defined BEFORE the registry
-#: import: semdedup.py imports it from here, and the registry import
-#: below re-enters this module through plans.queries' registration
-#: imports, so a later definition would break `import dedup_fuzzy` as
-#: the first module in a fresh interpreter (circular-import partial
-#: initialization).
-_COSINE_TAU = 0.98
-
-from ..caching import (  # noqa: E402
+from ..caching import (
     artifact_cache_key,
     persist_tracked,
     register_artifact_frame_cache,
     register_value_memo,
     replace_plan_artifact,
 )
-from ..functions import text as X  # noqa: E402
+from ..functions import text as X
 from ..observability import get_json_logger
-from ..plans.queries import registered_query as _q
+from ..plans.registry import REGISTRY
+from ..plans.registry import registered_query as _q
+
+#: embedding-cosine near-dup threshold (semdedup.py shares it)
+_COSINE_TAU = 0.98
 
 #: Session-artifact cache for the family's shared PERSISTED frames
 #: (word hashes, shingle sets, banded candidates, verified pairs) —
@@ -1448,8 +1444,6 @@ _EDELTA_MOD, _EDELTA_REM = 9, 4
 
 
 def _delta_embedding_oracle() -> str:
-    from ..plans.queries import REGISTRY
-
     cosine = REGISTRY["dedup_embedding_cosine"].oracle
     return f"""
     SELECT vec_a, vec_b, cosine FROM ({cosine})
@@ -1524,8 +1518,6 @@ def _cluster_oracle() -> str:
     # the pair graph IS the minhash query's output; DuckDB computes the
     # same components via recursive-CTE transitive closure (exact, and
     # cheap on the bounded near-dup graph).
-    from ..plans.queries import REGISTRY
-
     minhash = REGISTRY["dedup_minhash_lsh"].oracle
     return f"""
     WITH RECURSIVE pairs AS ({minhash}),

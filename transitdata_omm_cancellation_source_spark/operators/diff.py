@@ -15,22 +15,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def snapshot_new(cur: DataFrame, prev: DataFrame | None, key: str = "dvj_id") -> DataFrame:
-    """Rows of ``cur`` whose key was absent from the previous snapshot."""
-    if prev is None:
-        return cur
-    return cur.join(prev.select(key), key, "left_anti")
-
-
-def snapshot_repeated(
-    cur: DataFrame, prev: DataFrame | None, key: str = "dvj_id"
-) -> DataFrame:
-    """Rows of ``cur`` whose key already existed in the previous snapshot."""
-    if prev is None:
-        return cur.limit(0)
-    return cur.join(prev.select(key), key, "left_semi")
-
-
 def diff_counts(
     cur: DataFrame,
     prev: DataFrame | None,

@@ -83,7 +83,7 @@ from pyspark.sql import functions as F
 
 from ..caching import persist_tracked
 from ..caching import register_value_memo as _register_value_memo
-from ..plans.queries import registered_query as _q
+from ..plans.registry import registered_query as _q
 
 #: fixed power-iteration rounds and damping (85/100 as integers).
 PR_ROUNDS = 3

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
 from ..functions.text import HASH_MOD
-from ..plans.queries import registered_query as _q
+from ..plans.registry import registered_query as _q
 
 FRAME_STRIDE = 30
 

@@ -68,7 +68,7 @@ from pyspark.sql import functions as F
 from ..caching import register_value_memo as _register_value_memo
 from ..functions.hyperplane import DIM
 from ..observability import get_json_logger
-from ..plans.queries import registered_query as _q
+from ..plans.registry import registered_query as _q
 
 #: fixed squaring levels (unrollable in SQL, the LLOYD_ROUNDS
 #: discipline).  Effective power-iteration exponent is 2^PCA_SQUARINGS

@@ -52,7 +52,7 @@ from ..functions import text as X
 from ..functions.corpus import CORPUS_SQL as _CORPUS_D
 from ..functions.corpus import doc_words_frame as _doc_words_frame
 from ..functions.corpus import planted_corpus
-from ..plans.queries import registered_query as _q
+from ..plans.registry import registered_query as _q
 
 P = X.HASH_MOD
 

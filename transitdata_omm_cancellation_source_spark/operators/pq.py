@@ -70,7 +70,7 @@ from ..functions.hyperplane import (
     pow2_grid_cte,
     scaled_bucket_expr_spark,
 )
-from ..plans.queries import registered_query as _q
+from ..plans.registry import registered_query as _q
 from .similarity import QUERY_MOD, TOP_K, corpus_count, lsh_nbuckets
 
 #: M subspaces x DSUB dims each (M * DSUB = 64); K centroids per
@@ -427,7 +427,7 @@ def _shared_codebook(spark, vecs: DataFrame) -> DataFrame:
     training subtree, so encode and search stay shallow one-shuffle
     plans and training's stage overhead is paid once per session, not
     once per query.  This makes the PQ builders CONTRACTUALLY EAGER on
-    first use (see plans/queries.py QuerySpec).
+    first use (see plans/registry.py QuerySpec).
     """
     key = artifact_cache_key(spark, vecs)
     codebook = _CODEBOOK_CACHE.get(key)

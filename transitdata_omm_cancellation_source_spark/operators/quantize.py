@@ -31,7 +31,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.hyperplane import HYPERPLANES, MAX_PLANES, pow2_grid_cte
-from ..plans.queries import registered_query as _q
+from ..plans.registry import registered_query as _q
 from .similarity import QUERY_MOD, TOP_K, lsh_nbuckets
 
 

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as X
 from ..functions.wordhash_kernel import with_joined_polyhash
-from ..plans.queries import registered_query as _q
+from ..plans.registry import registered_query as _q
 
 _WORDS_D = X.WORDS_D  # DuckDB-side words("text"); single source in functions/text
 _NORM_TEXT_D = f"array_to_string({_WORDS_D}, ' ')"

@@ -58,7 +58,7 @@ work is Θ(N^1.5) — the same designed IVF balance point as
 list is ever materialized (the kernel emits task-local partial
 COUNTS; one slim-row sum assembles the gate), no driver action
 beyond the bounded Lloyd convergence counts inherited from the
-centroid builder (CONTRACTUALLY EAGER, see plans/queries.py
+centroid builder (CONTRACTUALLY EAGER, see plans/registry.py
 QuerySpec).
 
 The reference (a cancellation ETL) has no embedding surface; this is
@@ -70,7 +70,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..caching import persist_tracked
-from ..plans.queries import registered_query as _q
+from ..plans.registry import registered_query as _q
 from .dedup_fuzzy import _COSINE_TAU as SEMDEDUP_TAU  # one shared tau
 from .pairscan import micro_unit_col, pair_scan
 from .similarity import (

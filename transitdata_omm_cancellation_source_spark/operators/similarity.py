@@ -53,7 +53,8 @@ from ..functions.hyperplane import (  # registry-free shared primitives
     scaled_bucket_expr_spark,
     sqrt_pow2,
 )
-from ..plans.queries import registered_query as _q
+from ..plans.registry import REGISTRY
+from ..plans.registry import registered_query as _q
 
 TOP_K = 5
 QUERY_MOD = 50  # vec_id % 50 == 0 -> deterministic query set (~2% of corpus)
@@ -91,7 +92,7 @@ def corpus_count(spark, emb: DataFrame) -> int:
     """Corpus cardinality for quantizer sizing (cached per session/plan).
 
     Makes every consumer CONTRACTUALLY EAGER on first use (see
-    plans/queries.py QuerySpec): parquet count(*) is satisfied from
+    plans/registry.py QuerySpec): parquet count(*) is satisfied from
     row-group metadata, so this stays cheap at any corpus size.
     """
     key = artifact_cache_key(spark, emb)
@@ -745,7 +746,7 @@ def ivf_quantizer(spark, t) -> DataFrame:
     table is ≤ 2^IVF_MAX_BITS rows (bounded at any corpus size), so it
     follows the PQ-codebook artifact discipline: first use per
     (session, corpus plan) trains and collects; later uses replay the
-    local relation (CONTRACTUALLY EAGER, see plans/queries.py
+    local relation (CONTRACTUALLY EAGER, see plans/registry.py
     QuerySpec).  Since r12 the artifact also persists to disk under
     the warehouse dir (``artifacts.load_or_train``): a fresh session
     LOADS instead of retraining — the production train-once/serve-many
@@ -954,8 +955,6 @@ def _lloyd_oracle() -> str:
     summation-order-independent, so the engines cannot disagree
     however either one parallelizes.
     """
-    from ..plans.queries import REGISTRY
-
     cent0 = REGISTRY["embedding_label_centroid"].oracle
     dot_vc = _IDOT_D.format(a="v.uv", b="ct.ucv")
     dot_cc = _IDOT_D.format(a="ct.ucv", b="ct.ucv")

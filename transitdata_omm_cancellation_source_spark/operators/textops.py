@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as X
 from ..functions.corpus import doc_words_frame
-from ..plans.queries import registered_query as _q
+from ..plans.registry import registered_query as _q
 
 
 _WORDS_D = X.WORDS_D  # DuckDB-side words("text"); single source in functions/text

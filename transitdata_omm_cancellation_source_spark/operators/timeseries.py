@@ -44,8 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.queries import register
-from ..plans.queries import registered_query as _q
+from ..plans.registry import registered_query as _q
 
 
 @_q(

@@ -26,6 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import load_tables
 from ..functions import enums
 from ..functions.scalars import (
     DEFAULT_TIMEZONE,
@@ -38,6 +39,7 @@ from ..functions.scalars import (
 )
 from ..operators.dedup import priority_argmax
 from .omm_model import omm_ctes, register_omm_views
+from .registry import QuerySpec, register
 
 
 @dataclass(frozen=True)
@@ -216,19 +218,6 @@ def dedup_cancellations(df: DataFrame) -> DataFrame:
     )
 
 
-#: (appId, base-views key, params) -> the built pipeline frame.  A
-#: DataFrame is an immutable lazy PLAN, so serving the same object is
-#: catalog-metadata reuse (the load_tables discipline): every action
-#: still computes from the parquet inputs.  Constructing the 11-join
-#: plan costs ~0.5-0.6 s of py4j/Catalyst work warm, and seven
-#: registry builds per bench pass consume this pipeline (both
-#: flagships, S6, E3, and the two-cycle poll twice).  The base-views
-#: key folds in the catalog's source fingerprints, so an sf_dir
-#: switch or source rewrite is a miss; params is a frozen dataclass
-#: (hashable, value-keyed).
-_PIPELINE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def cancellation_pipeline(
     spark: SparkSession, params: QueryParams | None = None
 ) -> DataFrame:
@@ -236,34 +225,11 @@ def cancellation_pipeline(
 
     Requires base testdata views (catalog.load_tables) to be registered;
     registers the derived OMM views itself.  Returns the deduplicated,
-    send-ready record set (the input to A3 diff / S6 sink).  Memoized
-    per (session, base-views key, params) — see ``_PIPELINE_CACHE``.
+    send-ready record set (the input to A3 diff / S6 sink).
     """
-    from ..catalog import views_key
-
-    params = params or QueryParams()
-    key = (
-        spark.sparkContext.applicationId,
-        views_key(spark),
-        params,
-    )
-    df = _PIPELINE_CACHE.get(key)
-    if df is None:
-        register_omm_views(spark)
-        raw = raw_cancellations(spark, params)
-        df = dedup_cancellations(decode_cancellations(raw)).drop(
-            "dc_last_modified"
-        )
-        _PIPELINE_CACHE[key] = df
-        # bounded: one live entry per (session, params) — a re-pointed
-        # catalog supersedes the old plans
-        for stale in [
-            k
-            for k in _PIPELINE_CACHE
-            if (k[0], k[2]) == (key[0], key[2]) and k != key
-        ]:
-            del _PIPELINE_CACHE[stale]
-    return df
+    register_omm_views(spark)
+    raw = raw_cancellations(spark, params or QueryParams())
+    return dedup_cancellations(decode_cancellations(raw)).drop("dc_last_modified")
 
 
 # ---------------------------------------------------------------------------
@@ -360,3 +326,29 @@ SELECT deviation_case_id, route_id, direction_id, start_date, start_time,
        ts_epoch_ms
 FROM dedup WHERE rn = 1
 """
+
+
+def _flagship(mode: str):
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        load_tables(spark, sf_dir)
+        return cancellation_pipeline(spark, QueryParams(mode=mode))
+
+    return build
+
+
+register(
+    "cancellation_pipeline_now",
+    QuerySpec(
+        build=_flagship("NOW"),
+        oracle=cancellation_oracle_sql(QueryParams(mode="NOW")),
+        survey_ref="E1: J1-J10,F1-F2,F4-F7,P1-P13,S4-S5,A2",
+    ),
+)
+register(
+    "cancellation_pipeline_past",
+    QuerySpec(
+        build=_flagship("PAST"),
+        oracle=cancellation_oracle_sql(QueryParams(mode="PAST")),
+        survey_ref="E2/F3: incremental change capture",
+    ),
+)

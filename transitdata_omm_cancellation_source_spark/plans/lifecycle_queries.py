@@ -19,7 +19,7 @@ from ..streaming.windows import (
     windowed_event_counts,
 )
 from .cancellation import QueryParams, cancellation_oracle_sql, cancellation_pipeline
-from .queries import QuerySpec, register
+from .registry import QuerySpec, register
 
 
 def _build_s6(spark: SparkSession, sf_dir: str) -> DataFrame:

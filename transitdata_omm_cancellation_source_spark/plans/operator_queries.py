@@ -22,7 +22,7 @@ from ..functions.scalars import (
 )
 from ..operators.dedup import priority_argmax
 from ..operators.diff import diff_counts
-from .queries import registered_query as _q
+from .registry import registered_query as _q
 
 
 _CENTS = lambda c: F.round(F.col(c) * 100).cast("long")  # noqa: E731

@@ -11,207 +11,39 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable
-from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import load_tables
-from .cancellation import (
-    QueryParams,
-    cancellation_oracle_sql,
-    cancellation_pipeline,
+from .registry import REGISTRY
+
+# Importing a module registers its queries, so this sequence is the raw
+# registration order (the rotation's final tie-break).  The flagships
+# register first, from plans/cancellation.py.
+from . import cancellation, lifecycle_queries, operator_queries  # noqa: F401
+from ..operators import (  # noqa: F401
+    analytics,
+    dedup_fuzzy,
+    graph,
+    multimodal,
+    similarity,
+    textops,
+    behavior,
+    pipeline_prep,
+    retrieval,
+    sampling,
+    timeseries,
+    tokenizer,
+    pca,
+    pq,
+    quantize,
+    semdedup,
 )
-
-
-@dataclass(frozen=True)
-class QuerySpec:
-    """One registry entry.
-
-    ``build`` returns the query's result DataFrame.  Most builders are
-    pure plan constructors (no Spark jobs until the caller acts), but a
-    few are CONTRACTUALLY EAGER — they run bounded driver actions at
-    build time where the algorithm itself needs data-dependent
-    decisions before the final plan exists: ``dedup_ngram_jaccard``
-    (total-shingle-mass agg + capped hot-shingle collect),
-    ``knn_bruteforce_cosine`` (query-sample count for the broadcast
-    gate), ``dedup_cluster_canonical`` / ``kmeans_lloyd_centroids``
-    (one convergence count per iteration round),
-    ``embedding_pq_codes`` / ``knn_pq_adc`` / ``knn_pq_refine`` (first
-    use per session trains and collects the fixed 128-row PQ codebook
-    artifact), ``corpus_semdedup`` (first use collects the bounded
-    shared-quantizer artifact), ``corpus_word_freqitems`` (freqItems
-    materializes its one-row Misra-Gries summary), and the
-    corpus-scaled quantizer paths ``knn_lsh_hyperplane`` /
-    ``knn_lsh_multiprobe`` / ``knn_pq_adc`` / ``knn_pq_refine`` /
-    ``knn_ivf_kmeans`` / ``knn_ivfpq_adc`` / ``corpus_semdedup`` /
-    ``dedup_embedding_cosine`` (one cached metadata count per
-    session/corpus sizes the bucket/cell grid),
-    ``embedding_pca_top_component`` (bounded 4096-row local-relation
-    ferries between squaring levels).  Plan-only consumers
-    (EXPLAIN tooling, plan-shape tests) should expect those builders to
-    submit jobs; everything else stays lazy.
-    """
-
-    build: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # None => non-SQL-expressible, rows-only check
-    survey_ref: str = ""  # SURVEY.md §2 operator ids this query covers
-
-
-def _flagship(mode: str) -> Callable[[SparkSession, str], DataFrame]:
-    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        load_tables(spark, sf_dir)
-        return cancellation_pipeline(spark, QueryParams(mode=mode))
-
-    return build
-
-
-class _LazyRegistry(dict):
-    """Registry mapping that imports the operator modules on first READ.
-
-    The operator modules and this module import each other; when the
-    import block lived in this module's body, the FIRST import of any
-    operator module (root import) re-entered here and then tripped on
-    whichever sibling module was still partially initialized — e.g.
-    ``import operators.similarity`` as the first import of a fresh
-    process raised ImportError from ``dedup_fuzzy``'s oracle builder.
-    Deferring the block to first registry access makes this module's
-    body cheap (so ``registered_query`` is always importable) and every
-    operator module root-importable: registrations from the root module
-    land as its body executes, and the full sweep runs at the first
-    actual registry read.  Writes never trigger the sweep
-    (``register`` must work DURING it).
-    """
-
-    def __getitem__(self, key):
-        _ensure_registered()
-        return super().__getitem__(key)
-
-    def __iter__(self):
-        _ensure_registered()
-        return super().__iter__()
-
-    def __len__(self):
-        _ensure_registered()
-        return super().__len__()
-
-    def __contains__(self, key):
-        _ensure_registered()
-        return super().__contains__(key)
-
-    def get(self, key, default=None):
-        _ensure_registered()
-        return super().get(key, default)
-
-    def keys(self):
-        _ensure_registered()
-        return super().keys()
-
-    def values(self):
-        _ensure_registered()
-        return super().values()
-
-    def items(self):
-        _ensure_registered()
-        return super().items()
-
-
-REGISTRY: dict[str, QuerySpec] = _LazyRegistry(
-    {
-        "cancellation_pipeline_now": QuerySpec(
-            build=_flagship("NOW"),
-            oracle=cancellation_oracle_sql(QueryParams(mode="NOW")),
-            survey_ref="E1: J1-J10,F1-F2,F4-F7,P1-P13,S4-S5,A2",
-        ),
-        "cancellation_pipeline_past": QuerySpec(
-            build=_flagship("PAST"),
-            oracle=cancellation_oracle_sql(QueryParams(mode="PAST")),
-            survey_ref="E2/F3: incremental change capture",
-        ),
-    }
-)
-
-_REGISTERED = False
-
-
-def _ensure_registered() -> None:
-    """Import every operator module once (idempotent, re-entrant safe).
-
-    The flag is set BEFORE the imports so registrations that read the
-    registry mid-sweep (e.g. ``dedup_fuzzy``'s cluster oracle composing
-    the minhash oracle) do not recurse.  Import order is topological
-    over the modules' own cross-imports — see the inline notes.
-    """
-    global _REGISTERED
-    if _REGISTERED:
-        return
-    _REGISTERED = True
-    from . import lifecycle_queries  # noqa: F401
-    from . import operator_queries  # noqa: F401
-    from ..operators import analytics  # noqa: F401
-    from ..operators import dedup_fuzzy  # noqa: F401
-    from ..operators import graph  # noqa: F401
-    from ..operators import multimodal  # noqa: F401
-    from ..operators import similarity  # noqa: F401
-    from ..operators import textops  # noqa: F401
-
-    # pipeline_prep composes textops' language-ID oracle, so it must
-    # import after textops.
-    from ..operators import behavior  # noqa: F401
-    from ..operators import pipeline_prep  # noqa: F401
-    from ..operators import retrieval  # noqa: F401
-    from ..operators import sampling  # noqa: F401
-    from ..operators import timeseries  # noqa: F401
-    from ..operators import tokenizer  # noqa: F401
-
-    # quantize reuses similarity's QUERY_MOD/TOP_K and the Lloyd oracle
-    # composes embedding_label_centroid's, so both import after
-    # similarity; pq reuses the same constants plus the hyperplane
-    # bucket primitives.
-    from ..operators import pca  # noqa: F401
-    from ..operators import pq  # noqa: F401
-    from ..operators import quantize  # noqa: F401
-
-    # semdedup composes similarity's ivf_assign_cte / ivf_quantizer and
-    # dedup_fuzzy's shared tau, so it imports after both.
-    from ..operators import semdedup  # noqa: F401
-
-
-def register(name: str, spec: QuerySpec) -> None:
-    dict.__setitem__(REGISTRY, name, spec)
-
-
-def registered_query(name: str, survey_ref: str, oracle: str | None):
-    """Decorator: register ``fn(spark, tables) -> DataFrame`` under name.
-
-    The shared registration shim every operator module aliases as
-    ``_q``: wraps a table-level builder in a ``(spark, sf_dir)`` loader
-    so the registry callable matches the driver contract.
-    """
-
-    def deco(fn):
-        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from ..catalog import load_tables  # deferred: catalog-free import
-
-            tables = load_tables(spark, sf_dir)
-            return fn(spark, tables)
-
-        register(name, QuerySpec(build=build, oracle=oracle, survey_ref=survey_ref))
-        return fn
-
-    return deco
 
 
 def _ordered_names() -> list[str]:
-    """Registry names in certification-window order.
-
-    Computed at ACCESS time, not import time: the operator modules and
-    this module import each other, so a consumer that imports an
-    operator module first (e.g. a unit test) runs the registrations
-    after the import-time reorder.  Deriving the order here makes the
-    driver-facing ``queries()`` / ``oracle_sql()`` sequence independent
-    of which module happened to be imported first.
-    """
+    """Registry names in certification-window order: the window first,
+    then every other name in registration order."""
     window = [n for n in certification_window() if n in REGISTRY]
     seen = set(window)
     return window + [n for n in REGISTRY if n not in seen]
@@ -335,53 +167,8 @@ def _rotation_order(names: list[str], history: dict[str, list[int]]) -> list[str
 #: the tuple in the next round once CORRECTNESS_r{N}.json has their
 #: green rows (the staleness order then resumes normally).
 _RECERTIFY: tuple[str, ...] = (
-    # (r15 tuple cleared per the contract: all nine entries got green
-    # rows in CORRECTNESS_r15.)
-    # Round-15 rewrote ~29 query paths but the r15 oracle sample only
-    # covered 13 of them; the 16 below shipped with builder-side
-    # evidence only (bit-exact pins + full 110/110 plain-session
-    # drives) and still lack a DRIVER-green row on their rewritten
-    # plans.  r16 additionally touches several of them again (shared
-    # tokenize-frame kernel, ngram verify-join payload), so they stay
-    # pinned until CORRECTNESS_r16 shows their green rows:
-    "embedding_pca_top_component",   # r15 §2/§6/§13: one-plan rewrite + Arrow moment kernel
-    "parts_copurchase_pagerank",     # r15 §3/§7: inline mirror + collect_set edge build
-    "corpus_boilerplate_prune",      # r15 §4/§15: array-side rebuild + shared tokenize frame
-    "corpus_substring_dedup",        # r15 §4/§15: same pair
-    "lineitem_basket_pairs",         # r15 §11: array-side pair generation (4 -> 0 joins)
-    "embedding_pq_codes",            # r15 §17: shared packed code assignment
-    "knn_pq_adc",                    # r15 §17
-    "knn_pq_refine",                 # r15 §17
-    "text_bm25_search",              # r15 §16: shared tokenize frame
-    "text_tfidf_topk",               # r15 §16
-    "text_fingerprint",              # r15 §16
-    "text_language_id",              # r15 §16
-    "docs_keyword_search",           # r15 §16
-    "docs_hybrid_rrf_search",        # r15 §16
-    "s6_keyed_message_encode",       # r15 §14: pipeline-frame/OMM-view memoization
-    "a3_stateful_two_cycle_poll",    # r15 §14: sinkless poll cycle
-    # round-16 executed-plan changes — the per-word char fold moved
-    # from the interpreted SQL lambda to the Arrow kernel
-    # (functions/wordhash_kernel.py), so every consumer of the shared
-    # tokenize frame, the dedup family's word-hash frame, and the
-    # content-hash samplers executes a new plan (bit-identical values,
-    # pinned in tests/test_wordhash_kernel.py):
-    "text_repetition_score",         # r16: doc_words_frame kernel build
-    "text_bigram_lm_score",          # r16: doc_words_frame kernel build
-    "corpus_bpe_pair_counts",        # r16: doc_words_frame kernel build
-    "corpus_bigram_pmi",             # r16: doc_words_frame kernel build
-    "corpus_word_freqitems",         # r16: doc_words_frame kernel build
-    "corpus_decontaminate",          # r16: shingles now from the shared frame
-    "dedup_ngram_jaccard",           # r16: _wh_of kernel (+ verify-join work)
-    "dedup_minhash_lsh",             # r16: _wh_of kernel
-    "dedup_edit_distance",           # r16: _wh_of kernel
-    "dedup_cluster_canonical",       # r16: _wh_of kernel
-    "dedup_simhash",                 # r16: _wh_of kernel
-    "dedup_delta_batch",             # r16: _wh_of kernel (standing index build)
-    "dedup_stream_incremental",      # r16: _wh_of kernel (per-batch features)
-    "corpus_mixture_sample",         # r16: joined-polyhash kernel
-    "corpus_stratified_split",       # r16: joined-polyhash kernel
-    "corpus_hash_split",             # r16: joined-polyhash kernel
+    # (r16 tuple cleared per the contract: all 32 entries got green
+    # rows in CORRECTNESS_r16.)
 )
 
 
@@ -397,11 +184,3 @@ def certification_window() -> tuple[str, ...]:
     )
     return tuple((flagships + recert + rest)[:CERT_WINDOW])
 
-
-# No import-time reorder of REGISTRY itself: under the operator-module
-# import cycle, registrations can land after this module body runs, so
-# an import-time mutation is unreliable by construction.  The ordering
-# has ONE source of truth — ``_ordered_names()`` — applied at access
-# time by ``queries()`` / ``oracle_sql()``; consumers that need the
-# driver-facing order must go through those accessors, never iterate
-# the raw dict.

@@ -96,7 +96,8 @@ def get_spark(
     # there).  Disabling the madvise is the structural fix the r13
     # small-pool budget only mitigated: the same sf25 pair-scan run
     # measured cold 79.9 s -> 19.3 s and warm 21.7 s -> 9.7 s, with
-    # machine-wide sys CPU down 47x (scripts/profile_pairscan_stacks).
+    # machine-wide sys CPU down 47x (kernel-stack sampler
+    # scripts/profile_pairscan_stacks.py, added in commit f9c9f5c).
     # 4 KB faults also make per-page cost ~the hypervisor's base fault
     # latency instead of 2 MB of host zeroing under steal.  TLB wins
     # from hugepages never showed on these streamed Arrow-batch

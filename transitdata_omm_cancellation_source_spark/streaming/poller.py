@@ -40,11 +40,11 @@ from .messages import encode_messages
 class SnapshotStore:
     """Versioned parquet store for the cross-poll snapshot (A3 state).
 
-    Writes go to a fresh ``v{n}`` directory, then the ``LATEST``
-    pointer flips — a reader never observes a half-written snapshot,
-    and the previous version stays readable while the new one writes
-    (the same read-then-replace cycle the reference does in memory at
-    ``OmmCancellationHandler.java:225``).
+    Writes go to a fresh ``v{n}`` directory, then a new ``LATEST``
+    pointer is renamed into place — a reader never observes a
+    half-written snapshot or pointer, and the previous version stays
+    readable while the new one writes (the same read-then-replace cycle
+    the reference does in memory at ``OmmCancellationHandler.java:225``).
     """
 
     def __init__(self, path: str):
@@ -70,8 +70,11 @@ class SnapshotStore:
     def replace(self, df: DataFrame) -> None:
         v = (self.current_version() or 0) + 1
         df.write.mode("overwrite").parquet(os.path.join(self.path, f"v{v}"))
-        with open(self._pointer(), "w") as fh:
+        # write-then-rename: a torn write leaves the old pointer intact
+        tmp = self._pointer() + ".tmp"
+        with open(tmp, "w") as fh:
             fh.write(str(v))
+        os.replace(tmp, self._pointer())
         stale = os.path.join(self.path, f"v{v - 2}")
         if os.path.isdir(stale):  # keep current + previous, prune older
             shutil.rmtree(stale, ignore_errors=True)
