@@ -346,7 +346,7 @@ def main() -> None:
     #
     # PASS-INDEPENDENCE BOUNDARY (r15 verdict #4 — stated precisely):
     # release_tracked() between passes unpersists every tracked FRAME
-    # and clears the frame caches, so in-session shared subtrees
+    # and drops the session memo's frame entries, so in-session shared subtrees
     # (tokenize frames, pair frames, PQ assignments) are rebuilt and
     # paid inside every pass.  Two sanctioned tiers survive passes —
     # and sessions — by design:
@@ -357,10 +357,10 @@ def main() -> None:
     #    built is reported machine-readably below
     #    (``disk_artifacts_served``), so a warm-vs-cold run is always
     #    distinguishable from the JSON alone.
-    #  - bounded VALUE memos (caching.register_value_memo: hot-shingle
-    #    order, pass counts, corpus count, max|u|) — plan parameters /
-    #    trained scalars, no executor memory; cleared only by
-    #    caching.clear_value_memos().
+    #  - the VALUE entries of caching.memo (trained codebook and
+    #    quantizer, corpus count, max|u|, pagerank pass count) — plan
+    #    parameters / trained artifacts, no executor memory; cleared
+    #    only by caching.clear_value_memos().
     #
     # GATED ON THE GEMM PROBE (r14 verdict #3): each pass starts only
     # after a bounded wait for delivered compute above the floor, and

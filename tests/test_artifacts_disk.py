@@ -23,7 +23,7 @@ import sys
 
 import pytest
 
-from transitdata_omm_cancellation_source_spark import artifacts
+from transitdata_omm_cancellation_source_spark import artifacts, caching
 from transitdata_omm_cancellation_source_spark.catalog import load_tables
 from transitdata_omm_cancellation_source_spark.operators import pq
 from transitdata_omm_cancellation_source_spark.operators import similarity as sim
@@ -48,8 +48,7 @@ def _codebook_rows(spark, t):
 @pytest.fixture()
 def artifact_dir(spark, tmp_path, monkeypatch):
     spark.conf.set(artifacts.ARTIFACT_DIR_CONF, str(tmp_path))
-    monkeypatch.setattr(sim, "_CENTROID_ARTIFACT_CACHE", {})
-    monkeypatch.setattr(pq, "_CODEBOOK_CACHE", {})
+    monkeypatch.setattr(caching, "_MEMO", {})
     yield tmp_path
     spark.conf.unset(artifacts.ARTIFACT_DIR_CONF)
 
@@ -77,9 +76,8 @@ def test_load_without_train_bit_identity_in_session(
         (digest_dir,) = (artifact_dir / name).iterdir()
         assert (digest_dir / "_SUCCESS").is_file()
 
-    # second "session": memory caches cleared, trainers forbidden
-    monkeypatch.setattr(sim, "_CENTROID_ARTIFACT_CACHE", {})
-    monkeypatch.setattr(pq, "_CODEBOOK_CACHE", {})
+    # second "session": session memo cleared, trainers forbidden
+    monkeypatch.setattr(caching, "_MEMO", {})
     _forbid_training(monkeypatch)
     assert _quantizer_rows(spark, t) == cv1
     assert _codebook_rows(spark, t) == cb1

@@ -190,46 +190,3 @@ def test_headline_set_always_fits_tail_budget():
     # (2000 chars INCLUDING the trailing newline).
     assert bench.TAIL_BUDGET + 1 <= 2000
     assert json.loads(line)["queries"]  # round-trips
-
-
-def test_value_memo_registry_survives_release_and_clears_explicitly():
-    from transitdata_omm_cancellation_source_spark import caching
-
-    memo = caching.register_value_memo({})
-    try:
-        memo["k"] = 42
-        caching.release_tracked()
-        assert memo == {"k": 42}, "value memos must survive release_tracked"
-        caching.clear_value_memos()
-        assert memo == {}
-    finally:
-        # remove by IDENTITY: list.remove compares by ==, and two empty
-        # dicts are equal — it would silently drop a production memo.
-        caching._VALUE_MEMOS[:] = [
-            c for c in caching._VALUE_MEMOS if c is not memo
-        ]
-
-
-def test_known_value_memos_are_registered():
-    """The documented exclusion list (r15 verdict #4): every known
-    survive-release value memo is registered so clear_value_memos()
-    actually reaches it."""
-    from transitdata_omm_cancellation_source_spark import caching
-    from transitdata_omm_cancellation_source_spark.operators import (
-        dedup_fuzzy,
-        graph,
-        pca,
-        pq,
-        similarity,
-    )
-
-    registered = [id(c) for c in caching._VALUE_MEMOS]
-    for memo in (
-        dedup_fuzzy._ESTIMATE_MEMO,
-        graph._PASS_MEMO,
-        pca._MAXU_CACHE,
-        pq._CODEBOOK_CACHE,
-        similarity._COUNT_CACHE,
-        similarity._CENTROID_ARTIFACT_CACHE,
-    ):
-        assert id(memo) in registered

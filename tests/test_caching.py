@@ -1,7 +1,10 @@
 """Tracked-persist bookkeeping: persisted shared subtrees get a
-deterministic release point instead of relying on LRU eviction."""
+deterministic release point instead of relying on LRU eviction; the
+session memo keys, evicts and releases its entries by one policy."""
 
 from __future__ import annotations
+
+import pytest
 
 from transitdata_omm_cancellation_source_spark import caching
 from transitdata_omm_cancellation_source_spark.plans.queries import REGISTRY
@@ -48,16 +51,65 @@ def test_artifact_cache_key_is_content_sensitive(spark, tmp_path):
     assert k2 != k1
 
 
-def test_replace_plan_artifact_evicts_superseded_entries():
-    from transitdata_omm_cancellation_source_spark.caching import (
-        replace_plan_artifact,
-    )
+@pytest.fixture()
+def fresh_memo(monkeypatch):
+    """An empty session memo for the test; production entries stay."""
+    monkeypatch.setattr(caching, "_MEMO", {})
+    return caching
 
-    cache: dict = {}
-    k_old = ("app", 1, (("f", 10, 100),))
-    k_new = ("app", 1, (("f", 12, 200),))  # same plan, rewritten data
-    k_other = ("app", 2, (("g", 1, 1),))   # different plan — untouched
-    replace_plan_artifact(cache, k_old, "old")
-    replace_plan_artifact(cache, k_other, "x")
-    replace_plan_artifact(cache, k_new, "new")
-    assert cache == {k_new: "new", k_other: "x"}
+
+def test_memo_rewrite_is_a_miss_that_evicts_the_old_entry(
+    spark, tmp_path, fresh_memo
+):
+    p = str(tmp_path / "vecs")
+    spark.range(5).write.parquet(p)
+    old = spark.read.parquet(p)
+    other = spark.range(9)  # a different plan: the rewrite leaves it alone
+    assert caching.memo("n", old, old.count) == 5
+    assert caching.memo("n", other, other.count) == 9
+    assert caching.memo("n", spark.read.parquet(p), None) == 5  # a hit
+
+    # rewriting the files behind the SAME path is a miss, and storing
+    # the new result evicts the superseded entry for that plan
+    spark.range(7).write.mode("overwrite").parquet(p)
+    new = spark.read.parquet(p)
+    assert caching.memo("n", new, None) is None
+    assert caching.memo("n", new, new.count) == 7
+    assert len(caching._MEMO) == 2
+    assert caching.memo("n", other, None) == 9
+
+
+def test_memo_values_survive_release_frames_do_not(spark, fresh_memo):
+    src = spark.range(3)
+    assert caching.memo("v", src, lambda: 42) == 42
+    frame = caching.memo("f", src, lambda: src.selectExpr("id * 2 AS x"), frame=True)
+    assert frame.storageLevel.useMemory or frame.storageLevel.useDisk
+    assert caching.memo("f", src, None) is frame
+    caching.release_tracked()
+    assert caching.memo("v", src, None) == 42, "values survive release_tracked"
+    assert caching.memo("f", src, None) is None, "frames do not"
+    caching.clear_value_memos()
+    assert caching._MEMO == {}
+
+
+def test_memo_keyed_on_persisted_file_backed_frame_computes_once(
+    spark, tmp_path, fresh_memo
+):
+    """A persisted frame reports no input files, so a key built from
+    input fingerprints alone never hit on it; the plan hash does."""
+    p = str(tmp_path / "docs")
+    spark.range(20).write.parquet(p)
+    sh = caching.persist_tracked(spark.read.parquet(p).selectExpr("id AS doc_id"))
+    sh.count()
+    calls = []
+
+    def estimate():
+        calls.append(1)
+        return 3
+
+    try:
+        assert caching.memo("estimate", sh, estimate) == 3
+        assert caching.memo("estimate", sh, estimate) == 3
+        assert calls == [1]
+    finally:
+        caching.release_tracked()

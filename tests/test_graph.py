@@ -4,6 +4,7 @@ integer micro-unit fixed point, hub dominance, and tie-break order.
 
 from __future__ import annotations
 
+from transitdata_omm_cancellation_source_spark.operators import graph
 from transitdata_omm_cancellation_source_spark.operators.graph import _pagerank
 
 
@@ -36,17 +37,13 @@ def test_hub_accumulates_rank_with_exact_integer_values(spark):
     ]
 
 
-def test_bounded_scratch_passes_are_bit_identical(spark):
+def test_bounded_scratch_passes_are_bit_identical(spark, monkeypatch):
     """K-pass edge build == 1-pass, bit-for-bit (pass k aggregates the
     FULL weight of every pair whose dst is in range k, and a pair's
     dst lives in exactly one range), including the checkpointed
     supersteps the scratch mode adds.  Alongside the ngram pin in
     tests/test_ngram_passes.py."""
     import numpy as np
-
-    from transitdata_omm_cancellation_source_spark.operators.graph import (
-        _PR_PASSES_CONF,
-    )
 
     rng = np.random.default_rng(7)
     rows = [
@@ -56,14 +53,11 @@ def test_bounded_scratch_passes_are_bit_identical(spark):
     ]
     t = {"lineitem": _li(spark, rows)}
     results = []
-    for k in ("1", "3", "0"):  # forced single, forced K, estimator
-        spark.conf.set(_PR_PASSES_CONF, k)
-        try:
-            results.append(
-                sorted(map(tuple, _pagerank(spark, t).collect()))
-            )
-        finally:
-            spark.conf.unset(_PR_PASSES_CONF)
+    for k in (1, 3):  # forced single, forced K
+        with monkeypatch.context() as m:
+            m.setattr(graph, "_known_pass_count", lambda spark, li: k)
+            results.append(sorted(map(tuple, _pagerank(spark, t).collect())))
+    results.append(sorted(map(tuple, _pagerank(spark, t).collect())))  # estimator
     assert results[0] == results[1] == results[2]
     assert len(results[0]) > 10  # non-vacuous
 
@@ -72,7 +66,6 @@ def test_pagerank_pass_count_estimator_and_conf_validation(spark):
     import pytest
 
     from transitdata_omm_cancellation_source_spark.operators.graph import (
-        _PR_PASSES_CONF,
         _PR_SCRATCH_GB_CONF,
         _PR_SPILL_BYTES_PER_PAIR,
         _pagerank_pass_count,
@@ -81,29 +74,19 @@ def test_pagerank_pass_count_estimator_and_conf_validation(spark):
     # 4 orders x 3 parts = 3 pairs each -> 12 pair rows
     rows = [(o, p) for o in range(4) for p in (1, 2, 3)]
     items = _li(spark, rows)
-    assert _pagerank_pass_count(spark, items) == 1  # default budget
+    assert _pagerank_pass_count(spark, items, items) == 1  # default budget
     tiny_gb = 6 * _PR_SPILL_BYTES_PER_PAIR / 2**30  # budget for 6 rows
     spark.conf.set(_PR_SCRATCH_GB_CONF, str(tiny_gb))
     try:
-        assert _pagerank_pass_count(spark, items) == 2
-        spark.conf.set(_PR_PASSES_CONF, "5")
-        assert _pagerank_pass_count(spark, items) == 5  # forced wins
-        spark.conf.set(_PR_PASSES_CONF, "zap")
-        with pytest.raises(ValueError, match="integer pass count"):
-            _pagerank_pass_count(spark, items)
-        spark.conf.unset(_PR_PASSES_CONF)
+        assert _pagerank_pass_count(spark, items, items) == 2
         spark.conf.set(_PR_SCRATCH_GB_CONF, "-1")
         with pytest.raises(ValueError, match="positive"):
-            _pagerank_pass_count(spark, items)
+            _pagerank_pass_count(spark, items, items)
         spark.conf.set(_PR_SCRATCH_GB_CONF, "wat")
         with pytest.raises(ValueError, match="GiB"):
-            _pagerank_pass_count(spark, items)
+            _pagerank_pass_count(spark, items, items)
     finally:
-        for key in (_PR_PASSES_CONF, _PR_SCRATCH_GB_CONF):
-            try:
-                spark.conf.unset(key)
-            except Exception:
-                pass
+        spark.conf.unset(_PR_SCRATCH_GB_CONF)
 
 
 def test_broadcast_guard_raises_past_budget_and_validates_conf(spark):
@@ -135,38 +118,27 @@ def test_broadcast_guard_raises_past_budget_and_validates_conf(spark):
         spark.conf.unset(_PR_BCAST_GB_CONF)
 
 
-def test_known_pass_count_skips_the_proxy_job(spark):
-    """r13 ADVICE: a forced conf or memo hit must answer without any
-    Spark job — repeated builds were paying the estimator's fact count
-    the memo existed to avoid."""
+def test_known_pass_count_skips_the_proxy_job(spark, tmp_path, monkeypatch):
+    """r13 ADVICE: after one build, the pass count must answer from the
+    memo without any Spark job — repeated builds were paying the
+    estimator's fact count the memo existed to avoid."""
+    from transitdata_omm_cancellation_source_spark import caching
     from transitdata_omm_cancellation_source_spark.operators.graph import (
-        _PASS_MEMO,
-        _PR_PASSES_CONF,
         _known_pass_count,
-        _pass_memo_key,
     )
 
-    items = _li(spark, [(1, 10), (1, 20)])
-    # in-memory frame: no fingerprints -> no memo key -> unknown
-    assert _pass_memo_key(spark, items) is None
-    assert _known_pass_count(spark, items) is None
-    spark.conf.set(_PR_PASSES_CONF, "4")
-    try:
-        assert _known_pass_count(spark, items) == 4
-    finally:
-        spark.conf.unset(_PR_PASSES_CONF)
-    # a file-backed frame memoizes: second lookup answers from the dict
-    import pathlib
-    import tempfile
+    monkeypatch.setattr(caching, "_MEMO", {})
+    path = str(tmp_path / "li.parquet")
+    _li(spark, [(1, 10), (1, 20)]).write.parquet(path)
+    t = {"lineitem": spark.read.parquet(path)}
+    assert _known_pass_count(spark, t["lineitem"]) is None  # nothing built
+    _pagerank(spark, t).collect()
 
-    with tempfile.TemporaryDirectory() as td:
-        path = str(pathlib.Path(td) / "li.parquet")
-        items.write.parquet(path)
-        fitems = spark.read.parquet(path)
-        key = _pass_memo_key(spark, fitems)
-        assert key is not None
-        _PASS_MEMO[key] = 7
-        try:
-            assert _known_pass_count(spark, fitems) == 7
-        finally:
-            _PASS_MEMO.pop(key, None)
+    again = spark.read.parquet(path)  # schema inference may run a job
+    sc = spark.sparkContext
+    sc.setJobGroup("known-pass-count", "memo lookup")
+    try:
+        assert _known_pass_count(spark, again) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("known-pass-count")) == []

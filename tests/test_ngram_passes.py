@@ -10,8 +10,10 @@ disjoint hash-range passes over the prefix shingle.  These tests pin:
   including on a heavy-hitter corpus where the prefix order is
   hot-aware;
 - the pass-count estimator: 1 below scale (the certified plan is
-  unchanged), >1 when the configured scratch budget shrinks below the
-  estimated in-flight bytes, and the forced-K override.
+  unchanged), and >1 when the configured scratch budget shrinks below
+  the estimated in-flight bytes.
+
+K is forced by replacing ``_ngram_pass_count`` for the build.
 """
 
 from __future__ import annotations
@@ -21,8 +23,8 @@ import pandas as pd
 import pytest
 
 from transitdata_omm_cancellation_source_spark.functions import text as X
+from transitdata_omm_cancellation_source_spark.operators import dedup_fuzzy
 from transitdata_omm_cancellation_source_spark.operators.dedup_fuzzy import (
-    _NGRAM_PASSES_CONF,
     _NGRAM_SCRATCH_GB_CONF,
     _NGRAM_SPILL_BYTES_PER_PREFIX_ROW,
     _minhash_shingles,
@@ -36,11 +38,14 @@ from transitdata_omm_cancellation_source_spark.testing import compare_frames
 @pytest.fixture()
 def _clean_conf(spark):
     yield
-    for key in (_NGRAM_PASSES_CONF, _NGRAM_SCRATCH_GB_CONF):
-        try:
-            spark.conf.unset(key)
-        except Exception:
-            pass
+    try:
+        spark.conf.unset(_NGRAM_SCRATCH_GB_CONF)
+    except Exception:
+        pass
+
+
+def _force_passes(monkeypatch, k: int) -> None:
+    monkeypatch.setattr(dedup_fuzzy, "_ngram_pass_count", lambda spark, sh: k)
 
 
 def _corpus_rows() -> list[tuple[int, str]]:
@@ -70,16 +75,16 @@ def _run(spark, docs):
     )
 
 
-def test_kpass_equals_one_pass_and_oracle(spark, _clean_conf):
+def test_kpass_equals_one_pass_and_oracle(spark, _clean_conf, monkeypatch):
     rows = _corpus_rows()
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    spark.conf.set(_NGRAM_PASSES_CONF, "1")
+    _force_passes(monkeypatch, 1)
     one_pass = _run(spark, docs)
     assert len(one_pass) >= 40  # the planted near-dup pairs are found
 
     for k in (2, 3, 7):
-        spark.conf.set(_NGRAM_PASSES_CONF, str(k))
+        _force_passes(monkeypatch, k)
         kp = _run(spark, docs)
         pd.testing.assert_frame_equal(one_pass, kp)
 
@@ -114,15 +119,11 @@ def test_pass_count_estimator(spark, _clean_conf):
     spark.conf.set(_NGRAM_SCRATCH_GB_CONF, str(budget_gb))
     assert _ngram_pass_count(spark, sh) == 3
 
-    # forced override wins over the estimator
-    spark.conf.set(_NGRAM_PASSES_CONF, "5")
-    assert _ngram_pass_count(spark, sh) == 5
-
 
 def test_pass_count_conf_validation(spark, _clean_conf):
     """Bad runtime confs must be clear config errors (r11 ADVICE): a
     zero/negative budget raised ZeroDivisionError, a non-numeric one
-    a bare ValueError from float()/int()."""
+    a bare ValueError from float()."""
     rows = _corpus_rows()
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     sh = _minhash_shingles({"documents": docs})
@@ -131,20 +132,13 @@ def test_pass_count_conf_validation(spark, _clean_conf):
         spark.conf.set(_NGRAM_SCRATCH_GB_CONF, bad)
         with pytest.raises(ValueError, match=_NGRAM_SCRATCH_GB_CONF):
             _ngram_pass_count(spark, sh)
-    spark.conf.unset(_NGRAM_SCRATCH_GB_CONF)
-
-    spark.conf.set(_NGRAM_PASSES_CONF, "many")
-    with pytest.raises(ValueError, match=_NGRAM_PASSES_CONF):
-        _ngram_pass_count(spark, sh)
-
     # a tiny-but-positive budget degrades to a large finite pass count,
     # never a divide-by-zero
-    spark.conf.unset(_NGRAM_PASSES_CONF)
     spark.conf.set(_NGRAM_SCRATCH_GB_CONF, "1e-12")
     assert _ngram_pass_count(spark, sh) >= 1
 
 
-def test_positional_filter_keeps_boundary_pair(spark, _clean_conf):
+def test_positional_filter_keeps_boundary_pair(spark, _clean_conf, monkeypatch):
     """r16: single-pass mode applies PPJoin's positional filter
     (upper-bound prune before the verify joins).  A pair at Jaccard
     EXACTLY tau = 0.5 sits on the prune boundary — it must survive the
@@ -159,7 +153,7 @@ def test_positional_filter_keeps_boundary_pair(spark, _clean_conf):
         *[(60_001 + 2 * i, f"f{i}a f{i}b f{i}c f{i}d f{i}e") for i in range(30)],
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    spark.conf.set(_NGRAM_PASSES_CONF, "1")  # positional-filter plan
+    _force_passes(monkeypatch, 1)  # positional-filter plan
     out = _run(spark, docs)
     pair = out[(out.doc_a == 50_001) & (out.doc_b == 50_003)]
     # J = 6 / (6 + 12 - 6) = 0.5 exactly — boundary case

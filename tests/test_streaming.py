@@ -99,6 +99,31 @@ def test_snapshot_store_versioning(spark, tmp_path):
     assert store.read(spark).count() == 2
 
 
+def test_replace_prunes_every_stale_version(spark, tmp_path):
+    """A version a crash (between the LATEST replace and the prune) or
+    a silently failed rmtree left behind is pruned by a later replace,
+    not kept on disk forever."""
+    import shutil
+
+    snap = tmp_path / "snap"
+    store = SnapshotStore(str(snap))
+    for n in (3, 2, 4):
+        store.replace(spark.range(n).withColumnRenamed("id", "dvj_id"))
+    # v1 left behind, as by a crash right after v3's LATEST replace
+    shutil.copytree(snap / "v2", snap / "v1")
+    (snap / "vnotes").mkdir()  # not a version: left alone
+    store.replace(spark.range(5).withColumnRenamed("id", "dvj_id"))
+    store.replace(spark.range(6).withColumnRenamed("id", "dvj_id"))
+    assert store.current_version() == 5
+    assert sorted(p.name for p in snap.iterdir()) == [
+        "LATEST",
+        "v4",
+        "v5",
+        "vnotes",
+    ]
+    assert store.read(spark).count() == 6
+
+
 def test_torn_pointer_write_keeps_previous_version(spark, tmp_path, monkeypatch):
     """A crash while LATEST is being written must not lose the pointer:
     the next cycle would otherwise see no snapshot, count every row as

@@ -4,7 +4,7 @@ The engine's two trained artifacts — the corpus-scaled IVF coarse
 quantizer (``similarity.ivf_quantizer``) and the PQ codebook
 (``pq._shared_codebook``) — are bounded local relations (≤ 2^IVF_MAX_BITS
 and M x K = 128 rows at ANY corpus size).  Through r11 they lived only
-in session-memory dicts keyed by ``caching.artifact_cache_key``, so a
+in the session memory (today ``caching.memo``), so a
 fresh session RETRAINED them: the r11 fourth-decade table shows
 ``knn_pq_refine`` at 17.7x (vs its sibling's 11.0x) only because it ran
 first in its session and paid the codebook+quantizer training its
@@ -12,7 +12,7 @@ siblings amortized.  At production scale the shape is train-once /
 serve-many — a 100 TB corpus trains its quantizer once and every later
 session (and every executor fleet) loads it.
 
-This module adds the disk layer UNDER the session-memory dicts:
+This module adds the disk layer UNDER the session memo:
 
 - key: ``artifact_disk_key`` — sha256 over (format version, artifact
   name, the source frame's input-file (uri, size, mtime_ns)

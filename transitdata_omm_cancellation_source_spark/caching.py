@@ -1,5 +1,4 @@
-"""Tracked persist: session-lifetime cache bookkeeping for the
-operator families that persist shared subtrees.
+"""Session cache policy: tracked persists and the one session memo.
 
 Several builders persist intermediates whose lifetime necessarily
 extends past build() — cross-query shared subtrees (sorted shingle
@@ -16,6 +15,20 @@ consumed).
 DataFrame.persist() already defaults to a spill-to-disk storage level,
 so the pressure-risk is eviction-triggered recompute, not OOM — the
 hook turns "rely on LRU" into a deterministic release point.
+
+``memo`` is the only session memo outside the catalog and the OMM
+view: one dict, keyed by a name plus ``artifact_cache_key`` of the
+source frame, holding two kinds of entry.
+
+- FRAME entries (``frame=True``): shared persisted subtrees.  They are
+  dropped by ``release_tracked`` together with the data they point to.
+- VALUE entries: trained artifacts (the PQ codebook, the IVF quantizer
+  — bounded local relations) and scalars derived from the corpus (the
+  corpus count, PCA's max|u|, pagerank's pass count).  They hold no
+  executor memory, so they survive ``release_tracked`` like the disk
+  artifact tier does; ``clear_value_memos`` is the cold-start hook.
+
+README.md ("Caches") lists each entry with the ablation that keeps it.
 """
 
 from __future__ import annotations
@@ -24,61 +37,47 @@ from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
 
-#: Artifact caches holding PERSISTED DataFrame objects (not bounded
-#: local relations like the trained-centroid/codebook caches) — their
-#: entries go stale the moment release_tracked unpersists the data, so
-#: registering them here keeps "release" one call with no dangling
-#: unpersisted frame objects handed out afterwards.
-_ARTIFACT_FRAME_CACHES: list[dict] = []
+#: name + artifact_cache_key -> (is_frame, value)
+_MEMO: dict[tuple, tuple[bool, object]] = {}
 
 
-def register_artifact_frame_cache(cache: dict) -> dict:
-    """Register a dict of persisted-DataFrame artifacts for clearing by
-    release_tracked; returns the dict for inline module-level use."""
-    _ARTIFACT_FRAME_CACHES.append(cache)
-    return cache
+def memo(name: str, source: DataFrame, compute, *, frame: bool = False):
+    """Session-memoized ``compute()`` for ``source``.
+
+    The key is ``name`` plus ``artifact_cache_key(source)``, so a
+    rewrite of the files behind the same plan is a miss, and storing
+    its result evicts the superseded entry for the same name and plan
+    (the memo stays bounded by live (name, session, plan) triples
+    rather than growing per rewrite).  ``frame=True`` persists the
+    result through ``persist_tracked``.  ``compute=None`` only looks
+    up: it returns None on a miss and runs no Spark job.
+    """
+    key = (name, *artifact_cache_key(source.sparkSession, source))
+    hit = _MEMO.get(key)
+    if hit is not None:
+        return hit[1]
+    if compute is None:
+        return None
+    value = compute()
+    if frame:
+        value = persist_tracked(value)
+    for stale in [k for k in _MEMO if k[:3] == key[:3]]:
+        del _MEMO[stale]
+    _MEMO[key] = (frame, value)
+    return value
 
 
-#: Bounded VALUE memos that deliberately SURVIVE ``release_tracked``
-#: — the documented exclusion list (r15 verdict #4).  Two classes live
-#: here, and ONLY these two:
-#:
-#: - trained artifacts: bounded local relations / scalars whose
-#:   recompute is deterministic and whose production shape is
-#:   train-once/serve-many (the PQ codebook, the IVF quantizer +
-#:   corpus count, PCA's max|u| guard aggregate);
-#: - derived PLAN PARAMETERS: perf-only knobs estimated from the
-#:   corpus (the ngram hot-shingle order and pass counts, pagerank's
-#:   pass count) — results are exact regardless of their value, they
-#:   only shape candidate order / scratch partitioning.
-#:
-#: Both classes hold plain values or ≤4096-row local relations keyed
-#: by ``artifact_cache_key``-style content fingerprints — never
-#: persisted DataFrames (those belong in a registered frame cache so
-#: release_tracked can unpersist their data).  ``release_tracked``
-#: clears FRAMES (executor memory); these memos hold no executor
-#: memory, so a workload boundary keeps them, exactly like the disk
-#: artifact tier.  ``clear_value_memos`` is the cold-path hook for
-#: benches/tests that want a truly-from-scratch build.
-_VALUE_MEMOS: list[dict] = []
-
-
-def register_value_memo(cache: dict) -> dict:
-    """Register a bounded value memo under the survive-release contract
-    above; returns the dict for inline module-level use."""
-    _VALUE_MEMOS.append(cache)
-    return cache
+def _drop_memo(frames: bool) -> int:
+    keys = [k for k, (is_frame, _) in _MEMO.items() if is_frame == frames]
+    for k in keys:
+        del _MEMO[k]
+    return len(keys)
 
 
 def clear_value_memos() -> int:
-    """Drop every registered value memo (trained artifacts + derived
-    plan parameters) — the explicit cold-start hook; returns the
-    number of entries dropped."""
-    n = 0
-    for cache in _VALUE_MEMOS:
-        n += len(cache)
-        cache.clear()
-    return n
+    """Drop every value entry of the memo — the explicit cold-start
+    hook; returns the number of entries dropped."""
+    return _drop_memo(frames=False)
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
@@ -88,10 +87,10 @@ def persist_tracked(df: DataFrame) -> DataFrame:
 
 
 def release_tracked() -> int:
-    """Unpersist every tracked frame (idempotent); returns the count."""
+    """Unpersist every tracked frame and drop the memo's frame entries
+    (idempotent); returns the number of frames unpersisted."""
+    _drop_memo(frames=True)
     n = 0
-    for cache in _ARTIFACT_FRAME_CACHES:
-        cache.clear()
     while _TRACKED:
         df = _TRACKED.pop()
         try:
@@ -115,10 +114,6 @@ def artifact_cache_key(spark, df: DataFrame) -> tuple:
     contract).  URIs are parsed properly (percent-decoding, authority
     handling) so Hadoop-encoded paths still fingerprint.  Listing
     input files touches only the scan's file index — no job runs.
-
-    Consumers should insert via ``replace_plan_artifact`` so a rewrite
-    EVICTS the superseded entry instead of accumulating one dead
-    trained artifact per rewrite.
     """
     return (
         spark.sparkContext.applicationId,
@@ -129,7 +124,7 @@ def artifact_cache_key(spark, df: DataFrame) -> tuple:
 
 def input_fingerprints(df: DataFrame) -> tuple:
     """(uri, size, mtime_ns) per input file — the data half of the
-    artifact keys, shared by the session cache above and the disk key
+    artifact keys, shared by the session memo above and the disk key
     in ``artifacts.py``."""
     import os
     from urllib.parse import unquote, urlparse
@@ -153,13 +148,3 @@ def input_fingerprints(df: DataFrame) -> tuple:
                     continue
         files.append(entry)
     return tuple(files)
-
-
-def replace_plan_artifact(cache: dict, key: tuple, value) -> None:
-    """Insert a trained artifact, evicting entries for the SAME plan
-    with a different data fingerprint — the superseded artifacts a
-    rewrite leaves behind.  Keeps the cache bounded by live (session,
-    plan) pairs rather than growing per rewrite."""
-    for stale in [k for k in cache if k[:2] == key[:2] and k != key]:
-        del cache[stale]
-    cache[key] = value

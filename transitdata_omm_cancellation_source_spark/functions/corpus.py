@@ -10,20 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import (
-    artifact_cache_key,
-    persist_tracked,
-    register_artifact_frame_cache,
-    replace_plan_artifact,
-)
+from ..caching import memo
 from . import text as X
 from .wordhash_kernel import with_word_hashes
-
-#: Session cache for the shared tokenize+hash frame over the RAW
-#: documents table (the dedup family's _FRAME_CACHE discipline);
-#: registered so release_tracked clears it with its data.
-_DOC_WORDS_CACHE: dict[tuple, object] = register_artifact_frame_cache({})
-
 
 def doc_words_frame(t) -> DataFrame:
     """Persisted (doc_id, ws, wh, jh) of the raw documents table — the
@@ -47,21 +36,19 @@ def doc_words_frame(t) -> DataFrame:
     bit-identical (pinned in tests/test_wordhash_kernel.py), build cost
     per corpus byte ~3x lower.  ``jh`` is the BIGINT polyhash of the
     space-joined words (== ``polyhash(array_join(ws, ' '))``), computed
-    in the same kernel pass for the fingerprint consumer."""
+    in the same kernel pass for the fingerprint consumer.  A frame
+    entry of the session memo: ``release_tracked`` drops it with its
+    data."""
     docs = t["documents"]
-    spark = docs.sparkSession
-    app_id, plan_hash, files = artifact_cache_key(spark, docs)
-    key = (("doc_words", app_id), plan_hash, files)
-    df = _DOC_WORDS_CACHE.get(key)
-    if df is None:
-        df = persist_tracked(
-            with_word_hashes(
-                docs.select("doc_id", X.words("text").alias("ws")),
-                joined_col="jh",
-            )
-        )
-        replace_plan_artifact(_DOC_WORDS_CACHE, key, df)
-    return df
+    return memo(
+        "doc_words",
+        docs,
+        lambda: with_word_hashes(
+            docs.select("doc_id", X.words("text").alias("ws")),
+            joined_col="jh",
+        ),
+        frame=True,
+    )
 
 
 #: planted sub-shingle-length document: 2 words < the k=3 shingle

@@ -35,13 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import (
-    artifact_cache_key,
-    persist_tracked,
-    register_artifact_frame_cache,
-    register_value_memo,
-    replace_plan_artifact,
-)
+from ..caching import memo, persist_tracked
 from ..functions import text as X
 from ..observability import get_json_logger
 from ..plans.registry import REGISTRY
@@ -50,20 +44,14 @@ from ..plans.registry import registered_query as _q
 #: embedding-cosine near-dup threshold (semdedup.py shares it)
 _COSINE_TAU = 0.98
 
-#: Session-artifact cache for the family's shared PERSISTED frames
-#: (word hashes, shingle sets, banded candidates, verified pairs) —
-#: the ivf_quantizer/_shared_codebook discipline applied to frames.
-#: Sharing the built DataFrame OBJECT matters as much as sharing the
-#: cached data: re-CONSTRUCTING the 64-minhash/band plan per consumer
-#: measured ~1.7 s of driver-side work (py4j column building +
-#: Catalyst analysis) with the data fully cached.  Keyed content-
-#: sensitively on the documents table; registered so release_tracked
-#: clears it together with the persisted data it points to.
-_FRAME_CACHE: dict[tuple, object] = register_artifact_frame_cache({})
-
-
 def _family_frame(name: str, t, build, *, disk: bool = False, source: str = "documents"):
-    """Build-once, serve-per-session for the family's shared frames.
+    """Build-once, serve-per-session for the family's shared PERSISTED
+    frames (word hashes, shingle sets, banded candidates, verified
+    pairs): frame entries of the session memo, keyed on the source
+    table, which ``release_tracked`` drops together with their data.
+    Sharing the built DataFrame OBJECT saves re-CONSTRUCTING the
+    64-minhash/band plan per consumer (Spark's CacheManager already
+    shares the cached data of a rebuilt plan).
 
     ``disk=True`` marks a STANDING INDEX (r14 verdict #1): the frame
     additionally lives as a parquet artifact on disk
@@ -77,30 +65,22 @@ def _family_frame(name: str, t, build, *, disk: bool = False, source: str = "doc
     pairs) remain in-session only — they are query OUTPUT mass, not
     reusable state.
     """
-    spark = t[source].sparkSession
-    app_id, plan_hash, files = artifact_cache_key(spark, t[source])
-    # key[:2] is replace_plan_artifact's eviction scope — fold the
-    # artifact name INTO the first element so a rewrite evicts only
-    # THIS artifact for THIS plan, never a different corpus' frames.
-    key = ((name, app_id), plan_hash, files)
-    df = _FRAME_CACHE.get(key)
-    if df is None:
+    src = t[source]
+
+    def compute():
         # The disk key identifies the corpus by its input-file
         # fingerprints — a FILELESS source (createDataFrame corpora in
         # tests, views over literals) has none, so two distinct
         # synthetic corpora would collide on one digest.  Those build
-        # in-session only (the plan-hash-keyed cache still separates
+        # in-session only (the plan-hash-keyed memo still separates
         # them).
-        if disk and files:
+        if disk and src.inputFiles():
             from ..artifacts import load_or_build_frame
 
-            df = persist_tracked(
-                load_or_build_frame(spark, name, t[source], build)
-            )
-        else:
-            df = persist_tracked(build())
-        replace_plan_artifact(_FRAME_CACHE, key, df)
-    return df
+            return load_or_build_frame(src.sparkSession, name, src, build)
+        return build()
+
+    return memo(name, src, compute, frame=True)
 
 P = X.HASH_MOD
 
@@ -197,29 +177,6 @@ _HOT_SHINGLE_LIMIT = int(1 / _HOT_SHINGLE_MASS_FRACTION)
 _HOT_SAMPLE_MOD = 8
 
 
-#: memo for the hot-shingle set and the ngram pass count, keyed by the
-#: corpus' input-file fingerprints (+ the constants that parameterize
-#: each estimate) — the pagerank _PASS_MEMO discipline (r13): both are
-#: PERF choices (the hot set only shapes the candidate-generation
-#: order, the pass count only partitions the candidate space; exact
-#: verification makes results identical either way), so serving them
-#: from the memo on a repeated build skips three small driver jobs
-#: per build without any correctness surface.  Fileless (in-memory)
-#: corpora have no fingerprints and simply re-estimate.  Registered
-#: under the ``caching.register_value_memo`` survive-release contract
-#: (r16): it holds derived plan parameters, not executor memory.
-_ESTIMATE_MEMO: dict = register_value_memo({})
-
-
-def _estimate_memo_key(df: DataFrame, *extra):
-    from ..caching import input_fingerprints
-
-    fps = input_fingerprints(df)
-    if not fps:
-        return None
-    return (repr(fps), *extra)
-
-
 def _hot_shingles(sh: DataFrame) -> list[int]:
     """Heavy-hitter shingles, collected under an explicit driver bound.
 
@@ -242,15 +199,6 @@ def _hot_shingles(sh: DataFrame) -> list[int]:
     HOTTEST shingles and stay deterministic, never
     partition-order-dependent.
     """
-    memo_key = _estimate_memo_key(
-        sh,
-        "hot",
-        _HOT_SAMPLE_MOD,
-        _HOT_SHINGLE_MASS_FRACTION,
-        _HOT_SHINGLE_LIMIT,
-    )
-    if memo_key is not None and memo_key in _ESTIMATE_MEMO:
-        return _ESTIMATE_MEMO[memo_key]
     sample = sh.filter(F.col("doc_id") % _HOT_SAMPLE_MOD == 0)
     total_mass = sample.agg(F.sum(F.size("shingles"))).first()[0] or 0
     cap = max(1000 // _HOT_SAMPLE_MOD, int(total_mass * _HOT_SHINGLE_MASS_FRACTION))
@@ -267,8 +215,6 @@ def _hot_shingles(sh: DataFrame) -> list[int]:
         .collect()
     ]
     assert len(hot) <= _HOT_SHINGLE_LIMIT
-    if memo_key is not None:
-        _ESTIMATE_MEMO[memo_key] = hot
     return hot
 
 
@@ -456,10 +402,6 @@ def _ngram_verify(cand: DataFrame, sh: DataFrame) -> DataFrame:
     )
 
 
-#: forced pass count for the bounded-scratch ngram join; 0 = size from
-#: the scratch budget.  Runtime-settable (``spark.conf.set``).
-_NGRAM_PASSES_CONF = "spark.graft.ngram.passes"
-
 #: shuffle-scratch budget (GiB) one ngram-join pass may keep in flight.
 #: Measured at sf125 (6.25M-doc corpus, the decade the one-shot plan
 #: could not finish): budget 24 -> K=4, 563 s, ~39 GB peak node
@@ -494,17 +436,9 @@ def _ngram_pass_count(spark, sh: DataFrame) -> int:
     single-pass form, so the sf0.01 oracle gate exercises the same
     physical plan it always certified.
     """
-    # validate both confs up front: a typo'd or zero/negative runtime
+    # validate the budget up front: a typo'd or zero/negative runtime
     # value must be a clear config error, not a ZeroDivisionError out
     # of the ceil below (r11 ADVICE).
-    try:
-        forced = int(spark.conf.get(_NGRAM_PASSES_CONF, "0"))
-    except ValueError as e:
-        raise ValueError(
-            f"{_NGRAM_PASSES_CONF} must be an integer pass count"
-        ) from e
-    if forced > 0:
-        return forced
     raw = spark.conf.get(_NGRAM_SCRATCH_GB_CONF, str(_NGRAM_SCRATCH_GB_DEFAULT))
     try:
         budget_gb = float(raw)
@@ -519,11 +453,6 @@ def _ngram_pass_count(spark, sh: DataFrame) -> int:
     # floor at one byte so a sub-1e-9 GiB budget degrades to
     # max-passes, never a divide-by-zero.
     budget_bytes = max(1, int(budget_gb * 2**30))
-    memo_key = _estimate_memo_key(
-        sh, "ngram_passes", budget_bytes, _JACCARD_TAU
-    )
-    if memo_key is not None and memo_key in _ESTIMATE_MEMO:
-        return _ESTIMATE_MEMO[memo_key]
     prefix_rows = (
         sh.agg(
             F.sum(
@@ -537,10 +466,7 @@ def _ngram_pass_count(spark, sh: DataFrame) -> int:
         or 0
     )
     est = prefix_rows * _NGRAM_SPILL_BYTES_PER_PREFIX_ROW
-    passes = max(1, -(-int(est) // budget_bytes))
-    if memo_key is not None:
-        _ESTIMATE_MEMO[memo_key] = passes
-    return passes
+    return max(1, -(-int(est) // budget_bytes))
 
 
 def _release_pass_scratch(spark) -> None:

@@ -81,8 +81,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..caching import persist_tracked
-from ..caching import register_value_memo as _register_value_memo
+from ..caching import memo, persist_tracked
 from ..plans.registry import registered_query as _q
 
 #: fixed power-iteration rounds and damping (85/100 as integers).
@@ -92,10 +91,6 @@ _TELEPORT_MICRO = 150_000  # (1 - d) * 1e6
 _D_NUM, _D_DEN = 85, 100
 
 _PR_TOPK = 50
-
-#: forced pass count for the bounded-scratch edge build; 0 = size from
-#: the scratch budget.  Runtime-settable (``spark.conf.set``).
-_PR_PASSES_CONF = "spark.graft.pagerank.passes"
 
 #: shuffle-scratch budget (GiB) one edge-build pass may keep in
 #: flight.  12 GiB mirrors the ngram default: it keeps the pass's
@@ -157,23 +152,6 @@ def _guard_rank_broadcast(spark, n_nodes: int) -> None:
         )
 
 
-#: pass-count memo keyed by (input fingerprints, budget conf) — the
-#: estimator is one aggregate over the items frame, which is exactly
-#: the cost a repeated bench pass or a multi-query session should not
-#: re-pay; the fingerprint key means a REGENERATED fact table still
-#: re-estimates.
-_PASS_MEMO: dict = _register_value_memo({})
-
-
-def _forced_passes(spark) -> int:
-    try:
-        return int(spark.conf.get(_PR_PASSES_CONF, "0"))
-    except ValueError as e:
-        raise ValueError(
-            f"{_PR_PASSES_CONF} must be an integer pass count"
-        ) from e
-
-
 def _scratch_budget_bytes(spark) -> int:
     raw = spark.conf.get(_PR_SCRATCH_GB_CONF, str(_PR_SCRATCH_GB_DEFAULT))
     try:
@@ -189,70 +167,51 @@ def _scratch_budget_bytes(spark) -> int:
     return max(1, int(budget_gb * 2**30))
 
 
-def _pass_memo_key(spark, items):
-    """Memo key for the pass estimate, or None for in-memory frames:
-    those have no input files, and an empty fingerprint would alias
-    EVERY such frame onto one memo slot, so they simply re-estimate (a
-    pass count is a perf choice, never a correctness one, but a
-    silently shared one is confusing)."""
-    from ..caching import input_fingerprints
-
-    fps = input_fingerprints(items)
-    if not fps:
-        return None
-    return (
-        repr(fps),
-        spark.conf.get(_PR_SCRATCH_GB_CONF, str(_PR_SCRATCH_GB_DEFAULT)),
-    )
+def _pass_memo_name(spark) -> str:
+    """The pass count's memo name: the budget conf is part of it, so
+    a changed budget re-estimates."""
+    budget = spark.conf.get(_PR_SCRATCH_GB_CONF, str(_PR_SCRATCH_GB_DEFAULT))
+    return f"pagerank_passes:{budget}"
 
 
-def _known_pass_count(spark, items):
-    """Pass count with NO Spark job — forced conf or memo hit — else
-    None.  Checked before the persist-placement proxy so repeated
-    builds (bench passes, multi-query sessions) skip the proxy's fact
-    count entirely (r13 ADVICE)."""
-    forced = _forced_passes(spark)
-    if forced > 0:
-        return forced
-    memo_key = _pass_memo_key(spark, items)
-    if memo_key is not None:
-        return _PASS_MEMO.get(memo_key)
-    return None
+def _known_pass_count(spark, lineitem):
+    """Pass count with NO Spark job — a memo hit from an earlier build
+    this session — else None.  Checked before the persist-placement
+    proxy so repeated builds (bench passes, multi-query sessions) skip
+    the proxy's fact count entirely (r13 ADVICE)."""
+    return memo(_pass_memo_name(spark), lineitem, None)
 
 
-def _pagerank_pass_count(spark, frame) -> int:
+def _pagerank_pass_count(spark, lineitem, frame) -> int:
     """ceil(estimated pair-fan-out bytes / budget), the estimate ONE
-    cheap aggregate, memoized per (input files, budget).  Accepts
-    either grain — the item-level (l_orderkey, l_partkey) frame
-    (countDistinct per order, so raw fact rows estimate the same as a
-    distinct'd frame) or the per-order ``ps`` array frame the r15
-    edge build aggregates first (size(ps) is the degree directly, and
-    running the estimate over the PERSISTED array frame fills the
-    cache the build's passes reuse).  Both spellings share one memo
-    key: the input fingerprints are the source parquet files, which
-    are identical for both frames.  Returns 1 below the budget — the
-    certified byte-identical plan."""
-    known = _known_pass_count(spark, frame)
-    if known is not None:
-        return known
-    memo_key = _pass_memo_key(spark, frame)
-    budget_bytes = _scratch_budget_bytes(spark)
-    if "ps" in frame.columns:
-        degrees = frame.select(F.size("ps").alias("d"))
-    else:
-        degrees = frame.groupBy("l_orderkey").agg(
-            F.countDistinct("l_partkey").alias("d")
+    cheap aggregate over ``frame``, memoized per (raw ``lineitem``,
+    budget) — the entry ``_known_pass_count`` reads, so a regenerated
+    fact table re-estimates.  Accepts either grain — the item-level
+    (l_orderkey, l_partkey) frame (countDistinct per order, so raw
+    fact rows estimate the same as a distinct'd frame) or the
+    per-order ``ps`` array frame the r15 edge build aggregates first
+    (size(ps) is the degree directly, and running the estimate over
+    the PERSISTED array frame fills the cache the build's passes
+    reuse).  Returns 1 below the budget — the certified byte-identical
+    plan."""
+
+    def estimate():
+        budget_bytes = _scratch_budget_bytes(spark)
+        if "ps" in frame.columns:
+            degrees = frame.select(F.size("ps").alias("d"))
+        else:
+            degrees = frame.groupBy("l_orderkey").agg(
+                F.countDistinct("l_partkey").alias("d")
+            )
+        pair_rows = (
+            degrees.agg(F.sum(F.expr("d * (d - 1) div 2")).cast("long"))
+            .first()[0]
+            or 0
         )
-    pair_rows = (
-        degrees.agg(F.sum(F.expr("d * (d - 1) div 2")).cast("long"))
-        .first()[0]
-        or 0
-    )
-    est = pair_rows * _PR_SPILL_BYTES_PER_PAIR
-    passes = max(1, -(-int(est) // budget_bytes))
-    if memo_key is not None:
-        _PASS_MEMO[memo_key] = passes
-    return passes
+        est = pair_rows * _PR_SPILL_BYTES_PER_PAIR
+        return max(1, -(-int(est) // budget_bytes))
+
+    return memo(_pass_memo_name(spark), lineitem, estimate)
 
 
 def _pagerank_scratch_dir(spark, token: str) -> str:
@@ -367,11 +326,11 @@ def _pagerank(spark, t):
     # and a wrong proxy costs one persist (released below) or one
     # extra scan, never correctness.  Below the proxy threshold
     # nothing is persisted and the certified plan is untouched.  When
-    # the pass count is already KNOWN without a job (forced conf or a
-    # memo hit from an earlier build this session) the proxy never
-    # runs — the r13 ADVICE caught repeated bench passes paying the
-    # fact count the memo existed to avoid.
-    known = _known_pass_count(spark, items)
+    # the pass count is already KNOWN without a job (a memo hit from
+    # an earlier build this session) the proxy never runs — the r13
+    # ADVICE caught repeated bench passes paying the fact count the
+    # memo existed to avoid.
+    known = _known_pass_count(spark, t["lineitem"])
     if known is not None:
         likely_scratch = known > 1
     else:
@@ -383,7 +342,9 @@ def _pagerank(spark, t):
     if po_p is not None:
         po = po_p
     passes = (
-        known if known is not None else _pagerank_pass_count(spark, po)
+        known
+        if known is not None
+        else _pagerank_pass_count(spark, t["lineitem"], po)
     )
     scratch = passes > 1
     if po_p is not None and not scratch:

@@ -65,7 +65,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..caching import register_value_memo as _register_value_memo
+from ..caching import memo
 from ..functions.hyperplane import DIM
 from ..observability import get_json_logger
 from ..plans.registry import registered_query as _q
@@ -210,11 +210,6 @@ _U_PRODUCT_BOUND = 3_037_000_499
 #: raising below the true edge with a 2^12 double-ULP margin.
 _U_QUANTIZE_BOUND = 2**63 - 2**12
 
-#: cached per-(session, corpus-plan) max|u| — one cheap aggregate,
-#: the corpus_count caching discipline (similarity._COUNT_CACHE).
-_MAXU_CACHE: dict[tuple, int] = _register_value_memo({})
-
-
 def corpus_max_abs_u(spark, emb) -> int:
     """Max micro-unit coordinate magnitude over the corpus (cached per
     session/plan) — selects the moment-product path and guards the
@@ -224,11 +219,8 @@ def corpus_max_abs_u(spark, emb) -> int:
     Exact to 2^53 and monotone beyond — more than enough to compare
     against the 3e9 path-selection bound and the ~9.2e18 quantize
     ceiling."""
-    from ..caching import artifact_cache_key, replace_plan_artifact
 
-    key = artifact_cache_key(spark, emb)
-    m = _MAXU_CACHE.get(key)
-    if m is None:
+    def compute():
         m = emb.select(
             F.max(
                 F.expr(
@@ -237,9 +229,9 @@ def corpus_max_abs_u(spark, emb) -> int:
                 )
             )
         ).collect()[0][0]
-        m = int(m) if m is not None else 0
-        replace_plan_artifact(_MAXU_CACHE, key, m)
-    return m
+        return int(m) if m is not None else 0
+
+    return memo("pca_max_abs_u", emb, compute)
 
 
 def _moment_rows(spark, emb, wide_products: bool):

@@ -58,13 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..caching import (
-    artifact_cache_key,
-    persist_tracked,
-    register_artifact_frame_cache,
-    replace_plan_artifact,
-)
-from ..caching import register_value_memo as _register_value_memo
+from ..caching import memo, persist_tracked
 from ..functions.hyperplane import (
     full_bucket_expr_duck,
     pow2_grid_cte,
@@ -281,12 +275,6 @@ def _encode(
 #: worker round-trip).
 _ENCODE_TASK_ROWS = 16384
 
-#: Session cache for the shared packed corpus-code assignment
-#: (registered so release_tracked clears it with its data — rebuilt
-#: inside every bench pass, never carried across runs).
-_PACKED_CODES_CACHE: dict[tuple, DataFrame] = register_artifact_frame_cache({})
-
-
 def _shared_packed_codes(spark, t) -> DataFrame:
     """Persisted (vec_id, codes ARRAY<INT>) — THE corpus PQ assignment
     against the shared codebook, built once per session for the four
@@ -298,9 +286,9 @@ def _shared_packed_codes(spark, t) -> DataFrame:
     + codebook collect per call at sf0.1.  The codes are per-row
     argmins against a session-stable codebook, so one persisted frame
     serves every consumer with values unchanged (the unpacked per-sub
-    shape is a posexplode away).  Keyed by the embeddings source
-    fingerprints (the _family_frame discipline); a fileless synthetic
-    corpus separates via the plan hash.
+    shape is a posexplode away).  A frame entry of the session memo
+    keyed by the embeddings source (``release_tracked`` drops it with
+    its data); a fileless synthetic corpus separates via the plan hash.
 
     The vectors and codebook are DERIVED here from ``t`` (r15 ADVICE):
     the cache key identifies the corpus, so a signature accepting
@@ -308,15 +296,13 @@ def _shared_packed_codes(spark, t) -> DataFrame:
     against whichever codebook built first."""
     vecs = _vectors(t)
     cent = _shared_codebook(spark, vecs)
-    app_id, plan_hash, files = artifact_cache_key(spark, t["embeddings"])
-    key = (("pq_packed_codes", app_id), plan_hash, files)
-    df = _PACKED_CODES_CACHE.get(key)
-    if df is None:
+
+    def encode():
         n = corpus_count(spark, t["embeddings"])
         width = -(-n // _ENCODE_TASK_ROWS)  # ceil div
-        df = persist_tracked(_encode(vecs, cent, packed=True, width=width))
-        replace_plan_artifact(_PACKED_CODES_CACHE, key, df)
-    return df
+        return _encode(vecs, cent, packed=True, width=width)
+
+    return memo("pq_packed_codes", t["embeddings"], encode, frame=True)
 
 
 def _train_codebook(
@@ -402,20 +388,6 @@ def _train_codebook(
     )
 
 
-#: One trained codebook per (session, corpus plan): both PQ queries call
-#: ``_shared_codebook``, so a session building encode and search
-#: back-to-back trains once.  Keyed by the corpus DataFrame's semantic
-#: plan hash — no driver action — plus the application id so a
-#: restarted session can never resurrect another JVM's DataFrame.
-#:
-#: The cache survives ``release_tracked``: a trained codebook is a
-#: bounded session-lifetime ARTIFACT (128 local rows, zero executor
-#: memory — the thing ``release_tracked`` exists to free), the same way
-#: a production ANN system trains a codebook once per corpus and ships
-#: it, never retraining per query batch.
-_CODEBOOK_CACHE: dict[tuple, DataFrame] = _register_value_memo({})
-
-
 def _shared_codebook(spark, vecs: DataFrame) -> DataFrame:
     """Train once per (session, corpus plan); serve a MATERIALIZED copy.
 
@@ -428,25 +400,31 @@ def _shared_codebook(spark, vecs: DataFrame) -> DataFrame:
     plans and training's stage overhead is paid once per session, not
     once per query.  This makes the PQ builders CONTRACTUALLY EAGER on
     first use (see plans/registry.py QuerySpec).
-    """
-    key = artifact_cache_key(spark, vecs)
-    codebook = _CODEBOOK_CACHE.get(key)
-    if codebook is None:
-        from ..artifacts import load_or_train
 
-        # disk layer under the session dict (r12): a fresh session
-        # LOADS the trained codebook instead of retraining it — the
-        # train-once/serve-many production shape.
-        codebook = load_or_train(
+    A value entry of the session memo, keyed by the corpus plan and
+    its input files: both PQ queries call this, so a session building
+    encode and search back-to-back trains once, and the entry survives
+    ``release_tracked`` (128 local rows, zero executor memory — the
+    way a production ANN system trains a codebook once per corpus and
+    ships it, never retraining per query batch).
+    """
+    from ..artifacts import load_or_train
+
+    # disk layer under the session memo (r12): a fresh session LOADS
+    # the trained codebook instead of retraining it — the
+    # train-once/serve-many production shape.
+    return memo(
+        "pq_codebook",
+        vecs,
+        lambda: load_or_train(
             spark,
             "pq_codebook",
             vecs,
             "sub int, code int, c array<bigint>",
             lambda: _train_codebook(vecs),
             ["sub", "code"],
-        )
-        replace_plan_artifact(_CODEBOOK_CACHE, key, codebook)
-    return codebook
+        ),
+    )
 
 
 def _codebook_cte(rounds: int = PQ_TRAIN_ROUNDS) -> str:

@@ -75,9 +75,15 @@ class SnapshotStore:
         with open(tmp, "w") as fh:
             fh.write(str(v))
         os.replace(tmp, self._pointer())
-        stale = os.path.join(self.path, f"v{v - 2}")
-        if os.path.isdir(stale):  # keep current + previous, prune older
-            shutil.rmtree(stale, ignore_errors=True)
+        # keep current + previous, prune every older version — also one
+        # a crash or a failed rmtree left behind in an earlier cycle
+        for name in os.listdir(self.path):
+            try:
+                k = int(name[1:]) if name.startswith("v") else None
+            except ValueError:
+                continue
+            if k is not None and k < v - 1:
+                shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
 
 
 def _f8_combo() -> "F.Column":
