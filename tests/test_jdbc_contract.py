@@ -96,6 +96,47 @@ def test_pushdown_query_requires_params_or_statement(spark):
         pushdown_query(spark, "jdbc:derby:memory:none")
 
 
+def test_jdbc_backed_omm_view_is_read_on_every_call(spark, derby):
+    """A JDBC read has no input files to fingerprint, so the candidate
+    frame over it is never persisted: a row inserted between two
+    ``cancellation_pipeline`` calls is seen by the second."""
+    from transitdata_omm_cancellation_source_spark.catalog import load_tables
+    from transitdata_omm_cancellation_source_spark.plans.cancellation import (
+        QueryParams,
+        cancellation_pipeline,
+    )
+    from transitdata_omm_cancellation_source_spark.plans.omm_model import (
+        register_omm_views,
+    )
+
+    url, _ = derby
+    load_tables(spark, SF_SMOKE)
+    params = QueryParams(mode="PAST")
+    full = {tuple(r) for r in cancellation_pipeline(spark, params).collect()}
+    held = min(r[0] for r in full)  # deviation_case_id is the first column
+    ad = register_omm_views(spark)["omm_affected_departures"]
+    opts = {"url": url, "dbtable": "AD", "driver": _DERBY}
+    # VARCHAR, not Derby's default CLOB: F2 and S5 push string
+    # comparisons into the read, and Derby cannot compare a CLOB
+    varchar = "status VARCHAR(16), type VARCHAR(32)"
+    ad.filter(F.col("deviation_case_id") != held).write.format("jdbc").options(
+        **opts
+    ).option("createTableColumnTypes", varchar).save()
+    table_read(
+        spark, url, "AD", driver=_DERBY, preferTimestampNTZ="true"
+    ).createOrReplaceTempView("omm_affected_departures")
+    try:
+        first = {tuple(r) for r in cancellation_pipeline(spark, params).collect()}
+        ad.filter(F.col("deviation_case_id") == held).write.format("jdbc").options(
+            **opts
+        ).mode("append").save()
+        second = {tuple(r) for r in cancellation_pipeline(spark, params).collect()}
+    finally:
+        spark.catalog.dropTempView("omm_affected_departures")
+    assert first == {r for r in full if r[0] != held} != full
+    assert second == full
+
+
 # --- T-SQL dialect conformance against the reference resources --------------
 # The template text only ever EXECUTES against Derby (rewritten), so
 # SQL Server dialect drift would go unnoticed until production.  This

@@ -162,6 +162,60 @@ def test_torn_pointer_write_keeps_previous_version(spark, tmp_path, monkeypatch)
     assert store.read(spark).count() == 3
 
 
+def test_missing_pointer_recovers_highest_complete_version(spark, tmp_path):
+    """Without LATEST the store falls back to the highest version whose
+    write completed; a version without _SUCCESS was torn and is skipped."""
+    import os
+    import shutil
+
+    snap = tmp_path / "snap"
+    store = SnapshotStore(str(snap))
+    store.replace(spark.range(3).withColumnRenamed("id", "dvj_id"))
+    store.replace(spark.range(10, 12).withColumnRenamed("id", "dvj_id"))
+    os.remove(snap / "LATEST")
+    assert store.current_version() == 2
+    assert sorted(r.dvj_id for r in store.read(spark).collect()) == [10, 11]
+
+    shutil.copytree(snap / "v1", snap / "v3")  # a write cut before its commit
+    os.remove(snap / "v3" / "_SUCCESS")
+    assert store.current_version() == 2
+    assert sorted(r.dvj_id for r in store.read(spark).collect()) == [10, 11]
+    store.replace(spark.range(7).withColumnRenamed("id", "dvj_id"))
+    assert store.current_version() == 3
+    assert store.read(spark).count() == 7
+
+
+def test_sink_schema_check_reads_one_file(spark, tmp_path, monkeypatch):
+    """The check reads one part file's footer, never the whole sink."""
+    from pyspark.sql import DataFrameReader
+
+    from transitdata_omm_cancellation_source_spark.streaming import poller
+    from transitdata_omm_cancellation_source_spark.streaming.messages import (
+        encode_messages,
+    )
+
+    load_tables(spark, SF_SMOKE)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    sink = tmp_path / "sink"
+    for _ in range(2):
+        run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=str(sink))
+    records = store.read(spark)
+    read = DataFrameReader.parquet
+    paths = []
+
+    def spy(reader, *args, **kwargs):
+        paths.extend(args)
+        return read(reader, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    poller._check_sink_schema(spark, str(sink), encode_messages(records))
+    assert len(paths) == 1 and paths[0].startswith(str(sink / "part-"))
+    with pytest.raises(ValueError, match="sink schema mismatch"):
+        poller._check_sink_schema(
+            spark, str(sink), encode_messages(records, value_format="protobuf")
+        )
+
+
 def test_poller_streaming_query(spark, tmp_path):
     """The scheduler loop as a real StreamingQuery: fires >=1 cycle."""
     load_tables(spark, SF_SMOKE)

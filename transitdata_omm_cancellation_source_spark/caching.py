@@ -45,12 +45,15 @@ def memo(name: str, source: DataFrame, compute, *, frame: bool = False):
     """Session-memoized ``compute()`` for ``source``.
 
     The key is ``name`` plus ``artifact_cache_key(source)``, so a
-    rewrite of the files behind the same plan is a miss, and storing
-    its result evicts the superseded entry for the same name and plan
-    (the memo stays bounded by live (name, session, plan) triples
-    rather than growing per rewrite).  ``frame=True`` persists the
-    result through ``persist_tracked``.  ``compute=None`` only looks
-    up: it returns None on a miss and runs no Spark job.
+    rewrite of the files behind the same plan is a miss, and a miss
+    evicts the superseded entry for the same name and plan before it
+    computes (the memo stays bounded by live (name, session, plan)
+    triples rather than growing per rewrite).  ``frame=True`` persists
+    the result through ``persist_tracked``; an evicted frame is
+    unpersisted first, since Spark's cache matches plans, not file
+    contents, and would otherwise serve the stale data to the new
+    entry.  ``compute=None`` only looks up: it returns None on a miss
+    and runs no Spark job.
     """
     key = (name, *artifact_cache_key(source.sparkSession, source))
     hit = _MEMO.get(key)
@@ -58,26 +61,33 @@ def memo(name: str, source: DataFrame, compute, *, frame: bool = False):
         return hit[1]
     if compute is None:
         return None
+    _evict(lambda k, _frame: k[:3] == key[:3])
     value = compute()
     if frame:
         value = persist_tracked(value)
-    for stale in [k for k in _MEMO if k[:3] == key[:3]]:
-        del _MEMO[stale]
     _MEMO[key] = (frame, value)
     return value
 
 
-def _drop_memo(frames: bool) -> int:
-    keys = [k for k, (is_frame, _) in _MEMO.items() if is_frame == frames]
+def forget(name: str) -> int:
+    """Drop every entry stored under ``name``, unpersisting its frames;
+    returns the number of entries dropped."""
+    return _evict(lambda k, _frame: k[0] == name)
+
+
+def _evict(match) -> int:
+    keys = [k for k, (is_frame, _) in _MEMO.items() if match(k, is_frame)]
     for k in keys:
-        del _MEMO[k]
+        is_frame, value = _MEMO.pop(k)
+        if is_frame:
+            value.unpersist()
     return len(keys)
 
 
 def clear_value_memos() -> int:
     """Drop every value entry of the memo — the explicit cold-start
     hook; returns the number of entries dropped."""
-    return _drop_memo(frames=False)
+    return _evict(lambda _k, is_frame: not is_frame)
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
@@ -89,7 +99,7 @@ def persist_tracked(df: DataFrame) -> DataFrame:
 def release_tracked() -> int:
     """Unpersist every tracked frame and drop the memo's frame entries
     (idempotent); returns the number of frames unpersisted."""
-    _drop_memo(frames=True)
+    _evict(lambda _k, is_frame: is_frame)
     n = 0
     while _TRACKED:
         df = _TRACKED.pop()
@@ -120,6 +130,23 @@ def artifact_cache_key(spark, df: DataFrame) -> tuple:
         df.semanticHash(),
         input_fingerprints(df),
     )
+
+
+def fingerprinted(df: DataFrame) -> bool:
+    """True when ``input_fingerprints(df)`` sees every change to the
+    data behind ``df``: each leaf of its plan is a file scan and each
+    input file stats.  A JDBC read, a local relation or cached data has
+    no input files, so a memo keyed on them would never miss and would
+    serve the first result forever."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if (
+            leaf.getClass().getSimpleName() != "LogicalRelation"
+            or leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"
+        ):
+            return False
+    return all(len(entry) == 3 for entry in input_fingerprints(df))
 
 
 def input_fingerprints(df: DataFrame) -> tuple:

@@ -161,6 +161,9 @@ OMM_VIEW_NAMES = list(_OMM_DERIVATION)
 #: key is invisible to this guard, exactly as it is to the catalog's).
 _OMM_REGISTERED: dict[str, tuple] = {}
 _OMM_FRAMES: dict[str, dict[str, DataFrame]] = {}
+#: (appId, name) -> (the OMM view relations a plan was built over, the
+#: value ``omm_plan`` built) — see ``omm_plan``.
+_OMM_PLANS: dict[tuple[str, str], tuple[list, object]] = {}
 
 
 def register_omm_views(spark: SparkSession) -> dict[str, DataFrame]:
@@ -190,6 +193,28 @@ def register_omm_views(spark: SparkSession) -> dict[str, DataFrame]:
     _OMM_REGISTERED[app_id] = key
     _OMM_FRAMES[app_id] = out
     return dict(out)
+
+
+def omm_plan(spark: SparkSession, name: str, build):
+    """``build(spark)`` over the OMM views, reused while they stand.
+
+    Registers the views first, then returns the value built for
+    ``name`` as long as every OMM name still resolves to the view
+    relation it resolved to at build time.  A re-registration (new base
+    views) or a shadow a fixture injector put over one OMM name is a
+    different relation, so the next call rebuilds and sees it; a plan
+    built over the old views is never served past them.
+    """
+    register_omm_views(spark)
+    cat = spark._jsparkSession.sessionState().catalog()
+    views = [cat.getTempView(view) for view in _OMM_DERIVATION]
+    key = (spark.sparkContext.applicationId, name)
+    hit = _OMM_PLANS.get(key)
+    if hit is not None and all(v.equals(h) for v, h in zip(views, hit[0])):
+        return hit[1]
+    value = build(spark)
+    _OMM_PLANS[key] = (views, value)
+    return value
 
 
 def omm_ctes() -> str:

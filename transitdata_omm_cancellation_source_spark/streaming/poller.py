@@ -55,11 +55,20 @@ class SnapshotStore:
         return os.path.join(self.path, "LATEST")
 
     def current_version(self) -> int | None:
+        """The version ``LATEST`` names; without a readable ``LATEST``,
+        the highest ``v{k}`` whose write completed (has ``_SUCCESS``)."""
         try:
             with open(self._pointer()) as fh:
                 return int(fh.read().strip())
         except (FileNotFoundError, ValueError):
-            return None
+            pass
+        complete = [
+            int(name[1:])
+            for name in os.listdir(self.path)
+            if name[:1] == "v" and name[1:].isdigit()
+            and os.path.isfile(os.path.join(self.path, name, "_SUCCESS"))
+        ]
+        return max(complete, default=None)
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         v = self.current_version()
@@ -106,11 +115,17 @@ def _check_sink_schema(
     """Refuse to append a value payload whose type contradicts the
     existing sink — switching ``value_format`` against a populated sink
     would otherwise interleave binary and string ``value`` columns in
-    one parquet directory and break every downstream read."""
+    one parquet directory and break every downstream read.
+
+    Reads the footer of one ``part-*`` file instead of listing the whole
+    sink, which grows by a file set every cycle: every append is checked
+    here, so all its files share one schema."""
     try:
-        existing = spark.read.parquet(sink_dir).schema
-    except Exception:  # first cycle: sink doesn't exist yet
+        with os.scandir(sink_dir) as entries:
+            part = next(e.path for e in entries if e.name.startswith("part-"))
+    except (FileNotFoundError, StopIteration):  # first cycle: no sink yet
         return
+    existing = spark.read.parquet(part).schema
     # names + types only: parquet read-back flips nullability flags
     if [(f.name, f.dataType) for f in existing] != [
         (f.name, f.dataType) for f in messages.schema
