@@ -116,7 +116,10 @@ def main() -> None:
         # so decade ratios measure the OPERATOR — r11's 17.7x
         # knn_pq_refine row was one session's training bill charged to
         # whichever kernel-scan query ran first.  A repeated harness
-        # run on unchanged data loads from disk and reports ~0.
+        # run loads them from disk and reports ~0 while the data and
+        # the engine's source are unchanged; the disk key covers every
+        # .py file of the package, so the first run after any engine
+        # edit retrains.
         t0 = time.perf_counter()
         from transitdata_omm_cancellation_source_spark.operators import (
             pq as _pq,

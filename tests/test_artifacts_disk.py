@@ -10,11 +10,16 @@ tests pin the r12 disk layer's contract:
   both in-session (trainer monkeypatched to raise) and from a genuinely
   COLD SparkSession (separate JVM, different application id), which
   also proves the disk key is session-independent;
-- rewriting the source parquet changes the key (no stale artifact).
+- rewriting the source parquet changes the key (no stale artifact);
+- the key covers every ``.py`` file of the package, so an edit at any
+  call depth below a trainer is a miss;
+- a source without input files trains in session and publishes
+  nothing.
 """
 
 from __future__ import annotations
 
+import importlib
 import json
 import os
 import shutil
@@ -54,14 +59,12 @@ def artifact_dir(spark, tmp_path, monkeypatch):
 
 
 def _forbid_training(monkeypatch):
-    # the seam, not the trainers' helpers: since the r14 bindings
-    # closure, patching a helper function CHANGES the disk key (that
-    # is the feature), so the retrain guard must sit where the key
-    # cannot see it.
+    # the seam between the hit/miss decision and the build work: a
+    # hit must never reach it.
     def boom(train):
         raise AssertionError("artifact hit must not retrain")
 
-    monkeypatch.setattr(artifacts, "_invoke_trainer", boom)
+    monkeypatch.setattr(artifacts, "_invoke_build", boom)
 
 
 def test_load_without_train_bit_identity_in_session(
@@ -94,7 +97,7 @@ import transitdata_omm_cancellation_source_spark.operators.pq as pq
 import transitdata_omm_cancellation_source_spark.artifacts as artifacts
 def boom(train):
     raise AssertionError("cold session must not retrain")
-artifacts._invoke_trainer = boom
+artifacts._invoke_build = boom
 from transitdata_omm_cancellation_source_spark.catalog import load_tables
 t = load_tables(spark, sys.argv[2])
 cv = [[r["c_key"], list(r["cv"]), r["cn2"]]
@@ -148,9 +151,8 @@ def test_rewritten_source_is_a_key_miss(spark, artifact_dir, tmp_path):
 
 
 def test_trainer_body_edit_is_a_key_miss(spark):
-    """The r13 fingerprint: editing a trainer's BODY must change the
-    disk key (a forgotten _FORMAT_VERSION bump can no longer serve a
-    stale artifact), while an identical body keys identically."""
+    """Editing a trainer's BODY must change the disk key, while the
+    same function fingerprinted twice keys identically."""
     t = load_tables(spark, SF_SMOKE)
 
     def train_a():
@@ -179,48 +181,70 @@ def test_trainer_body_edit_is_a_key_miss(spark):
     assert k0 not in (ka, kb)
 
 
-_HELPER_CONSTANT = 17
+def _codebook_key(spark, package: str) -> str:
+    """The ``pq_codebook`` disk key as ``package`` computes it, for the
+    trainer ``pq._shared_codebook`` passes."""
+    arts = importlib.import_module(f"{package}.artifacts")
+    pq_mod = importlib.import_module(f"{package}.operators.pq")
+    train_codebook = pq_mod._train_codebook
+    vecs = pq_mod._vectors(load_tables(spark, SF_SMOKE))
+    return arts.artifact_disk_key(
+        "pq_codebook", vecs, lambda: train_codebook(vecs)
+    )
 
 
-def _helper_v(x):
-    return x + 1  # helper recipe
+def test_deep_package_edit_is_a_key_miss(spark, tmp_path, monkeypatch):
+    """The key covers the whole package: an edit to ``pq._centroids``,
+    two calls below the codebook trainer and invisible in the
+    trainer's own source, changes it, and an unedited copy of the
+    package keys the same as the package itself."""
+    pkg = os.path.dirname(os.path.abspath(artifacts.__file__))
+    for copy in ("graft_same", "graft_edited"):
+        shutil.copytree(
+            pkg, tmp_path / copy, ignore=shutil.ignore_patterns("__pycache__")
+        )
+    pq_py = tmp_path / "graft_edited" / "operators" / "pq.py"
+    old = 'seeds = vecs.orderBy("vec_id").limit(K_CODES)'
+    text = pq_py.read_text()
+    assert text.count(old) == 1
+    pq_py.write_text(
+        text.replace(old, 'seeds = vecs.orderBy(F.desc("vec_id")).limit(K_CODES)')
+    )
+    monkeypatch.syspath_prepend(str(tmp_path))
+    try:
+        base = _codebook_key(spark, artifacts.__name__.rsplit(".", 1)[0])
+        assert _codebook_key(spark, "graft_same") == base
+        assert _codebook_key(spark, "graft_edited") != base
+    finally:
+        for mod in [m for m in sys.modules if m.split(".")[0].startswith("graft_")]:
+            del sys.modules[mod]
 
 
-def test_referenced_binding_edits_are_key_misses(spark, monkeypatch):
-    """r14 bindings closure (r13 verdict #7 / ADVICE): a trainer whose
-    BODY is unchanged must still miss the cache when a helper it calls
-    or a module constant it reads changes."""
-    t = load_tables(spark, SF_SMOKE)
-    src = t["embeddings"]
+def test_fileless_sources_train_in_session_and_publish_nothing(
+    spark, artifact_dir
+):
+    """Two local relations with one schema have no input files, so the
+    disk key cannot tell them apart: each must be served its own rows,
+    and nothing may be published."""
+    schema = "k int, v string"
 
-    def train():
-        return _helper_v(_HELPER_CONSTANT)
+    def serve(src):
+        rows = artifacts.load_or_train(
+            spark, "fileless", src, schema, lambda: src, ["k"]
+        ).collect()
+        return [tuple(r) for r in rows]
 
-    k1 = artifacts.artifact_disk_key("dummy", src, train)
-    # same everything -> same key (cross-session stability grain)
-    assert artifacts.artifact_disk_key("dummy", src, train) == k1
-
-    # helper-body edit -> miss
-    def _helper_v2(x):
-        return x + 2  # helper recipe CHANGED
-
-    orig_helper = train.__globals__["_helper_v"]
-    monkeypatch.setitem(train.__globals__, "_helper_v", _helper_v2)
-    k2 = artifacts.artifact_disk_key("dummy", src, train)
-    assert k2 != k1
-
-    # module-constant edit -> miss
-    monkeypatch.setitem(train.__globals__, "_helper_v", orig_helper)
-    assert artifacts.artifact_disk_key("dummy", src, train) == k1
-    monkeypatch.setitem(train.__globals__, "_HELPER_CONSTANT", 18)
-    assert artifacts.artifact_disk_key("dummy", src, train) != k1
+    a = spark.createDataFrame([(1, "a")], schema)
+    b = spark.createDataFrame([(2, "b"), (1, "c")], schema)
+    assert serve(a) == [(1, "a")]
+    assert serve(b) == [(1, "c"), (2, "b")]
+    assert list(artifact_dir.iterdir()) == []
 
 
 def test_closure_cell_edits_are_key_misses(spark):
-    """Closed-over values participate in the key: the same lambda text
-    built over two different thresholds keys differently, while opaque
-    objects (DataFrames) fold in by type only — the data itself is
-    covered by the source fingerprints."""
+    """Closed-over scalars participate in the key: the same lambda text
+    built over two different thresholds keys differently.  A DataFrame
+    cell is left out; its data is covered by the source fingerprints."""
     t = load_tables(spark, SF_SMOKE)
     src = t["embeddings"]
 
@@ -231,13 +255,3 @@ def test_closure_cell_edits_are_key_misses(spark):
     kb = artifacts.artifact_disk_key("dummy", src, make(0.9))
     assert ka != kb
     assert artifacts.artifact_disk_key("dummy", src, make(0.5)) == ka
-
-
-def test_mixed_type_set_binding_falls_back_to_type_grain():
-    """ADVICE r14: a mixed-type (unsortable) set referenced by a trainer
-    must fall back to the type-grain repr, not raise TypeError out of
-    the fingerprint (sorted() sits inside the try for exactly this)."""
-    rendered = artifacts._binding_repr({1, "a"})
-    assert rendered.startswith("<builtins.set")
-    # sortable sets still render by value (order-normalized)
-    assert artifacts._binding_repr({3, 1, 2}) == "[1,2,3]"

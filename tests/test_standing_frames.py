@@ -1,7 +1,7 @@
 """Disk-persisted STANDING INDEXES for the incremental-dedup family
 (r14 verdict #1): the band index, shingle sets and embedding
 assignment frame live as parquet artifacts keyed by source-file
-fingerprints + builder bindings-closure fingerprint, so a FRESH
+fingerprints, the builder's source and the package's source, so a FRESH
 session's first delta batch LOADS the corpus index instead of
 re-paying its build — and a corpus rewrite is a key miss.
 """
@@ -52,13 +52,13 @@ def _tables(spark):
 
 def _builds(monkeypatch):
     calls = []
-    orig = artifacts._invoke_frame_builder
+    orig = artifacts._invoke_build
 
     def guard(build):
         calls.append(build)
         return orig(build)
 
-    monkeypatch.setattr(artifacts, "_invoke_frame_builder", guard)
+    monkeypatch.setattr(artifacts, "_invoke_build", guard)
     return calls
 
 
@@ -130,7 +130,7 @@ def test_corpus_rewrite_is_a_key_miss(spark, tmp_path, monkeypatch):
 
 def test_builder_edit_is_a_key_miss(spark, artifact_dir, monkeypatch):
     """Two different build recipes over the same source publish two
-    different digests — the bindings-closure staleness contract
+    different digests — the builder-source staleness contract
     applied to frame artifacts."""
     t = _tables(spark)
     src = t["documents"]
@@ -178,7 +178,7 @@ def test_full_scan_intermediates_stay_in_session(spark, artifact_dir):
 
 
 def test_fileless_corpus_builds_in_session_without_collision(
-    spark, artifact_dir
+    spark, artifact_dir, monkeypatch
 ):
     """createDataFrame corpora have no input files, so the disk key
     cannot see their data — they must build in-session (plan-hash
@@ -198,5 +198,11 @@ def test_fileless_corpus_builds_in_session_without_collision(
         os.listdir(artifact_dir) if os.path.isdir(artifact_dir) else []
     )
     assert "shingle_sets" not in published
-    with pytest.raises(ValueError, match="no input files"):
-        load_or_build_frame(spark, "bad", a, lambda: a)
+    # called directly, a fileless source builds and publishes nothing
+    calls = _builds(monkeypatch)
+    assert load_or_build_frame(spark, "bad", a, lambda: a).count() == 1
+    assert len(calls) == 1
+    published = (
+        os.listdir(artifact_dir) if os.path.isdir(artifact_dir) else []
+    )
+    assert "bad" not in published

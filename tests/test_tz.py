@@ -64,3 +64,42 @@ def test_local_str_to_utc_epoch_ms(spark):
         ),
     ]
     assert [r.ms for r in out] == expected
+
+
+def _epoch_ms(spark, values):
+    df = spark.createDataFrame([(v,) for v in values], "ts string")
+    return [r.ms for r in df.select(local_str_to_utc_epoch_ms("ts").alias("ms")).collect()]
+
+
+def test_malformed_local_strings_are_null(spark):
+    # toUtcEpochMs returns null on a parse failure and the row is
+    # dropped (OmmCancellationHandler.java:155-157); under ANSI mode a
+    # plain cast would fail the whole poll cycle instead.
+    assert _epoch_ms(spark, ["", "garbage", None]) == [None, None, None]
+
+
+#: Europe/Helsinki switch days: local wall-clock string -> UTC epoch ms.
+_DST_CASES = {
+    # spring, 2024-03-31: 03:00-03:59 local does not exist
+    "2024-03-31 02:59:59": 1711846799000,
+    "2024-03-31 03:00:00": 1711846800000,
+    "2024-03-31 03:30:00": 1711848600000,
+    "2024-03-31 04:00:00": 1711846800000,
+    # autumn, 2024-10-27: 03:00-03:59 local happens twice
+    "2024-10-27 02:59:59": 1729987199000,
+    "2024-10-27 03:00:00": 1729987200000,
+    "2024-10-27 03:30:00": 1729989000000,
+    "2024-10-27 03:30:00.123": 1729989000123,
+    "2024-10-27 03:59:59.999": 1729990799999,
+    "2024-10-27 04:00:00": 1729994400000,
+}
+
+
+def test_dst_switches_follow_zoneinfo_fold0(spark):
+    # P11 resolves the autumn overlap to the earlier offset, as
+    # java.time's LocalDateTime.atZone and zoneinfo fold=0 do.
+    zone = ZoneInfo("Europe/Helsinki")
+    for text, ms in _DST_CASES.items():
+        local = dt.datetime.fromisoformat(text).replace(tzinfo=zone, fold=0)
+        assert round(local.timestamp() * 1000) == ms, text
+    assert _epoch_ms(spark, list(_DST_CASES)) == list(_DST_CASES.values())

@@ -101,12 +101,17 @@ def local_str_to_utc_epoch_ms(
 
     Reproduces ``toUtcEpochMs`` (OmmCancellationHandler.java:79-97):
     interpret the naive value in ``timezone`` and emit epoch ms;
-    unparseable/empty values yield NULL (callers drop them, S5).
-    Requires session tz UTC (session.RUNTIME_CONFS) so the ntz->instant
-    cast is the identity before the explicit zone shift.
+    unparseable/empty values yield NULL (callers drop them, S5) — a
+    ``try_cast``, since an ANSI-mode ``cast`` fails the whole query on
+    one malformed string.  Requires session tz UTC
+    (session.RUNTIME_CONFS) so the ntz->instant cast is the identity
+    before the explicit zone shift.  A wall-clock time in the autumn
+    overlap resolves to the earlier offset and one in the spring gap
+    shifts forward by the gap, as java.time's ``atZone`` does
+    (``tests/test_tz.py`` pins both switches).
     """
     col = F.col(ts) if isinstance(ts, str) else ts
-    as_instant = col.cast("timestamp_ntz").cast("timestamp")
+    as_instant = col.try_cast("timestamp_ntz").cast("timestamp")
     return F.unix_millis(F.to_utc_timestamp(as_instant, timezone))
 
 

@@ -53,28 +53,23 @@ def _family_frame(name: str, t, build, *, disk: bool = False, source: str = "doc
     64-minhash/band plan per consumer (Spark's CacheManager already
     shares the cached data of a rebuilt plan).
 
-    ``disk=True`` marks a STANDING INDEX (r14 verdict #1): the frame
-    additionally lives as a parquet artifact on disk
-    (``artifacts.load_or_build_frame``, keyed by source-file
-    fingerprints + the builder's bindings-closure fingerprint), so a
-    FRESH session's first incremental-dedup batch LOADS the corpus
-    index instead of re-paying its build — fresh-session steady state
-    ≈ warm steady state.  Only the true standing indexes carry the
-    flag (the band index, the shingle verification sets, the embedding
-    assignment frame); full-scan intermediates (candidates, verified
-    pairs) remain in-session only — they are query OUTPUT mass, not
-    reusable state.
+    ``disk=True`` marks a STANDING INDEX: the band index, the shingle
+    verification sets and the embedding assignment frame.  It is
+    served through ``artifacts.load_or_build_frame``, so a fresh
+    session's first incremental-dedup batch loads the corpus index
+    instead of rebuilding it.  The disk key covers the source table's
+    input files, ``build``'s source text and every ``.py`` file of the
+    package, so an engine edit at any depth rebuilds the index.  A
+    source without file fingerprints (a ``createDataFrame`` corpus)
+    builds in session and publishes nothing; the plan-hash key of the
+    memo still keeps two such corpora apart.  Full-scan intermediates
+    (candidates, verified pairs) stay in session: they are query
+    output mass, not reusable state.
     """
     src = t[source]
 
     def compute():
-        # The disk key identifies the corpus by its input-file
-        # fingerprints — a FILELESS source (createDataFrame corpora in
-        # tests, views over literals) has none, so two distinct
-        # synthetic corpora would collide on one digest.  Those build
-        # in-session only (the plan-hash-keyed memo still separates
-        # them).
-        if disk and src.inputFiles():
+        if disk:
             from ..artifacts import load_or_build_frame
 
             return load_or_build_frame(src.sparkSession, name, src, build)
@@ -1234,8 +1229,8 @@ def _cosine_vb(spark, t) -> DataFrame:
     STANDING INDEX (r14 verdict #1): disk-backed via ``_family_frame
     (disk=True)`` so a fresh session's delta batch loads the
     assignment instead of re-running quantize+assign over the corpus;
-    the helpers are closed over (freevars) so their bodies fold into
-    the disk key — an assignment-recipe edit is a cache miss."""
+    the disk key covers the package's source, so an assignment-recipe
+    edit is a cache miss."""
     from .pairscan import micro_unit_col
     from .similarity import assign_to_centroids, ivf_quantizer
 
