@@ -1,10 +1,11 @@
 """The clock-free candidate frame behind ``cancellation_pipeline``.
 
 Each call runs only F2/F3 and A2 over a frame that is built and persisted
-once per source version.  These tests pin what that reuse must not
-change: parity with the DuckDB oracle at the clock edges F2/F3 compare
-on, a shadowed OMM view seen by the next call, and a rewritten base
-table served fresh.
+once per source version, hash-partitioned on ``dvj_id``.  These tests pin
+what that reuse must not change: parity with the DuckDB oracle at the
+clock edges F2/F3 compare on, a shadowed OMM view seen by the next call,
+and a rewritten base table served fresh; and what it buys: A2's window
+plans no shuffle of its own.
 """
 
 from __future__ import annotations
@@ -137,3 +138,19 @@ def test_rewritten_base_parquet_is_a_miss_and_matches_the_oracle(spark, tmp_path
     finally:
         load_tables(spark, SF_SMOKE)
     assert 0 < after < before
+
+
+def test_dedup_window_over_the_persisted_frame_plans_no_exchange(spark):
+    """The frame's hash partitioning on ``dvj_id`` satisfies A2's
+    ``PARTITION BY dvj_id, deviation_case_id``: no Exchange sits between
+    the Window and the scan of the persisted frame."""
+    load_tables(spark, SF_SMOKE)
+    cancellation_pipeline(spark, QueryParams(mode="NOW")).count()  # persists the frame
+    plan = (
+        cancellation_pipeline(spark, QueryParams(mode="NOW"))
+        ._jdf.queryExecution().executedPlan().toString().splitlines()
+    )
+    window = next(i for i, line in enumerate(plan) if "Window [" in line)
+    scan = next(i for i, line in enumerate(plan) if "InMemoryTableScan" in line)
+    assert window < scan
+    assert not [line for line in plan[window:scan] if "Exchange" in line]

@@ -5,6 +5,7 @@ poller query, config/env source, JDBC template binding.
 from __future__ import annotations
 
 import time
+import uuid
 
 import pytest
 
@@ -185,10 +186,22 @@ def test_missing_pointer_recovers_highest_complete_version(spark, tmp_path):
     assert store.read(spark).count() == 7
 
 
-def test_sink_schema_check_reads_one_file(spark, tmp_path, monkeypatch):
-    """The check reads one part file's footer, never the whole sink."""
-    from pyspark.sql import DataFrameReader
+def _jobs_run_by(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs, broadcasts included."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
+
+def test_sink_schema_check_reads_one_file(spark, tmp_path, monkeypatch):
+    """The check reads one part file's footer on the driver, never the
+    whole sink: no Spark job runs, yet a format flip still raises."""
     from transitdata_omm_cancellation_source_spark.streaming import poller
     from transitdata_omm_cancellation_source_spark.streaming.messages import (
         encode_messages,
@@ -200,20 +213,105 @@ def test_sink_schema_check_reads_one_file(spark, tmp_path, monkeypatch):
     for _ in range(2):
         run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=str(sink))
     records = store.read(spark)
-    read = DataFrameReader.parquet
-    paths = []
+    read_metadata = poller.pq.read_metadata
+    footers = []
 
-    def spy(reader, *args, **kwargs):
-        paths.extend(args)
-        return read(reader, *args, **kwargs)
+    def spy(path, *args, **kwargs):
+        footers.append(path)
+        return read_metadata(path, *args, **kwargs)
 
-    monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    poller._check_sink_schema(spark, str(sink), encode_messages(records))
-    assert len(paths) == 1 and paths[0].startswith(str(sink / "part-"))
+    monkeypatch.setattr(poller.pq, "read_metadata", spy)
+    messages = encode_messages(records)
+    jobs = _jobs_run_by(
+        spark, lambda: poller._check_sink_schema(spark, str(sink), messages)
+    )
+    assert jobs == 0
+    assert len(footers) == 1 and footers[0].startswith(str(sink / "part-"))
     with pytest.raises(ValueError, match="sink schema mismatch"):
         poller._check_sink_schema(
             spark, str(sink), encode_messages(records, value_format="protobuf")
         )
+
+
+def test_steady_state_cycle_runs_three_jobs(spark, tmp_path):
+    """Past its first two cycles a poll cycle runs the broadcast of the
+    previous snapshot's keys, the sink append and the snapshot write:
+    the diff counts ride on the first write, the footers give the
+    schemas, and A2 reads the persisted frame without a shuffle."""
+    load_tables(spark, SF_SMOKE)
+    for sink, most in ((str(tmp_path / "sink"), 3), (None, 2)):
+        store = SnapshotStore(str(tmp_path / f"snap-{most}"))
+        for _ in range(2):
+            run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=sink)
+        jobs = _jobs_run_by(
+            spark,
+            lambda: run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=sink),
+        )
+        assert jobs <= most, (sink, jobs)
+
+
+def test_previous_snapshot_with_repeated_keys_counts_each_row_once(spark, tmp_path):
+    """A3 compares by dvj_id only: a previous snapshot holding two rows
+    per dvj_id (two deviation cases) still flags each current row once."""
+    from pyspark.sql import functions as F
+
+    from transitdata_omm_cancellation_source_spark.operators.diff import diff_counts
+
+    cur = spark.createDataFrame([("1",), ("2",), ("3",)], "dvj_id string")
+    prev = spark.createDataFrame(
+        [("1", 7), ("1", 8), ("2", 7), ("9", 7)], "dvj_id string, case_id int"
+    )
+    assert diff_counts(cur, prev).collect()[0].asDict() == {
+        "total": 3, "new": 1, "repeated": 2,
+    }
+
+    load_tables(spark, SF_SMOKE)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    first = run_poll_cycle(spark, store, QueryParams(mode="NOW"))
+    snap = store.read(spark)
+    twice = snap.unionByName(
+        snap.withColumn("deviation_case_id", F.col("deviation_case_id") + 1_000_000)
+    )
+    store.replace(twice)
+    again = run_poll_cycle(spark, store, QueryParams(mode="NOW"))
+    assert first["total"] > 0
+    assert (again["total"], again["new"], again["repeated"]) == (
+        first["total"], 0, first["total"],
+    )
+
+
+def test_empty_batch_cycle(spark, tmp_path):
+    """A clock past every valid_to selects nothing: the cycle reports
+    zero counts (an Observation on an empty write still reports), appends
+    no sink rows and leaves an empty snapshot whose footer gives its
+    schema; the next cycle on a normal clock finds every row new."""
+    import os
+
+    from transitdata_omm_cancellation_source_spark.plans.cancellation import (
+        cancellation_pipeline,
+    )
+    from transitdata_omm_cancellation_source_spark.streaming import poller
+
+    load_tables(spark, SF_SMOKE)
+    past_all = QueryParams(now="2099-01-01 00:00:00", today="2099-01-01", mode="NOW")
+    for sink in (str(tmp_path / "sink"), None):
+        store = SnapshotStore(str(tmp_path / f"snap-{sink is None}"))
+        if sink is not None:
+            run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=sink)
+        sunk = spark.read.parquet(sink).count() if sink else 0
+        empty = run_poll_cycle(spark, store, past_all, sink_dir=sink)
+        assert (empty["total"], empty["new"], empty["repeated"]) == (0, 0, 0)
+        assert empty["cancel_departure_combo"] == 0
+        if sink is not None:
+            assert spark.read.parquet(sink).count() == sunk
+        version = os.path.join(store.path, f"v{store.current_version()}")
+        footer = poller._footer_schema(spark, poller._part_file(version))
+        assert [(f.name, f.dataType) for f in footer] == [
+            (f.name, f.dataType) for f in cancellation_pipeline(spark, past_all).schema
+        ]
+        assert store.read(spark).count() == 0
+        normal = run_poll_cycle(spark, store, QueryParams(mode="NOW"))
+        assert normal["total"] > 0 and normal["new"] == normal["total"]
 
 
 def test_poller_streaming_query(spark, tmp_path):
@@ -403,3 +501,16 @@ def test_poll_cycle_rejects_value_format_flip_on_populated_sink(spark, tmp_path)
         )
     # same format keeps appending fine
     run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=sink)
+
+
+def test_two_cycle_query_removes_its_snapshot_dir(spark, tmp_path, monkeypatch):
+    """The stateful two-cycle registry query returns local rows and
+    leaves no snapshot directory behind."""
+    import tempfile
+
+    from transitdata_omm_cancellation_source_spark.plans import lifecycle_queries
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = lifecycle_queries._build_two_cycle(spark, SF_SMOKE).collect()
+    assert [r.cycle for r in rows] == [1, 2]
+    assert list(tmp_path.iterdir()) == []

@@ -10,8 +10,12 @@ from zoneinfo import ZoneInfo
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+import duckdb
+import pytest
+
 from transitdata_omm_cancellation_source_spark.functions.scalars import (
     local_str_to_utc_epoch_ms,
+    local_to_utc_epoch_ms_sql,
     now_strings,
 )
 
@@ -103,3 +107,17 @@ def test_dst_switches_follow_zoneinfo_fold0(spark):
         local = dt.datetime.fromisoformat(text).replace(tzinfo=zone, fold=0)
         assert round(local.timestamp() * 1000) == ms, text
     assert _epoch_ms(spark, list(_DST_CASES)) == list(_DST_CASES.values())
+
+
+@pytest.mark.parametrize("session_zone", ["UTC", "America/New_York", "Europe/Helsinki"])
+def test_oracle_dst_switches_follow_zoneinfo_fold0(session_zone):
+    # the oracles' P11 expression gives the same values as the engine
+    # in DuckDB, whose own timezone() takes the later offset in the
+    # autumn overlap; the session zone must not matter
+    con = duckdb.connect()
+    con.execute(f"SET TimeZone = '{session_zone}'")
+    rows = ", ".join(f"({i}, TIMESTAMP '{t}')" for i, t in enumerate(_DST_CASES))
+    got = con.execute(
+        f"SELECT {local_to_utc_epoch_ms_sql('ts')} FROM (VALUES {rows}) v(i, ts) ORDER BY i"
+    ).fetchall()
+    assert [ms for (ms,) in got] == list(_DST_CASES.values())

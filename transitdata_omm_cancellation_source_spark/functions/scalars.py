@@ -115,6 +115,22 @@ def local_str_to_utc_epoch_ms(
     return F.unix_millis(F.to_utc_timestamp(as_instant, timezone))
 
 
+def local_to_utc_epoch_ms_sql(ts: str, timezone: str = DEFAULT_TIMEZONE) -> str:
+    """P11 as a DuckDB expression, for the oracles: the naive timestamp
+    expression ``ts`` read as wall-clock time in ``timezone`` -> UTC
+    epoch ms.  DuckDB resolves a time in the autumn overlap to the later
+    offset; when the instant one hour earlier shows the same wall-clock
+    time, that earlier instant is taken instead, as
+    ``local_str_to_utc_epoch_ms`` and java.time do.  Independent of the
+    DuckDB session time zone (``tests/test_tz.py``)."""
+    later = f"epoch_ms(timezone('{timezone}', {ts}))"
+    earlier = f"{later} - 3600000"
+    return (
+        f"CASE WHEN timezone('{timezone}', to_timestamp(({earlier}) / 1000.0)) = {ts}"
+        f" THEN {earlier} ELSE {later} END"
+    )
+
+
 def now_strings(
     now: _dt.datetime | None = None, timezone: str = DEFAULT_TIMEZONE
 ) -> tuple[str, str]:

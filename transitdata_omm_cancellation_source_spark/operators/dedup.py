@@ -22,8 +22,7 @@ rule becomes two sort keys, so the same code handles 100 TB of groups
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def priority_argmax(
@@ -46,21 +45,18 @@ def priority_argmax(
     reference inherits whatever order SQL Server emitted for that tie;
     a distributed engine must not let partitioning pick the survivor).
     The DuckDB oracle (plans/cancellation.py) appends the same key.
+
+    The window is one SQL expression string: the poll cycle builds it
+    every 30 s, and a string is parsed JVM-side in one py4j call where a
+    ``Column`` tree costs one per node.  A frame already hash-partitioned
+    on a subset of ``group_cols`` plans no Exchange under the window.
     """
-    status_rank: Column = F.when(F.col(status_col) == winner, 0).otherwise(1)
-    tie_key: Column = (
-        F.when(F.col(status_col) == winner, F.lit(0)).otherwise(
-            -F.col(ts_col).cast("double")
-        )
+    status, ts = f"`{status_col}`", f"`{ts_col}`"
+    is_winner = f"{status} = '{winner}'"
+    rank = (
+        f"row_number() OVER (PARTITION BY {', '.join(f'`{c}`' for c in group_cols)}"
+        f" ORDER BY CASE WHEN {is_winner} THEN 0 ELSE 1 END,"
+        f" CASE WHEN {is_winner} THEN 0 ELSE -CAST({ts} AS DOUBLE) END,"
+        f" `{encounter_order_col}`, {ts}) AS __rn"
     )
-    w = Window.partitionBy(*group_cols).orderBy(
-        status_rank.asc(),
-        tie_key.asc(),
-        F.col(encounter_order_col).asc(),
-        F.col(ts_col).asc(),
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return df.selectExpr("*", rank).where("__rn = 1").drop("__rn")

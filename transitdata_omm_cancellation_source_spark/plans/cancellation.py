@@ -22,11 +22,16 @@ the statement is split into shared pieces: the clock-free join
 ``raw_cancellations`` composes them as written.  ``cancellation_pipeline``
 builds the *candidate frame* once per source version: the clock-free
 join, projected and decoded under S5, carrying the four columns F2/F3
-read.  The frame is persisted through ``caching.memo`` and keyed on its
-input files, and its plan object is reused while the OMM views stand
-(``omm_model.omm_plan``).  Each call then runs only F2/F3 and A2 over
-it.  A candidate plan with a leaf that is not a file scan (a JDBC read)
-has nothing to fingerprint, so it is never persisted.
+read.  The frame is hash-partitioned on ``dvj_id`` and persisted through
+``caching.memo``, keyed on its input files, and its plan object is
+reused while the OMM views stand (``omm_model.omm_plan``).  Each call
+then runs only F2/F3 and A2 over it; the partitioning satisfies A2's
+``PARTITION BY dvj_id, deviation_case_id``, so A2 plans no shuffle.
+Both are SQL expression strings (``_temporal``, ``priority_argmax``):
+a poll cycle rebuilds them every 30 s, and a string is parsed JVM-side
+in one py4j call where a ``Column`` tree costs one per node.  A
+candidate plan with a leaf that is not a file scan (a JDBC read) has
+nothing to fingerprint, so it is never persisted.
 
 Query templates: cancellations_current_future.sql (NOW mode, 2 params)
 and cancellations_past_current_future.sql (PAST mode, 5 params,
@@ -48,6 +53,7 @@ from ..functions.scalars import (
     char16_id,
     direction_from_gid,
     local_str_to_utc_epoch_ms,
+    local_to_utc_epoch_ms_sql,
     operating_day,
     start_time_over24h,
     status_from_ad,
@@ -115,43 +121,46 @@ def _joined(spark: SparkSession) -> DataFrame:
 
 def _temporal(
     params: QueryParams,
-    valid_to: Column,
-    ad_status: Column,
-    operating_day_date: Column,
-    dc_last_modified: Column,
-) -> Column:
-    """F2/F3 — the only predicates that read the clock, over the four
-    columns they compare (raw ``AD.status``: F2 is case-sensitive)."""
-    now = F.lit(params.now).cast("timestamp_ntz")
-    today = F.lit(params.today).cast("timestamp_ntz")
-    since = F.lit(params.since).cast("timestamp_ntz")
+    valid_to: str,
+    ad_status: str,
+    operating_day_date: str,
+    dc_last_modified: str,
+) -> str:
+    """F2/F3 — the only predicates that read the clock, as a SQL
+    expression over the four columns they compare (raw ``AD.status``:
+    F2 is case-sensitive).  One string is one py4j call per poll cycle
+    where the equivalent ``Column`` tree costs dozens."""
+    now = f"CAST('{params.now}' AS TIMESTAMP_NTZ)"
+    today = f"CAST('{params.today}' AS TIMESTAMP_NTZ)"
+    deleted = f"{valid_to} IS NULL AND {ad_status} = 'deleted'"
     # F2 — temporal validity disjunction with NULL logic (SQL L34-35)
-    current_or_future = (valid_to > now) | (
-        valid_to.isNull() & (ad_status == "deleted") & (operating_day_date >= today)
+    current_or_future = (
+        f"({valid_to} > {now} OR ({deleted} AND {operating_day_date} >= {today}))"
     )
     if params.mode != "PAST":
         return current_or_future
     # F3 — incremental capture of recently modified past rows
     # (cancellations_past_current_future.sql:34-37)
+    since = f"CAST('{params.since}' AS TIMESTAMP_NTZ)"
     past_modified = (
-        (valid_to <= now)
-        | (valid_to.isNull() & (ad_status == "deleted") & (operating_day_date < today))
-    ) & (dc_last_modified >= since)
-    return current_or_future | past_modified
-
-
-def _filtered(joined: DataFrame, temporal: Column | None = None) -> DataFrame:
-    """F1 and F4-F7 (clock-free), with F2/F3 when ``temporal`` is given."""
-    cond = F.col("BLM.language_code") == "fi"  # F1
-    if temporal is not None:
-        cond = cond & temporal  # F2/F3
-    return joined.filter(
-        cond
-        & F.col("KT.Name").isin("JoreIdentity", "JoreRouteIdentity", "RouteName")  # F4
-        & (F.col("OT.Name") == "VehicleJourney")  # F5
-        & F.col("VJT.IsWorkedOnDirectionOfLineGid").isNotNull()  # F6
-        & F.col("DVJ.IsReplacedById").isNull()  # F7
+        f"({valid_to} <= {now} OR ({deleted} AND {operating_day_date} < {today}))"
+        f" AND {dc_last_modified} >= {since}"
     )
+    return f"({current_or_future} OR ({past_modified}))"
+
+
+def _filtered(joined: DataFrame, temporal: str | None = None) -> DataFrame:
+    """F1 and F4-F7 (clock-free), with F2/F3 when ``temporal`` is given."""
+    cond = [
+        "BLM.language_code = 'fi'",  # F1
+        "KT.Name IN ('JoreIdentity', 'JoreRouteIdentity', 'RouteName')",  # F4
+        "OT.Name = 'VehicleJourney'",  # F5
+        "VJT.IsWorkedOnDirectionOfLineGid IS NOT NULL",  # F6
+        "DVJ.IsReplacedById IS NULL",  # F7
+    ]
+    if temporal is not None:
+        cond.insert(1, temporal)  # F2/F3
+    return joined.where(" AND ".join(cond))
 
 
 def _projected(filtered: DataFrame, *extra: Column) -> DataFrame:
@@ -197,11 +206,7 @@ def raw_cancellations(spark: SparkSession, params: QueryParams) -> DataFrame:
     clock-free join once per source version, F2/F3 per call.
     """
     temporal = _temporal(
-        params,
-        F.col("DC.valid_to"),
-        F.col("AD.status"),
-        F.col("DVJ.OperatingDayDate"),
-        F.col("DC.last_modified"),
+        params, "DC.valid_to", "AD.status", "DVJ.OperatingDayDate", "DC.last_modified"
     )
     return _projected(_filtered(_joined(spark), temporal))
 
@@ -299,25 +304,22 @@ def cancellation_pipeline(
 
     Only F2/F3 read the clock, so the rest runs once per source version:
     the candidate frame (J1-J10, F1, F4-F7, P1-P8, decode and S5) is
-    persisted through ``caching.memo``, keyed on its input files, and
-    each call runs F2/F3 and A2 over it.  A plan with a leaf that is not
-    a file scan (a JDBC read) cannot be fingerprinted; it runs uncached,
-    and Catalyst pushes F2/F3 into the join as in ``raw_cancellations``.
+    hash-partitioned on ``dvj_id`` and persisted through ``caching.memo``,
+    keyed on its input files, and each call runs F2/F3 and A2 over it
+    with no Exchange.  A plan with a leaf that is not a file scan (a JDBC
+    read) cannot be fingerprinted; it runs uncached, and Catalyst pushes
+    F2/F3 into the join as in ``raw_cancellations``.
     """
     p = params or QueryParams()
     candidates, persistable = omm_plan(spark, _CANDIDATES, _candidate_plan)
     if persistable:
-        candidates = memo(_CANDIDATES, candidates, lambda: candidates, frame=True)
-    current = candidates.filter(
-        _temporal(
-            p,
-            F.col("VALID_TO"),
-            F.col("ad_status"),
-            F.col("OPERATING_DAY_DATE"),
-            F.col("dc_last_modified"),
+        candidates = memo(
+            _CANDIDATES, candidates, lambda: candidates.repartition("dvj_id"), frame=True
         )
-    ).drop("ad_status", *_CLOCK_INPUTS)
-    return dedup_cancellations(current).drop("dc_last_modified")
+    current = candidates.where(
+        _temporal(p, "VALID_TO", "ad_status", "OPERATING_DAY_DATE", "dc_last_modified")
+    )
+    return dedup_cancellations(current).drop("dc_last_modified", "ad_status", *_CLOCK_INPUTS)
 
 
 # ---------------------------------------------------------------------------
@@ -388,7 +390,7 @@ decoded AS (
         CAST(1 AS INTEGER) AS schema_version,
         dvj_id, deviation_cases_type, affected_departures_type,
         title, description, category, sub_category,
-        epoch_ms(timezone('Europe/Helsinki', ad_last_modified)) AS ts_epoch_ms,
+        {local_to_utc_epoch_ms_sql("ad_last_modified")} AS ts_epoch_ms,
         dc_last_modified
     FROM raw
     WHERE lower(ad_status) IN ({_sql_quote_list(enums.AFFECTED_DEPARTURES_STATUS)})

@@ -5,6 +5,7 @@ extraction and event-time windowing (north-star stream analytics).
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,11 +65,16 @@ TWO_CYCLE_POLL_CYCLES = 2
 
 def _build_two_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    store = SnapshotStore(tempfile.mkdtemp(prefix="omm_snapshot_"))
-    rows = []
-    for cycle in range(1, TWO_CYCLE_POLL_CYCLES + 1):
-        counts = run_poll_cycle(spark, store, QueryParams(mode="NOW"))
-        rows.append((cycle, counts["total"], counts["new"], counts["repeated"]))
+    # the rows are local, so nothing reads the snapshot after the loop
+    snapshot_dir = tempfile.mkdtemp(prefix="omm_snapshot_")
+    try:
+        store = SnapshotStore(snapshot_dir)
+        rows = []
+        for cycle in range(1, TWO_CYCLE_POLL_CYCLES + 1):
+            counts = run_poll_cycle(spark, store, QueryParams(mode="NOW"))
+            rows.append((cycle, counts["total"], counts["new"], counts["repeated"]))
+    finally:
+        shutil.rmtree(snapshot_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows, "cycle int, total long, new long, repeated long"
     )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..functions.scalars import (
     direction_from_gid,
     local_str_to_utc_epoch_ms,
+    local_to_utc_epoch_ms_sql,
     operating_day,
     start_time_over24h,
     status_from_ad,
@@ -212,8 +213,8 @@ def _p9(spark, t):
 @_q(
     "p11_local_to_utc_epoch_ms",
     "P11: Helsinki wall-clock -> UTC epoch ms (toUtcEpochMs)",
-    """
-    SELECT event_id, epoch_ms(timezone('Europe/Helsinki', ts)) AS ts_epoch_ms
+    f"""
+    SELECT event_id, {local_to_utc_epoch_ms_sql("ts")} AS ts_epoch_ms
     FROM events WHERE event_id % 37 = 0
     """,
 )
@@ -401,12 +402,12 @@ def _j8(spark, t):
 @_q(
     "a2_priority_argmax_dedup",
     "A1/A2/O2: grouped status-priority argmax dedup as a window",
-    """
+    f"""
     WITH decoded AS (
         SELECT user_id, event_id % 50 AS case_id,
                CASE WHEN lower(event_type) = 'error' THEN 'RUNNING'
                     ELSE 'CANCELED' END AS status,
-               epoch_ms(timezone('Europe/Helsinki', ts)) AS ts_epoch_ms,
+               {local_to_utc_epoch_ms_sql("ts")} AS ts_epoch_ms,
                event_id
         FROM events
     ),

@@ -56,6 +56,9 @@ def encode_messages(
     but appending different formats to ONE sink still mixes types;
     ``run_poll_cycle`` validates the existing sink schema first.
 
+    The JSON branch is one ``selectExpr``: the poll cycle encodes every
+    30 s, and SQL strings skip the py4j ``Column`` construction.
+
     Wire-compat caveat (streaming/protobuf.py): the portable protobuf
     codec self-assigns field numbers and encodes enums as strings —
     valid wire format, NOT byte-compatible with the reference's
@@ -64,17 +67,22 @@ def encode_messages(
     ``pyspark.sql.protobuf.to_protobuf`` in with the compiled
     descriptor where upstream compatibility is required.
     """
+    meta = [
+        "ts_epoch_ms AS event_time_ms",
+        "dvj_id AS prop_dvj_id",
+        f"'{SCHEMA_TAG}' AS prop_schema",
+    ]
     if value_format == "protobuf":
         from .protobuf import protobuf_value
 
-        value = protobuf_value(PAYLOAD_FIELDS).alias("value")
+        out = records.select(
+            F.col("dvj_id").alias("key"),
+            protobuf_value(PAYLOAD_FIELDS).alias("value"),
+            *map(F.expr, meta),
+        )
     else:
-        value = F.to_json(F.struct(*PAYLOAD_FIELDS)).alias("value")
-    out = records.select(
-        F.col("dvj_id").alias("key"),
-        value,
-        F.col("ts_epoch_ms").alias("event_time_ms"),
-        F.col("dvj_id").alias("prop_dvj_id"),
-        F.lit(SCHEMA_TAG).alias("prop_schema"),
-    )
+        payload = ", ".join(PAYLOAD_FIELDS)
+        out = records.selectExpr(
+            "dvj_id AS key", f"to_json(struct({payload})) AS value", *meta
+        )
     return out.orderBy("key") if ordered else out

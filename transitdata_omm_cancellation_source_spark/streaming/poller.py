@@ -19,20 +19,32 @@ re-host:
                          result set, exactly like the reference —
                          intentionally NOT deduplicated on send
                          (SURVEY §2.7: keep re-emit semantics).
+
+At the reference's scale a cycle moves a few thousand rows, so its cost
+is the number of Spark jobs it runs, not their data.  A steady-state
+cycle runs three: the broadcast of the previous snapshot's keys, the
+sink append and the snapshot write (two without a sink).  The A3 counts
+are observed on the first write instead of collected by a job of their
+own, and the snapshot and sink schemas come from a parquet footer read
+on the driver instead of a schema-inference job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
+from pyspark.sql.types import StructType
 
 from ..observability import get_json_logger, monotonic_ms, warn_if_slow
-from ..operators.diff import diff_counts
+# diff_counts is not called here; perfbench/spans.py patches it by name
+from ..operators.diff import SEEN, diff_aggregates, diff_counts, flag_seen  # noqa: F401
 from ..plans.cancellation import QueryParams, cancellation_pipeline
 from .messages import encode_messages
 
@@ -71,10 +83,16 @@ class SnapshotStore:
         return max(complete, default=None)
 
     def read(self, spark: SparkSession) -> DataFrame | None:
+        """The current version, its schema taken from one part file's
+        footer so that no schema-inference job runs."""
         v = self.current_version()
         if v is None:
             return None
-        return spark.read.parquet(os.path.join(self.path, f"v{v}"))
+        path = os.path.join(self.path, f"v{v}")
+        part = _part_file(path)
+        if part is None:
+            return spark.read.parquet(path)
+        return spark.read.schema(_footer_schema(spark, part)).parquet(path)
 
     def replace(self, df: DataFrame) -> None:
         v = (self.current_version() or 0) + 1
@@ -95,18 +113,36 @@ class SnapshotStore:
                 shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
 
 
-def _f8_combo() -> "F.Column":
-    """F8 — the deviation/affected-departure type pair the reference
-    logs specially (``OmmCancellationHandler.java:243-247``); counted
-    per cycle inside the diff aggregation pass.  Built lazily: Column
-    construction needs an active SparkContext."""
-    return F.count(
-        F.when(
-            (F.col("deviation_cases_type") == "CANCEL_DEPARTURE")
-            & (F.col("affected_departures_type") == "CANCEL_ENTIRE_DEPARTURE"),
-            1,
-        )
-    )
+#: Spark's own schema in the footer of every parquet file it writes
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _part_file(directory: str) -> str | None:
+    """One ``part-*`` file of ``directory``, or None."""
+    try:
+        with os.scandir(directory) as entries:
+            return next(e.path for e in entries if e.name.startswith("part-"))
+    except (FileNotFoundError, StopIteration):
+        return None
+
+
+def _footer_schema(spark: SparkSession, part: str) -> StructType:
+    """The Spark schema stored in ``part``'s footer, read on the driver
+    with no Spark job; a footer without Spark's key falls back to Spark's
+    read of the file (one schema-inference job)."""
+    raw = (pq.read_metadata(part).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if raw is None:
+        return spark.read.parquet(part).schema
+    return StructType.fromJson(json.loads(raw))
+
+
+#: F8 — the deviation/affected-departure type pair the reference logs
+#: specially (``OmmCancellationHandler.java:243-247``), counted per
+#: cycle with the diff counts
+_F8_COMBO = (
+    "count_if(deviation_cases_type = 'CANCEL_DEPARTURE'"
+    " AND affected_departures_type = 'CANCEL_ENTIRE_DEPARTURE') AS cancel_departure_combo"
+)
 
 
 def _check_sink_schema(
@@ -117,15 +153,13 @@ def _check_sink_schema(
     would otherwise interleave binary and string ``value`` columns in
     one parquet directory and break every downstream read.
 
-    Reads the footer of one ``part-*`` file instead of listing the whole
-    sink, which grows by a file set every cycle: every append is checked
-    here, so all its files share one schema."""
-    try:
-        with os.scandir(sink_dir) as entries:
-            part = next(e.path for e in entries if e.name.startswith("part-"))
-    except (FileNotFoundError, StopIteration):  # first cycle: no sink yet
+    Reads the footer of one ``part-*`` file on the driver instead of
+    listing the whole sink, which grows by a file set every cycle: every
+    append is checked here, so all its files share one schema."""
+    part = _part_file(sink_dir)
+    if part is None:  # first cycle: no sink yet
         return
-    existing = spark.read.parquet(part).schema
+    existing = _footer_schema(spark, part)
     # names + types only: parquet read-back flips nullability flags
     if [(f.name, f.dataType) for f in existing] != [
         (f.name, f.dataType) for f in messages.schema
@@ -152,32 +186,36 @@ def run_poll_cycle(
     (``OmmCancellationHandler.java:206-224``) plus:
 
     - ``cancel_departure_combo`` — F8 special-cased rows
-      (``OmmCancellationHandler.java:243-247``), counted in the same
-      aggregation pass as the diff;
+      (``OmmCancellationHandler.java:243-247``), counted with the diff;
     - ``duration_ms`` — the cycle's wall time; a JSON-structured
       warning fires above the reference's 4000 ms SLO
       (``OmmConnector.java:86-89``).  ``clock`` is injectable for
       deterministic tests.
+
+    The counts are a ``pyspark.sql.Observation`` on the cycle's first
+    write, the sink append (or, without a sink, the snapshot write),
+    over the current rows flagged by ``flag_seen``; the order stays
+    publish, then replace state, and the counts are read only after that
+    write succeeded.  ``cur`` is not persisted: re-deriving it from the
+    persisted candidate frame for the snapshot write costs less than the
+    job that would materialize a cache.  A source without a candidate
+    frame (a JDBC read) is therefore read by each of the two writes.
     """
     logger = logger or get_json_logger()
     t0 = clock()
-    cur = cancellation_pipeline(spark, params).persist()
-    try:
-        prev = store.read(spark)
-        counts = diff_counts(
-            cur, prev, extra={"cancel_departure_combo": _f8_combo()}
-        ).collect()[0].asDict()
-        if sink_dir is not None:
-            # encode plan built only when a sink consumes it — a
-            # sinkless cycle (the A3 counts query) otherwise paid
-            # ~50 ms of py4j plan construction per cycle for a frame
-            # nothing read (r15, guide §1.2).
-            messages = encode_messages(cur, value_format=value_format)
-            _check_sink_schema(spark, sink_dir, messages)
-            messages.write.mode("append").parquet(sink_dir)
+    cur = cancellation_pipeline(spark, params)
+    counted = Observation()
+    flagged = flag_seen(cur, store.read(spark)).observe(
+        counted, *diff_aggregates(), F.expr(_F8_COMBO)
+    )
+    if sink_dir is not None:
+        messages = encode_messages(flagged, value_format=value_format)
+        _check_sink_schema(spark, sink_dir, messages)
+        messages.write.mode("append").parquet(sink_dir)
         store.replace(cur)
-    finally:
-        cur.unpersist()
+    else:
+        store.replace(flagged.drop(SEEN))
+    counts = counted.get
     counts["duration_ms"] = clock() - t0
     warn_if_slow(logger, counts["duration_ms"])
     logger.info(
