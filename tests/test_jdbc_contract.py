@@ -137,6 +137,61 @@ def test_jdbc_backed_omm_view_is_read_on_every_call(spark, derby):
     assert second == full
 
 
+def test_jdbc_backed_poll_cycle_publishes_and_snapshots_one_read(spark, derby, tmp_path):
+    """Over a JDBC source there is no persisted candidate frame, so a
+    cycle with a sink persists its records: a row inserted between the
+    sink append and the snapshot write reaches neither, and the snapshot
+    holds exactly the rows just published."""
+    from transitdata_omm_cancellation_source_spark.catalog import load_tables
+    from transitdata_omm_cancellation_source_spark.plans.cancellation import (
+        QueryParams,
+        cancellation_pipeline,
+    )
+    from transitdata_omm_cancellation_source_spark.plans.omm_model import (
+        register_omm_views,
+    )
+    from transitdata_omm_cancellation_source_spark.streaming.poller import (
+        SnapshotStore,
+        run_poll_cycle,
+    )
+
+    url, _ = derby
+    load_tables(spark, SF_SMOKE)
+    params = QueryParams(mode="PAST")
+    full = cancellation_pipeline(spark, params).collect()
+    held = min(r[0] for r in full)  # deviation_case_id is the first column
+    ad = register_omm_views(spark)["omm_affected_departures"]
+    opts = {"url": url, "dbtable": "AD_POLL", "driver": _DERBY}
+    ad.filter(F.col("deviation_case_id") != held).write.format("jdbc").options(
+        **opts
+    ).option("createTableColumnTypes", "status VARCHAR(16), type VARCHAR(32)").save()
+
+    class InsertBeforeReplace(SnapshotStore):
+        def replace(self, df):
+            ad.filter(F.col("deviation_case_id") == held).write.format("jdbc").options(
+                **opts
+            ).mode("append").save()
+            super().replace(df)
+
+    store = InsertBeforeReplace(str(tmp_path / "snapshot"))
+    sink = str(tmp_path / "sink")
+    table_read(
+        spark, url, "AD_POLL", driver=_DERBY, preferTimestampNTZ="true"
+    ).createOrReplaceTempView("omm_affected_departures")
+    try:
+        counts = run_poll_cycle(spark, store, params, sink_dir=sink)
+        after = cancellation_pipeline(spark, params).count()
+    finally:
+        spark.catalog.dropTempView("omm_affected_departures")
+    published = sorted(r.key for r in spark.read.parquet(sink).collect())
+    snapshot = sorted(r.dvj_id for r in store.read(spark).collect())
+    assert after == len(full)  # the inserted rows are in the source
+    assert snapshot == published
+    assert counts["total"] == counts["new"] == len(published) == len(
+        [r for r in full if r[0] != held]
+    )
+
+
 # --- T-SQL dialect conformance against the reference resources --------------
 # The template text only ever EXECUTES against Derby (rewritten), so
 # SQL Server dialect drift would go unnoticed until production.  This

@@ -294,8 +294,11 @@ def _candidate_plan(spark: SparkSession) -> tuple[DataFrame, bool]:
 
 
 def cancellation_pipeline(
-    spark: SparkSession, params: QueryParams | None = None
-) -> DataFrame:
+    spark: SparkSession,
+    params: QueryParams | None = None,
+    *,
+    report_persisted: bool = False,
+) -> DataFrame | tuple[DataFrame, bool]:
     """scan → join → filter → project → decode → dedup (E1 through A2).
 
     Requires base testdata views (catalog.load_tables) to be registered;
@@ -309,6 +312,12 @@ def cancellation_pipeline(
     with no Exchange.  A plan with a leaf that is not a file scan (a JDBC
     read) cannot be fingerprinted; it runs uncached, and Catalyst pushes
     F2/F3 into the join as in ``raw_cancellations``.
+
+    ``report_persisted=True`` returns ``(records, persisted)`` instead,
+    ``persisted`` telling whether ``records`` reads the persisted
+    candidate frame: a caller that reads the records more than once
+    persists them itself only when it is false, or each read re-runs
+    the source query and may see other rows.
     """
     p = params or QueryParams()
     candidates, persistable = omm_plan(spark, _CANDIDATES, _candidate_plan)
@@ -319,7 +328,8 @@ def cancellation_pipeline(
     current = candidates.where(
         _temporal(p, "VALID_TO", "ad_status", "OPERATING_DAY_DATE", "dc_last_modified")
     )
-    return dedup_cancellations(current).drop("dc_last_modified", "ad_status", *_CLOCK_INPUTS)
+    records = dedup_cancellations(current).drop("dc_last_modified", "ad_status", *_CLOCK_INPUTS)
+    return (records, persistable) if report_persisted else records
 
 
 # ---------------------------------------------------------------------------

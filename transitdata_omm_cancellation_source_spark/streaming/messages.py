@@ -56,8 +56,9 @@ def encode_messages(
     but appending different formats to ONE sink still mixes types;
     ``run_poll_cycle`` validates the existing sink schema first.
 
-    The JSON branch is one ``selectExpr``: the poll cycle encodes every
-    30 s, and SQL strings skip the py4j ``Column`` construction.
+    Every column but ``value`` is one SQL-expression string, and so is
+    the JSON ``value``: the poll cycle encodes every 30 s, and a string
+    is one py4j call where a ``Column`` tree is several.
 
     Wire-compat caveat (streaming/protobuf.py): the portable protobuf
     codec self-assigns field numbers and encodes enums as strings —
@@ -67,22 +68,16 @@ def encode_messages(
     ``pyspark.sql.protobuf.to_protobuf`` in with the compiled
     descriptor where upstream compatibility is required.
     """
+    if value_format == "protobuf":
+        from .protobuf import protobuf_value
+
+        value = protobuf_value(PAYLOAD_FIELDS)
+    else:
+        value = F.expr(f"to_json(struct({', '.join(PAYLOAD_FIELDS)}))")
     meta = [
         "ts_epoch_ms AS event_time_ms",
         "dvj_id AS prop_dvj_id",
         f"'{SCHEMA_TAG}' AS prop_schema",
     ]
-    if value_format == "protobuf":
-        from .protobuf import protobuf_value
-
-        out = records.select(
-            F.col("dvj_id").alias("key"),
-            protobuf_value(PAYLOAD_FIELDS).alias("value"),
-            *map(F.expr, meta),
-        )
-    else:
-        payload = ", ".join(PAYLOAD_FIELDS)
-        out = records.selectExpr(
-            "dvj_id AS key", f"to_json(struct({payload})) AS value", *meta
-        )
+    out = records.select(F.expr("dvj_id AS key"), value.alias("value"), *map(F.expr, meta))
     return out.orderBy("key") if ordered else out

@@ -89,10 +89,7 @@ class SnapshotStore:
         if v is None:
             return None
         path = os.path.join(self.path, f"v{v}")
-        part = _part_file(path)
-        if part is None:
-            return spark.read.parquet(path)
-        return spark.read.schema(_footer_schema(spark, part)).parquet(path)
+        return spark.read.schema(_footer_schema(spark, _part_file(path))).parquet(path)
 
     def replace(self, df: DataFrame) -> None:
         v = (self.current_version() or 0) + 1
@@ -196,25 +193,34 @@ def run_poll_cycle(
     write, the sink append (or, without a sink, the snapshot write),
     over the current rows flagged by ``flag_seen``; the order stays
     publish, then replace state, and the counts are read only after that
-    write succeeded.  ``cur`` is not persisted: re-deriving it from the
-    persisted candidate frame for the snapshot write costs less than the
-    job that would materialize a cache.  A source without a candidate
-    frame (a JDBC read) is therefore read by each of the two writes.
+    write succeeded.  Over a file source ``cur`` reads the persisted
+    candidate frame, and re-deriving it for the snapshot write costs less
+    than the job that would fill a cache.  Over a source with no
+    candidate frame (a JDBC read) a cycle with a sink persists ``cur``,
+    so one read of the source serves both writes and the snapshot holds
+    the rows just published.
     """
     logger = logger or get_json_logger()
     t0 = clock()
-    cur = cancellation_pipeline(spark, params)
-    counted = Observation()
-    flagged = flag_seen(cur, store.read(spark)).observe(
-        counted, *diff_aggregates(), F.expr(_F8_COMBO)
-    )
-    if sink_dir is not None:
-        messages = encode_messages(flagged, value_format=value_format)
-        _check_sink_schema(spark, sink_dir, messages)
-        messages.write.mode("append").parquet(sink_dir)
-        store.replace(cur)
-    else:
-        store.replace(flagged.drop(SEEN))
+    cur, persisted = cancellation_pipeline(spark, params, report_persisted=True)
+    keep = sink_dir is not None and not persisted
+    if keep:
+        cur.persist()
+    try:
+        counted = Observation()
+        flagged = flag_seen(cur, store.read(spark)).observe(
+            counted, *diff_aggregates(), F.expr(_F8_COMBO)
+        )
+        if sink_dir is None:
+            store.replace(flagged.drop(SEEN))
+        else:
+            messages = encode_messages(flagged, value_format=value_format)
+            _check_sink_schema(spark, sink_dir, messages)
+            messages.write.mode("append").parquet(sink_dir)
+            store.replace(cur)
+    finally:
+        if keep:
+            cur.unpersist()
     counts = counted.get
     counts["duration_ms"] = clock() - t0
     warn_if_slow(logger, counts["duration_ms"])
