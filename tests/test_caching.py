@@ -113,3 +113,10 @@ def test_memo_keyed_on_persisted_file_backed_frame_computes_once(
         assert calls == [1]
     finally:
         caching.release_tracked()
+
+
+def test_scratch_passes_rounds_up_past_the_budget():
+    budget = caching.SCRATCH_BUDGET_BYTES
+    assert caching.scratch_passes(0) == 1
+    assert caching.scratch_passes(budget) == 1
+    assert caching.scratch_passes(budget + 1) == 2

@@ -55,67 +55,53 @@ def test_bounded_scratch_passes_are_bit_identical(spark, monkeypatch):
     results = []
     for k in (1, 3):  # forced single, forced K
         with monkeypatch.context() as m:
-            m.setattr(graph, "_known_pass_count", lambda spark, li: k)
+            m.setattr(graph, "_known_pass_count", lambda li: k)
             results.append(sorted(map(tuple, _pagerank(spark, t).collect())))
     results.append(sorted(map(tuple, _pagerank(spark, t).collect())))  # estimator
     assert results[0] == results[1] == results[2]
     assert len(results[0]) > 10  # non-vacuous
 
 
-def test_pagerank_pass_count_estimator_and_conf_validation(spark):
-    import pytest
-
+def test_pagerank_pass_count_estimator(spark, monkeypatch):
+    from transitdata_omm_cancellation_source_spark import caching
     from transitdata_omm_cancellation_source_spark.operators.graph import (
-        _PR_SCRATCH_GB_CONF,
         _PR_SPILL_BYTES_PER_PAIR,
         _pagerank_pass_count,
+        _per_order_parts,
     )
 
+    # the pass count is memoized per fact table, not per budget: empty
+    # memo so the shrunk budget below re-estimates
+    monkeypatch.setattr(caching, "_MEMO", {})
     # 4 orders x 3 parts = 3 pairs each -> 12 pair rows
     rows = [(o, p) for o in range(4) for p in (1, 2, 3)]
     items = _li(spark, rows)
-    assert _pagerank_pass_count(spark, items, items) == 1  # default budget
-    tiny_gb = 6 * _PR_SPILL_BYTES_PER_PAIR / 2**30  # budget for 6 rows
-    spark.conf.set(_PR_SCRATCH_GB_CONF, str(tiny_gb))
-    try:
-        assert _pagerank_pass_count(spark, items, items) == 2
-        spark.conf.set(_PR_SCRATCH_GB_CONF, "-1")
-        with pytest.raises(ValueError, match="positive"):
-            _pagerank_pass_count(spark, items, items)
-        spark.conf.set(_PR_SCRATCH_GB_CONF, "wat")
-        with pytest.raises(ValueError, match="GiB"):
-            _pagerank_pass_count(spark, items, items)
-    finally:
-        spark.conf.unset(_PR_SCRATCH_GB_CONF)
+    po = _per_order_parts(items)
+    assert _pagerank_pass_count(items, po) == 1  # default budget
+    caching._MEMO.clear()
+    monkeypatch.setattr(
+        caching, "SCRATCH_BUDGET_BYTES", 6 * _PR_SPILL_BYTES_PER_PAIR
+    )  # budget for 6 rows
+    assert _pagerank_pass_count(items, po) == 2
 
 
-def test_broadcast_guard_raises_past_budget_and_validates_conf(spark):
+def test_broadcast_guard_raises_past_limit():
     """r13 verdict #3: the scratch-mode superstep broadcast hint is
-    node-sized — past the configured budget the build must fail with
-    an actionable message, never hint the executor into an OOM."""
+    node-sized — past the limit the build must fail with the estimate
+    and the limit, never hint the executor into an OOM."""
     import pytest
 
     from transitdata_omm_cancellation_source_spark.operators.graph import (
         _PR_BCAST_BYTES_PER_NODE,
-        _PR_BCAST_GB_CONF,
-        _PR_BCAST_GB_DEFAULT,
+        _PR_BCAST_LIMIT_BYTES,
         _guard_rank_broadcast,
     )
 
-    # under the default budget: no-op
-    _guard_rank_broadcast(spark, 25_000_000)  # the measured sf125 point
-    over = int(_PR_BCAST_GB_DEFAULT * 2**30 // _PR_BCAST_BYTES_PER_NODE) + 1
-    with pytest.raises(ValueError, match="cluster run with scratch mode off"):
-        _guard_rank_broadcast(spark, over)
-    spark.conf.set(_PR_BCAST_GB_CONF, "0.000001")
-    try:
-        with pytest.raises(ValueError, match="broadcastBudgetGb budget"):
-            _guard_rank_broadcast(spark, 1_000_000)
-        spark.conf.set(_PR_BCAST_GB_CONF, "lots")
-        with pytest.raises(ValueError, match="GiB"):
-            _guard_rank_broadcast(spark, 1)
-    finally:
-        spark.conf.unset(_PR_BCAST_GB_CONF)
+    # under the limit: no-op
+    _guard_rank_broadcast(25_000_000)  # the measured sf125 point
+    over = _PR_BCAST_LIMIT_BYTES // _PR_BCAST_BYTES_PER_NODE + 1
+    with pytest.raises(ValueError, match=r"GiB for \d+ nodes, over the 4 GiB"):
+        _guard_rank_broadcast(over)
 
 
 def test_known_pass_count_skips_the_proxy_job(spark, tmp_path, monkeypatch):
@@ -131,14 +117,14 @@ def test_known_pass_count_skips_the_proxy_job(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "li.parquet")
     _li(spark, [(1, 10), (1, 20)]).write.parquet(path)
     t = {"lineitem": spark.read.parquet(path)}
-    assert _known_pass_count(spark, t["lineitem"]) is None  # nothing built
+    assert _known_pass_count(t["lineitem"]) is None  # nothing built
     _pagerank(spark, t).collect()
 
     again = spark.read.parquet(path)  # schema inference may run a job
     sc = spark.sparkContext
     sc.setJobGroup("known-pass-count", "memo lookup")
     try:
-        assert _known_pass_count(spark, again) == 1
+        assert _known_pass_count(again) == 1
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup("known-pass-count")) == []

@@ -10,8 +10,8 @@ disjoint hash-range passes over the prefix shingle.  These tests pin:
   including on a heavy-hitter corpus where the prefix order is
   hot-aware;
 - the pass-count estimator: 1 below scale (the certified plan is
-  unchanged), and >1 when the configured scratch budget shrinks below
-  the estimated in-flight bytes.
+  unchanged), and >1 when ``caching.SCRATCH_BUDGET_BYTES`` shrinks
+  below the estimated in-flight bytes.
 
 K is forced by replacing ``_ngram_pass_count`` for the build.
 """
@@ -20,12 +20,10 @@ from __future__ import annotations
 
 import duckdb
 import pandas as pd
-import pytest
 
-from transitdata_omm_cancellation_source_spark.functions import text as X
+from transitdata_omm_cancellation_source_spark import caching
 from transitdata_omm_cancellation_source_spark.operators import dedup_fuzzy
 from transitdata_omm_cancellation_source_spark.operators.dedup_fuzzy import (
-    _NGRAM_SCRATCH_GB_CONF,
     _NGRAM_SPILL_BYTES_PER_PREFIX_ROW,
     _minhash_shingles,
     _ngram_jaccard,
@@ -35,17 +33,8 @@ from transitdata_omm_cancellation_source_spark.plans.queries import REGISTRY
 from transitdata_omm_cancellation_source_spark.testing import compare_frames
 
 
-@pytest.fixture()
-def _clean_conf(spark):
-    yield
-    try:
-        spark.conf.unset(_NGRAM_SCRATCH_GB_CONF)
-    except Exception:
-        pass
-
-
 def _force_passes(monkeypatch, k: int) -> None:
-    monkeypatch.setattr(dedup_fuzzy, "_ngram_pass_count", lambda spark, sh: k)
+    monkeypatch.setattr(dedup_fuzzy, "_ngram_pass_count", lambda sh: k)
 
 
 def _corpus_rows() -> list[tuple[int, str]]:
@@ -75,7 +64,7 @@ def _run(spark, docs):
     )
 
 
-def test_kpass_equals_one_pass_and_oracle(spark, _clean_conf, monkeypatch):
+def test_kpass_equals_one_pass_and_oracle(spark, monkeypatch):
     rows = _corpus_rows()
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
@@ -95,13 +84,13 @@ def test_kpass_equals_one_pass_and_oracle(spark, _clean_conf, monkeypatch):
     assert compare_frames(one_pass, oracle) == []
 
 
-def test_pass_count_estimator(spark, _clean_conf):
+def test_pass_count_estimator(spark, monkeypatch):
     rows = _corpus_rows()
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     sh = _minhash_shingles({"documents": docs})
 
     # default budget at toy scale -> single pass, certified plan intact
-    assert _ngram_pass_count(spark, sh) == 1
+    assert _ngram_pass_count(sh) == 1
 
     # shrink the budget below the estimate -> K-pass mode engages, and
     # K tracks ceil(est / budget)
@@ -115,30 +104,12 @@ def test_pass_count_estimator(spark, _clean_conf):
         )
     ).first()[0]
     est = prefix_rows * _NGRAM_SPILL_BYTES_PER_PREFIX_ROW
-    budget_gb = est / 2.5 / 2**30  # ceil(~2.5) == 3, robust to rounding
-    spark.conf.set(_NGRAM_SCRATCH_GB_CONF, str(budget_gb))
-    assert _ngram_pass_count(spark, sh) == 3
+    # ceil(~2.5) == 3, robust to rounding
+    monkeypatch.setattr(caching, "SCRATCH_BUDGET_BYTES", int(est / 2.5))
+    assert _ngram_pass_count(sh) == 3
 
 
-def test_pass_count_conf_validation(spark, _clean_conf):
-    """Bad runtime confs must be clear config errors (r11 ADVICE): a
-    zero/negative budget raised ZeroDivisionError, a non-numeric one
-    a bare ValueError from float()."""
-    rows = _corpus_rows()
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = _minhash_shingles({"documents": docs})
-
-    for bad in ("0", "-1", "nope"):
-        spark.conf.set(_NGRAM_SCRATCH_GB_CONF, bad)
-        with pytest.raises(ValueError, match=_NGRAM_SCRATCH_GB_CONF):
-            _ngram_pass_count(spark, sh)
-    # a tiny-but-positive budget degrades to a large finite pass count,
-    # never a divide-by-zero
-    spark.conf.set(_NGRAM_SCRATCH_GB_CONF, "1e-12")
-    assert _ngram_pass_count(spark, sh) >= 1
-
-
-def test_positional_filter_keeps_boundary_pair(spark, _clean_conf, monkeypatch):
+def test_positional_filter_keeps_boundary_pair(spark, monkeypatch):
     """r16: single-pass mode applies PPJoin's positional filter
     (upper-bound prune before the verify joins).  A pair at Jaccard
     EXACTLY tau = 0.5 sits on the prune boundary — it must survive the

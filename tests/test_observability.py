@@ -18,6 +18,7 @@ from transitdata_omm_cancellation_source_spark.plans.cancellation import (
     QueryParams,
     cancellation_pipeline,
 )
+from transitdata_omm_cancellation_source_spark.plans.omm_model import register_omm_views
 from transitdata_omm_cancellation_source_spark.streaming.poller import (
     SnapshotStore,
     run_poll_cycle,
@@ -153,22 +154,37 @@ def test_poll_cycle_times_and_warns_with_fake_clock(spark, tmp_path):
 
 
 def test_f8_combo_count_matches_direct_aggregation(spark, tmp_path):
+    """Every testdata candidate carries the F8 pair, so the even
+    deviation cases are shadowed to another valid affected-departure
+    type: the combo count must then differ from the row count."""
     from pyspark.sql import functions as F
 
     load_tables(spark, SF_SMOKE)
-    logger, _ = _capture_logger("t.f8")
-    counts = run_poll_cycle(
-        spark, SnapshotStore(str(tmp_path / "snap")),
-        QueryParams(mode="NOW"), logger=logger,
-    )
-    expected = (
-        cancellation_pipeline(spark, QueryParams(mode="NOW"))
-        .filter(
-            (F.col("deviation_cases_type") == "CANCEL_DEPARTURE")
-            & (F.col("affected_departures_type") == "CANCEL_ENTIRE_DEPARTURE")
+    ad = register_omm_views(spark)["omm_affected_departures"]
+    ad.withColumn(
+        "type",
+        F.expr(
+            "CASE WHEN deviation_case_id % 2 = 0"
+            " THEN 'CANCEL_STOPS_FROM_MIDDLE' ELSE type END"
+        ),
+    ).createOrReplaceTempView("omm_affected_departures")
+    try:
+        logger, _ = _capture_logger("t.f8")
+        counts = run_poll_cycle(
+            spark, SnapshotStore(str(tmp_path / "snap")),
+            QueryParams(mode="NOW"), logger=logger,
         )
-        .count()
-    )
+        expected = (
+            cancellation_pipeline(spark, QueryParams(mode="NOW"))
+            .filter(
+                (F.col("deviation_cases_type") == "CANCEL_DEPARTURE")
+                & (F.col("affected_departures_type") == "CANCEL_ENTIRE_DEPARTURE")
+            )
+            .count()
+        )
+    finally:
+        spark.catalog.dropTempView("omm_affected_departures")
+    assert 0 < counts["cancel_departure_combo"] < counts["total"]
     assert counts["cancel_departure_combo"] == expected
     assert counts["duration_ms"] > 0
 

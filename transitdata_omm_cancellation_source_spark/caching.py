@@ -29,6 +29,13 @@ source frame, holding two kinds of entry.
   artifact tier does; ``clear_value_memos`` is the cold-start hook.
 
 README.md ("Caches") lists each entry with the ablation that keeps it.
+
+``scratch_passes`` is the one bounded-scratch rule: the two operators
+that can run in K disjoint hash-range passes (``dedup_ngram_jaccard``
+and ``parts_copurchase_pagerank``) estimate their one-shot in-flight
+shuffle bytes from the corpus and split them under
+``SCRATCH_BUDGET_BYTES``; ``release_pass_scratch`` frees a finished
+pass's shuffle files before the next one runs.
 """
 
 from __future__ import annotations
@@ -175,3 +182,42 @@ def input_fingerprints(df: DataFrame) -> tuple:
                     continue
         files.append(entry)
     return tuple(files)
+
+
+#: shuffle scratch one bounded-scratch pass may keep in flight.
+#: Measured at sf125 on the n-gram join (6.25M docs, the decade the
+#: one-shot plan could not finish): 24 GiB -> K=4, 563 s, ~39 GB peak
+#: node scratch; 12 GiB -> K=8, 443 s, ~20 GB peak — more passes were
+#: faster because each pass's sorts fit memory instead of spilling.
+#: 12 GiB keeps the engine's heaviest operator under the ~27 GB peak
+#: of the next heaviest (``corpus_substring_dedup``), bounds the
+#: pagerank edge build's dominant term (the pair fan-out) the same
+#: way, and costs nothing below scale (sf25: n-gram K=2 at 49 s vs
+#: K=1 at 53 s, pagerank K=1; sf<=1: K=1 for both, plans unchanged).
+SCRATCH_BUDGET_BYTES = 12 * 2**30
+
+
+def scratch_passes(est_bytes: int) -> int:
+    """Disjoint hash-range passes for an operator whose one-shot plan
+    keeps ``est_bytes`` of shuffle scratch in flight: 1 at or under the
+    budget (the certified single-pass plan), else ceil(est / budget)."""
+    return max(1, -(-int(est_bytes) // SCRATCH_BUDGET_BYTES))
+
+
+def release_pass_scratch(spark) -> None:
+    """Free a finished pass's shuffle files before the next pass runs.
+
+    ``localCheckpoint(eager=True)`` truncated the pass result's lineage,
+    so its upstream ShuffleDependencies become unreachable once the
+    Python-side plan objects drop; a JVM GC is what actually triggers
+    ContextCleaner to delete the shuffle files (same discipline as
+    scripts/scale_check.py — a 32g heap GCs too rarely on its own and
+    the temp dir fills).
+    """
+    import gc
+
+    gc.collect()  # release py4j refs to the pass's plan objects first
+    try:
+        spark.sparkContext._jvm.System.gc()
+    except Exception:  # non-py4j session (e.g. Spark Connect): best effort
+        pass

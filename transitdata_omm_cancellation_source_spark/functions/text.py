@@ -19,7 +19,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: Mersenne prime 2^31-1 — classic universal-hash modulus; keeps every
-#: intermediate product within BIGINT range (see minhash_signature).
+#: intermediate product within BIGINT range (see the MinHash kernel in
+#: ``operators/dedup_fuzzy.py``).
 HASH_MOD = 2_147_483_647
 
 #: BPE-ish token pattern: letter runs, digit runs, single punctuation.
@@ -218,64 +219,6 @@ def gram_key_terms(element, n: int) -> str:
     return f"(({h1}) * {HASH_MOD2} + ({h2}))"
 
 
-def minhash_signature(hashes_col: str, num_hashes: int = 64, mod: int = HASH_MOD) -> Column:
-    """MinHash signature: sig[i] = min over shingles s of ((2i+1)*s + i²+1) mod P.
-
-    The (a, b) families are formula-derived so the DuckDB oracle can
-    regenerate them; products stay < 2^39 — no BIGINT overflow.
-    Empty shingle sets yield sig[i] = P (sentinel max).
-    """
-    return F.expr(
-        f"transform(sequence(0, {num_hashes - 1}), i -> "
-        f"coalesce(array_min(transform({hashes_col},"
-        f" s -> ((2*i + 1) * s + i*i + 1) % {mod})), {mod}))"
-    )
-
-
-def band_keys(sig_col: str, bands: int, rows: int, mod: int = HASH_MOD) -> Column:
-    """LSH banding: fold each r-row band of the signature into one key.
-
-    Folded mod P so the accumulator never exceeds ~2^51; the rare
-    band-key collision only adds a false *candidate*, which the exact
-    Jaccard verification step discards.
-    """
-    return F.expr(
-        f"transform(sequence(0, {bands - 1}), b -> "
-        f"aggregate(slice({sig_col}, b * {rows} + 1, {rows}),"
-        f" CAST(b AS BIGINT), (acc, x) -> (acc * 1000003 + x) % {mod}))"
-    )
-
-
-def simhash64(col: str, mod: int = HASH_MOD) -> Column:
-    """64-bit SimHash over word-token polyhashes.
-
-    Each token contributes ±1 per bit position of a 62-bit derived
-    hash (h and h*2654435761 % P stacked to cover 62 bits); the sign
-    of the per-bit sum sets the output bit.  All BIGINT arithmetic,
-    portable to DuckDB.
-    """
-    toks = f"regexp_extract_all(lower({col}), '[a-z0-9]+', 0)"
-    th = (
-        f"transform({toks}, t -> aggregate(split(t, ''), CAST(0 AS BIGINT),"
-        f" (acc, x) -> (acc * 31 + ascii(x)) % {mod}))"
-    )
-    # widen the 31-bit polyhash to 62 bits: low = h, high = h*KNUTH % P
-    wide = (
-        f"transform({th}, h -> h + (h * 2654435761 % {mod}) * {mod})"
-    )
-    counts = (
-        f"aggregate({wide}, array_repeat(CAST(0 AS BIGINT), 62),"
-        f" (acc, h) -> zip_with(acc, sequence(0, 61),"
-        f"  (a, j) -> a + CASE WHEN (h div CAST(pow(2, j) AS BIGINT)) % 2 = 1"
-        f"                 THEN 1 ELSE -1 END))"
-    )
-    return F.expr(
-        f"aggregate(zip_with({counts}, sequence(0, 61),"
-        f" (c, j) -> CASE WHEN c > 0 THEN CAST(pow(2, j) AS BIGINT) ELSE CAST(0 AS BIGINT) END),"
-        f" CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-
-
 def punct_ratio(col: str) -> Column:
     """Punctuation chars / total chars (0 for empty)."""
     total = F.length(F.col(col))
@@ -316,20 +259,3 @@ def lang_from_hits(hit_cols: dict[str, str | Column]) -> Column:
         best = F.when(new_best, F.lit(lang)).otherwise(best)
         best_score = F.when(new_best, score).otherwise(best_score)
     return best
-
-
-def lang_id(col: str) -> Column:
-    """Heuristic language ID in one expression (see lang_hit_counts /
-    lang_from_hits for the two-phase form that avoids re-tokenizing —
-    the when-chain repeats each score, so inlining the regex here
-    costs ~3 extractions per language)."""
-    toks = f"regexp_extract_all(lower({col}), '[a-z0-9]+', 0)"
-    return lang_from_hits(
-        {
-            lang: F.expr(
-                f"size(filter({toks}, x -> x IN"
-                f" ({', '.join(chr(39) + m + chr(39) for m in markers)})))"
-            )
-            for lang, markers in LANG_MARKERS.items()
-        }
-    )

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import memo, persist_tracked
+from ..caching import memo, persist_tracked, release_pass_scratch, scratch_passes
 from ..functions import text as X
 from ..observability import get_json_logger
 from ..plans.registry import REGISTRY
@@ -256,23 +256,23 @@ def _ngram_jaccard(spark, t):
     # died on shuffle disk — the SUM of linear spill footprints (the
     # self-join's two sorts + exchanges, the candidate distinct, the
     # verify joins shipping two shingle arrays per pair) exceeded one
-    # node's scratch.  When the estimated in-flight bytes exceed the
-    # configured budget, the candidate space is processed in K disjoint
-    # hash-range passes over the PREFIX shingle: pass k restricts the
-    # inverted index to shingles with shingle % K == k, runs the same
-    # candidate join + exact verification, and eagerly materializes its
-    # (output-sized, tiny) verified pairs via localCheckpoint so the
-    # pass's shuffle files become unreferenced — ContextCleaner frees
-    # them before pass k+1 runs.  EXACT by the same prefix lemma: a
-    # qualifying pair shares >= 1 prefix shingle s; s lands in exactly
-    # one hash range, so the pair surfaces in that pass (ranges where
-    # the pair shares no prefix shingle simply never see it); per-pass
-    # verification recomputes Jaccard from the FULL shingle sets, so
-    # duplicate discoveries across ranges are bit-identical rows and
-    # the final distinct restores exact one-pass semantics.  Peak
-    # in-flight bytes drop ~K-fold; wall time pays K job waves — the
-    # bytes-per-row discipline of the span-prune rewrite applied to
-    # bytes-IN-FLIGHT.
+    # node's scratch.  When the estimated in-flight bytes exceed
+    # ``caching.SCRATCH_BUDGET_BYTES``, the candidate space is processed
+    # in K disjoint hash-range passes over the PREFIX shingle: pass k
+    # restricts the inverted index to shingles with shingle % K == k,
+    # runs the same candidate join + exact verification, and eagerly
+    # materializes its (output-sized, tiny) verified pairs via
+    # localCheckpoint so the pass's shuffle files become unreferenced —
+    # ContextCleaner frees them before pass k+1 runs.  EXACT by the same
+    # prefix lemma: a qualifying pair shares >= 1 prefix shingle s; s
+    # lands in exactly one hash range, so the pair surfaces in that pass
+    # (ranges where the pair shares no prefix shingle simply never see
+    # it); per-pass verification recomputes Jaccard from the FULL
+    # shingle sets, so duplicate discoveries across ranges are
+    # bit-identical rows and the final distinct restores exact one-pass
+    # semantics.  Peak in-flight bytes drop ~K-fold; wall time pays K
+    # job waves — the bytes-per-row discipline of the span-prune rewrite
+    # applied to bytes-IN-FLIGHT.
     sh = _minhash_shingles(t)
     hot = _hot_shingles(sh)
     if hot:
@@ -291,7 +291,7 @@ def _ngram_jaccard(spark, t):
         F.size("shingles").alias("n_sh"),
         F.posexplode(F.slice(ordered, 1, prefix_len)).alias("pos", "shingle"),
     )
-    passes = _ngram_pass_count(spark, sh)
+    passes = _ngram_pass_count(sh)
     if passes == 1:  # plan identical to the pre-K-pass form
         return _ngram_verify(_ngram_candidates(inv, positional=True), sh)
     get_json_logger().info(
@@ -304,7 +304,7 @@ def _ngram_jaccard(spark, t):
             _ngram_candidates(inv.filter(F.col("shingle") % passes == k)), sh
         ).localCheckpoint(eager=True)
         parts.append(part)
-        _release_pass_scratch(spark)
+        release_pass_scratch(spark)
     out = parts[0]
     for part in parts[1:]:
         out = out.unionAll(part)
@@ -397,19 +397,6 @@ def _ngram_verify(cand: DataFrame, sh: DataFrame) -> DataFrame:
     )
 
 
-#: shuffle-scratch budget (GiB) one ngram-join pass may keep in flight.
-#: Measured at sf125 (6.25M-doc corpus, the decade the one-shot plan
-#: could not finish): budget 24 -> K=4, 563 s, ~39 GB peak node
-#: scratch (pass spill + persisted frames + async-cleanup lag);
-#: budget 12 -> K=8, 443 s, ~20 GB peak — MORE passes were FASTER
-#: because each pass's sort-merge sorts fit memory instead of
-#: spilling.  12 GiB is the default: it keeps the engine's heaviest
-#: operator under the ~27 GB peak of the next-heaviest
-#: (``corpus_substring_dedup``) and costs nothing at lower decades
-#: (sf25: K=2 at 49 s vs K=1 at 53 s; sf<=1: K=1, plan unchanged).
-_NGRAM_SCRATCH_GB_CONF = "spark.graft.ngram.scratchBudgetGb"
-_NGRAM_SCRATCH_GB_DEFAULT = 12.0
-
 #: calibrated in-flight bytes per prefix-index row.  Measured at sf5
 #: and sf25 (SURVEY §8): candidate fan-out Σdf² tracks prefix rows at a
 #: stable ~4.7x (34.7M/7.38M and 172.8M/36.9M), and the pass's spill is
@@ -421,33 +408,15 @@ _NGRAM_SCRATCH_GB_DEFAULT = 12.0
 _NGRAM_SPILL_BYTES_PER_PREFIX_ROW = 512
 
 
-def _ngram_pass_count(spark, sh: DataFrame) -> int:
-    """Number of disjoint hash-range passes for the candidate join.
-
-    ``ceil(estimated_in_flight_bytes / budget)`` with the estimate one
-    cheap aggregate over the CACHED shingle frame (Σ per-doc prefix
-    length x the calibrated bytes/row constant).  Below heavy-hitter
-    scale this returns 1 and the plan is byte-identical to the
-    single-pass form, so the sf0.01 oracle gate exercises the same
+def _ngram_pass_count(sh: DataFrame) -> int:
+    """Number of disjoint hash-range passes for the candidate join:
+    ``caching.scratch_passes`` of the estimated in-flight bytes, the
+    estimate one cheap aggregate over the CACHED shingle frame (Σ
+    per-doc prefix length x the calibrated bytes/row constant).  Below
+    heavy-hitter scale this returns 1 and the plan is byte-identical to
+    the single-pass form, so the sf0.01 oracle gate exercises the same
     physical plan it always certified.
     """
-    # validate the budget up front: a typo'd or zero/negative runtime
-    # value must be a clear config error, not a ZeroDivisionError out
-    # of the ceil below (r11 ADVICE).
-    raw = spark.conf.get(_NGRAM_SCRATCH_GB_CONF, str(_NGRAM_SCRATCH_GB_DEFAULT))
-    try:
-        budget_gb = float(raw)
-    except ValueError as e:
-        raise ValueError(
-            f"{_NGRAM_SCRATCH_GB_CONF} must be a number of GiB, got {raw!r}"
-        ) from e
-    if budget_gb <= 0:
-        raise ValueError(
-            f"{_NGRAM_SCRATCH_GB_CONF} must be positive, got {raw!r}"
-        )
-    # floor at one byte so a sub-1e-9 GiB budget degrades to
-    # max-passes, never a divide-by-zero.
-    budget_bytes = max(1, int(budget_gb * 2**30))
     prefix_rows = (
         sh.agg(
             F.sum(
@@ -460,27 +429,7 @@ def _ngram_pass_count(spark, sh: DataFrame) -> int:
         ).first()[0]
         or 0
     )
-    est = prefix_rows * _NGRAM_SPILL_BYTES_PER_PREFIX_ROW
-    return max(1, -(-int(est) // budget_bytes))
-
-
-def _release_pass_scratch(spark) -> None:
-    """Free a finished pass's shuffle files before the next pass runs.
-
-    ``localCheckpoint(eager=True)`` truncated the pass result's lineage,
-    so its upstream ShuffleDependencies become unreachable once the
-    Python-side plan objects drop; a JVM GC is what actually triggers
-    ContextCleaner to delete the shuffle files (same discipline as
-    scripts/scale_check.py — a 32g heap GCs too rarely on its own and
-    the temp dir fills).
-    """
-    import gc
-
-    gc.collect()  # release py4j refs to the pass's plan objects first
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:  # non-py4j session (e.g. Spark Connect): best effort
-        pass
+    return scratch_passes(prefix_rows * _NGRAM_SPILL_BYTES_PER_PREFIX_ROW)
 
 
 # --- MinHash + LSH ----------------------------------------------------------
@@ -578,7 +527,7 @@ def _band_candidates(t) -> DataFrame:
     Scale-first formulation: the 64 min-hashes and 16 band keys are
     computed MAP-SIDE by an Arrow-batched kernel over the cached
     shingle sets (the assign_to_centroids playbook) — pure int64
-    arithmetic mirroring functions.text.minhash_signature/band_keys
+    arithmetic mirroring the oracle's ``_SIG_D``/``_BANDS_D``
     exactly ((2i+1)·s + i²+1 mod P is < 2^48, the band fold's
     acc·1000003 + m < 2^52, so nothing wraps), with np.minimum.reduceat
     folding each doc's segment.  That removes both the corpus-shingle
@@ -1078,7 +1027,7 @@ _WIDE_D = f"list_transform({_TOKHASH_D}, h -> h + (h * 2654435761 % {P}) * {P})"
 # DuckDB's list_reduce cannot fold with an array accumulator, so the
 # oracle computes the per-bit vote relationally: token hashes unnested,
 # crossed with bit positions, summed, then re-folded into the 62-bit
-# fingerprint.  Same arithmetic as functions.text.simhash64.
+# fingerprint.  Same arithmetic as the Arrow kernel in ``_simhash``.
 _SIMHASH_SH_D = f"""
     tok AS (SELECT doc_id, unnest({_WIDE_D}) AS h FROM corpus),
     votes AS (

@@ -50,14 +50,14 @@ because the SUM of footprints coexists on one node — the edge-build
 self-join's pair fan-out (~1.1e9 rows at sf125) feeding the groupBy,
 its lineage-pinned shuffle files surviving under the persisted ``e``,
 and each superstep's edge-sized join shuffles accumulating until job
-end.  When the estimated pair fan-out bytes exceed the configured
-budget (``spark.graft.pagerank.scratchBudgetGb``), the build runs in
-K disjoint hash-range passes over the DST part key: pass k filters
-the streamed pair generator to ``dst % K == k`` BEFORE the groupBy
-exchange, aggregates its (src, dst, w) half-edges EXACTLY (every
-order's full pair list is regenerated per pass, and a pair's dst
-lives in exactly one range — no cross-pass re-aggregation needed),
-and writes
+end.  When the estimated pair fan-out bytes exceed
+``caching.SCRATCH_BUDGET_BYTES`` (K from ``caching.scratch_passes``,
+the rule the n-gram join uses), the build runs in K disjoint
+hash-range passes over the DST part key: pass k filters the streamed
+pair generator to ``dst % K == k`` BEFORE the groupBy exchange,
+aggregates its (src, dst, w) half-edges EXACTLY (every order's full
+pair list is regenerated per pass, and a pair's dst lives in exactly
+one range — no cross-pass re-aggregation needed), and writes
 the output-sized result to PARQUET so the pass's shuffle files become
 unreferenced and ContextCleaner frees them before pass k+1 (parquet,
 not localCheckpoint: at sf125 the ~1e9-row half-edge relation is ~10x
@@ -81,7 +81,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..caching import memo, persist_tracked
+from ..caching import memo, persist_tracked, release_pass_scratch, scratch_passes
 from ..plans.registry import registered_query as _q
 
 #: fixed power-iteration rounds and damping (85/100 as integers).
@@ -92,126 +92,76 @@ _D_NUM, _D_DEN = 85, 100
 
 _PR_TOPK = 50
 
-#: shuffle-scratch budget (GiB) one edge-build pass may keep in
-#: flight.  12 GiB mirrors the ngram default: it keeps the pass's
-#: dominant term (the pair fan-out feeding the half-edge groupBy)
-#: under the heaviest completer's peak, and costs nothing below scale
-#: (sf<=25: K=1, plan unchanged).  The per-pass floor the budget can't
-#: shrink is the self-join's own input sorts (~2.5 x items bytes).
-_PR_SCRATCH_GB_CONF = "spark.graft.pagerank.scratchBudgetGb"
-_PR_SCRATCH_GB_DEFAULT = 12.0
-
 #: calibrated in-flight bytes per co-purchase PAIR row: the (src, dst)
 #: join output is 16 B and rides one exchange + sort into the half
 #: groupBy (~2.5x amplification, the ngram constant's arithmetic) —
 #: 40 B each.  sf125: Σ d(d-1)/2 ~ 1.1e9 pairs -> ~45 GB one-shot,
-#: consistent with the observed ENOSPC at ~35 GB free.
+#: consistent with the observed ENOSPC at ~35 GB free.  The per-pass
+#: floor the budget can't shrink is the self-join's own input sorts
+#: (~2.5 x items bytes).
 _PR_SPILL_BYTES_PER_PAIR = 40
 
-#: budget for the scratch-mode supersteps' node-sized (rank, wu)
+#: limit on the scratch-mode supersteps' node-sized (rank, wu)
 #: broadcast.  The explicit F.broadcast hint is load-bearing there (at
 #: the fourth decade the rank table is far past the AQE threshold, and
 #: the alternative per-round edge-sized sort-merge exceeds one node's
 #: disk) but the node set scales with the part catalog, so past this
-#: budget the build FAILS LOUDLY instead of hinting the executor into
+#: limit the build FAILS LOUDLY instead of hinting the executor into
 #: an OOM (r13 verdict #3).  4 GiB sits under Spark's 8 GB broadcast
 #: hard limit with heap headroom; the measured sf125 node set (~25M
 #: rows ~ 2.3 GiB estimated) clears it.
-_PR_BCAST_GB_CONF = "spark.graft.pagerank.broadcastBudgetGb"
-_PR_BCAST_GB_DEFAULT = 4.0
+_PR_BCAST_LIMIT_BYTES = 4 * 2**30
 #: estimated broadcast bytes per node: 24 B of BIGINT payload
 #: (node, rank_micro, wu) x ~4 for the UnsafeHashedRelation's rows,
 #: hash slots and object headers — deliberately conservative.
 _PR_BCAST_BYTES_PER_NODE = 96
 
 
-def _guard_rank_broadcast(spark, n_nodes: int) -> None:
+def _guard_rank_broadcast(n_nodes: int) -> None:
     """Fail loud before the superstep broadcast hint can OOM an
-    executor.  On a cluster, don't raise this budget toward the 8 GB
-    broadcast limit — run WITHOUT bounded-scratch mode instead (K=1:
-    multi-node aggregate shuffle capacity makes the one-shot build the
-    right plan, and AQE then picks the rank-join strategy at runtime
-    with no explicit hint anywhere)."""
-    raw = spark.conf.get(_PR_BCAST_GB_CONF, str(_PR_BCAST_GB_DEFAULT))
-    try:
-        budget_gb = float(raw)
-    except ValueError as e:
-        raise ValueError(
-            f"{_PR_BCAST_GB_CONF} must be a number of GiB, got {raw!r}"
-        ) from e
+    executor."""
     est = n_nodes * _PR_BCAST_BYTES_PER_NODE
-    if est > budget_gb * 2**30:
+    if est > _PR_BCAST_LIMIT_BYTES:
         raise ValueError(
             f"pagerank bounded-scratch mode: the per-round (rank, wu) "
             f"broadcast is estimated at {est / 2**30:.1f} GiB for "
-            f"{n_nodes} nodes, over the {budget_gb} GiB "
-            f"{_PR_BCAST_GB_CONF} budget. Raise the budget only with "
-            f"matching executor heap; at this node count the right fix "
-            f"is a cluster run with scratch mode off (one-shot K=1 "
-            f"build, AQE-managed rank join)."
+            f"{n_nodes} nodes, over the "
+            f"{_PR_BCAST_LIMIT_BYTES / 2**30:g} GiB broadcast limit."
         )
 
 
-def _scratch_budget_bytes(spark) -> int:
-    raw = spark.conf.get(_PR_SCRATCH_GB_CONF, str(_PR_SCRATCH_GB_DEFAULT))
-    try:
-        budget_gb = float(raw)
-    except ValueError as e:
-        raise ValueError(
-            f"{_PR_SCRATCH_GB_CONF} must be a number of GiB, got {raw!r}"
-        ) from e
-    if budget_gb <= 0:
-        raise ValueError(
-            f"{_PR_SCRATCH_GB_CONF} must be positive, got {raw!r}"
-        )
-    return max(1, int(budget_gb * 2**30))
+#: memo name of the pass count, keyed per raw ``lineitem`` frame.
+_PASS_MEMO = "pagerank_passes"
 
 
-def _pass_memo_name(spark) -> str:
-    """The pass count's memo name: the budget conf is part of it, so
-    a changed budget re-estimates."""
-    budget = spark.conf.get(_PR_SCRATCH_GB_CONF, str(_PR_SCRATCH_GB_DEFAULT))
-    return f"pagerank_passes:{budget}"
-
-
-def _known_pass_count(spark, lineitem):
+def _known_pass_count(lineitem):
     """Pass count with NO Spark job — a memo hit from an earlier build
     this session — else None.  Checked before the persist-placement
     proxy so repeated builds (bench passes, multi-query sessions) skip
     the proxy's fact count entirely (r13 ADVICE)."""
-    return memo(_pass_memo_name(spark), lineitem, None)
+    return memo(_PASS_MEMO, lineitem, None)
 
 
-def _pagerank_pass_count(spark, lineitem, frame) -> int:
-    """ceil(estimated pair-fan-out bytes / budget), the estimate ONE
-    cheap aggregate over ``frame``, memoized per (raw ``lineitem``,
-    budget) — the entry ``_known_pass_count`` reads, so a regenerated
-    fact table re-estimates.  Accepts either grain — the item-level
-    (l_orderkey, l_partkey) frame (countDistinct per order, so raw
-    fact rows estimate the same as a distinct'd frame) or the
-    per-order ``ps`` array frame the r15 edge build aggregates first
-    (size(ps) is the degree directly, and running the estimate over
-    the PERSISTED array frame fills the cache the build's passes
-    reuse).  Returns 1 below the budget — the certified byte-identical
-    plan."""
+def _pagerank_pass_count(lineitem, po) -> int:
+    """``caching.scratch_passes`` of the estimated pair-fan-out bytes,
+    the estimate ONE cheap aggregate over the per-order ``ps`` array
+    frame the r15 edge build aggregates first (size(ps) is an order's
+    degree, and running the estimate over the PERSISTED array frame
+    fills the cache the build's passes reuse), memoized per raw
+    ``lineitem`` — the entry ``_known_pass_count`` reads, so a
+    regenerated fact table re-estimates.  Returns 1 below the budget —
+    the certified byte-identical plan."""
 
     def estimate():
-        budget_bytes = _scratch_budget_bytes(spark)
-        if "ps" in frame.columns:
-            degrees = frame.select(F.size("ps").alias("d"))
-        else:
-            degrees = frame.groupBy("l_orderkey").agg(
-                F.countDistinct("l_partkey").alias("d")
-            )
+        degrees = po.select(F.size("ps").alias("d"))
         pair_rows = (
             degrees.agg(F.sum(F.expr("d * (d - 1) div 2")).cast("long"))
             .first()[0]
             or 0
         )
-        est = pair_rows * _PR_SPILL_BYTES_PER_PAIR
-        return max(1, -(-int(est) // budget_bytes))
+        return scratch_passes(pair_rows * _PR_SPILL_BYTES_PER_PAIR)
 
-    return memo(_pass_memo_name(spark), lineitem, estimate)
+    return memo(_PASS_MEMO, lineitem, estimate)
 
 
 def _pagerank_scratch_dir(spark, token: str) -> str:
@@ -319,7 +269,7 @@ def _pagerank(spark, t):
     # executes the per-order array groupBy, and the scratch passes
     # need that same frame — when a no-shuffle proxy (parquet-metadata
     # fact row count x bytes/pair, i.e. assuming >= 1 pair per fact
-    # row) says scratch mode is likely, persist BEFORE estimating so
+    # row) needs more than one pass, persist BEFORE estimating so
     # the estimate fills the cache the passes reuse instead of
     # shuffling the fact K times.  The proxy only places the persist:
     # the REAL pass count still comes from the exact pair estimate,
@@ -330,13 +280,12 @@ def _pagerank(spark, t):
     # an earlier build this session) the proxy never runs — the r13
     # ADVICE caught repeated bench passes paying the fact count the
     # memo existed to avoid.
-    known = _known_pass_count(spark, t["lineitem"])
+    known = _known_pass_count(t["lineitem"])
     if known is not None:
         likely_scratch = known > 1
     else:
         likely_scratch = (
-            t["lineitem"].count() * _PR_SPILL_BYTES_PER_PAIR
-            > _scratch_budget_bytes(spark)
+            scratch_passes(t["lineitem"].count() * _PR_SPILL_BYTES_PER_PAIR) > 1
         )
     po_p = persist_tracked(po) if likely_scratch else None
     if po_p is not None:
@@ -344,7 +293,7 @@ def _pagerank(spark, t):
     passes = (
         known
         if known is not None
-        else _pagerank_pass_count(spark, t["lineitem"], po)
+        else _pagerank_pass_count(t["lineitem"], po)
     )
     scratch = passes > 1
     if po_p is not None and not scratch:
@@ -394,7 +343,6 @@ def _pagerank(spark, t):
             import uuid
 
             from ..observability import get_json_logger
-            from .dedup_fuzzy import _release_pass_scratch
 
             get_json_logger().info(
                 "pagerank bounded-scratch mode",
@@ -420,7 +368,7 @@ def _pagerank(spark, t):
                 ).write.mode("overwrite").parquet(
                     os.path.join(scratch_root, f"pass{k}")
                 )
-                _release_pass_scratch(spark)
+                release_pass_scratch(spark)
             po_p.unpersist()
             half = spark.read.parquet(
                 *[os.path.join(scratch_root, f"pass{k}") for k in range(passes)]
@@ -460,11 +408,11 @@ def _pagerank(spark, t):
             # the parquet scan, checkpointed (truncating the build lineage
             # so its shuffle files free before the supersteps).
             wu = wu.localCheckpoint(eager=True)
-            _release_pass_scratch(spark)
-            # Fail-loud broadcast budget check (r13 verdict #3): the
+            release_pass_scratch(spark)
+            # Fail-loud broadcast limit check (r13 verdict #3): the
             # superstep hint below pins a node-sized broadcast; wu is
             # checkpointed, so its count is a cheap block-store scan.
-            _guard_rank_broadcast(spark, wu.count())
+            _guard_rank_broadcast(wu.count())
         # NO separate node table and NO per-round left join (r15): the
         # mirrored edge list makes {src} = {dst} = the node set
         # STRUCTURALLY (every half edge emits both directions), so the
@@ -541,10 +489,9 @@ def _pagerank(spark, t):
                 # the node-sized rank table is checkpointed per round
                 # (exact BIGINTs — materialization cannot change a value)
                 # so round r's edge-scan shuffle files become unreferenced
-                # and free before round r+1 runs.  (_release_pass_scratch
-                # was imported by the scratch edge-build block above.)
+                # and free before round r+1 runs.
                 rank = rank.localCheckpoint(eager=True)
-                _release_pass_scratch(spark)
+                release_pass_scratch(spark)
     finally:
         if scratch_root is not None:
             import shutil

@@ -85,8 +85,8 @@ def _quality(spark, t):
 
 
 def _langid_sql() -> str:
-    """DuckDB CASE-chain replicating functions.text.lang_id exactly
-    (forward order, strict > , 'und' default)."""
+    """DuckDB CASE-chain replicating functions.text.lang_hit_counts /
+    lang_from_hits exactly (forward order, strict > , 'und' default)."""
     hits = {
         lang: f"len(list_filter({_WORDS_D}, x -> x IN ({', '.join(chr(39) + m + chr(39) for m in markers)})))"
         for lang, markers in X.LANG_MARKERS.items()
@@ -110,8 +110,9 @@ def _langid_sql() -> str:
 )
 def _langid(spark, t):
     # tokenize once into a column, then the argmax chain touches only
-    # cheap int hit-counts (the one-expression lang_id form re-runs the
-    # regex ~15x per row through the when-chain duplication).
+    # cheap int hit-counts (a one-expression form that inlines the regex
+    # in each score re-runs it ~15x per row through the when-chain
+    # duplication).
     withw = doc_words_frame(t).select("doc_id", F.col("ws").alias("__w"))
     hits = withw.select(
         "doc_id",

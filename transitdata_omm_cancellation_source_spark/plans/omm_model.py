@@ -143,27 +143,21 @@ _OMM_DERIVATION: dict[str, str] = {
     """,
 }
 
-#: Base testdata tables each derived relation reads (for column pruning
-#: sanity and for the DuckDB oracle prefix).
-OMM_VIEW_NAMES = list(_OMM_DERIVATION)
-
-
-#: appId -> the catalog views_key whose OMM views were registered last
-#: (the catalog _VIEWS_REGISTERED discipline one level up): parsing +
+#: appId -> (the catalog views_key the OMM views were registered over,
+#: the 11 registered relations, name -> (the OMM view relations a plan
+#: was built over, the value ``omm_plan`` built)).  Parsing and
 #: registering the 11 derivations costs ~0.2-0.3 s per call warm, and
 #: every cancellation-family build paid it.  Re-registration happens
 #: whenever the BASE views were re-pointed (key change) or any OMM
-#: view is missing (a caller dropped it); an unchanged key with all
-#: views present skips the rebuild.  Same shadowing contract as the
-#: catalog: a caller who shadows an OMM view owns that name until it
-#: drops it.  Fixture injectors should shadow the OMM relations, not
-#: the base tables (a base-table shadow under an unchanged catalog
-#: key is invisible to this guard, exactly as it is to the catalog's).
-_OMM_REGISTERED: dict[str, tuple] = {}
-_OMM_FRAMES: dict[str, dict[str, DataFrame]] = {}
-#: (appId, name) -> (the OMM view relations a plan was built over, the
-#: value ``omm_plan`` built) — see ``omm_plan``.
-_OMM_PLANS: dict[tuple[str, str], tuple[list, object]] = {}
+#: view is missing (a caller dropped it), and replaces the whole entry,
+#: so the plans built over the old views go with it; an unchanged key
+#: with all views present skips the rebuild.  Same shadowing contract
+#: as the catalog: a caller who shadows an OMM view owns that name
+#: until it drops it.  Fixture injectors should shadow the OMM
+#: relations, not the base tables (a base-table shadow under an
+#: unchanged catalog key is invisible to this guard, exactly as it is
+#: to the catalog's).
+_OMM: dict[str, tuple[tuple, dict[str, DataFrame], dict[str, tuple]]] = {}
 
 
 def register_omm_views(spark: SparkSession) -> dict[str, DataFrame]:
@@ -173,25 +167,25 @@ def register_omm_views(spark: SparkSession) -> dict[str, DataFrame]:
     (``catalog.load_tables``).  Views are lazy projections — Catalyst
     inlines them, so e.g. a query touching only ``deviation_case_id``
     still prunes the events scan to one column.  Memoized per
-    (session, base-views key) — see ``_OMM_REGISTERED``.
+    (session, base-views key) — see ``_OMM``.
     """
     from ..catalog import views_key
 
     app_id = spark.sparkContext.applicationId
     key = (views_key(spark),)
-    if _OMM_REGISTERED.get(app_id) == key and app_id in _OMM_FRAMES:
+    entry = _OMM.get(app_id)
+    if entry is not None and entry[0] == key:
         cat = spark._jsparkSession.sessionState().catalog()
         if all(
             cat.getTempView(name).isDefined() for name in _OMM_DERIVATION
         ):
-            return dict(_OMM_FRAMES[app_id])
+            return dict(entry[1])
     out: dict[str, DataFrame] = {}
     for name, sql in _OMM_DERIVATION.items():
         df = spark.sql(sql)
         df.createOrReplaceTempView(name)
         out[name] = df
-    _OMM_REGISTERED[app_id] = key
-    _OMM_FRAMES[app_id] = out
+    _OMM[app_id] = (key, out, {})
     return dict(out)
 
 
@@ -201,19 +195,20 @@ def omm_plan(spark: SparkSession, name: str, build):
     Registers the views first, then returns the value built for
     ``name`` as long as every OMM name still resolves to the view
     relation it resolved to at build time.  A re-registration (new base
-    views) or a shadow a fixture injector put over one OMM name is a
-    different relation, so the next call rebuilds and sees it; a plan
-    built over the old views is never served past them.
+    views) drops every plan of the session, and a shadow a fixture
+    injector put over one OMM name is a different relation, so the
+    next call rebuilds and sees it; a plan built over the old views is
+    never served past them.
     """
     register_omm_views(spark)
+    plans = _OMM[spark.sparkContext.applicationId][2]
     cat = spark._jsparkSession.sessionState().catalog()
     views = [cat.getTempView(view) for view in _OMM_DERIVATION]
-    key = (spark.sparkContext.applicationId, name)
-    hit = _OMM_PLANS.get(key)
+    hit = plans.get(name)
     if hit is not None and all(v.equals(h) for v, h in zip(views, hit[0])):
         return hit[1]
     value = build(spark)
-    _OMM_PLANS[key] = (views, value)
+    plans[name] = (views, value)
     return value
 
 
