@@ -4,6 +4,8 @@ can't see)."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 from transitdata_omm_cancellation_source_spark.operators.pca import (
@@ -89,122 +91,187 @@ def test_pca_matches_reference_iteration_and_spectrum(spark):
     assert abs(lam - w[-1]) / w[-1] < 0.005, (lam, w[-1])
 
 
-def test_moment_rollup_exact_past_int64(spark):
-    """The DECIMAL(38,0) moment rollup stays exact where a BIGINT sum
-    would silently wrap: synthetic micro-unit coordinates near the
-    per-row product bound push the C_jk partials past 2^63 within a
-    handful of rows.  Pins the rollup arithmetic against Python's
-    arbitrary-precision integers (no doubles anywhere)."""
-    from pyspark.sql import functions as F
+def _u(x: float) -> int:
+    """The kernel's quantization of one (double) coordinate, as a
+    Python int: the same IEEE ``floor(x * 1e6 + 0.5)``."""
+    return math.floor(x * 1_000_000 + 0.5)
 
-    # |u| = 2e9 (allowed: < _U_PRODUCT_BOUND ~ 3.037e9); per-row
-    # product 4e18 < 2^63-1 ~ 9.22e18, but 3 rows already wrap.
-    us = [
-        [2_000_000_000, -1_999_999_999],
-        [1_999_999_997, 1_999_999_993],
-        [-1_999_999_987, 1_999_999_983],
-        [1_999_999_979, -1_999_999_973],
-        [1_999_999_967, 1_999_999_961],
-    ]
-    exact = {
+
+def _exact_moments(vecs):
+    """(C_jk for j <= k, S_j) of the quantized corpus in Python's
+    arbitrary-precision integers — no doubles, no wraparound."""
+    us = [[_u(x) for x in v] for v in vecs]
+    dim = len(us[0])
+    c = {
         (j, k): sum(row[j] * row[k] for row in us)
-        for j in range(2)
-        for k in range(2)
-        if j <= k
+        for j in range(dim)
+        for k in range(j, dim)
     }
-    assert any(abs(v) > 2**63 for v in exact.values()), "fixture too small"
-    df = spark.createDataFrame(
-        [(i, u) for i, u in enumerate(us)], "vec_id int, u array<bigint>"
-    )
-    mom = (
-        df.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(sequence(0, 1), j ->"
-                    " transform(sequence(j, 1), k ->"
-                    " named_struct('j', j, 'k', k,"
-                    " 'p', element_at(u, j + 1) * element_at(u, k + 1)))))"
-                )
-            ).alias("e")
-        )
-        .groupBy(F.col("e.j").alias("j"), F.col("e.k").alias("k"))
-        .agg(F.sum(F.col("e.p").cast("decimal(38,0)")).alias("c"))
-        .collect()
-    )
-    got = {(r["j"], r["k"]): int(r["c"]) for r in mom}
-    assert got == exact, (got, exact)
+    s = {j: sum(row[j] for row in us) for j in range(dim)}
+    return c, s
 
 
-def test_max_abs_u_selects_decimal_fallback(spark):
-    """Coordinates past the per-row BIGINT product bound now SELECT the
-    DECIMAL(19,0)-product path instead of refusing (r10 verdict #6).
-    The fallback's moments are pinned against Python's
-    arbitrary-precision integers, and the full query completes on an
-    extreme-|u| corpus with a unit-norm component."""
-    import math
-
-    import numpy as np
-
+def _kernel_moments(spark, emb):
     from transitdata_omm_cancellation_source_spark.operators import pca as _pca
 
-    # |u| ~ 4e9 > _U_PRODUCT_BOUND ~ 3.037e9: every per-row product
-    # (~1.6e19) exceeds int64 — the fast path would wrap on ROW ONE.
-    rng = np.random.default_rng(7)
-    vecs = [
-        [float(4000 + int(rng.integers(0, 500))) for _ in range(64)]
-        for _ in range(5)
+    rows = _pca._moment_rows(spark, emb)
+    c = {(r["j"], r["k"]): int(r["c"]) for r in rows if r["k"] >= 0}
+    s = {r["j"]: int(r["c"]) for r in rows if r["k"] == -1}
+    assert len(rows) == len(c) + len(s)
+    return c, s
+
+
+def test_moment_rollup_exact_past_int64(spark):
+    """The moment rollup stays exact where an int64 sum would silently
+    wrap: micro-unit coordinates near 2e9 keep every per-row product
+    below 2^63 (the kernel's int64 chunk path) but push the C_jk sums
+    past 2^63 within a handful of rows.  Pins ``_moment_rows`` against
+    Python's arbitrary-precision integers."""
+    from transitdata_omm_cancellation_source_spark.operators.pca import DIM
+
+    base = [
+        2_000_000_000,
+        -1_999_999_999,
+        1_999_999_997,
+        1_999_999_993,
+        -1_999_999_987,
     ]
+    vecs = [
+        [(base[(i + j) % 5] - 7 * j) / 1e6 for j in range(DIM)]
+        for i in range(5)
+    ]
+    exact_c, exact_s = _exact_moments(vecs)
+    top = max(abs(_u(x)) for v in vecs for x in v)
+    assert top * top <= 2**63 - 1, "fixture must stay on the int64 chunks"
+    assert any(abs(v) > 2**63 for v in exact_c.values()), "fixture too small"
     emb = spark.createDataFrame(
         list(enumerate(vecs)), "vec_id int, embedding array<double>"
     )
-    max_u = _pca.corpus_max_abs_u(spark, emb)
-    assert max_u > _pca._U_PRODUCT_BOUND
+    assert _kernel_moments(spark, emb) == (exact_c, exact_s)
 
-    # the wide path's exact integer moments == Python int arithmetic
-    us = [[math.floor(x * 1_000_000 + 0.5) for x in v] for v in vecs]
-    expect_c = {
-        (j, k): sum(row[j] * row[k] for row in us)
-        for j in range(64)
-        for k in range(j, 64)
+
+def _sql_moments(emb):
+    """The SQL explode form of the moments, an independent reference
+    for the kernel: the same float64 quantization, per-row products
+    on DECIMAL(19,0) operands (exact at any BIGINT magnitude), summed
+    in DECIMAL(38,0)."""
+    from pyspark.sql import functions as F
+
+    from transitdata_omm_cancellation_source_spark.operators.pca import DIM
+
+    last = DIM - 1
+    u = emb.select(
+        F.expr(
+            "transform(CAST(embedding AS ARRAY<DOUBLE>), x ->"
+            " CAST(floor(x * CAST(1000000 AS DOUBLE) + 0.5) AS BIGINT))"
+        ).alias("u")
+    )
+    pairs = u.select(
+        F.explode(
+            F.expr(
+                f"flatten(transform(sequence(0, {last}), j ->"
+                f" transform(sequence(j, {last}), k ->"
+                " named_struct('j', j, 'k', k,"
+                " 'p', CAST(element_at(u, j + 1) AS DECIMAL(19,0))"
+                " * CAST(element_at(u, k + 1) AS DECIMAL(19,0))))))"
+            )
+        ).alias("e")
+    )
+    c = {
+        (r["j"], r["k"]): int(r["c"])
+        for r in pairs.groupBy(F.col("e.j").alias("j"), F.col("e.k").alias("k"))
+        .agg(F.sum(F.col("e.p").cast("decimal(38,0)")).alias("c"))
+        .collect()
     }
-    expect_s = {j: sum(row[j] for row in us) for j in range(64)}
-    assert all(abs(v) > 2**63 for v in expect_c.values()), "fixture too small"
-    rows = _pca._moment_rows(spark, emb, wide_products=True)
-    got_c = {(r["j"], r["k"]): int(r["c"]) for r in rows if r["k"] >= 0}
-    got_s = {r["j"]: int(r["c"]) for r in rows if r["k"] == -1}
-    assert got_c == expect_c
-    assert got_s == expect_s
+    s = {
+        r["j"]: int(r["s"])
+        for r in u.select(F.posexplode("u").alias("j", "uj"))
+        .groupBy("j")
+        .agg(F.sum(F.col("uj").cast("decimal(38,0)")).alias("s"))
+        .collect()
+    }
+    return c, s
 
-    # the full query runs end-to-end on the extreme corpus
+
+def test_moment_kernel_matches_sql_path(spark):
+    """The Arrow/numpy moment kernel produces the SAME exact integer
+    moments as the SQL explode form of the computation and as
+    Python-int sums over the same quantization — integers, so
+    equality is exact.  Coordinates are chosen so chunking engages
+    (|u| <= 2e9, several int64 chunk folds per batch), signs and
+    magnitudes vary, and the odd row count leaves partitions uneven."""
+    import random
+
+    from transitdata_omm_cancellation_source_spark.operators.pca import DIM
+
+    rng = random.Random(7)
+    chunked = [
+        [
+            float(np.float32(rng.uniform(-2000.0, 2000.0) * (1 if i % 3 else -1)))
+            for _ in range(DIM)
+        ]
+        for i in range(257)
+    ]
+    top = max(abs(_u(x)) for v in chunked for x in v)
+    assert 1 < (2**63 - 1) // (top * top) < 257, "chunking must engage"
+    emb = spark.createDataFrame(
+        list(enumerate(chunked)), "vec_id long, embedding array<float>"
+    )
+    got = _kernel_moments(spark, emb)
+    assert len(got[0]) == DIM * (DIM + 1) // 2
+    assert got == _sql_moments(emb)
+    assert got == _exact_moments(chunked)
+
+
+def test_max_abs_u_selects_decimal_fallback(spark):
+    """Coordinates past the per-row int64 product bound (|u| ~ 4e9,
+    where one product already exceeds int64) select the kernel's wide
+    fallback — the exact Python-int fold that took over from the
+    DECIMAL(19,0)-product path — instead of refusing or wrapping.  Its
+    moments are pinned against Python's arbitrary-precision integers
+    and the DECIMAL-product SQL form, and the full query completes on
+    the extreme corpus with a unit-norm component."""
+    from transitdata_omm_cancellation_source_spark.operators import pca as _pca
+    from transitdata_omm_cancellation_source_spark.operators.pca import DIM
+
+    nrng = np.random.default_rng(7)
+    wide = [
+        [float(4000 + int(nrng.integers(0, 500))) for _ in range(DIM)]
+        for _ in range(5)
+    ]
+    top = max(abs(_u(x)) for v in wide for x in v)
+    assert top * top > 2**63 - 1, "fixture must take the Python-int fold"
+    exact_c, exact_s = _exact_moments(wide)
+    assert all(abs(v) > 2**63 for v in exact_c.values()), "fixture too small"
+    emb = spark.createDataFrame(
+        list(enumerate(wide)), "vec_id int, embedding array<double>"
+    )
+    got = _kernel_moments(spark, emb)
+    assert got == (exact_c, exact_s)
+    assert got == _sql_moments(emb)
+
     out = _pca._pca_top_component(spark, {"embeddings": emb}).collect()
-    assert len(out) == 64
+    assert len(out) == DIM
     nrm = sum(r["component"] ** 2 for r in out) ** 0.5
     assert abs(nrm - 1.0) < 1e-6
 
 
 def test_wide_product_path_is_oracle_certifiable(spark, tmp_path):
-    """The DECIMAL(19,0) wide-product path must be certifiable by the
-    SAME DuckDB gate as the fast path (r11 ADVICE, medium): the
-    oracle's per-row products now cast to HUGEINT, because a BIGINT
-    product overflows DuckDB past |u| ~ 3.037e9 — exactly the corpora
-    that select the engine's wide path — which previously made the
-    oracle ERROR where the engine succeeds (parity uncertifiable)."""
+    """A corpus whose per-row products exceed int64 (|u| past
+    ~3.037e9) must be certifiable by the SAME DuckDB gate as any other:
+    the engine folds such batches as exact Python ints, and the
+    oracle's per-row products cast to HUGEINT, because a BIGINT product
+    overflows DuckDB there and the oracle would ERROR where the engine
+    succeeds."""
     import os
 
-    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from transitdata_omm_cancellation_source_spark.catalog import TABLE_NAMES
-    from transitdata_omm_cancellation_source_spark.operators import pca as _pca
-    from transitdata_omm_cancellation_source_spark.plans.queries import (
-        REGISTRY,
-    )
     from transitdata_omm_cancellation_source_spark.testing import (
         assert_oracle_parity,
     )
-
-    from conftest import SF_SMOKE
 
     # a full sf_dir: the wide corpus as embeddings, every other table
     # symlinked from the smoke fixture (the harness registers all of
@@ -219,6 +286,10 @@ def test_wide_product_path_is_oracle_certifiable(spark, tmp_path):
         [float(4000 + int(rng.integers(0, 500))) for _ in range(64)]
         for _ in range(40)
     ]
+    # the corpus must actually leave int64 per-row product range, or
+    # the test certifies nothing
+    top = max(abs(_u(x)) for v in vecs for x in v)
+    assert top * top > 2**63 - 1
     tbl = pa.table(
         {
             "vec_id": pa.array(range(40), pa.int64()),
@@ -229,30 +300,60 @@ def test_wide_product_path_is_oracle_certifiable(spark, tmp_path):
 
     spec = REGISTRY["embedding_pca_top_component"]
     df = spec.build(spark, str(tmp_path))
-    # this corpus must actually select the wide path, or the test
-    # certifies nothing
-    emb = spark.read.parquet(str(tmp_path / "embeddings.parquet"))
-    assert _pca.corpus_max_abs_u(spark, emb) > _pca._U_PRODUCT_BOUND
     assert_oracle_parity(df, spec.oracle, str(tmp_path))
+    out = df.collect()
+    assert len(out) == 64
+    assert abs(sum(r["component"] ** 2 for r in out) ** 0.5 - 1.0) < 1e-6
 
 
 def test_quantize_ceiling_still_fails_loud(spark):
-    """The one remaining input-magnitude refusal: past |x·1e6| ~ 2^63
-    the micro-unit BIGINT cast itself saturates silently (ANSI off),
-    so the query raises BEFORE computing a single wrong moment.  The
-    max|u| probe must see the true (pre-cast) magnitude — a saturated
-    BIGINT probe would clamp below the bound and wave the corpus
-    through."""
+    """The one input-magnitude refusal: past |x·1e6| ~ 2^63 the
+    micro-unit BIGINT cast itself saturates silently (ANSI off), so the
+    query raises instead of computing a single wrong moment.  The
+    kernel checks the float64 floor BEFORE the int64 cast (a saturated
+    cast would clamp below the bound), and a NaN coordinate — which
+    the int64 cast would turn into -2^63 — is refused the same way,
+    even as one row among clean ones."""
     import pytest as _pytest
 
     from transitdata_omm_cancellation_source_spark.operators import pca as _pca
 
+    assert _u(2.0e13) > _pca._U_QUANTIZE_BOUND
     emb = spark.createDataFrame(
         [(0, [2.0e13] * 64)], "vec_id int, embedding array<double>"
     )
-    assert _pca.corpus_max_abs_u(spark, emb) > _pca._U_QUANTIZE_BOUND
     with _pytest.raises(ValueError, match="saturate"):
         _pca._pca_top_component(spark, {"embeddings": emb})
+
+    rows = [(i, [0.001 * (i + j) for j in range(64)]) for i in range(8)]
+    rows.append((8, [float("nan")] + [0.5] * 63))
+    emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    with _pytest.raises(ValueError, match="saturate"):
+        _pca._pca_top_component(spark, {"embeddings": emb})
+
+
+def test_cold_build_job_count(spark, monkeypatch):
+    """A build with an empty session memo runs six jobs — the corpus
+    count, the moment aggregation and the covariance round, with AQE's
+    map-stage jobs — and no separate max|u| pre-pass: the kernel guards
+    the quantization itself.  (With that pre-pass, an aggregation of
+    its own, the same cold build ran eight.)"""
+    import uuid
+
+    from transitdata_omm_cancellation_source_spark import caching
+
+    spec = REGISTRY["embedding_pca_top_component"]
+    spec.build(spark, SF_SMOKE)  # views and the table scans registered
+    monkeypatch.setattr(caching, "_MEMO", {})
+    sc = spark.sparkContext
+    group = f"pca-cold-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        spec.build(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
 
 
 def test_chain_matches_ferried_form(spark):
@@ -369,37 +470,3 @@ def test_chain_matches_ferried_form(spark):
     got_x = sorted((r.dim, r.component) for r in got)
     assert got_x == ref_x  # exact doubles, no tolerance
     assert {r.eigenvalue for r in got} == {ref_lam}
-
-
-def test_moment_kernel_matches_sql_path(spark):
-    """The r15 Arrow/numpy moment kernel (fast path) must produce the
-    SAME exact integer moments as the SQL explode path it replaced.
-    The comparison is against the retained wide-product SQL path over
-    the same corpus — products there run in DECIMAL, so its sums are
-    the same exact integers the BIGINT fast path produced; equality
-    is exact (these are integers, no tolerance).  Coordinates are
-    chosen so chunking engages (|u| large enough that several chunk
-    folds happen) and signs/magnitudes vary."""
-    import random
-
-    from transitdata_omm_cancellation_source_spark.operators import pca as _pca
-
-    rng = random.Random(7)
-    n, dim = 257, _pca.DIM  # odd count: uneven partitions
-    rows = [
-        (
-            i,
-            [
-                rng.uniform(-2000.0, 2000.0) * (1 if i % 3 else -1)
-                for _ in range(dim)
-            ],
-        )
-        for i in range(n)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    fast = _pca._moment_rows_kernel(spark, emb, 4)
-    slow = _pca._moment_rows(spark, emb, wide_products=True)
-    fast_map = {(r["j"], r["k"]): int(r["c"]) for r in fast}
-    slow_map = {(r["j"], r["k"]): int(r["c"]) for r in slow}
-    assert fast_map == slow_map
-    assert len(fast_map) == dim * (dim + 1) // 2 + dim

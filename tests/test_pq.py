@@ -48,10 +48,8 @@ def test_seed_codebook_self_encodes(spark):
     # their own code in every subspace (distance 0 to themselves).
     rows = [(i, _vec(i)) for i in range(K_CODES)] + [(100, _vec(3))]
     vecs = _vectors({"embeddings": _emb(spark, rows)})
-    codes = _encode(vecs, _centroids(vecs)).collect()
-    by_vec = {}
-    for r in codes:
-        by_vec.setdefault(r.vec_id, {})[r.sub] = r.code
+    codes = _encode(vecs, _centroids(vecs), width=1).collect()
+    by_vec = {r.vec_id: dict(enumerate(r.codes)) for r in codes}
     assert by_vec[3] == {s: 3 for s in range(M_SUB)}
     assert by_vec[100] == {s: 3 for s in range(M_SUB)}  # exact duplicate
 

@@ -62,8 +62,8 @@ def test_pq_packed_codes_shared_and_width_independent(spark):
     b = pq._shared_packed_codes(spark, t)
     assert a is b, "second consumer must serve the same assignment frame"
     # codes are per-row argmins: any kernel width yields identical rows
-    wide = pq._encode(vecs, cent, packed=True, width=None)
-    narrow = pq._encode(vecs, cent, packed=True, width=1)
+    wide = pq._encode(vecs, cent, width=spark.sparkContext.defaultParallelism)
+    narrow = pq._encode(vecs, cent, width=1)
     assert narrow.exceptAll(wide).count() == 0
     assert wide.exceptAll(narrow).count() == 0
     # the shared frame itself matches the direct encode

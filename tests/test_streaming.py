@@ -250,6 +250,21 @@ def test_steady_state_cycle_runs_three_jobs(spark, tmp_path):
         assert jobs <= most, (sink, jobs)
 
 
+def test_each_sink_cycle_appends_one_file(spark, tmp_path):
+    """The sink grows by one parquet file a cycle, not one per partition
+    of the candidate frame."""
+    import os
+
+    load_tables(spark, SF_SMOKE)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    sink = tmp_path / "sink"
+    for n in range(1, 4):
+        run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=str(sink))
+        parts = [f for f in os.listdir(sink) if f.startswith("part-")]
+        assert len(parts) == n, parts
+    assert spark.read.parquet(str(sink)).count() == 3 * store.read(spark).count() > 0
+
+
 def test_previous_snapshot_with_repeated_keys_counts_each_row_once(spark, tmp_path):
     """A3 compares by dvj_id only: a previous snapshot holding two rows
     per dvj_id (two deviation cases) still flags each current row once."""

@@ -242,21 +242,18 @@ def with_word_hashes(
 
 
 def with_joined_polyhash(
-    df: DataFrame,
-    ws_col: str = "ws",
-    out_col: str = "h",
-    keep_ws: bool = False,
+    df: DataFrame, ws_col: str = "ws", out_col: str = "h"
 ) -> DataFrame:
-    """Append only the BIGINT joined-words polyhash (==
-    ``text.polyhash("array_join(ws, ' '))``) — for consumers like the
-    content-hash samplers that never need the per-word hashes, so
-    neither the words (``keep_ws=False``) nor the per-word hash arrays
-    ship back across the Arrow boundary: one int64 per row out."""
+    """Drop ``ws_col`` and append only the BIGINT joined-words polyhash
+    (== ``text.polyhash("array_join(ws, ' '))``) — for consumers like
+    the content-hash samplers that never need the per-word hashes, so
+    neither the words nor the per-word hash arrays ship back across the
+    Arrow boundary: one int64 per row out."""
     import pyarrow as pa
 
     in_names = list(df.columns)
     ws_idx = in_names.index(ws_col)
-    out_names = [c for c in in_names if keep_ws or c != ws_col]
+    out_names = [c for c in in_names if c != ws_col]
 
     def kernel(batches):
         for batch in batches:
@@ -267,6 +264,6 @@ def with_joined_polyhash(
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in df.schema.fields
-        if keep_ws or f.name != ws_col
+        if f.name != ws_col
     )
     return df.mapInArrow(kernel, f"{schema}, {out_col} bigint")

@@ -8,26 +8,27 @@ repo's determinism discipline:
 
 1. MOMENTS (distributed, one pass): every coordinate is quantized
    ONCE to micro-units (``floor(x * 1e6 + 0.5)`` as BIGINT — the
-   ``pq.py`` pattern), and one map-side-combinable aggregation folds
-   the exact integer sums N, S_j = Σu_j and C_jk = Σu_j·u_k over the
-   upper-triangle (j ≤ k) pair explode.  Integer sums are associative
+   ``pq.py`` pattern), and one Arrow-batched numpy kernel
+   (``_moment_rows``) folds each task's exact integer sums N,
+   S_j = Σu_j and C_jk = Σu_j·u_k (upper triangle, j ≤ k) before one
+   DECIMAL(38,0) sum across tasks.  Integer sums are associative
    ⇒ partitioning- and merge-order-independent; the covariance
    cov_jk = (C/N - (S_j/N)(S_k/N)) / 1e12 is then ONE fixed IEEE
    expression over identical integers, quantized ``round(.., 9)``
-   before anything downstream reads it.  HEADROOM: per-row products
-   run in BIGINT below max|u| ~ 3e9 and in DECIMAL(19,0) above it
-   (path-selected by ``corpus_max_abs_u``; only the quantize cast's
-   own saturation still refuses — see ``_U_QUANTIZE_BOUND``), and
-   the moment SUMS roll up in DECIMAL(38,0) on the Spark side (internally the
-   compact-long fast path until a partial sum actually exceeds int64,
-   then promotion — the two-level rollup, inside the engine) and in
-   DuckDB's native HUGEINT on the oracle side, so the arithmetic is
-   exact to ~1e38 — no corpus-size ceiling.  Cross-engine parity of
-   the one final integer→DOUBLE cast is exact (both single-rounded)
-   for |C| < 2^64 ≈ 1.8e19, i.e. to ~18M unit-norm vectors at test
-   scales; past that the EXACT integer moments still agree and any
-   residual divergence is ≤1 ulp in DuckDB's hugeint→double cast (a
-   test-oracle artifact, not an engine error).
+   before anything downstream reads it.  HEADROOM: the kernel is exact
+   for every quantizable coordinate — int64 Gram chunks sized so they
+   cannot wrap, or exact Python ints once a single product u_j·u_k
+   would exceed int64 — and refuses only a coordinate whose micro-unit
+   value is non-finite or past the BIGINT cast's own saturation (see
+   ``_U_QUANTIZE_BOUND``).  The moment SUMS roll up in DECIMAL(38,0)
+   on the Spark side and in DuckDB's native HUGEINT on the oracle
+   side, so the arithmetic is exact to ~1e38 — no corpus-size
+   ceiling.  Cross-engine parity of the one final integer→DOUBLE cast
+   is exact (both single-rounded) for |C| < 2^64 ≈ 1.8e19, i.e. to
+   ~18M unit-norm vectors at test scales; past that the EXACT integer
+   moments still agree and any residual divergence is ≤1 ulp in
+   DuckDB's hugeint→double cast (a test-oracle artifact, not an
+   engine error).
 2. POWER ITERATION VIA REPEATED SQUARING (bounded, on the 64×64
    matrix): instead of r matvec rounds, square the matrix
    PCA_SQUARINGS times — M_{l+1} = round(M_l·M_l / s_l, 12) with
@@ -65,9 +66,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..caching import memo
 from ..functions.hyperplane import DIM
-from ..observability import get_json_logger
 from ..plans.registry import registered_query as _q
 
 #: fixed squaring levels (unrollable in SQL, the LLOYD_ROUNDS
@@ -99,7 +98,10 @@ def _pca_oracle() -> str:
     # squaring SELF-JOINS its level (two references), so inlining
     # doubles the expansion per level — exponentially many scans of
     # the base table (observed as an fd exhaustion).  Materialization
-    # evaluates each level once; results are identical.
+    # evaluates each level once; results are identical.  The SQL
+    # comment on ``pairs`` names the engine's retired wide-product
+    # path; it stays verbatim so the oracle text is unchanged, and its
+    # HUGEINT cast is still what certifies corpora past |u| ~ 3.037e9.
     parts = [f"""
     u AS MATERIALIZED (
         SELECT vec_id,
@@ -189,165 +191,59 @@ def _pca_oracle() -> str:
     """
 
 
-#: largest |u| whose per-row product u_j·u_k still fits BIGINT on both
-#: engines — floor(sqrt(2^63 - 1)).  The SUMS have DECIMAL(38)/HUGEINT
-#: headroom; the per-row product is the one term the fast path computes
-#: in BIGINT (Spark would wrap silently with ANSI off, DuckDB would
-#: error).  |u| = 3e9 means a raw coordinate of ~3000 — unit-ish
-#: embeddings sit near 1e6.  Above this bound the engine now SELECTS
-#: the DECIMAL per-row-product path (slower, exact) instead of
-#: refusing — see ``_moment_rows``.
-_U_PRODUCT_BOUND = 3_037_000_499
-
-#: ceiling of the quantization itself: DECIMAL(19,0) holds every
-#: BIGINT, so the wide-product fallback covers the FULL range the
-#: micro-unit cast can produce — but past |x·1e6| ~ 2^63 the
+#: ceiling of the quantization itself: past |x·1e6| ~ 2^63 the
 #: ``CAST(double AS BIGINT)`` SATURATES silently with ANSI off where
 #: DuckDB errors, i.e. the quantized coordinate itself is already
-#: wrong before any moment math.  That is the engine's only remaining
-#: input-magnitude refusal (raw coordinate ~9e12), made fail-loud by
-#: computing max|u| in DOUBLE (pre-cast, monotone past 2^53) and
-#: raising below the true edge with a 2^12 double-ULP margin.
+#: wrong before any moment math.  That is the engine's only
+#: input-magnitude refusal (raw coordinate ~9e12), checked by the
+#: moment kernel on the float64 ``floor`` (pre-cast, monotone past
+#: 2^53) below the true edge with a 2^12 double-ULP margin.
 _U_QUANTIZE_BOUND = 2**63 - 2**12
 
-def corpus_max_abs_u(spark, emb) -> int:
-    """Max micro-unit coordinate magnitude over the corpus (cached per
-    session/plan) — selects the moment-product path and guards the
-    quantization ceiling.  Computed in DOUBLE *without* the BIGINT
-    cast: the cast saturates silently past 2^63 with ANSI off, which
-    would hide exactly the overflow this aggregate exists to catch.
-    Exact to 2^53 and monotone beyond — more than enough to compare
-    against the 3e9 path-selection bound and the ~9.2e18 quantize
-    ceiling."""
-
-    def compute():
-        m = emb.select(
-            F.max(
-                F.expr(
-                    "array_max(transform(CAST(embedding AS ARRAY<DOUBLE>),"
-                    f" x -> abs(floor(x * {_SCALE}.0 + 0.5))))"
-                )
-            )
-        ).collect()[0][0]
-        return int(m) if m is not None else 0
-
-    return memo("pca_max_abs_u", emb, compute)
-
-
-def _moment_rows(spark, emb, wide_products: bool):
-    """Collected exact integer moment rows (j, k, c) of the corpus.
-
-    ONE fused scan-aggregation produces BOTH exact integer moment
-    families: the upper-triangle pair sums C_jk AND (via sentinel rows
-    keyed k = -1) the coordinate sums S_j — 2080 pair structs plus 64
-    sentinel structs per vector into a map-side-combinable sum.
-    Integer sums are associative, so fusing changes nothing about the
-    values; it halves the corpus scans.
-
-    Per-row product arithmetic is path-selected by ``wide_products``:
-
-    - fast (max|u| <= _U_PRODUCT_BOUND): BIGINT products — int64 never
-      wraps by the bound.
-    - wide (any BIGINT-representable |u|): each coordinate cast to
-      DECIMAL(19,0) so the product lands in DECIMAL(38,0) exactly —
-      slower (no compact-long multiply) but exact; same SQL shape.
-
-    Either way the SUM accumulates in DECIMAL(38,0): Spark's Decimal
-    stays on its compact-long fast path until a partial sum actually
-    exceeds int64, then promotes — the two-level BIGINT→wide rollup
-    happens inside the engine.  DuckDB's oracle side is its native
-    HUGEINT sum.  A sum that would exceed 1e38 comes back NULL with
-    ANSI off, so the helper fail-louds on NULL rather than ever
-    returning a silently-saturated moment.
-    """
-    par = spark.sparkContext.defaultParallelism
-    if not wide_products:
-        return _moment_rows_kernel(spark, emb, par)
-    u = (
-        emb.select(
-            "vec_id",
-            F.expr(
-                "transform(CAST(embedding AS ARRAY<DOUBLE>),"
-                f" x -> CAST(floor(x * {_SCALE}.0 + 0.5) AS BIGINT))"
-            ).alias("u"),
-        )
-        # scan-partition-starvation remedy (see assign_to_centroids):
-        # the DIM²/2 pair explode pipelines on the embeddings scan.
-        .repartition(par, "vec_id")
-    )
-    if wide_products:
-        prod = (
-            "CAST(CAST(element_at(u, j + 1) AS DECIMAL(19,0))"
-            " * CAST(element_at(u, k + 1) AS DECIMAL(19,0))"
-            " AS DECIMAL(38,0))"
-        )
-        sent = "CAST(element_at(u, j + 1) AS DECIMAL(38,0))"
-    else:
-        prod = "element_at(u, j + 1) * element_at(u, k + 1)"
-        sent = "element_at(u, j + 1)"
-    mom = (
-        u.select(
-            F.explode(
-                F.expr(
-                    "concat("
-                    f"flatten(transform(sequence(0, {DIM - 1}), j ->"
-                    f" transform(sequence(j, {DIM - 1}), k ->"
-                    f" named_struct('j', j, 'k', k, 'p', {prod})))),"
-                    f" transform(sequence(0, {DIM - 1}), j ->"
-                    f" named_struct('j', j, 'k', -1, 'p', {sent})))"
-                )
-            ).alias("e")
-        )
-        .select(
-            F.col("e.j").cast("int").alias("j"),
-            F.col("e.k").cast("int").alias("k"),
-            F.col("e.p").alias("p"),
-        )
-        .groupBy("j", "k")
-        .agg(F.sum(F.col("p").cast("decimal(38,0)")).alias("c"))
-    )
-    rows = mom.collect()
-    for r in rows:
-        if r["c"] is None:
-            raise ValueError(
-                "embedding_pca_top_component: a moment sum overflowed "
-                "DECIMAL(38,0) — corpus mass exceeds the exact-arithmetic "
-                "contract; rescale the corpus or lower the micro-unit scale"
-            )
-    return rows
-
-
 #: moment-sum magnitude past which the exact-arithmetic contract is
-#: broken (DECIMAL(38,0) capacity) — the kernel path fail-louds at the
-#: same boundary the SQL path's NULL-on-overflow check enforces.
+#: broken (DECIMAL(38,0) capacity).
 _MOMENT_CONTRACT_BOUND = 10**38
 
+_OVERFLOW = (
+    "embedding_pca_top_component: a moment sum overflowed DECIMAL(38,0) "
+    "— corpus mass exceeds the exact-arithmetic contract; rescale the "
+    "corpus or lower the micro-unit scale"
+)
 
-def _moment_rows_kernel(spark, emb, par: int):
-    """Fast-path moment sums via an Arrow-batched numpy kernel
-    (guide §4.2: hand whole batches to vectorized native code).
 
-    The SQL fast path exploded 2144 structs per vector through an
-    interpreted ``transform`` lambda and aggregated ~2144·N slim rows
-    (~214M at sf0.1, measured 1.9-4.5 s); here each task quantizes its
-    batch once (``floor(x·1e6 + 0.5)`` on float64 — the identical
-    IEEE ops the engine expression ran, so the same int64 u values),
-    computes the Gram matrix Uᵀ·U and column sums in int64 numpy, and
-    folds chunks into arbitrary-precision Python ints, emitting ONE
-    set of 2144 partial rows per task.  Exactness is preserved at
-    every step: the int64 matmul cannot wrap because chunks are sized
-    so rows·max|u|² ≤ 2⁶³-1 (the matmul's accumulation IS the chunk
-    sum), the Python-int fold is exact at any magnitude, and the final
-    DECIMAL(38,0) sum over the ≤``par`` partials is the same exact
-    integer total the one-level SQL aggregation produced — certified
-    by the unchanged oracle and pinned against the SQL path by
-    tests/test_pca.py.  Only the raw float arrays cross the Python
-    boundary (shuffled as 4-byte floats, cast to double after the
-    exchange), and per-partition output is 2144 rows, so the shuffle
-    into the final aggregation is ~par·2144 slim rows instead of
-    ~2144·N.
+def _moment_rows(spark, emb):
+    """Collected exact integer moment rows (j, k, c) of the corpus:
+    C_jk for j ≤ k, and the coordinate sums S_j keyed k = -1.
+
+    An Arrow-batched numpy kernel: whole batches go to vectorized
+    native code.  Each task quantizes its batch once
+    (``floor(x·1e6 + 0.5)`` on float64 — the identical IEEE ops the
+    oracle's expression runs, so the same int64 u values), computes
+    the Gram matrix Uᵀ·U and column sums, and folds them into
+    arbitrary-precision Python ints, emitting ONE set of 2144 partial
+    rows per task; the final DECIMAL(38,0) sum over the ≤``par``
+    partials is the exact integer total.  Exactness at every
+    coordinate magnitude:
+
+    - max|u|² ≤ 2⁶³-1: int64 matmuls over chunks sized so
+      rows·max|u|² ≤ 2⁶³-1 (the matmul's accumulation IS the chunk
+      sum, so it cannot wrap);
+    - max|u|² > 2⁶³-1 (|u| past ~3.037e9, where one product already
+      exceeds int64): the batch folds as Python ints (object dtype) —
+      slower, exact at any magnitude.
+
+    The quantization guard rides in the same kernel: a batch holding a
+    non-finite value or a micro-unit magnitude past
+    ``_U_QUANTIZE_BOUND`` (checked on the float64 floor, before the
+    int64 cast could saturate) emits one sentinel row (j = k = -2)
+    instead of moments, and this helper raises after the collect.
+    Only violating batches emit sentinels, so a clean corpus can never
+    trip it.  Only the raw float arrays cross the Python boundary
+    (shuffled as 4-byte floats, cast to double after the exchange), so
+    the shuffle into the final aggregation is ~par·2144 slim rows.
     """
     dim = DIM
+    par = spark.sparkContext.defaultParallelism
     src = (
         emb.select("vec_id", "embedding")
         # scan-partition-starvation remedy (see assign_to_centroids):
@@ -369,12 +265,21 @@ def _moment_rows_kernel(spark, emb, par: int):
             if not len(pdf):
                 continue
             X = np.stack(pdf["x"].to_numpy())
-            U = np.floor(X * float(_SCALE) + 0.5).astype(np.int64)
+            Fq = np.floor(X * float(_SCALE) + 0.5)
+            if not np.isfinite(Fq).all() or np.abs(Fq).max() > _U_QUANTIZE_BOUND:
+                yield pd.DataFrame({"j": [-2], "k": [-2], "p": [Decimal(1)]})
+                return
+            U = Fq.astype(np.int64)
             seen = True
             mu = int(np.abs(U).max())
             if mu == 0:
                 continue
-            step = max(1, (2**63 - 1) // (mu * mu))
+            if mu * mu > 2**63 - 1:
+                W = U.astype(object)
+                C += W.T @ W
+                S += W.sum(axis=0)
+                continue
+            step = (2**63 - 1) // (mu * mu)
             for lo in range(0, U.shape[0], step):
                 chunk = U[lo : lo + step]
                 C += (chunk.T @ chunk).astype(object)
@@ -383,44 +288,30 @@ def _moment_rows_kernel(spark, emb, par: int):
             return
         js, ks, ps = [], [], []
         for j in range(dim):
-            for k in range(j, dim):
-                v = int(C[j, k])
+            for k in [*range(j, dim), -1]:
+                v = int(C[j, k] if k >= 0 else S[j])
                 if abs(v) >= _MOMENT_CONTRACT_BOUND:
-                    raise ValueError(
-                        "embedding_pca_top_component: a moment sum "
-                        "overflowed DECIMAL(38,0) — corpus mass exceeds "
-                        "the exact-arithmetic contract; rescale the corpus "
-                        "or lower the micro-unit scale"
-                    )
+                    raise ValueError(_OVERFLOW)
                 js.append(j)
                 ks.append(k)
                 ps.append(Decimal(v))
-            sv = int(S[j])
-            if abs(sv) >= _MOMENT_CONTRACT_BOUND:
-                raise ValueError(
-                    "embedding_pca_top_component: a moment sum overflowed "
-                    "DECIMAL(38,0) — corpus mass exceeds the "
-                    "exact-arithmetic contract; rescale the corpus or "
-                    "lower the micro-unit scale"
-                )
-            js.append(j)
-            ks.append(-1)
-            ps.append(Decimal(sv))
         yield pd.DataFrame({"j": js, "k": ks, "p": ps})
 
-    mom = (
+    rows = (
         src.mapInPandas(kernel, "j int, k int, p decimal(38,0)")
         .groupBy("j", "k")
         .agg(F.sum("p").alias("c"))
+        .collect()
     )
-    rows = mom.collect()
-    for r in rows:
-        if r["c"] is None:
-            raise ValueError(
-                "embedding_pca_top_component: a moment sum overflowed "
-                "DECIMAL(38,0) — corpus mass exceeds the exact-arithmetic "
-                "contract; rescale the corpus or lower the micro-unit scale"
-            )
+    if any(r["j"] == -2 for r in rows):
+        raise ValueError(
+            "embedding_pca_top_component: a coordinate's micro-unit value "
+            f"is non-finite or exceeds {_U_QUANTIZE_BOUND} — the "
+            "micro-unit BIGINT cast itself would saturate; rescale the "
+            "corpus or lower the micro-unit scale"
+        )
+    if any(r["c"] is None for r in rows):
+        raise ValueError(_OVERFLOW)
     return rows
 
 
@@ -445,31 +336,8 @@ def _ordered_fold(pair_struct, init=0.0):
 def _pca_top_component(spark, t):
     from .similarity import corpus_count
 
-    # The moment SUMS are exact to 1e38 (DECIMAL(38,0) rollup below);
-    # the per-row product u_j·u_k is the one term the fast path
-    # computes in BIGINT, which Spark would wrap silently with ANSI
-    # off where DuckDB errors.  The corpus' actual max coordinate (one
-    # cheap cached aggregate — ADVICE r9: a count-only guard misses
-    # large-|v| corpora entirely) now SELECTS the path: below the
-    # BIGINT bound the products stay int64 (fast); above it they run
-    # in DECIMAL(19,0)x(19,0) (slower, exact to 1e38) instead of
-    # refusing.  The only remaining raise is the quantization ceiling.
     n_corpus = corpus_count(spark, t["embeddings"])
-    max_u = corpus_max_abs_u(spark, t["embeddings"])
-    if max_u > _U_QUANTIZE_BOUND:
-        raise ValueError(
-            f"embedding_pca_top_component: max |u| = {max_u} exceeds "
-            f"{_U_QUANTIZE_BOUND} — the micro-unit BIGINT cast itself "
-            "would saturate; rescale the corpus or lower the micro-unit "
-            "scale"
-        )
-    wide_products = max_u > _U_PRODUCT_BOUND
-    if wide_products:
-        get_json_logger().info(
-            "pca wide-product DECIMAL fallback engaged",
-            extra={"fields": {"event": "pca_wide_products", "max_u": max_u}},
-        )
-    mom_rows = _moment_rows(spark, t["embeddings"], wide_products)
+    mom_rows = _moment_rows(spark, t["embeddings"])
     s_vals = {r["j"]: r["c"] for r in mom_rows if r["k"] == -1}
     c_ut = {(r["j"], r["k"]): r["c"] for r in mom_rows if r["k"] >= 0}
     if not c_ut:  # empty corpus: no moments, no component

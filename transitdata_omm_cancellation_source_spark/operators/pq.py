@@ -161,18 +161,12 @@ def _subvectors(vecs: DataFrame) -> DataFrame:
     ).select("vec_id", F.col("sub").cast("int").alias("sub"), "sv")
 
 
-def _encode(
-    vecs: DataFrame,
-    cent: DataFrame,
-    packed: bool = False,
-    width: int | None = None,
-) -> DataFrame:
-    """(vec_id, sub, code) — or (vec_id, codes array<int>) when
-    ``packed`` — nearest-centroid argmin per subspace, at MATMUL SPEED
-    with exact-integer semantics.  The packed shape is the same
-    assignment emitted once per vector instead of once per (vector,
-    sub): what the cell-confined IVF-PQ scan consumes (M gathers per
-    candidate want the code vector contiguous).
+def _encode(vecs: DataFrame, cent: DataFrame, width: int) -> DataFrame:
+    """(vec_id, codes array<int>) — nearest-centroid argmin per
+    subspace, at MATMUL SPEED with exact-integer semantics, emitted once
+    per vector: what the cell-confined IVF-PQ scan consumes (M gathers
+    per candidate want the code vector contiguous); the per-sub shape
+    is a posexplode away.
 
     The squared distance expands to |sv|² + |c|² - 2·sv·c over the
     micro-unit BIGINTs; every term (≤~3e13) is far below 2^53, so
@@ -234,21 +228,9 @@ def _encode(
                 S = Us[:, s, :] @ C_[s].T  # (n, K) exact
                 d = un2[:, s][:, None] + cn2[s][None, :] - 2.0 * S
                 codes[:, s] = np.argmin(d, axis=1)  # first min = lowest code
-            if packed:
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "codes": list(codes.astype("int32")),
-                    }
-                )
-            else:
-                yield pd.DataFrame(
-                    {
-                        "vec_id": np.repeat(pdf["vec_id"].to_numpy(), M_SUB),
-                        "sub": np.tile(np.arange(M_SUB), n).astype("int32"),
-                        "code": codes.reshape(-1).astype("int32"),
-                    }
-                )
+            yield pd.DataFrame(
+                {"vec_id": pdf["vec_id"], "codes": list(codes.astype("int32"))}
+            )
 
     # Occupancy-sized kernel width (the kmeans _KMEANS_TASK_ROWS
     # discipline, r15): a small corpus stays a couple of Arrow tasks
@@ -256,17 +238,11 @@ def _encode(
     # (measured ~1.1 s of fixed fan-out for a 2000-row corpus at 32
     # tasks), while a large corpus still spreads to full parallelism.
     # Codes are per-row argmins — values identical at any width.
-    par = spark.sparkContext.defaultParallelism
-    if width is not None:
-        par = max(1, min(par, width))
-    schema = (
-        "vec_id long, codes array<int>" if packed
-        else "vec_id long, sub int, code int"
-    )
+    par = max(1, min(spark.sparkContext.defaultParallelism, width))
     return (
         vecs.select("vec_id", "u")
         .repartition(par, "vec_id")
-        .mapInPandas(kernel, schema)
+        .mapInPandas(kernel, "vec_id long, codes array<int>")
     )
 
 
@@ -300,7 +276,7 @@ def _shared_packed_codes(spark, t) -> DataFrame:
     def encode():
         n = corpus_count(spark, t["embeddings"])
         width = -(-n // _ENCODE_TASK_ROWS)  # ceil div
-        return _encode(vecs, cent, packed=True, width=width)
+        return _encode(vecs, cent, width)
 
     return memo("pq_packed_codes", t["embeddings"], encode, frame=True)
 
@@ -534,10 +510,8 @@ def _pq_codes(spark, t):
     # code_key folds the M codes positionally (base-K), so it fully
     # determines the code vector — the oracle pins every assignment
     # without hashing arrays; code_sum is the cheap cross-check.
-    vecs = _vectors(t)
-    # unpacked per-sub rows derived from the shared packed assignment
-    # (posexplode of an array built in sub order = the same
-    # (vec_id, sub, code) rows the unpacked kernel emitted).
+    # (vec_id, sub, code) rows from the shared packed assignment: the
+    # codes array is built in sub order, so posexplode numbers subs.
     codes = _shared_packed_codes(spark, t).select("vec_id", F.posexplode("codes").alias("sub", "code"))
     return codes.groupBy("vec_id").agg(
         F.count(F.lit(1)).cast("int").alias("n_sub"),

@@ -198,7 +198,9 @@ def run_poll_cycle(
     than the job that would fill a cache.  Over a source with no
     candidate frame (a JDBC read) a cycle with a sink persists ``cur``,
     so one read of the source serves both writes and the snapshot holds
-    the rows just published.
+    the rows just published.  The append is one parquet file per cycle
+    (a few thousand rows), not one per partition of the candidate
+    frame, so the sink grows by one file a cycle on any session.
     """
     logger = logger or get_json_logger()
     t0 = clock()
@@ -216,7 +218,7 @@ def run_poll_cycle(
         else:
             messages = encode_messages(flagged, value_format=value_format)
             _check_sink_schema(spark, sink_dir, messages)
-            messages.write.mode("append").parquet(sink_dir)
+            messages.coalesce(1).write.mode("append").parquet(sink_dir)
             store.replace(cur)
     finally:
         if keep:
