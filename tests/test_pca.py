@@ -7,6 +7,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pytest
 
 from transitdata_omm_cancellation_source_spark.operators.pca import (
     PCA_SQUARINGS,
@@ -256,13 +257,11 @@ def test_max_abs_u_selects_decimal_fallback(spark):
     assert abs(nrm - 1.0) < 1e-6
 
 
-def test_wide_product_path_is_oracle_certifiable(spark, tmp_path):
-    """A corpus whose per-row products exceed int64 (|u| past
-    ~3.037e9) must be certifiable by the SAME DuckDB gate as any other:
-    the engine folds such batches as exact Python ints, and the
-    oracle's per-row products cast to HUGEINT, because a BIGINT product
-    overflows DuckDB there and the oracle would ERROR where the engine
-    succeeds."""
+def _certified_build(spark, tmp_path, vecs):
+    """Build the PCA query over ``vecs`` as the embeddings table of a
+    full sf_dir under ``tmp_path`` (every other table symlinked from
+    the smoke fixture: the harness registers all of them as views up
+    front), assert DuckDB oracle parity and return the frame."""
     import os
 
     import pyarrow as pa
@@ -273,14 +272,31 @@ def test_wide_product_path_is_oracle_certifiable(spark, tmp_path):
         assert_oracle_parity,
     )
 
-    # a full sf_dir: the wide corpus as embeddings, every other table
-    # symlinked from the smoke fixture (the harness registers all of
-    # them as views up front).
     for name in TABLE_NAMES:
         if name != "embeddings":
             os.symlink(
                 f"{SF_SMOKE}/{name}.parquet", tmp_path / f"{name}.parquet"
             )
+    tbl = pa.table(
+        {
+            "vec_id": pa.array(range(len(vecs)), pa.int64()),
+            "embedding": pa.array(vecs, pa.list_(pa.float64())),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
+    spec = REGISTRY["embedding_pca_top_component"]
+    df = spec.build(spark, str(tmp_path))
+    assert_oracle_parity(df, spec.oracle, str(tmp_path))
+    return df
+
+
+def test_wide_product_path_is_oracle_certifiable(spark, tmp_path):
+    """A corpus whose per-row products exceed int64 (|u| past
+    ~3.037e9) must be certifiable by the SAME DuckDB gate as any other:
+    the engine folds such batches as exact Python ints, and the
+    oracle's per-row products cast to HUGEINT, because a BIGINT product
+    overflows DuckDB there and the oracle would ERROR where the engine
+    succeeds."""
     rng = np.random.default_rng(11)
     vecs = [
         [float(4000 + int(rng.integers(0, 500))) for _ in range(64)]
@@ -290,20 +306,82 @@ def test_wide_product_path_is_oracle_certifiable(spark, tmp_path):
     # the test certifies nothing
     top = max(abs(_u(x)) for v in vecs for x in v)
     assert top * top > 2**63 - 1
-    tbl = pa.table(
-        {
-            "vec_id": pa.array(range(40), pa.int64()),
-            "embedding": pa.array(vecs, pa.list_(pa.float64())),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
-
-    spec = REGISTRY["embedding_pca_top_component"]
-    df = spec.build(spark, str(tmp_path))
-    assert_oracle_parity(df, spec.oracle, str(tmp_path))
-    out = df.collect()
+    out = _certified_build(spark, tmp_path, vecs).collect()
     assert len(out) == 64
     assert abs(sum(r["component"] ** 2 for r in out) ** 0.5 - 1.0) < 1e-6
+
+
+_REST = [0.01 * (j + 1) for j in range(62)]
+
+
+@pytest.mark.parametrize(
+    "vecs",
+    [
+        [[0.4, 0.2, *_REST]] * 5,
+        [[0.4, 0.2, *_REST]],
+        [[0.5, 0.3, *_REST], [0.3, 0.5, *_REST]],
+    ],
+    ids=["identical", "single", "swapped-pair"],
+)
+def test_degenerate_corpus_matches_oracle(spark, tmp_path, vecs):
+    """Identical vectors, or a single one, have an all-zero covariance,
+    so the first squaring level's rescale divides by max|raw| = 0.  Two
+    vectors that differ by swapping two coordinates have a covariance
+    whose top component is orthogonal to x0, so the matvec is zero and
+    the normalization divides by ||y|| = 0.  The oracle's division
+    gives NULL in both places, and its answer is 64 rows with NULL
+    component and eigenvalue; the engine must return the same instead
+    of raising."""
+    out = _certified_build(spark, tmp_path, vecs).collect()
+    assert sorted(r["dim"] for r in out) == list(range(64))
+    assert all(r["component"] is None and r["eigenvalue"] is None for r in out)
+
+
+def test_round_matches_spark_round(spark):
+    """``_round`` is bit-identical to Spark's ``round(double, s)`` at
+    every scale the driver step uses: uniform values in [-1, 1],
+    magnitudes from 1e-15 to 1e3 of either sign, constructed half-way
+    cases ``(n + 0.5) / 10**s``, and magnitudes from 1e3 to 1e25 (a
+    covariance can reach them), past what a default 28-digit decimal
+    context can hold at 12 places.  Compared as bit patterns, so a
+    ``-0.0`` where Spark returns ``0.0`` fails too."""
+    import struct
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from transitdata_omm_cancellation_source_spark.operators.pca import _round
+
+    rng = np.random.default_rng(20241027)
+    sign = rng.choice([-1.0, 1.0], 15_000)
+    ties = [
+        (n + 0.5) / 10**s
+        for s in (6, 9, 12)
+        for n in rng.integers(-10**6, 10**6, 5_000)
+    ]
+    vals = np.concatenate(
+        [
+            rng.uniform(-1.0, 1.0, 20_000),
+            sign * 10.0 ** rng.uniform(-15.0, 3.0, 15_000),
+            sign[:1_000] * 10.0 ** rng.uniform(3.0, 25.0, 1_000),
+            np.array(ties),
+        ]
+    )
+    df = spark.createDataFrame(pd.DataFrame({"v": vals}))
+    got = df.select(
+        "v", *[F.round("v", s).alias(f"r{s}") for s in (6, 9, 12)]
+    ).toPandas()
+
+    def bits(x):
+        return struct.pack("<d", x)
+
+    for s in (6, 9, 12):
+        bad = [
+            (v, r)
+            for v, r in zip(got["v"], got[f"r{s}"])
+            if bits(_round(float(v), s)) != bits(float(r))
+        ]
+        assert not bad, (s, len(bad), bad[:5])
 
 
 def test_quantize_ceiling_still_fails_loud(spark):
@@ -333,11 +411,12 @@ def test_quantize_ceiling_still_fails_loud(spark):
 
 
 def test_cold_build_job_count(spark, monkeypatch):
-    """A build with an empty session memo runs six jobs — the corpus
-    count, the moment aggregation and the covariance round, with AQE's
-    map-stage jobs — and no separate max|u| pre-pass: the kernel guards
-    the quantization itself.  (With that pre-pass, an aggregation of
-    its own, the same cold build ran eight.)"""
+    """A build with an empty session memo runs five jobs — the corpus
+    count and the moment aggregation, with AQE's map-stage jobs.  The
+    covariance round and everything after it run on the driver, and
+    there is no separate max|u| pre-pass: the kernel guards the
+    quantization itself.  (With the covariance round as a Spark job the
+    same cold build ran six, and with the pre-pass as well, eight.)"""
     import uuid
 
     from transitdata_omm_cancellation_source_spark import caching
@@ -353,20 +432,34 @@ def test_cold_build_job_count(spark, monkeypatch):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+
+
+def _ordered_fold(pair_struct, init=0.0):
+    """k-ordered left fold of ``struct(ord, t)`` rows — the shared
+    deterministic-fold shape (collect, sort by the struct's first
+    field, fold the second)."""
+    from pyspark.sql import functions as F
+
+    return F.aggregate(
+        F.array_sort(F.collect_list(pair_struct)),
+        F.lit(init),
+        lambda a, s: a + s["t"],
+    )
 
 
 def test_chain_matches_ferried_form(spark):
-    """The r15 lazy single-row chain (``pca_square_and_project``) must
-    produce the SAME DOUBLES as the r14 per-level collect/reship ferry
-    it replaced: both run the identical engine ops (left-associative
-    add chains, engine-side round(…/max, 12) rescale, round(…/nrm, 9)
-    normalize, round(lam, 6)), so the comparison is exact ``==``, not
-    approximate.  The reference below IS the retired r14 implementation
-    verbatim (posexplode + window max + ordered-fold tail)."""
+    """The driver step (``pca_square_and_project``) must produce the
+    SAME DOUBLES as the Spark per-level collect/reship ferry that
+    preceded it: both run the identical ops (left-associative add
+    chains, round(…/max, 12) rescale, round(…/nrm, 9) normalize,
+    round(lam, 6)), so the comparison is exact ``==``, not
+    approximate.  The reference below IS the retired ferry verbatim
+    (posexplode + window max + ordered-fold tail), run in Spark."""
     import random
 
     from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
     from transitdata_omm_cancellation_source_spark.operators import pca as _pca
 
@@ -381,7 +474,6 @@ def test_chain_matches_ferried_form(spark):
             mat0[j][k] = v
             mat0[k][j] = v
 
-    F = _pca.F
 
     def ferried(mat):
         _fold_chain = "CAST(0.0 AS DOUBLE)" + "".join(
@@ -417,7 +509,7 @@ def test_chain_matches_ferried_form(spark):
             "j int, k int, cov double",
         )
         y = m.groupBy("j").agg(
-            _pca._ordered_fold(
+            _ordered_fold(
                 F.struct(
                     F.col("k").alias("ord"),
                     (F.col("m") * F.lit(_pca._X0)).alias("t"),
@@ -426,7 +518,7 @@ def test_chain_matches_ferried_form(spark):
         )
         nrm = y.agg(
             F.sqrt(
-                _pca._ordered_fold(
+                _ordered_fold(
                     F.struct(
                         F.col("j").alias("ord"),
                         (F.col("y") * F.col("y")).alias("t"),
@@ -445,7 +537,7 @@ def test_chain_matches_ferried_form(spark):
             cov.join(F.broadcast(x_df), "k")
             .groupBy("j")
             .agg(
-                _pca._ordered_fold(
+                _ordered_fold(
                     F.struct(
                         F.col("k").alias("ord"),
                         (F.col("cov") * F.col("xv")).alias("t"),
@@ -455,7 +547,7 @@ def test_chain_matches_ferried_form(spark):
         )
         lam_val = ray.agg(
             F.sqrt(
-                _pca._ordered_fold(
+                _ordered_fold(
                     F.struct(
                         F.col("j").alias("ord"),
                         (F.col("ry") * F.col("ry")).alias("t"),

@@ -17,7 +17,12 @@ from transitdata_omm_cancellation_source_spark.functions.scalars import (
     local_str_to_utc_epoch_ms,
     local_to_utc_epoch_ms_sql,
     now_strings,
+    status_from_ad,
 )
+from transitdata_omm_cancellation_source_spark.plans.cancellation import (
+    dedup_cancellations,
+)
+from transitdata_omm_cancellation_source_spark.plans.queries import REGISTRY
 
 
 def test_local_datetime_string_helsinki():
@@ -121,3 +126,62 @@ def test_oracle_dst_switches_follow_zoneinfo_fold0(session_zone):
         f"SELECT {local_to_utc_epoch_ms_sql('ts')} FROM (VALUES {rows}) v(i, ts) ORDER BY i"
     ).fetchall()
     assert [ms for (ms,) in got] == list(_DST_CASES.values())
+
+
+#: (event_id, event_type, Helsinki wall-clock) of one user across the
+#: 2024 autumn switch; case_id = event_id % 50.  'error' rows are
+#: RUNNING, so the latest timestamp picks each case's survivor.
+_A2_OVERLAP_ROWS = [
+    # before, twice inside and after the repeated hour: the row after wins
+    (1, "error", "2024-10-27 02:45:00"),
+    (51, "error", "2024-10-27 03:10:00"),
+    (101, "error", "2024-10-27 03:50:00"),
+    (151, "error", "2024-10-27 04:05:00"),
+    # no row after: the later of the two rows inside the overlap wins
+    (2, "error", "2024-10-27 02:59:59"),
+    (52, "error", "2024-10-27 03:10:00.500"),
+    (102, "error", "2024-10-27 03:40:00"),
+    # equal wall-clock times inside the overlap: encounter order decides
+    (53, "error", "2024-10-27 03:20:00"),
+    (3, "error", "2024-10-27 03:20:00"),
+    # a CANCELED row beats later RUNNING rows inside the overlap
+    (54, "error", "2024-10-27 03:30:00"),
+    (4, "click", "2024-10-27 03:05:00"),
+]
+
+
+def test_a2_tie_break_across_autumn_overlap(spark):
+    """``dedup_cancellations`` keeps the survivor the
+    ``a2_priority_argmax_dedup`` oracle keeps, with the same epoch ms,
+    for one dvj_id whose rows straddle the repeated hour of
+    2024-10-27 in Europe/Helsinki."""
+    user = 7
+    con = duckdb.connect()
+    rows = ", ".join(
+        f"({user}, {e}, '{kind}', TIMESTAMP '{t}')" for e, kind, t in _A2_OVERLAP_ROWS
+    )
+    con.execute(
+        f"CREATE TABLE events AS SELECT * FROM (VALUES {rows}) v(user_id, event_id, event_type, ts)"
+    )
+    oracle = sorted(con.execute(REGISTRY["a2_priority_argmax_dedup"].oracle).fetchall())
+
+    df = spark.createDataFrame(
+        [(user, *r) for r in _A2_OVERLAP_ROWS],
+        "user_id int, event_id int, event_type string, ts string",
+    ).select(
+        F.col("user_id").alias("dvj_id"),
+        (F.col("event_id") % 50).alias("deviation_case_id"),
+        status_from_ad(
+            F.when(F.col("event_type") == "error", "deleted").otherwise("active")
+        ).alias("status"),
+        local_str_to_utc_epoch_ms("ts").alias("ts_epoch_ms"),
+        F.col("event_id").alias("dc_last_modified"),
+    )
+    engine = sorted(
+        (r.dvj_id, r.deviation_case_id, r.status, r.ts_epoch_ms, r.dc_last_modified)
+        for r in dedup_cancellations(df).collect()
+    )
+    assert engine == oracle
+    assert [r[4] for r in engine] == [151, 102, 3, 4]
+    # the case decided inside the overlap carries its earlier-offset instant
+    assert engine[1][3] == 1729989600000

@@ -29,33 +29,28 @@ repo's determinism discipline:
    moments still agree and any residual divergence is ≤1 ulp in
    DuckDB's hugeint→double cast (a test-oracle artifact, not an
    engine error).
-2. POWER ITERATION VIA REPEATED SQUARING (bounded, on the 64×64
-   matrix): instead of r matvec rounds, square the matrix
-   PCA_SQUARINGS times — M_{l+1} = round(M_l·M_l / s_l, 12) with
-   s_l = max|entry| as the per-level rescale (a deterministic,
-   order-independent max; without it entries underflow as
-   λ^(2^l)) — then apply ONE matvec to x0 = 1/8 per dimension
-   (exactly representable) and normalize:
+2. POWER ITERATION VIA REPEATED SQUARING (on the driver, over the
+   64×64 matrix): the moments are a summary whose size does not
+   depend on the corpus, so the rest runs in float64 numpy on the
+   driver (``pca_square_and_project``) and the query returns one
+   64-row literal frame.  Instead of r matvec rounds, square the
+   matrix PCA_SQUARINGS times — M_{l+1} = round(M_l·M_l / s_l, 12)
+   with s_l = max|entry| as the per-level rescale (without it entries
+   underflow as λ^(2^l)) — then apply ONE matvec to x0 = 1/8 per
+   dimension (exactly representable) and normalize:
    x = round(y/||y||, 9).  That is power iteration with effective
-   exponent 2^PCA_SQUARINGS at log cost — the per-step fixed overhead
-   of engine-side artifact math is the bottleneck here, not
-   arithmetic, and 6 squaring steps beat 48 matvec rounds (measured
-   25 s -> ~10 s wall, with a HIGHER effective exponent).  Each level
-   runs SHUFFLE-FREE as a crossJoin of two 64-row local relations
-   (row-arrays × column-arrays) whose per-pair aggregate(zip_with)
-   is the same k-ascending left fold; the driver only reshapes the
-   ferried, already-rounded doubles between levels (no float
-   arithmetic), cutting both the self-join's doubling logical
-   lineage and the per-level exchange overhead (~11 s -> ~4 s at
-   sf0.1, identical output hashes).
-   Every product/norm is a k-ORDERED left fold (the
-   ``_fold_centroids`` phase-2 pattern — collect_list + array_sort +
-   aggregate, bit-identical to the oracle's ``list(.. ORDER BY k)``
-   fold); sqrt is IEEE exactly-rounded; every level is quantized
-   (round 12) before the next reads it, so both engines walk
-   identical doubles.  The reported eigenvalue is the Rayleigh value
-   ``||cov·x||`` of the final iterate against the ORIGINAL
-   covariance.
+   exponent 2^PCA_SQUARINGS at log cost.  Every product, matvec and
+   norm is a k-ascending left fold (never ``@``/BLAS, which sum in
+   another order), sqrt is IEEE correctly rounded, and every round is
+   ``_round``, the decimal HALF_UP rounding of Spark's ``round``, so
+   the driver computes the doubles the Spark form of this phase did
+   and the oracle's ops in the oracle's order.  The
+   reported eigenvalue is the Rayleigh value ``||cov·x||`` of the
+   final iterate against the ORIGINAL covariance.  Where the oracle
+   divides by zero — an all-zero covariance (identical vectors, or
+   one vector) makes the max 0, a top component orthogonal to x0
+   makes ||y|| 0 — its division gives NULL, and so the answer is 64
+   rows with NULL component and eigenvalue on both engines.
 
 
 The reference (a cancellation ETL) has no embedding surface; this is
@@ -64,6 +59,10 @@ north-star scope per BASELINE.json.
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Context, Decimal
+
+import numpy as np
 from pyspark.sql import functions as F
 
 from ..functions.hyperplane import DIM
@@ -315,17 +314,6 @@ def _moment_rows(spark, emb):
     return rows
 
 
-def _ordered_fold(pair_struct, init=0.0):
-    """k-ordered left fold of ``struct(ord, t)`` rows — the shared
-    deterministic-fold shape (collect, sort by the struct's first
-    field, fold the second)."""
-    return F.aggregate(
-        F.array_sort(F.collect_list(pair_struct)),
-        F.lit(init),
-        lambda a, s: a + s["t"],
-    )
-
-
 @_q(
     "embedding_pca_top_component",
     "north-star: corpus PCA top principal component — exact one-pass "
@@ -344,171 +332,109 @@ def _pca_top_component(spark, t):
         return spark.createDataFrame(
             [], "dim int, component double, eigenvalue double"
         )
-    # Covariance cells: the PRE-round arithmetic of ``_COV`` —
-    # round((C/n - (Sj/n)·(Sk/n)) / 1e12, 9) — is four IEEE double ops
-    # over correctly-rounded conversions, so the driver computes the
-    # pre-round doubles bit-exactly in Python (float(int)/float(Decimal)
-    # and Spark's Decimal→double cast are both round-to-nearest;
-    # /, *, - are IEEE-identical) and ships them as ONE compact
-    # array<double> literal (repr(float) round-trips exactly through
-    # CAST(.. AS DOUBLE), see ``_sql_matrix_literal``); ONLY the final
-    # ``round(x, 9)`` stays engine-side, because Spark's HALF_UP
-    # decimal-string round is the one op with no bit-pinned Python
-    # equivalent.  This replaced the 2080-cell no-FROM SELECT over
-    # DECIMAL(38,0) literals whose ~0.5 MB parse + constant-fold cost
-    # 1.5-1.7 s of driver time per build (r15; measured bit-identical
-    # on all 2080 cells at sf0.1, 1.5-1.7 → 0.15-0.27 s).  The r14
-    # history: before the literal SELECT this was a createDataFrame of
-    # 4096 decimal rows + a job + a 4096-row collect.  The mirror to
-    # the full matrix stays driver-side pure copying (C_kj = C_jk by
-    # definition), so exact symmetry holds by construction; every
-    # squaring level preserves it (raw[j][k] and raw[k][j] swap only
-    # product operands, a·b ≡ b·a in IEEE).
+    # ``_COV`` cell by cell: four IEEE double ops over correctly
+    # rounded int→double conversions (float(Decimal) and the oracle's
+    # HUGEINT→DOUBLE cast both round to nearest), then ``_round``.
+    # Only the upper triangle is computed; the mirror is a copy, so the
+    # matrix is exactly symmetric and every squaring level keeps it so.
     nf = float(n_corpus)
-    pre = [
-        (
-            float(c_ut[(j, k)]) / nf
-            - (float(s_vals[j]) / nf) * (float(s_vals[k]) / nf)
-        )
-        / 1e12
-        for j in range(DIM)
-        for k in range(j, DIM)
-    ]
-    arr = "array(" + ",".join(f"CAST('{v!r}' AS DOUBLE)" for v in pre) + ")"
-    ut = list(
-        spark.sql(f"SELECT transform({arr}, x -> round(x, 9)) AS r").first()["r"]
-    )
-    idx = {}
-    pos = 0
+    cov = [[0.0] * DIM for _ in range(DIM)]
     for j in range(DIM):
         for k in range(j, DIM):
-            idx[(j, k)] = pos
-            pos += 1
-    mat = [
-        [ut[idx[(min(j, k), max(j, k))]] for k in range(DIM)]
-        for j in range(DIM)
-    ]
-    return pca_square_and_project(spark, mat)
+            pre = (
+                float(c_ut[(j, k)]) / nf
+                - (float(s_vals[j]) / nf) * (float(s_vals[k]) / nf)
+            ) / 1e12
+            cov[j][k] = cov[k][j] = _round(pre, 9)
+    return pca_square_and_project(spark, cov)
 
 
-def _chain(terms) -> str:
-    """Explicit left-associative IEEE add chain: ((0 + t0) + t1) + …"""
-    return "CAST(0.0 AS DOUBLE)" + "".join(f" + {t}" for t in terms)
+#: enough digits for any finite double at any scale used here, as
+#: Java's unbounded BigDecimal has (the default 28 would refuse a
+#: covariance past ~1e19 at 9 decimals).
+_DECIMAL_CTX = Context(prec=400)
 
 
-def _sql_matrix_literal(mat: list[list[float]]) -> str:
-    """The bounded matrix as ONE SQL array<array<double>> literal.
+def _round(v: float, s: int) -> float:
+    """Spark's ``round(double, s)`` on the driver.
 
-    ``repr(float)`` is the shortest round-tripping decimal and Spark's
-    string→double cast is correctly rounded (Double.parseDouble), so
-    every cell ships BIT-EXACTLY.  One ~120 KB expression parsed once
-    JVM-side: measured ~60 ms vs ~4.3 s for an F.lit nested list
-    (4096 py4j round-trips) and ~4.6 s for a createDataFrame +
-    coalesce(1) base (32 Python-RDD slices evaluated serially in one
-    task, each paying a Python-worker round-trip)."""
-    return (
-        "array("
-        + ",".join(
-            "array("
-            + ",".join(f"CAST('{v!r}' AS DOUBLE)" for v in row)
-            + ")"
-            for row in mat
-        )
-        + ")"
+    Spark computes ``BigDecimal(Double.toString(v)).setScale(s,
+    HALF_UP).toDouble``: HALF_UP on the shortest decimal that
+    round-trips to ``v``, which ``repr`` also gives.  ``+ 0.0`` turns
+    the ``-0.0`` Python keeps for a negative value that rounds to zero
+    into the ``0.0`` Java's BigDecimal returns.  Pinned against
+    ``F.round`` by tests/test_pca.py::test_round_matches_spark_round.
+    """
+    q = Decimal(repr(v)).quantize(
+        Decimal(1).scaleb(-s), ROUND_HALF_UP, context=_DECIMAL_CTX
     )
+    return float(q) + 0.0
+
+
+def _rounded(a: np.ndarray, s: int) -> np.ndarray:
+    return np.array([_round(float(v), s) for v in a.flat]).reshape(a.shape)
+
+
+def _square_and_project(cov: np.ndarray):
+    """The component and eigenvalue of the bounded phase on a float64
+    covariance, or NULLs where the oracle divides by zero."""
+    m = cov
+    for _ in range(PCA_SQUARINGS):
+        # k-ascending left fold per cell, the oracle's
+        # ``list(a.m * b.m ORDER BY a.k)`` reduce; ``@`` sums in
+        # another order.
+        raw = np.zeros_like(m)
+        for k in range(DIM):
+            raw = raw + m[:, k : k + 1] * m[k : k + 1, :]
+        s = np.abs(raw).max()
+        if s == 0.0:  # all-zero covariance; the oracle's x / 0 is NULL
+            return [None] * DIM, None
+        m = _rounded(raw / s, 12)
+    y = np.zeros(DIM)
+    for k in range(DIM):
+        y = y + m[:, k] * _X0
+    nrm = math.sqrt(_fold(y * y))
+    if nrm == 0.0:  # top component orthogonal to x0
+        return [None] * DIM, None
+    x = _rounded(y / nrm, 9)
+    ry = np.zeros(DIM)
+    for k in range(DIM):
+        ry = ry + cov[:, k] * x[k]
+    return x.tolist(), _round(math.sqrt(_fold(ry * ry)), 6)
+
+
+def _fold(terms) -> float:
+    """Left fold ((0 + t0) + t1) + …, the oracle's ordered reduce."""
+    acc = 0.0
+    for t in terms:
+        acc = acc + float(t)
+    return acc
+
+
+def _sql_double(v) -> str:
+    # repr round-trips and Spark's string→double cast is correctly
+    # rounded, so the literal is bit-exact.
+    return "CAST(NULL AS DOUBLE)" if v is None else f"CAST('{v!r}' AS DOUBLE)"
 
 
 def pca_square_and_project(spark, mat: list[list[float]]):
-    """Lazy plan: PCA_SQUARINGS exact squaring levels, final matvec
-    against x0, normalization, Rayleigh eigenvalue — all from one
-    bounded matrix literal, no driver ferry.  Split out so tests can
-    pin it against the ferried reference form.
+    """PCA_SQUARINGS squaring levels, the matvec against x0, the
+    normalization and the Rayleigh eigenvalue of one rounded 64×64
+    covariance, finished on the driver; returns the 64-row answer as
+    one literal frame.
 
-    Per level the 4096 inner products run CODEGEN-side: a double
-    posexplode enumerates (j, av) × (k, bv) pairs and the explicit
-    left-associative add chain compiles under whole-stage codegen
-    (the all-HOF form — nested ``transform`` lambdas — is interpreted
-    expression eval with no codegen and measured ~0.7 s/level warm
-    plus multi-second HotSpot warm-up on the first two runs; this form
-    is ~2.0 s warm / 3.8 s cold for the whole 6-level phase).  The
-    per-level rescale max and round(…/s, 12) ride the same engine ops
-    as the ferried form (max over the same doubles via window; the
-    division/round inputs are identical doubles), so every produced
-    double is bit-identical — pinned by
-    tests/test_pca.py::test_chain_matches_ferried_form.  The level's
-    matrix is re-assembled into one array<array> row by two tiny
-    ordered aggregations (sort_array(collect_list(struct(…)))) — pure
-    restructuring of already-rounded doubles, no float arithmetic —
-    whose Aggregate nodes also act as the projection-collapse barriers
-    that keep the expression tree LINEAR in levels (the fully-inlined
-    chained form compounded ~64×/level into a task-serialization OOM;
-    the r14 ferry solved that with driver collects, this solves it
-    plan-side with zero extra driver jobs).
-
-    A rejected r15 variant is recorded here: folding this chain into
-    ONE ``spark.sql`` CTE text made the warm plan-BUILD no faster
-    (~1.3 s either way — analysis cost is dominated by the matrix
-    literal, paid identically once per op or once per text) and the
-    EXECUTION consistently ~0.6-0.8 s slower in a same-session
-    interleaved A/B, so the DataFrame chain stays.
+    The matrix is the same size for every corpus, so this is
+    ~PCA_SQUARINGS·64 float64 array ops plus ~27 k decimal roundings
+    whatever the corpus size, and needs no Spark job.  Every op is the
+    oracle's, in the oracle's order: each
+    product, norm and matvec is a k-ascending left fold of IEEE
+    products, sqrt is correctly rounded, and every round goes through
+    ``_round``.  The result is pinned to the retired Spark chain with
+    exact ``==`` by tests/test_pca.py::test_chain_matches_ferried_form.
     """
-    from pyspark.sql import Window
-
-    lit = _sql_matrix_literal(mat)
-    prod_chain = _chain(f"av[{i}] * bv[{i}]" for i in range(DIM))
-    w_all = Window.partitionBy()
-    df = spark.range(0, 1, 1, 1).select(F.expr(lit).alias("mat"))
-    for _ in range(PCA_SQUARINGS):
-        d = df.select("mat", F.posexplode("mat").alias("j", "av")).select(
-            "j", "av", F.posexplode("mat").alias("k", "bv")
-        )
-        sq = d.select("j", "k", F.expr(prod_chain).alias("raw"))
-        lev = sq.select(
-            "j",
-            "k",
-            F.round(
-                F.col("raw") / F.max(F.abs(F.col("raw"))).over(w_all), 12
-            ).alias("m"),
-        )
-        rows = (
-            lev.groupBy("j")
-            .agg(F.expr("sort_array(collect_list(struct(k, m)))").alias("kr"))
-            .select("j", F.expr("transform(kr, s -> s.m)").alias("row"))
-        )
-        df = rows.agg(
-            F.expr("sort_array(collect_list(struct(j, row)))").alias("jr")
-        ).select(F.expr("transform(jr, s -> s.row)").alias("mat"))
-    # Bounded tail (64-element transforms with 64-term chains — ~4k
-    # interpreted ops, negligible): matvec against x0, normalize, one
-    # Rayleigh matvec against the ORIGINAL covariance (re-attached as
-    # the same literal — it is a constant, no join needed).
-    x0 = "CAST(0.125 AS DOUBLE)"  # _X0, exactly representable
-    y_chain = _chain(f"row[{k}] * {x0}" for k in range(DIM))
-    df = df.select(
-        F.expr(f"transform(mat, row -> {y_chain})").alias("y"),
-        F.expr(lit).alias("cov"),
+    x, lam = _square_and_project(np.array(mat, dtype=np.float64))
+    arr = "array(" + ",".join(_sql_double(v) for v in x) + ")"
+    return spark.range(0, 1, 1, 1).select(
+        F.posexplode(F.expr(arr)).alias("dim", "component"),
+        F.expr(_sql_double(lam)).alias("eigenvalue"),
     )
-    df = df.select(
-        "y",
-        F.expr(f"sqrt({_chain(f'y[{j}] * y[{j}]' for j in range(DIM))})").alias(
-            "nrm"
-        ),
-        "cov",
-    )
-    df = df.select(
-        F.expr("transform(y, v -> round(v / nrm, 9))").alias("x"), "cov"
-    )
-    ray_chain = _chain(f"row[{k}] * x[{k}]" for k in range(DIM))
-    df = df.select(
-        "x", F.expr(f"transform(cov, row -> {ray_chain})").alias("ry")
-    )
-    df = df.select(
-        "x",
-        F.expr(
-            f"sqrt({_chain(f'ry[{j}] * ry[{j}]' for j in range(DIM))})"
-        ).alias("lam"),
-    )
-    return df.select(
-        F.posexplode("x").alias("dim", "component"),
-        F.round(F.col("lam"), 6).alias("eigenvalue"),
-    ).select("dim", "component", "eigenvalue")
