@@ -117,8 +117,10 @@ def _kernel_moments(spark, emb):
 
     rows = _pca._moment_rows(spark, emb)
     c = {(r["j"], r["k"]): int(r["c"]) for r in rows if r["k"] >= 0}
-    s = {r["j"]: int(r["c"]) for r in rows if r["k"] == -1}
-    assert len(rows) == len(c) + len(s)
+    s = {r["j"]: int(r["c"]) for r in rows if r["k"] == -1 and r["j"] >= 0}
+    n = [int(r["c"]) for r in rows if r["j"] == -1]
+    assert len(rows) == len(c) + len(s) + len(n)
+    assert n == [emb.count()]
     return c, s
 
 
@@ -337,6 +339,38 @@ def test_degenerate_corpus_matches_oracle(spark, tmp_path, vecs):
     assert all(r["component"] is None and r["eigenvalue"] is None for r in out)
 
 
+@pytest.mark.parametrize(
+    "vecs",
+    [
+        None,
+        [],
+        [[0.0] * 64] * 3,
+        [[0.4, 0.2, *_REST]] * 5,
+        [[0.4, 0.2, *_REST]],
+        [[0.5, 0.3, *_REST], [0.3, 0.5, *_REST]],
+    ],
+    ids=["smoke", "empty", "zeros", "identical", "single", "swapped-pair"],
+)
+def test_moment_row_count_is_corpus_count(spark, vecs):
+    """The N the covariance divides by is the row count the moment
+    kernel emits beside its sums (keyed j = k = -1), not a separate
+    count job; it must equal ``count()`` of the corpus, degenerate
+    ones included.  An empty corpus emits no moment rows at all."""
+    from transitdata_omm_cancellation_source_spark.catalog import load_tables
+    from transitdata_omm_cancellation_source_spark.operators.pca import (
+        _moment_rows,
+    )
+
+    if vecs is None:
+        emb = load_tables(spark, SF_SMOKE)["embeddings"]
+    else:
+        emb = spark.createDataFrame(
+            list(enumerate(vecs)), "vec_id long, embedding array<double>"
+        )
+    rows = _moment_rows(spark, emb)
+    assert sum(int(r["c"]) for r in rows if r["j"] == -1) == emb.count()
+
+
 def test_round_matches_spark_round(spark):
     """``_round`` is bit-identical to Spark's ``round(double, s)`` at
     every scale the driver step uses: uniform values in [-1, 1],
@@ -411,12 +445,14 @@ def test_quantize_ceiling_still_fails_loud(spark):
 
 
 def test_cold_build_job_count(spark, monkeypatch):
-    """A build with an empty session memo runs five jobs — the corpus
-    count and the moment aggregation, with AQE's map-stage jobs.  The
-    covariance round and everything after it run on the driver, and
-    there is no separate max|u| pre-pass: the kernel guards the
-    quantization itself.  (With the covariance round as a Spark job the
-    same cold build ran six, and with the pre-pass as well, eight.)"""
+    """A build with an empty session memo runs three jobs — the moment
+    aggregation with AQE's map-stage jobs.  The moment kernel counts
+    the rows it reads, so there is no separate corpus count; the
+    covariance round and everything after it run on the driver; and
+    there is no max|u| pre-pass: the kernel guards the quantization
+    itself.  (With the corpus count the same cold build ran five, with
+    the covariance round as a Spark job as well six, and with the
+    pre-pass too, eight.)"""
     import uuid
 
     from transitdata_omm_cancellation_source_spark import caching
@@ -432,7 +468,7 @@ def test_cold_build_job_count(spark, monkeypatch):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
 
 
 def _ordered_fold(pair_struct, init=0.0):

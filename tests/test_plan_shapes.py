@@ -145,8 +145,8 @@ def test_ivf_kmeans_assigns_in_kernel_and_searches_by_cell(spark):
     """Assignment is the Arrow-batched exact-integer matmul kernel
     (MapInPandas — the bounded centroid matrix rides the closure, so
     no join of any kind), and the cell-confined search is the salted
-    per-(cell, salt) cogrouped kernel scan (_bucket_cos_scored) —
-    never a nested loop and never a per-pair scored row explosion."""
+    per-(cell, salt) cogrouped kernel scan (similarity.salted_topk_scan)
+    — never a nested loop and never a per-pair scored row explosion."""
     plan = _plan(spark, "knn_ivf_kmeans")
     assert "MapInPandas" in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -1,4 +1,6 @@
-"""Bucket-count invariance for the bucket-pair (triangle) pair scans.
+"""Bucket-count and salt-width invariance for the blocked scans.
+
+The bucket-pair (triangle) pair scans come first.
 
 The pair-dedup scans (``corpus_semdedup``, ``dedup_embedding_cosine``)
 run the bucket-PAIR cogroup (operators/pairscan.py): per block the ids
@@ -14,6 +16,12 @@ widths through the sizing hook and require BIT-IDENTICAL results:
 - ``nb = 5`` (not a power of two, wider than the adaptive sizing would
   ever pick at this scale) exercises diagonal + off-diagonal tasks and
   the id-orientation path.
+
+The six bucket-confined kNN searches come last: they salt-split each
+bucket or cell's members and replicate the queries across the salts,
+keep each group's local top-k, and merge the survivors in one window.
+Top-k is distributive over a partition of the candidate set, so every
+salt width must give the same rows, bit for bit.
 """
 
 from __future__ import annotations
@@ -28,6 +36,7 @@ from transitdata_omm_cancellation_source_spark.operators.dedup_fuzzy import (
 from transitdata_omm_cancellation_source_spark.operators.semdedup import (
     _semdedup,
 )
+from transitdata_omm_cancellation_source_spark.plans.queries import REGISTRY
 
 from conftest import SF_SMOKE
 
@@ -64,12 +73,12 @@ def test_scan_result_is_bucket_count_invariant(spark, fn, monkeypatch):
 
 def test_nb_sizing_column_mirrors_python_reference(spark):
     """Both sizing regimes, boundary-exact against a Python mirror:
-    pairs mode == pq._nsalt_for_occupancy (shared constants); counts
+    pairs mode == similarity._nsalt_for_occupancy (shared constants); counts
     mode holds at the NB_PAR parallelism floor until occupancy
     outgrows NB_PAR buckets of COUNT_BUCKET_ROWS (the measured
     mega-cell shuffle-bytes fix), then grows to the cap."""
     from transitdata_omm_cancellation_source_spark.operators import pairscan as ps
-    from transitdata_omm_cancellation_source_spark.operators.pq import (
+    from transitdata_omm_cancellation_source_spark.operators.similarity import (
         _nsalt_for_occupancy,
     )
 
@@ -113,3 +122,69 @@ def test_nb_sizing_column_mirrors_python_reference(spark):
     # the fix itself: the measured hottest sf125 cell must sit at the
     # parallelism floor, not the cap
     assert rows[481_760][1] == ps.NB_PAR
+
+
+#: the searches that run the salted per-(key, salt) top-k scan
+SEARCHES = (
+    "knn_lsh_hyperplane",
+    "knn_lsh_multiprobe",
+    "knn_ivf_kmeans",
+    "knn_pq_adc",
+    "knn_pq_refine",
+    "knn_ivfpq_adc",
+)
+
+
+def _bits(df):
+    """Sorted rows with every double as its ``float.hex`` bit pattern."""
+    return sorted(
+        tuple(v.hex() if isinstance(v, float) else v for v in r)
+        for r in df.collect()
+    )
+
+
+def _force_nsalt(monkeypatch, width, calls):
+    """Force the width ``salted_topk_scan`` takes, recording each use."""
+    from transitdata_omm_cancellation_source_spark.operators import similarity
+
+    def forced(hot):
+        calls.append(width)
+        return width
+
+    monkeypatch.setattr(similarity, "_nsalt_for_occupancy", forced)
+
+
+@pytest.mark.parametrize("name", SEARCHES)
+def test_search_result_is_salt_width_invariant(spark, name, monkeypatch):
+    """Widths 1, 3 (not a power of two) and 64 against the adaptive
+    width: the same rows and doubles, and not empty."""
+    build = REGISTRY[name].build
+    adaptive = _bits(build(spark, SF_SMOKE))
+    assert adaptive
+    for width in (1, 3, 64):
+        calls = []
+        with monkeypatch.context() as m:
+            _force_nsalt(m, width, calls)
+            assert _bits(build(spark, SF_SMOKE)) == adaptive, width
+        assert calls == [width]  # the scan took its width from the seam
+
+
+@pytest.mark.parametrize("name", SEARCHES)
+def test_search_groups_meet_across_partitions(spark, name, monkeypatch):
+    """With AQE's partition coalescing off, the member and query sides
+    of every (key, salt) group are hashed over all shuffle partitions,
+    so the two sides only meet if their key columns hash alike (an INT
+    salt and a BIGINT salt of equal value do not).  Widths 1 and 3."""
+    build = REGISTRY[name].build
+    coalesced = _bits(build(spark, SF_SMOKE))
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    for width in (1, 3):
+        with monkeypatch.context() as m:
+            _force_nsalt(m, width, [])
+            df = build(spark, SF_SMOKE)  # loading re-applies the engine confs
+            spark.conf.set(key, "false")
+            try:
+                spread = _bits(df)
+            finally:
+                spark.conf.set(key, "true")
+        assert spread == coalesced, width

@@ -212,14 +212,15 @@ _OVERFLOW = (
 
 def _moment_rows(spark, emb):
     """Collected exact integer moment rows (j, k, c) of the corpus:
-    C_jk for j ≤ k, and the coordinate sums S_j keyed k = -1.
+    C_jk for j ≤ k, the coordinate sums S_j keyed k = -1, and the row
+    count N keyed j = k = -1.
 
     An Arrow-batched numpy kernel: whole batches go to vectorized
     native code.  Each task quantizes its batch once
     (``floor(x·1e6 + 0.5)`` on float64 — the identical IEEE ops the
     oracle's expression runs, so the same int64 u values), computes
     the Gram matrix Uᵀ·U and column sums, and folds them into
-    arbitrary-precision Python ints, emitting ONE set of 2144 partial
+    arbitrary-precision Python ints, emitting ONE set of 2145 partial
     rows per task; the final DECIMAL(38,0) sum over the ≤``par``
     partials is the exact integer total.  Exactness at every
     coordinate magnitude:
@@ -239,7 +240,7 @@ def _moment_rows(spark, emb):
     Only violating batches emit sentinels, so a clean corpus can never
     trip it.  Only the raw float arrays cross the Python boundary
     (shuffled as 4-byte floats, cast to double after the exchange), so
-    the shuffle into the final aggregation is ~par·2144 slim rows.
+    the shuffle into the final aggregation is ~par·2145 slim rows.
     """
     dim = DIM
     par = spark.sparkContext.defaultParallelism
@@ -259,7 +260,7 @@ def _moment_rows(spark, emb):
 
         C = np.zeros((dim, dim), dtype=object)
         S = np.zeros(dim, dtype=object)
-        seen = False
+        n = 0
         for pdf in it:
             if not len(pdf):
                 continue
@@ -269,7 +270,7 @@ def _moment_rows(spark, emb):
                 yield pd.DataFrame({"j": [-2], "k": [-2], "p": [Decimal(1)]})
                 return
             U = Fq.astype(np.int64)
-            seen = True
+            n += len(U)
             mu = int(np.abs(U).max())
             if mu == 0:
                 continue
@@ -283,9 +284,9 @@ def _moment_rows(spark, emb):
                 chunk = U[lo : lo + step]
                 C += (chunk.T @ chunk).astype(object)
                 S += chunk.sum(axis=0, dtype=np.int64).astype(object)
-        if not seen:
+        if not n:
             return
-        js, ks, ps = [], [], []
+        js, ks, ps = [-1], [-1], [Decimal(n)]
         for j in range(dim):
             for k in [*range(j, dim), -1]:
                 v = int(C[j, k] if k >= 0 else S[j])
@@ -322,11 +323,9 @@ def _moment_rows(spark, emb):
     _pca_oracle(),
 )
 def _pca_top_component(spark, t):
-    from .similarity import corpus_count
-
-    n_corpus = corpus_count(spark, t["embeddings"])
     mom_rows = _moment_rows(spark, t["embeddings"])
-    s_vals = {r["j"]: r["c"] for r in mom_rows if r["k"] == -1}
+    n_corpus = sum(r["c"] for r in mom_rows if r["j"] == -1)
+    s_vals = {r["j"]: r["c"] for r in mom_rows if r["k"] == -1 and r["j"] >= 0}
     c_ut = {(r["j"], r["k"]): r["c"] for r in mom_rows if r["k"] >= 0}
     if not c_ut:  # empty corpus: no moments, no component
         return spark.createDataFrame(

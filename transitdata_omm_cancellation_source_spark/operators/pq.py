@@ -43,11 +43,11 @@ BIGINT, applied ONCE to the bit-identical parquet doubles):
   floats; the reported ``adc_dist2`` is a single IEEE division of the
   identical BIGINT score by 1e12 (bit-identical cross-engine).
 
-Scale notes (100 TB): the codebook (128 rows) and the per-query LUT
-(|queries| x 128) are fixed-size broadcasts; encode is corpus x M x K
-rows through one argmin aggregation (map-side combinable); search is
-the same hyperplane-bucket equi-join as the LSH/int8 paths, with the
-ADC sum grouped per candidate pair — no all-pairs stage anywhere.
+Scale notes (100 TB): the codebook (128 rows) rides the driver as a
+fixed-size artifact; encode is one Arrow-batched argmin kernel over the
+corpus; search is the salted per-(bucket or cell, salt) top-k scan the
+cosine searches share (``similarity.salted_topk_scan``) with the ADC
+LUT as its scorer — no all-pairs stage anywhere.
 
 The reference has no similarity search (it is a cancellation ETL);
 this module is north-star surface per BASELINE.json.
@@ -65,7 +65,13 @@ from ..functions.hyperplane import (
     scaled_bucket_expr_spark,
 )
 from ..plans.registry import registered_query as _q
-from .similarity import QUERY_MOD, TOP_K, corpus_count, lsh_nbuckets
+from .similarity import (
+    QUERY_MOD,
+    TOP_K,
+    corpus_count,
+    lsh_nbuckets,
+    salted_topk_scan,
+)
 
 #: M subspaces x DSUB dims each (M * DSUB = 64); K centroids per
 #: subspace -> 4-bit codes, 32 bits per vector.
@@ -559,24 +565,29 @@ _ADC_SCORED_CTES = f"""
     )"""
 
 
-def _adc_topk(scored: DataFrame) -> DataFrame:
-    """The shared ranking tail: exact-BIGINT order, neighbor_id
-    tie-break, ``adc_dist2`` as one IEEE division for display."""
+def _adc_ranked(scored: DataFrame, depth: int) -> DataFrame:
+    """The shared ADC merge window: each query's best ``depth`` rows
+    by exact-BIGINT ``s`` with a neighbor_id tie-break, ranked
+    ``rnk``."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("s").asc(), F.col("neighbor_id").asc()
     )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rnk").cast("int").alias("rank"),
-            (
-                F.col("s").cast("double")
-                / F.lit(float(_LUT_SCALE) * float(_LUT_SCALE))
-            ).alias("adc_dist2"),
-        )
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= depth
+    )
+
+
+def _adc_topk(scored: DataFrame) -> DataFrame:
+    """The shared ranking tail: ``_adc_ranked`` to TOP_K, with
+    ``adc_dist2`` as one IEEE division for display."""
+    return _adc_ranked(scored, TOP_K).select(
+        "query_id",
+        "neighbor_id",
+        F.col("rnk").cast("int").alias("rank"),
+        (
+            F.col("s").cast("double")
+            / F.lit(float(_LUT_SCALE) * float(_LUT_SCALE))
+        ).alias("adc_dist2"),
     )
 
 
@@ -592,6 +603,29 @@ def _codebook_matrix(cent: DataFrame):
     return C
 
 
+def _adc_score(C):
+    """The ADC scorer of ``salted_topk_scan`` over the [M x K x DSUB]
+    codebook ``C``: each query's [M x K] exact-int64 LUT, then M code
+    gathers per member — identical BIGINT sums to the oracles'
+    per-(pair, sub) LUT joins (|u|,|c| ≤ ~1.2e7 ⇒ every term ≤
+    ~4.6e15, far inside int64).  Members carry packed ``codes``,
+    queries their micro-unit ``u``."""
+
+    def score(members, queries):
+        import numpy as np
+
+        codes = np.stack(members["codes"].to_numpy()).astype(np.int64)
+        U = np.stack(queries["u"].to_numpy()).astype(np.int64)
+        diff = U.reshape(len(U), M_SUB, DSUB)[:, :, None, :] - C[None]
+        lut = (diff * diff).sum(axis=3)  # (nq, M, K)
+        S = np.zeros((len(U), len(codes)), dtype=np.int64)
+        for m in range(M_SUB):
+            S += lut[:, m][:, codes[:, m]]
+        return S
+
+    return score
+
+
 def _adc_scored(
     spark, t, vecs: DataFrame, cent: DataFrame, depth: int
 ) -> DataFrame:
@@ -600,32 +634,25 @@ def _adc_scored(
     one-shot search and the reranked variant (output-identical to the
     ``_ADC_SCORED_CTES`` oracle block under the callers' merge
     windows).  Buckets are corpus-scaled (``lsh_nbuckets``, occupancy
-    √N) and scanned by the shared per-(bucket, salt) kernel
-    (``_pq_group_scan``) — the previous candidate-pair equi-join +
-    per-(pair, sub) LUT join + aggregation measured 290 s cold at
-    sf25 on exactly this path (the pre-r9 IVF-PQ disease with buckets
-    in place of cells); the kernel scans the same candidates at C
-    speed with identical BIGINT sums."""
+    √N) and scanned by ``salted_topk_scan`` with the ``_adc_score``
+    scorer — the previous candidate-pair equi-join + per-(pair, sub)
+    LUT join + aggregation measured 290 s cold at sf25 on exactly this
+    path (the pre-r9 IVF-PQ disease with buckets in place of cells);
+    the kernel scans the same candidates at C speed with identical
+    BIGINT sums."""
     nb = lsh_nbuckets(spark, t)
-    nsalt = _ivfpq_nsalt(corpus_count(spark, t["embeddings"]), nb)
     bucketed = vecs.select(
-        "vec_id", scaled_bucket_expr_spark("v", nb).alias("cell")
+        "vec_id", scaled_bucket_expr_spark("v", nb).alias("key")
     )
-    corpus = (
-        _shared_packed_codes(spark, t)
-        .join(bucketed, "vec_id")
-        .withColumn("salt", (F.col("vec_id") % nsalt).cast("int"))
+    corpus = _shared_packed_codes(spark, t).join(bucketed, "vec_id")
+    qs = vecs.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+        F.col("vec_id").alias("query_id"),
+        scaled_bucket_expr_spark("v", nb).alias("key"),
+        "u",
     )
-    qs = (
-        vecs.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "u",
-            scaled_bucket_expr_spark("v", nb).alias("cell"),
-        )
-        .withColumn("salt", F.explode(F.expr(f"sequence(0, {nsalt - 1})")))
+    return salted_topk_scan(
+        t, corpus, qs, nb, depth, _adc_score(_codebook_matrix(cent)), "long"
     )
-    return _pq_group_scan(corpus, qs, _codebook_matrix(cent), depth)
 
 
 @_q(
@@ -701,23 +728,16 @@ def _knn_pq_refine(spark, t):
     neighbor_id — no float enters either ordering; ``exact_dist2`` is
     one IEEE division for display.
 
-    Scale shape (100 TB): stage 1 is the existing candidate equi-join
-    and map-side-combinable ADC fold; the rerank joins only
-    |queries| x PQ_SHORTLIST slim rows back to the corpus vectors —
-    two shuffle equi-joins bounded by the shortlist, never by the
-    corpus.
+    Scale shape (100 TB): stage 1 is ``_adc_scored``'s salted
+    per-bucket scan to depth PQ_SHORTLIST, cut by the same ADC merge
+    window as ``knn_pq_adc``; the rerank joins only |queries| x
+    PQ_SHORTLIST slim rows back to the corpus vectors — two shuffle
+    equi-joins bounded by the shortlist, never by the corpus.
     """
     vecs = _vectors(t)
     cent = _shared_codebook(spark, vecs)
     scored = _adc_scored(spark, t, vecs, cent, PQ_SHORTLIST)
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("s").asc(), F.col("neighbor_id").asc()
-    )
-    short = (
-        scored.withColumn("rnk", F.row_number().over(ws))
-        .filter(F.col("rnk") <= PQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
+    short = _adc_ranked(scored, PQ_SHORTLIST).select("query_id", "neighbor_id")
     qu = vecs.select(F.col("vec_id").alias("query_id"), F.col("u").alias("qu"))
     nu = vecs.select(
         F.col("vec_id").alias("neighbor_id"), F.col("u").alias("nu")
@@ -788,135 +808,6 @@ def _ivfpq_oracle() -> str:
     """
 
 
-#: member-count target per (cell, salt) kernel group for the IVF-PQ
-#: scan.  Cell populations are corpus/√N (skewed further by near-dup
-#: lattices), so a single grouped-map task per cell would concentrate
-#: a hot cell's whole member list in one task's memory once occupancy
-#: outgrows this bound.  Salting the MEMBER side ``vec_id % nsalt``
-#: splits every cell into bounded groups and replicates each query
-#: across them (the repo's deterministic salted-join pattern,
-#: ``events_segment_enrich_salted``); per-group top-k unions are
-#: merged by one final window over |queries| x nsalt x TOP_K slim
-#: rows — top-k is distributive over a partition of the candidate
-#: set, so the result is identical for ANY salt width.  The width is
-#: derived from the session-cached corpus count (occupancy / target,
-#: rounded up to a power of two, capped), so a small corpus pays no
-#: empty-group overhead and a 100 TB one never exceeds the per-task
-#: bound: N = 1e9 -> 4096 cells (IVF_MAX_BITS cap) -> 244k occupancy
-#: -> 64 salts -> ~3.8k members per group.
-IVFPQ_GROUP_TARGET = 4096
-IVFPQ_MAX_SALT = 64
-
-#: headroom multiplier for skewed cells: the width is sized for a cell
-#: holding IVFPQ_SKEW_ALLOWANCE x the mean occupancy (near-dup
-#: lattices concentrate mass), without paying a per-cell count job.
-IVFPQ_SKEW_ALLOWANCE = 16
-
-
-def _ivfpq_nsalt(n_corpus: int, ncells: int) -> int:
-    hot = max(1, n_corpus // max(1, ncells)) * IVFPQ_SKEW_ALLOWANCE
-    return _nsalt_for_occupancy(hot)
-
-
-def _nsalt_for_occupancy(hot: int) -> int:
-    """Salt width for a hottest-group occupancy of ``hot`` members."""
-    nsalt = 1
-    while hot / nsalt > IVFPQ_GROUP_TARGET and nsalt < IVFPQ_MAX_SALT:
-        nsalt *= 2
-    return nsalt
-
-
-# (A global ``measured_nsalt`` helper — salt width from the measured
-# max cell occupancy — lived here between bdb52ad and the r12
-# bucket-pair rewrite.  The pair-dedup scans it was written for now
-# size buckets PER BLOCK inside operators/pairscan.py, which both
-# fixes the skew arithmetic and avoids the corpus-wide x nsalt
-# replication that OOM'd the global form — recorded negative af151b3.
-# The search-path scans keep the assumption-based ``_ivfpq_nsalt``:
-# they replicate only the sparse 1/QUERY_MOD query side, and their
-# fourth-decade ratios match the Θ(N^1.5) candidate-count predictions
-# without a measured width.)
-
-
-def _pq_group_scan(
-    corpus: DataFrame, qs: DataFrame, C, depth: int
-) -> DataFrame:
-    """(query_id, neighbor_id, s): the per-group PQ compressed-domain
-    kernel scan shared by every PQ search variant — the grouping key
-    ``cell`` is whatever confines the candidates (the learned IVF cell
-    for ``knn_ivfpq_adc``, the hyperplane bucket for ``knn_pq_adc`` /
-    ``knn_pq_refine``).
-
-    ``corpus``: (vec_id, codes packed, cell, salt); ``qs``: (query_id,
-    u, cell, salt) with each query replicated across its cell's salts.
-    Each cogroup task builds its queries' [M x K] exact-int64 LUT once
-    and gathers M codes per candidate — identical BIGINT sums to the
-    oracles' per-(pair, sub) LUT joins.  Emits each query's LOCAL
-    top-``depth`` (boundary ties kept by the slack threshold, then
-    (s, neighbor_id) lexsort) — top-k is distributive over any salt
-    partition of the candidate set, so the caller's merge window
-    reproduces the global ranking exactly at any salt width.
-    """
-    topd = depth
-
-    def kernel(corpus_pdf, qs_pdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int64"),
-                "neighbor_id": pd.Series(dtype="int64"),
-                "s": pd.Series(dtype="int64"),
-            }
-        )
-        if len(corpus_pdf) == 0 or len(qs_pdf) == 0:
-            return empty
-        codes = np.stack(corpus_pdf["codes"].to_numpy()).astype(np.int64)
-        nid = corpus_pdf["vec_id"].to_numpy()
-        U = np.stack(qs_pdf["u"].to_numpy()).astype(np.int64)
-        qid = qs_pdf["query_id"].to_numpy()
-        nq, nc = len(U), len(nid)
-        Us = U.reshape(nq, M_SUB, DSUB)
-        diff = Us[:, :, None, :] - C[None, :, :, :]
-        lut = (diff * diff).sum(axis=3)  # (nq, M, K) exact int64
-        out_q, out_n, out_s = [], [], []
-        kth = min(topd, nc - 1)
-        for lo in range(0, nq, 256):
-            hi = min(lo + 256, nq)
-            S = np.zeros((hi - lo, nc), dtype=np.int64)
-            for m in range(M_SUB):
-                S += lut[lo:hi, m][:, codes[:, m]]
-            for qi in range(lo, hi):
-                s = S[qi - lo]
-                # threshold to the depth+1 smallest (slack for self),
-                # then exact (s, neighbor_id) lexsort of the small
-                # survivor set — boundary ties all survive the <= mask.
-                thresh = np.partition(s, kth)[kth]
-                mask = (s <= thresh) & (nid != qid[qi])
-                cand_ix = np.flatnonzero(mask)
-                order = cand_ix[np.lexsort((nid[cand_ix], s[cand_ix]))]
-                take = order[:topd]
-                out_q.extend([qid[qi]] * len(take))
-                out_n.extend(nid[take])
-                out_s.extend(s[take])
-        if not out_q:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.asarray(out_q, dtype=np.int64),
-                "neighbor_id": np.asarray(out_n, dtype=np.int64),
-                "s": np.asarray(out_s, dtype=np.int64),
-            }
-        )
-
-    return (
-        corpus.groupby("cell", "salt")
-        .cogroup(qs.groupby("cell", "salt"))
-        .applyInPandas(kernel, "query_id long, neighbor_id long, s long")
-    )
-
-
 @_q(
     "knn_ivfpq_adc",
     "north-star: IVF-PQ — learned coarse-quantizer cells confine the "
@@ -936,55 +827,41 @@ def _knn_ivfpq(spark, t):
 
     Scale shape — the Faiss per-list scan, not a row-explosion join:
     packed 32-bit codes cogroup with the queries of their (cell,
-    salt) group, and an Arrow-batched kernel builds each query's
-    [M x K] integer LUT once and gathers M codes per candidate —
-    the same arithmetic the previous form paid a candidate-pair
-    equi-join + per-(pair, sub) LUT join + aggregation for (measured
-    306 s cold at sf25, dominated by shuffling |q| x occupancy x M
-    slim rows through two joins and a window; the kernel scans the
-    same candidates at C speed).  Hot cells are salt-split
-    (corpus-derived nsalt) so no task ever holds a whole skewed cell;
-    final merge window ranks only the per-group top-k survivors.
+    salt) group in ``salted_topk_scan``, and the ``_adc_score`` scorer
+    builds each query's [M x K] integer LUT and gathers M codes per
+    candidate — the same arithmetic the previous form paid a
+    candidate-pair equi-join + per-(pair, sub) LUT join + aggregation
+    for (measured 306 s cold at sf25, dominated by shuffling |q| x
+    occupancy x M slim rows through two joins and a window; the
+    kernel scans the same candidates at C speed).  Hot cells are
+    salt-split so no task ever holds a whole skewed cell; the final
+    merge window ranks only the per-group top-k survivors.
 
     Determinism: identical discipline to ``knn_pq_adc`` — the LUT
     entries and candidate sums are the same exact int64 integers the
-    oracle folds as BIGINTs (|u|,|c| ≤ ~1.2e7 ⇒ every term ≤ ~4.6e15,
-    far inside int64), ranking is (s ASC, neighbor_id ASC) in-kernel
-    via threshold + lexsort and in the merge window; ``adc_dist2`` is
-    one IEEE division for display.
+    oracle folds as BIGINTs, ranking is (s ASC, neighbor_id ASC)
+    in-kernel via threshold + lexsort and in the merge window;
+    ``adc_dist2`` is one IEEE division for display.
     """
     from .similarity import _ivf_ncells, ivf_cells
 
     vecs = _vectors(t)
-    cent = _shared_codebook(spark, vecs)
-    C = _codebook_matrix(cent)
+    score = _adc_score(_codebook_matrix(_shared_codebook(spark, vecs)))
     cells = ivf_cells(spark, t)
-    nsalt = _ivfpq_nsalt(
-        corpus_count(spark, t["embeddings"]), _ivf_ncells(spark, t)
-    )
-    corpus = (
-        _shared_packed_codes(spark, t)
-        .join(cells, "vec_id")
-        .withColumn("salt", (F.col("vec_id") % nsalt).cast("int"))
+    corpus = _shared_packed_codes(spark, t).join(
+        cells.withColumnRenamed("cell", "key"), "vec_id"
     )
     # rename the query side's join product (both sides read the SAME
-    # persisted ``cells`` frame — unqualified ``cell`` would be an
-    # ambiguous self-join reference).
+    # persisted ``cells`` frame — an unqualified reference would be an
+    # ambiguous self-join).
     q_cells = cells.select(
-        F.col("vec_id").alias("query_id"), F.col("cell").alias("qcell")
+        F.col("vec_id").alias("query_id"), F.col("cell").alias("key")
     )
     qs = (
         vecs.filter(F.col("vec_id") % QUERY_MOD == 0)
         .select(F.col("vec_id").alias("query_id"), "u")
         .join(q_cells, "query_id")
-        .select(
-            "query_id",
-            "u",
-            F.col("qcell").alias("cell"),
-            F.explode(
-                F.expr(f"sequence(0, {nsalt - 1})")
-            ).alias("salt"),
-        )
     )
-
-    return _adc_topk(_pq_group_scan(corpus, qs, C, TOP_K))
+    return _adc_topk(
+        salted_topk_scan(t, corpus, qs, _ivf_ncells(spark, t), TOP_K, score, "long")
+    )

@@ -27,12 +27,11 @@ codes agree bit-for-bit by construction.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.hyperplane import HYPERPLANES, MAX_PLANES, pow2_grid_cte
 from ..plans.registry import registered_query as _q
-from .similarity import QUERY_MOD, TOP_K, lsh_nbuckets
+from .similarity import QUERY_MOD, TOP_K, _topk, lsh_nbuckets
 
 
 @_q(
@@ -279,19 +278,7 @@ def _knn_int8(spark, t):
             ).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("cos", 6).alias("cosine"),
-        )
-    )
+    return _topk(scored)
 
 
 # --- per-dimension standardization (feature whitening pre-pass) -------------

@@ -43,6 +43,7 @@ from ..functions.hyperplane import (  # registry-free shared primitives
     IDOT_D as _IDOT_D,
     MICRO_D as _MICRO_D,
     broadcast_if_small,
+    exact_idot_matmul,
     full_bucket_expr_duck,
     pow2_grid_cte,
     scaled_bucket_expr_spark,
@@ -50,6 +51,7 @@ from ..functions.hyperplane import (  # registry-free shared primitives
 )
 from ..plans.registry import REGISTRY
 from ..plans.registry import registered_query as _q
+from .pairscan import PAIR_GROUP_TARGET, PAIR_MAX_BUCKETS
 
 TOP_K = 5
 QUERY_MOD = 50  # vec_id % 50 == 0 -> deterministic query set (~2% of corpus)
@@ -213,82 +215,132 @@ def _knn_bruteforce(spark, t):
     return _topk(scored)
 
 
-def _bucket_cos_scored(corpus: DataFrame, qs: DataFrame) -> DataFrame:
-    """Per-(bucket, salt) cogrouped cosine kernel — the shared scoring
-    stage of the hyperplane-LSH searches (single- and multi-probe).
+#: skew headroom of the search scans' salt width: it is sized for a
+#: group holding this many times the mean occupancy (near-dup
+#: lattices concentrate mass) without paying a per-group count job.
+SEARCH_SKEW_ALLOWANCE = 16
 
-    ``corpus``: (vec_id, v, bucket, salt); ``qs``: (query_id, qv,
-    bucket, salt) with each query replicated across its buckets'
-    salts.  Emits each query's LOCAL top-k per group as (query_id,
-    neighbor_id, cos); the caller's ``_topk`` window merges the
-    |q| x groups x TOP_K survivors.  Scores follow the ``_COS_INT_D``
-    integer contract: micro-unit int64 dots (exact matmul), then
-    double / sqrt(double * double) — identical correctly-rounded IEEE
-    ops on both engines.  Per-group truncation keeps boundary ties
-    (slack threshold + (-cos, neighbor_id) lexsort), so top-k stays
-    distributive over any salt partition of the candidate set.
+
+def _nsalt_for_occupancy(hot: int) -> int:
+    """Salt width for a hottest-group occupancy of ``hot`` members: the
+    smallest power of two that splits it into groups of at most
+    ``PAIR_GROUP_TARGET``, capped at ``PAIR_MAX_BUCKETS`` — the Python
+    twin of pairscan's pairs-mode CASE chain, on the same constants.
+    N = 1e9 -> 4096 cells (IVF_MAX_BITS cap) -> 3.9M skewed occupancy
+    -> 64 salts."""
+    nsalt = 1
+    while hot / nsalt > PAIR_GROUP_TARGET and nsalt < PAIR_MAX_BUCKETS:
+        nsalt *= 2
+    return nsalt
+
+
+def salted_topk_scan(
+    t, corpus: DataFrame, qs: DataFrame, groups: int, depth: int, score,
+    score_type: str,
+) -> DataFrame:
+    """(query_id, neighbor_id, s): each query's local top-``depth``
+    members per (key, salt) group — the one search scan of the
+    bucket-confined kNN searches, whatever confines their candidates
+    (a hyperplane bucket, a learned IVF cell).  The local-top-k-then-
+    merge shape of distributed top-k search.
+
+    ``corpus``: (vec_id, key, member payload) over ``groups`` keys;
+    ``qs``: (query_id, key, query payload).  ``score(members,
+    queries)`` scores one chunk of a group's queries against all of
+    its members as a (queries x members) array, lower is better;
+    ``score_type`` is its Spark type.
+
+    Salting: each group's members split ``vec_id % nsalt`` and every
+    query is replicated across its group's salts, so no task holds a
+    whole skewed bucket.  The width comes from the session-cached
+    corpus count and ``groups`` (``_nsalt_for_occupancy`` of
+    SEARCH_SKEW_ALLOWANCE x the mean occupancy).  Both salt columns
+    are INT: an INT and a BIGINT salt of equal value hash to different
+    shuffle partitions, so their groups would only meet where AQE
+    happens to coalesce the shuffle into one partition.
+
+    Per group, queries are scored 256 at a time; each keeps its
+    boundary ties (a slack threshold at the depth+1 smallest score),
+    drops itself, and is truncated after an exact (s, neighbor_id)
+    lexsort.  Top-k is thereby distributive over any salt partition
+    of the candidate set: the caller's merge window ranks |q| x nsalt
+    x depth slim rows into the global answer at every width
+    (tests/test_salt_invariance.py).
     """
-    topk = TOP_K
+    n = corpus_count(corpus.sparkSession, t["embeddings"])
+    nsalt = _nsalt_for_occupancy(
+        max(1, n // max(1, groups)) * SEARCH_SKEW_ALLOWANCE
+    )
+    corpus = corpus.withColumn("salt", (F.col("vec_id") % nsalt).cast("int"))
+    qs = qs.withColumn("salt", F.explode(F.expr(f"sequence(0, {nsalt - 1})")))
+    dtype = {"double": "float64", "long": "int64"}[score_type]
 
-    def kernel(corpus_pdf, qs_pdf):
+    def kernel(members, queries):
         import numpy as np
         import pandas as pd
 
-        from transitdata_omm_cancellation_source_spark.functions.hyperplane import (
-            exact_idot_matmul,
-        )
-
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int64"),
-                "neighbor_id": pd.Series(dtype="int64"),
-                "cos": pd.Series(dtype="float64"),
-            }
-        )
-        if len(corpus_pdf) == 0 or len(qs_pdf) == 0:
-            return empty
-        Uc = np.floor(
-            np.stack(corpus_pdf["v"].to_numpy()).astype(np.float64) * 1e6 + 0.5
-        ).astype(np.int64)
-        nid = corpus_pdf["vec_id"].to_numpy()
-        Uq = np.floor(
-            np.stack(qs_pdf["qv"].to_numpy()).astype(np.float64) * 1e6 + 0.5
-        ).astype(np.int64)
-        qid = qs_pdf["query_id"].to_numpy()
-        nc2 = (Uc * Uc).sum(axis=1).astype(np.float64)
-        nq2 = (Uq * Uq).sum(axis=1).astype(np.float64)
-        nc = len(nid)
-        out_q, out_n, out_c = [], [], []
-        kth = min(topk, nc - 1)
-        for lo in range(0, len(qid), 256):
-            hi = min(lo + 256, len(qid))
-            # exact integer dots (BLAS fast path + in-helper guard)
-            dots = exact_idot_matmul(Uq[lo:hi], Uc)
-            cos = dots / np.sqrt(nq2[lo:hi, None] * nc2[None, :])
-            for qi in range(lo, hi):
-                s = -cos[qi - lo]
+        out_q, out_n, out_s = [], [], []
+        nid = members["vec_id"].to_numpy()
+        qid = queries["query_id"].to_numpy()
+        nq = len(qid) if len(nid) else 0  # a member-less group scores nothing
+        kth = min(depth, len(nid) - 1)
+        for lo in range(0, nq, 256):
+            S = score(members, queries.iloc[lo : lo + 256])
+            for qi in range(lo, min(lo + 256, nq)):
+                s = S[qi - lo]
                 thresh = np.partition(s, kth)[kth]
-                mask = (s <= thresh) & (nid != qid[qi])
-                cand_ix = np.flatnonzero(mask)
-                order = cand_ix[np.lexsort((nid[cand_ix], s[cand_ix]))]
-                take = order[:topk]
+                cand_ix = np.flatnonzero((s <= thresh) & (nid != qid[qi]))
+                take = cand_ix[np.lexsort((nid[cand_ix], s[cand_ix]))][:depth]
                 out_q.extend([qid[qi]] * len(take))
                 out_n.extend(nid[take])
-                out_c.extend(cos[qi - lo][take])
-        if not out_q:
-            return empty
+                out_s.extend(s[take])
         return pd.DataFrame(
             {
                 "query_id": np.asarray(out_q, dtype=np.int64),
                 "neighbor_id": np.asarray(out_n, dtype=np.int64),
-                "cos": np.asarray(out_c, dtype=np.float64),
+                "s": np.asarray(out_s, dtype=dtype),
             }
         )
 
     return (
-        corpus.groupby("bucket", "salt")
-        .cogroup(qs.groupby("bucket", "salt"))
-        .applyInPandas(kernel, "query_id long, neighbor_id long, cos double")
+        corpus.groupby("key", "salt")
+        .cogroup(qs.groupby("key", "salt"))
+        .applyInPandas(
+            kernel, f"query_id long, neighbor_id long, s {score_type}"
+        )
+    )
+
+
+def _micro(vs):
+    """int64 micro-units of a column of double vectors."""
+    import numpy as np
+
+    return np.floor(
+        np.stack(vs.to_numpy()).astype(np.float64) * 1e6 + 0.5
+    ).astype(np.int64)
+
+
+def _neg_cos(members, queries):
+    """``-cos`` under the ``_COS_INT_D`` integer contract: micro-unit
+    int64 dots (exact matmul), then double / sqrt(double * double) —
+    the correctly-rounded IEEE ops of the oracle over the same
+    integers."""
+    import numpy as np
+
+    Uc, Uq = _micro(members["v"]), _micro(queries["qv"])
+    nc2 = (Uc * Uc).sum(axis=1).astype(np.float64)
+    nq2 = (Uq * Uq).sum(axis=1).astype(np.float64)
+    return -(exact_idot_matmul(Uq, Uc) / np.sqrt(nq2[:, None] * nc2[None, :]))
+
+
+def _cos_scan_topk(t, corpus: DataFrame, qs: DataFrame, groups: int) -> DataFrame:
+    """The cosine searches' tail: ``salted_topk_scan`` with the
+    ``_neg_cos`` scorer, its score negated back to ``cos`` (exact),
+    then the ``_topk`` merge window.  ``corpus``: (vec_id, key, v);
+    ``qs``: (query_id, key, qv)."""
+    scored = salted_topk_scan(t, corpus, qs, groups, TOP_K, _neg_cos, "double")
+    return _topk(
+        scored.select("query_id", "neighbor_id", (-F.col("s")).alias("cos"))
     )
 
 
@@ -320,43 +372,31 @@ def _knn_lsh(spark, t):
     O(N^1.5) with recall traded transparently (the oracle masks the
     SAME planes).
 
-    Scale shape (the knn_ivfpq_adc playbook, ``pq.py``): the previous
-    bucket equi-join evaluated one INTERPRETED 64-dim ``aggregate(
-    zip_with(...))`` fold per candidate pair and shuffled every scored
-    pair into a global ranking window — measured 506 s cold at sf25
-    (10M candidate pairs).  Here each (bucket, salt) group cogroups
-    its members with the bucket's queries and an Arrow-batched kernel
-    scores the group with ONE exact int64 matmul, emitting only each
-    query's local top-k; the merge window ranks |q| x nsalt x TOP_K
-    slim rows.  Hot buckets are salt-split on the member side
-    (corpus-derived nsalt, same sizing as ``pq._ivfpq_nsalt``), so no
-    task ever holds a whole skewed bucket; top-k is distributive over
-    a partition of the candidate set, so the result is identical at
-    any salt width.
+    Scale shape: the previous bucket equi-join evaluated one
+    INTERPRETED 64-dim ``aggregate(zip_with(...))`` fold per candidate
+    pair and shuffled every scored pair into a global ranking window —
+    measured 506 s cold at sf25 (10M candidate pairs).  Here the
+    search runs through ``salted_topk_scan``: each (bucket, salt) group
+    cogroups its members with the bucket's queries, scores them with
+    ONE exact int64 matmul, and emits only each query's local top-k;
+    the ``_topk`` window merges |q| x nsalt x TOP_K slim rows.  Hot
+    buckets are salt-split on the member side, and the result is
+    identical at any salt width.
 
     Determinism: vectors are micro-unit quantized once; dots and
     norms are exact int64 (|u| <= ~1.2e7 and DIM = 64 keep every term
     below 2^60, asserted in-kernel); cosine is CAST-to-double /
     sqrt(double * double) — the identical correctly-rounded IEEE op
     sequence as the oracle's ``_COS_INT_D``, so both engines rank the
-    same doubles.  Per-group truncation keeps boundary ties (slack
-    threshold + (-cos, neighbor_id) lexsort), matching the window's
-    (cos DESC, neighbor_id ASC) order.
+    same doubles.  Per-group truncation keeps boundary ties, matching
+    the window's (cos DESC, neighbor_id ASC) order.
     """
-    from .pq import _ivfpq_nsalt
-
     nb = lsh_nbuckets(spark, t)
-    nsalt = _ivfpq_nsalt(corpus_count(spark, t["embeddings"]), nb)
-    vecs = _vectors(t).withColumn("bucket", scaled_bucket_expr_spark("v", nb))
-    corpus = vecs.select("vec_id", "v", "bucket").withColumn(
-        "salt", F.col("vec_id") % nsalt
+    vecs = _vectors(t).withColumn("key", scaled_bucket_expr_spark("v", nb))
+    qs = vecs.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+        F.col("vec_id").alias("query_id"), "key", F.col("v").alias("qv")
     )
-    qs = (
-        vecs.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "bucket")
-        .withColumn("salt", F.explode(F.expr(f"sequence(0, {nsalt - 1})")))
-    )
-    return _topk(_bucket_cos_scored(corpus, qs))
+    return _cos_scan_topk(t, vecs.select("vec_id", "key", "v"), qs, nb)
 
 
 #: fixed chunk width (by vec_id range) for the two-phase centroid fold.
@@ -797,34 +837,22 @@ def _knn_ivf_kmeans(spark, t):
     # grid — broadcastable at any data size under IVF_MAX_BITS (~2 MB
     # at the cap); assignment is the exact-integer matmul kernel
     # (assign_to_centroids).  Search is the salted per-(cell, salt)
-    # cogrouped kernel scan (_bucket_cos_scored, the knn_ivfpq_adc
-    # playbook): per-cell occupancy N/√N = √N keeps candidates
-    # O(N^1.5 / QUERY_MOD) — instead of the N²/#cells a fixed
-    # quantizer measured in r7 — and the kernel scores each cell with
-    # one exact int64 matmul where the previous equi-join form paid an
-    # interpreted 64-dim fold per pair plus a global ranking window.
-    # A production IVF iterates Lloyd steps; one deterministic step
-    # keeps the oracle exact while exercising the identical plan.
-    from .pq import _ivfpq_nsalt
-
-    vecs = _vectors(t)
-    cand = vecs.join(ivf_cells(spark, t), "vec_id")
-    nsalt = _ivfpq_nsalt(
-        corpus_count(spark, t["embeddings"]), _ivf_ncells(spark, t)
+    # scan (salted_topk_scan): per-cell occupancy N/√N = √N keeps
+    # candidates O(N^1.5 / QUERY_MOD) — instead of the N²/#cells a
+    # fixed quantizer measured in r7 — and the kernel scores each cell
+    # with one exact int64 matmul where the previous equi-join form
+    # paid an interpreted 64-dim fold per pair plus a global ranking
+    # window.  A production IVF iterates Lloyd steps; one
+    # deterministic step keeps the oracle exact while exercising the
+    # identical plan.
+    cand = _vectors(t).join(ivf_cells(spark, t), "vec_id")
+    corpus = cand.select("vec_id", F.col("cell").alias("key"), "v")
+    qs = cand.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("cell").alias("key"),
+        F.col("v").alias("qv"),
     )
-    corpus = cand.select(
-        "vec_id", "v", F.col("cell").alias("bucket")
-    ).withColumn("salt", F.col("vec_id") % nsalt)
-    qs = (
-        cand.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("cell").alias("bucket"),
-        )
-        .withColumn("salt", F.explode(F.expr(f"sequence(0, {nsalt - 1})")))
-    )
-    return _topk(_bucket_cos_scored(corpus, qs))
+    return _cos_scan_topk(t, corpus, qs, _ivf_ncells(spark, t))
 
 
 def _multiprobe_oracle() -> str:
@@ -877,29 +905,17 @@ def _knn_lsh_multiprobe(spark, t):
     # single-probe (#buckets = sqrt_pow2(N)), so the probe fan-out
     # grows log-slowly (P = log2 #buckets) while candidates stay
     # O(N^1.5 * P).
-    from .pq import _ivfpq_nsalt
-
     nb = lsh_nbuckets(spark, t)
-    nsalt = _ivfpq_nsalt(corpus_count(spark, t["embeddings"]), nb)
-    vecs = _vectors(t).withColumn(
-        "bucket", scaled_bucket_expr_spark("v", nb)
-    )
-    corpus = vecs.select("vec_id", "v", "bucket").withColumn(
-        "salt", F.col("vec_id") % nsalt
-    )
-    probe_arr = "array(bucket, " + ", ".join(
-        f"bucket ^ {1 << i}" for i in range(nb.bit_length() - 1)
+    vecs = _vectors(t).withColumn("key", scaled_bucket_expr_spark("v", nb))
+    probe_arr = "array(key, " + ", ".join(
+        f"key ^ {1 << i}" for i in range(nb.bit_length() - 1)
     ) + ")"
-    qs = (
-        vecs.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.explode(F.expr(probe_arr)).alias("bucket"),
-        )
-        .withColumn("salt", F.explode(F.expr(f"sequence(0, {nsalt - 1})")))
+    qs = vecs.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.explode(F.expr(probe_arr)).alias("key"),
+        F.col("v").alias("qv"),
     )
-    return _topk(_bucket_cos_scored(corpus, qs))
+    return _cos_scan_topk(t, vecs.select("vec_id", "key", "v"), qs, nb)
 
 
 #: Lloyd refinement rounds after the label-seeded initialization.

@@ -167,8 +167,16 @@ def _rotation_order(names: list[str], history: dict[str, list[int]]) -> list[str
 #: the tuple in the next round once CORRECTNESS_r{N}.json has their
 #: green rows (the staleness order then resumes normally).
 _RECERTIFY: tuple[str, ...] = (
-    # (r16 tuple cleared per the contract: all 32 entries got green
-    # rows in CORRECTNESS_r16.)
+    # the six searches now run through similarity.salted_topk_scan
+    # (the cosine ones with an INT member-side salt)
+    "knn_lsh_hyperplane",
+    "knn_lsh_multiprobe",
+    "knn_ivf_kmeans",
+    "knn_pq_adc",
+    "knn_pq_refine",
+    "knn_ivfpq_adc",
+    # N comes from the moment kernel, not a separate count
+    "embedding_pca_top_component",
 )
 
 

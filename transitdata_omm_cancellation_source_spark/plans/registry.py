@@ -39,8 +39,8 @@ class QuerySpec:
     ``knn_ivf_kmeans`` / ``knn_ivfpq_adc`` / ``corpus_semdedup`` /
     ``dedup_embedding_cosine`` (one cached metadata count per
     session/corpus sizes the bucket/cell grid),
-    ``embedding_pca_top_component`` (bounded 4096-row local-relation
-    ferries between squaring levels).  Plan-only consumers
+    ``embedding_pca_top_component`` (collects its bounded moment rows
+    and finishes on the driver).  Plan-only consumers
     (EXPLAIN tooling, plan-shape tests) should expect those builders to
     submit jobs; everything else stays lazy.
     """
