@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from transitdata_omm_cancellation_source_spark.session import get_spark
@@ -14,3 +16,16 @@ def spark():
     spark = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+def jobs_run_by(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs, broadcasts included."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

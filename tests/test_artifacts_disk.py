@@ -5,8 +5,9 @@ were session-memory-only and retrained per session (the 17.7x
 knn_pq_refine decade row was one session's training bill).  These
 tests pin the r12 disk layer's contract:
 
-- a MISS trains, writes under the artifact root, and serves the rows;
-- a HIT serves bit-identical rows WITHOUT the trainer running — proved
+- a MISS trains, writes under the artifact root, and serves the
+  arrays;
+- a HIT serves bit-identical arrays WITHOUT the trainer running — proved
   both in-session (trainer monkeypatched to raise) and from a genuinely
   COLD SparkSession (separate JVM, different application id), which
   also proves the disk key is session-independent;
@@ -37,17 +38,16 @@ from conftest import SF_SMOKE
 
 
 def _quantizer_rows(spark, t):
-    return [
-        (r["c_key"], list(r["cv"]), r["cn2"])
-        for r in sim.ivf_quantizer(spark, t).collect()
-    ]
+    """The served quantizer arrays as exact python values: keys, and
+    each centroid as the ``float.hex`` of its coordinates."""
+    keys, cv = sim.ivf_quantizer(spark, t)
+    return [keys.tolist(), [[x.hex() for x in row] for row in cv.tolist()]]
 
 
 def _codebook_rows(spark, t):
-    return [
-        (r["sub"], r["code"], list(r["c"]))
-        for r in pq._shared_codebook(spark, pq._vectors(t)).collect()
-    ]
+    C = pq._shared_codebook(spark, pq._vectors(t))
+    assert C.shape == (pq.M_SUB, pq.K_CODES, pq.DSUB)
+    return C.tolist()
 
 
 @pytest.fixture()
@@ -100,10 +100,9 @@ def boom(train):
 artifacts._invoke_build = boom
 from transitdata_omm_cancellation_source_spark.catalog import load_tables
 t = load_tables(spark, sys.argv[2])
-cv = [[r["c_key"], list(r["cv"]), r["cn2"]]
-      for r in sim.ivf_quantizer(spark, t).collect()]
-cb = [[r["sub"], r["code"], list(r["c"])]
-      for r in pq._shared_codebook(spark, pq._vectors(t)).collect()]
+keys, cvm = sim.ivf_quantizer(spark, t)
+cv = [keys.tolist(), [[x.hex() for x in row] for row in cvm.tolist()]]
+cb = pq._shared_codebook(spark, pq._vectors(t)).tolist()
 print("COLD_RESULT " + json.dumps({"cv": cv, "cb": cb}))
 """
 
@@ -111,13 +110,10 @@ print("COLD_RESULT " + json.dumps({"cv": cv, "cb": cb}))
 def test_cold_session_loads_bit_identical(spark, artifact_dir):
     """A separate JVM (fresh application id) must LOAD both artifacts
     without training — proving the disk key carries no session state
-    and the parquet round-trip is exact (json float repr is
-    shortest-roundtrip, so string equality == bit equality)."""
+    and the parquet round-trip is exact (coordinates compare as
+    ``float.hex``, so string equality == bit equality)."""
     t = load_tables(spark, SF_SMOKE)
-    warm = {
-        "cv": [list(r) for r in _quantizer_rows(spark, t)],
-        "cb": [list(r) for r in _codebook_rows(spark, t)],
-    }
+    warm = {"cv": _quantizer_rows(spark, t), "cb": _codebook_rows(spark, t)}
     proc = subprocess.run(
         [sys.executable, "-c", _COLD_SCRIPT, str(artifact_dir), SF_SMOKE],
         capture_output=True,
@@ -225,14 +221,12 @@ def test_fileless_sources_train_in_session_and_publish_nothing(
 ):
     """Two local relations with one schema have no input files, so the
     disk key cannot tell them apart: each must be served its own rows,
-    and nothing may be published."""
+    sorted by the key, and nothing may be published."""
     schema = "k int, v string"
 
     def serve(src):
-        rows = artifacts.load_or_train(
-            spark, "fileless", src, schema, lambda: src, ["k"]
-        ).collect()
-        return [tuple(r) for r in rows]
+        cols = artifacts.load_or_train(spark, "fileless", src, lambda: src, ["k"])
+        return list(zip(cols["k"].tolist(), cols["v"].tolist()))
 
     a = spark.createDataFrame([(1, "a")], schema)
     b = spark.createDataFrame([(2, "b"), (1, "c")], schema)

@@ -168,7 +168,6 @@ def test_pq_refine_rank1_is_exact_nearest_in_shortlist(spark):
     from pyspark.sql import functions as F
     from transitdata_omm_cancellation_source_spark.operators.pq import (
         _adc_scored,
-        _shared_codebook,
         _vectors,
     )
 
@@ -183,8 +182,7 @@ def test_pq_refine_rank1_is_exact_nearest_in_shortlist(spark):
     # shortlist to TOP_K before reranking would still emit rows sorted
     # by exact_dist2, so sortedness alone cannot catch it.
     vecs = _vectors(t)
-    cent = _shared_codebook(spark, vecs)
-    scored = _adc_scored(spark, t, vecs, cent, PQ_SHORTLIST)
+    scored = _adc_scored(spark, t, PQ_SHORTLIST)
     ws = Window.partitionBy("query_id").orderBy(
         F.col("s").asc(), F.col("neighbor_id").asc()
     )

@@ -15,11 +15,12 @@ from transitdata_omm_cancellation_source_spark.operators.pq import (
     K_CODES,
     M_SUB,
     _centroids,
-    _encode,
     _knn_pq,
     _pq_codes,
     _train_codebook,
     _vectors,
+    codebook_array,
+    encode_codes,
 )
 from transitdata_omm_cancellation_source_spark.plans.queries import REGISTRY
 from transitdata_omm_cancellation_source_spark.testing import compare_frames
@@ -48,8 +49,13 @@ def test_seed_codebook_self_encodes(spark):
     # their own code in every subspace (distance 0 to themselves).
     rows = [(i, _vec(i)) for i in range(K_CODES)] + [(100, _vec(3))]
     vecs = _vectors({"embeddings": _emb(spark, rows)})
-    codes = _encode(vecs, _centroids(vecs), width=1).collect()
-    by_vec = {r.vec_id: dict(enumerate(r.codes)) for r in codes}
+    seeds = _centroids(vecs).collect()
+    C = codebook_array(
+        {c: np.array([r[c] for r in seeds]) for c in ("sub", "code", "c")}
+    )
+    us = vecs.select("vec_id", "u").collect()
+    codes = encode_codes(np.array([r.u for r in us]), C)
+    by_vec = {r.vec_id: dict(enumerate(c)) for r, c in zip(us, codes.tolist())}
     assert by_vec[3] == {s: 3 for s in range(M_SUB)}
     assert by_vec[100] == {s: 3 for s in range(M_SUB)}  # exact duplicate
 

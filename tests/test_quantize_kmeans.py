@@ -4,6 +4,8 @@ properties parity alone can't see)."""
 
 from __future__ import annotations
 
+import numpy as np
+
 from transitdata_omm_cancellation_source_spark.functions.hyperplane import DIM
 from transitdata_omm_cancellation_source_spark.plans.queries import REGISTRY
 
@@ -98,9 +100,9 @@ def test_assign_zero_norm_centroid_matches_oracle_null_ordering(spark):
         [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.7, 0.7])],
         "vec_id long, v array<double>",
     )
-    cvec = spark.createDataFrame(
-        [(3, [1.0, 0.0]), (5, [0.0, 0.0]), (7, [0.0, 1.0]), (9, [0.0, 0.0])],
-        "c_key int, cv array<double>",
+    cvec = (
+        np.array([3, 5, 7, 9]),
+        np.array([[1.0, 0.0], [0.0, 0.0], [0.0, 1.0], [0.0, 0.0]]),
     )
     got = {
         r["vec_id"]: r["cell"]
@@ -109,9 +111,7 @@ def test_assign_zero_norm_centroid_matches_oracle_null_ordering(spark):
     # zero-norm cells 5 and 9 never win; ties keep the lowest cell
     assert got == {1: 3, 2: 7, 3: 3}
     # all-zero codebook: every oracle score is NULL -> lowest cell
-    cvec0 = spark.createDataFrame(
-        [(5, [0.0, 0.0]), (9, [0.0, 0.0])], "c_key int, cv array<double>"
-    )
+    cvec0 = (np.array([5, 9]), np.zeros((2, 2)))
     got0 = {
         r["vec_id"]: r["cell"]
         for r in assign_to_centroids(vecs, cvec0).collect()

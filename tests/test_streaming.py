@@ -5,7 +5,6 @@ poller query, config/env source, JDBC template binding.
 from __future__ import annotations
 
 import time
-import uuid
 
 import pytest
 
@@ -19,7 +18,7 @@ from transitdata_omm_cancellation_source_spark.streaming.poller import (
     run_poll_cycle,
 )
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, jobs_run_by
 
 
 def test_snapshot_two_cycles(spark, tmp_path):
@@ -186,19 +185,6 @@ def test_missing_pointer_recovers_highest_complete_version(spark, tmp_path):
     assert store.read(spark).count() == 7
 
 
-def _jobs_run_by(spark, fn) -> int:
-    """The number of Spark jobs ``fn()`` runs, broadcasts included."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_sink_schema_check_reads_one_file(spark, tmp_path, monkeypatch):
     """The check reads one part file's footer on the driver, never the
     whole sink: no Spark job runs, yet a format flip still raises."""
@@ -222,7 +208,7 @@ def test_sink_schema_check_reads_one_file(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(poller.pq, "read_metadata", spy)
     messages = encode_messages(records)
-    jobs = _jobs_run_by(
+    jobs = jobs_run_by(
         spark, lambda: poller._check_sink_schema(spark, str(sink), messages)
     )
     assert jobs == 0
@@ -243,7 +229,7 @@ def test_steady_state_cycle_runs_three_jobs(spark, tmp_path):
         store = SnapshotStore(str(tmp_path / f"snap-{most}"))
         for _ in range(2):
             run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=sink)
-        jobs = _jobs_run_by(
+        jobs = jobs_run_by(
             spark,
             lambda: run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=sink),
         )

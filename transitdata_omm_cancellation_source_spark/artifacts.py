@@ -3,12 +3,14 @@
 Two kinds of artifact live on disk, under the session memo
 (``caching.memo``) at their call sites:
 
-- trained relations (``load_or_train``): the IVF coarse quantizer
+- trained artifacts (``load_or_train``): the IVF coarse quantizer
   (``similarity.ivf_quantizer``) and the PQ codebook
   (``pq._shared_codebook``).  They are bounded (≤ 2^IVF_MAX_BITS and
-  M x K = 128 rows at any corpus size) and are served as a local
-  relation sorted by their key columns, so consumers' plans start from
-  a literal broadcast whichever path served them;
+  M x K = 128 rows at any corpus size) and are served as numpy
+  arrays, one per column, sorted by their key columns: the published
+  parquet is read with pyarrow in this process, so serving a trained
+  artifact never runs a Spark job, and the kernels take the arrays
+  into their closures;
 - standing indexes (``load_or_build_frame``): the corpus-sized band
   index, shingle sets and embedding assignment frame of the
   incremental dedup family (``dedup_fuzzy._family_frame``), served as
@@ -42,7 +44,7 @@ routine (``_publish``):
 
 Parquet round-trips int64, double and array columns exactly;
 ``tests/test_artifacts_disk.py`` proves a separate cold SparkSession
-loads the identical rows without its trainer running.
+loads the identical arrays without its trainer running.
 """
 
 from __future__ import annotations
@@ -155,17 +157,25 @@ def load_or_train(
     spark: SparkSession,
     name: str,
     source_df: DataFrame,
-    schema,
     train: Callable[[], DataFrame],
     key_cols: Sequence[str],
-) -> DataFrame:
-    """A bounded trained relation as a local relation over its rows
-    sorted by ``key_cols``, so the result does not depend on scan or
-    aggregation order.  ``train()`` returns the training plan; it runs
-    only on a miss."""
-    rows = _serve(spark, name, source_df, train).collect()
-    rows.sort(key=lambda r: tuple(r[c] for c in key_cols))
-    return spark.createDataFrame(rows, schema)
+) -> dict:
+    """A bounded trained relation as ``{column: numpy array}`` over its
+    rows sorted by ``key_cols``, so the result does not depend on scan
+    or aggregation order; an array column becomes a 2-D array.
+    ``train()`` returns the training plan; it runs only on a miss.  A
+    published artifact is read with pyarrow in this process (no Spark
+    job); a source that is not fingerprinted collects its plan."""
+    import numpy as np
+    import pyarrow.parquet as papq
+
+    served = _serve(spark, name, source_df, train)
+    table = (
+        served.toArrow() if isinstance(served, DataFrame) else papq.read_table(served)
+    ).sort_by([(c, "ascending") for c in key_cols])
+    return {
+        c: np.array(table.column(c).to_pylist()) for c in table.column_names
+    }
 
 
 def load_or_build_frame(
@@ -184,15 +194,17 @@ def load_or_build_frame(
     the same files (a filter of the table) would collide with the
     table itself.  Every construction difference lives in ``build``.
     """
-    return _serve(spark, name, source_df, build)
+    served = _serve(spark, name, source_df, build)
+    return served if isinstance(served, DataFrame) else spark.read.parquet(served)
 
 
 def _serve(
     spark: SparkSession, name: str, source_df: DataFrame, build: Callable[[], DataFrame]
-) -> DataFrame:
-    """The one hit/miss routine: a disk hit scans the published
-    artifact, a miss builds and publishes it first, and a source that
-    is not fingerprinted builds in session (module docstring)."""
+) -> DataFrame | str:
+    """The one hit/miss routine: the published artifact's path on a
+    disk hit, or after a miss built and published it, and the built
+    plan itself for a source that is not fingerprinted (module
+    docstring)."""
     path = None
     if fingerprinted(source_df):
         key = artifact_disk_key(name, source_df, build)
@@ -208,7 +220,7 @@ def _serve(
             pass
     else:
         _publish(_invoke_build(build), path)
-    return spark.read.parquet(path)
+    return path
 
 
 def _invoke_build(build):

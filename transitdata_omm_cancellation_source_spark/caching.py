@@ -22,11 +22,11 @@ source frame, holding two kinds of entry.
 
 - FRAME entries (``frame=True``): shared persisted subtrees.  They are
   dropped by ``release_tracked`` together with the data they point to.
-- VALUE entries: trained artifacts (the PQ codebook, the IVF quantizer
-  — bounded local relations) and scalars derived from the corpus (the
-  corpus count, PCA's max|u|, pagerank's pass count).  They hold no
-  executor memory, so they survive ``release_tracked`` like the disk
-  artifact tier does; ``clear_value_memos`` is the cold-start hook.
+- VALUE entries: trained artifacts held as numpy arrays (the
+  PQ codebook, the IVF quantizer) and scalars derived from the corpus
+  (the corpus count, pagerank's pass count).  They hold no executor
+  memory, so they survive ``release_tracked`` like the disk artifact
+  tier does; ``clear_value_memos`` is the cold-start hook.
 
 README.md ("Caches") lists each entry with the ablation that keeps it.
 

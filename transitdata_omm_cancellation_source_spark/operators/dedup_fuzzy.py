@@ -1071,7 +1071,7 @@ _SIMHASH_SH_D = f"""
 def _simhash(spark, t):
     # Arrow-batched fingerprint kernel over the family's shared
     # persisted word-hash frame (the r8 mapInPandas playbook —
-    # assign_to_centroids / pq._encode): per doc, widen each token
+    # assign_cells / pq.encode_codes): per doc, widen each token
     # hash w = h + (h * 2654435761 % P) * P (pure int64 arithmetic,
     # |w| < P² < 2^62 so nothing wraps), take the ±1 vote per bit as
     # 2*ones - n_tokens, and assemble sh64 = Σ 2^j [votes_j > 0].

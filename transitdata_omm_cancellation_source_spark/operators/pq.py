@@ -44,10 +44,12 @@ BIGINT, applied ONCE to the bit-identical parquet doubles):
   identical BIGINT score by 1e12 (bit-identical cross-engine).
 
 Scale notes (100 TB): the codebook (128 rows) rides the driver as a
-fixed-size artifact; encode is one Arrow-batched argmin kernel over the
-corpus; search is the salted per-(bucket or cell, salt) top-k scan the
-cosine searches share (``similarity.salted_topk_scan``) with the ADC
-LUT as its scorer — no all-pairs stage anywhere.
+fixed-size [M x K x DSUB] array; encode runs inside the one
+Arrow-batched vector index pass (``vector_index``), which also assigns
+each vector its IVF cell and hyperplane bucket; search is the salted
+per-(bucket or cell, salt) top-k scan the cosine searches share
+(``similarity.salted_topk_scan``) with the ADC LUT as its scorer — no
+all-pairs stage anywhere.
 
 The reference has no similarity search (it is a cancellation ETL);
 this module is north-star surface per BASELINE.json.
@@ -68,7 +70,11 @@ from ..plans.registry import registered_query as _q
 from .similarity import (
     QUERY_MOD,
     TOP_K,
+    _ivf_ncells,
+    _micro,
+    assign_cells,
     corpus_count,
+    ivf_quantizer,
     lsh_nbuckets,
     salted_topk_scan,
 )
@@ -167,15 +173,14 @@ def _subvectors(vecs: DataFrame) -> DataFrame:
     ).select("vec_id", F.col("sub").cast("int").alias("sub"), "sv")
 
 
-def _encode(vecs: DataFrame, cent: DataFrame, width: int) -> DataFrame:
-    """(vec_id, codes array<int>) — nearest-centroid argmin per
-    subspace, at MATMUL SPEED with exact-integer semantics, emitted once
-    per vector: what the cell-confined IVF-PQ scan consumes (M gathers
-    per candidate want the code vector contiguous); the per-sub shape
-    is a posexplode away.
+def encode_codes(U, C):
+    """(n, M) int32 codes of the micro-unit matrix ``U`` against the
+    [M x K x DSUB] codebook ``C`` — THE per-batch encode step
+    (nearest centroid per subspace), at MATMUL SPEED with
+    exact-integer semantics.
 
     The squared distance expands to |sv|² + |c|² - 2·sv·c over the
-    micro-unit BIGINTs; every term (≤~3e13) is far below 2^53, so
+    micro-unit integers; every term (≤~3e13) is far below 2^53, so
     float64 arithmetic on them is EXACT and order-independent — the
     BLAS matmul computes literally the same integers as the BIGINT
     ``_L2_S`` folds the oracle (and the training loop) use, so argmin
@@ -183,108 +188,96 @@ def _encode(vecs: DataFrame, cent: DataFrame, width: int) -> DataFrame:
     semantics) is bit-identical to ``min(struct(dist, code))``.  The
     per-(vector, cell) interpreted HOF fold this replaces was the
     corpus-encode wall at the third scale decade (64M 8-dim folds at
-    sf25).  The codebook rides the closure as a bounded [M x K x DSUB]
-    array; the corpus is hash-repartitioned to full parallelism first
-    (a small parquet's few scan partitions would serialize the
-    kernel).
+    sf25).
     """
     import numpy as np
 
-    spark = vecs.sparkSession
-    rows = cent.collect()
-    # Completeness contract, enforced: the dense codebook array maps a
-    # missing (sub, code) entry to a zero centroid that could win the
-    # argmin — semantics the join-based form never had.  Training's
-    # keep-old-on-empty merge guarantees all M*K entries today; assert
-    # it so a future training change fails loudly instead of silently
-    # introducing phantom zero centroids.
-    if len({(r["sub"], r["code"]) for r in rows}) != M_SUB * K_CODES:
+    U = U.astype(np.float64)
+    C = C.astype(np.float64)
+    # Exactness contract, enforced: each expanded distance is
+    # ≤ DSUB·(|u|+|c|)², which must stay below 2^53 for the float64
+    # matmul to equal the oracle's BIGINT L2 folds.
+    umax, cmax = np.abs(U).max(initial=0.0), np.abs(C).max(initial=1.0)
+    if DSUB * (umax + cmax) ** 2 >= 2.0**53:
         raise ValueError(
-            f"_encode: codebook must carry exactly {M_SUB}x{K_CODES} "
-            f"distinct (sub, code) entries, got {len(rows)} rows"
+            "encode_codes: DSUB*(|u|+|c|)^2 exceeds the 2^53 exact-"
+            "integer float64 headroom; codes would diverge from the "
+            "BIGINT oracle"
         )
-    C = np.zeros((M_SUB, K_CODES, DSUB))
-    for r in rows:
-        C[r["sub"], r["code"]] = list(r["c"])
-    bc = spark.sparkContext.broadcast(C)
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        C_ = bc.value
-        cn2 = (C_ * C_).sum(axis=2)  # (M, K) exact ints in float64
-        cmax = np.abs(C_).max(initial=1.0)
-        for pdf in batches:
-            U = np.stack(pdf["u"].to_numpy()).astype(np.float64)
-            # Exactness contract, enforced: each expanded distance is
-            # ≤ DSUB·(|u|+|c|)², which must stay below 2^53 for the
-            # float64 matmul to equal the oracle's BIGINT L2 folds.
-            if DSUB * (np.abs(U).max(initial=0.0) + cmax) ** 2 >= 2.0**53:
-                raise ValueError(
-                    "_encode: DSUB*(|u|+|c|)^2 exceeds the 2^53 exact-"
-                    "integer float64 headroom; codes would diverge "
-                    "from the BIGINT oracle"
-                )
-            n = len(U)
-            Us = U.reshape(n, M_SUB, DSUB)
-            un2 = (Us * Us).sum(axis=2)  # (n, M) exact
-            codes = np.empty((n, M_SUB), dtype=np.int64)
-            for s in range(M_SUB):
-                S = Us[:, s, :] @ C_[s].T  # (n, K) exact
-                d = un2[:, s][:, None] + cn2[s][None, :] - 2.0 * S
-                codes[:, s] = np.argmin(d, axis=1)  # first min = lowest code
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "codes": list(codes.astype("int32"))}
-            )
-
-    # Occupancy-sized kernel width (the kmeans _KMEANS_TASK_ROWS
-    # discipline, r15): a small corpus stays a couple of Arrow tasks
-    # instead of fanning defaultParallelism near-empty Python workers
-    # (measured ~1.1 s of fixed fan-out for a 2000-row corpus at 32
-    # tasks), while a large corpus still spreads to full parallelism.
-    # Codes are per-row argmins — values identical at any width.
-    par = max(1, min(spark.sparkContext.defaultParallelism, width))
-    return (
-        vecs.select("vec_id", "u")
-        .repartition(par, "vec_id")
-        .mapInPandas(kernel, "vec_id long, codes array<int>")
-    )
+    n = len(U)
+    Us = U.reshape(n, M_SUB, DSUB)
+    un2 = (Us * Us).sum(axis=2)  # (n, M) exact
+    cn2 = (C * C).sum(axis=2)  # (M, K) exact
+    codes = np.empty((n, M_SUB), dtype=np.int32)
+    for s in range(M_SUB):
+        S = Us[:, s, :] @ C[s].T  # (n, K) exact
+        d = un2[:, s][:, None] + cn2[s][None, :] - 2.0 * S
+        codes[:, s] = np.argmin(d, axis=1)  # first min = lowest code
+    return codes
 
 
-#: rows per encode-kernel task (the kmeans _KMEANS_TASK_ROWS value —
+#: rows per index-kernel task (the kmeans _KMEANS_TASK_ROWS value —
 #: one Arrow batch region big enough that numpy matmuls amortize the
 #: worker round-trip).
-_ENCODE_TASK_ROWS = 16384
+_INDEX_TASK_ROWS = 16384
 
-def _shared_packed_codes(spark, t) -> DataFrame:
-    """Persisted (vec_id, codes ARRAY<INT>) — THE corpus PQ assignment
-    against the shared codebook, built once per session for the four
-    PQ consumers (r15; guide §1.2 don't recompute).
 
-    Before: ``embedding_pq_codes``, ``_adc_scored`` (pq_adc +
-    pq_refine) and ``knn_ivfpq_adc`` each ran their own corpus encode —
-    identical kernel, identical codebook, ~1.1 s of fixed Arrow fan-out
-    + codebook collect per call at sf0.1.  The codes are per-row
-    argmins against a session-stable codebook, so one persisted frame
-    serves every consumer with values unchanged (the unpacked per-sub
-    shape is a posexplode away).  A frame entry of the session memo
-    keyed by the embeddings source (``release_tracked`` drops it with
-    its data); a fileless synthetic corpus separates via the plan hash.
+def vector_index(spark, t) -> DataFrame:
+    """Persisted (vec_id, u, bucket, cell, codes): every vector's index
+    columns from ONE Arrow pass over ``embeddings`` — its micro-unit
+    coordinates, its hyperplane bucket (``scaled_bucket_expr_spark``
+    at the corpus-scaled width), its IVF cell (``assign_cells`` under
+    the shared quantizer) and its packed PQ codes (``encode_codes``
+    under the shared codebook).  It feeds ``knn_ivfpq_adc``,
+    ``knn_ivf_kmeans``, ``embedding_pq_codes``, ``knn_pq_adc`` and
+    ``knn_pq_refine``: the production IVF-PQ index shape (Jégou et al.),
+    one inverted-list entry per vector, with no per-vector join
+    between separately built frames.
 
-    The vectors and codebook are DERIVED here from ``t`` (r15 ADVICE):
-    the cache key identifies the corpus, so a signature accepting
-    arbitrary ``vecs``/``cent`` could silently serve codes computed
-    against whichever codebook built first."""
-    vecs = _vectors(t)
-    cent = _shared_codebook(spark, vecs)
+    The quantizer and the codebook are bounded numpy arrays (value
+    entries of the session memo) and ride the kernel closure.  The
+    frame is a frame entry of the memo keyed by the embeddings source
+    (``release_tracked`` drops it with its data).  Occupancy-sized
+    kernel width (the kmeans _KMEANS_TASK_ROWS discipline): a small
+    corpus stays one Arrow task instead of fanning defaultParallelism
+    near-empty Python workers, while a large corpus still spreads to
+    full parallelism.  Every column is per-row, so the rows are
+    identical at any width (tests/test_vector_index.py).
+    """
+    emb = t["embeddings"]
 
-    def encode():
-        n = corpus_count(spark, t["embeddings"])
-        width = -(-n // _ENCODE_TASK_ROWS)  # ceil div
-        return _encode(vecs, cent, width)
+    def build():
+        keys, cv = ivf_quantizer(spark, t)
+        C = _shared_codebook(spark, _vectors(t))
 
-    return memo("pq_packed_codes", t["embeddings"], encode, frame=True)
+        def kernel(batches):
+            import pandas as pd
+
+            for pdf in batches:
+                U = _micro(pdf["v"])
+                yield pd.DataFrame(
+                    {
+                        "vec_id": pdf["vec_id"],
+                        "u": list(U),
+                        "bucket": pdf["bucket"],
+                        "cell": assign_cells(U, keys, cv),
+                        "codes": list(encode_codes(U, C)),
+                    }
+                )
+
+        width = -(-corpus_count(spark, emb) // _INDEX_TASK_ROWS)  # ceil div
+        par = max(1, min(spark.sparkContext.defaultParallelism, width))
+        return (
+            emb.select("vec_id", F.expr("CAST(embedding AS ARRAY<DOUBLE>)").alias("v"))
+            .repartition(par, "vec_id")
+            .withColumn("bucket", scaled_bucket_expr_spark("v", lsh_nbuckets(spark, t)))
+            .mapInPandas(
+                kernel,
+                "vec_id long, u array<bigint>, bucket int, cell int, codes array<int>",
+            )
+        )
+
+    return memo("vector_index", emb, build, frame=True)
 
 
 def _train_codebook(
@@ -370,41 +363,55 @@ def _train_codebook(
     )
 
 
-def _shared_codebook(spark, vecs: DataFrame) -> DataFrame:
-    """Train once per (session, corpus plan); serve a MATERIALIZED copy.
+def codebook_array(cols):
+    """The [M x K x DSUB] int64 codebook of the (sub, code, c) columns
+    ``cols``.
 
-    The trained codebook is collected — a bounded M x K = 128-row
-    artifact, fixed-size at ANY corpus scale (PQ codebooks are
-    driver-side artifacts in every production ANN system) — and
-    re-created as a local relation.  Consumers' plans then start from a
-    literal 128-row broadcast instead of embedding the multi-stage
-    training subtree, so encode and search stay shallow one-shuffle
-    plans and training's stage overhead is paid once per session, not
-    once per query.  This makes the PQ builders CONTRACTUALLY EAGER on
-    first use (see plans/registry.py QuerySpec).
+    Completeness contract, enforced: the dense array maps a missing
+    (sub, code) entry to a zero centroid that could win the argmin —
+    semantics the join-based form never had.  Training's
+    keep-old-on-empty merge guarantees all M*K entries today; assert it
+    so a future training change fails loudly instead of silently
+    introducing phantom zero centroids."""
+    import numpy as np
+
+    if len(set(zip(cols["sub"], cols["code"]))) != M_SUB * K_CODES:
+        raise ValueError(
+            f"codebook must carry exactly {M_SUB}x{K_CODES} distinct "
+            f"(sub, code) entries, got {len(cols['sub'])} rows"
+        )
+    C = np.zeros((M_SUB, K_CODES, DSUB), dtype=np.int64)
+    C[np.asarray(cols["sub"]), np.asarray(cols["code"])] = np.asarray(cols["c"])
+    return C
+
+
+def _shared_codebook(spark, vecs: DataFrame):
+    """The trained codebook as a [M x K x DSUB] int64 array, trained
+    once per (session, corpus plan).
+
+    A bounded M x K = 128-row artifact, fixed-size at ANY corpus scale
+    (PQ codebooks are in-process artifacts in every production ANN
+    system): the encode step and the ADC scorer take the array into
+    their kernels, and training's stage overhead is paid once per
+    corpus, not once per query.  This makes the PQ queries
+    CONTRACTUALLY EAGER on first use (see plans/registry.py QuerySpec).
 
     A value entry of the session memo, keyed by the corpus plan and
-    its input files: both PQ queries call this, so a session building
-    encode and search back-to-back trains once, and the entry survives
-    ``release_tracked`` (128 local rows, zero executor memory — the
-    way a production ANN system trains a codebook once per corpus and
-    ships it, never retraining per query batch).
+    its input files, over the disk tier (``artifacts.load_or_train``):
+    a fresh session LOADS the trained codebook instead of retraining
+    it, and the entry survives ``release_tracked`` (zero executor
+    memory — the way a production ANN system trains a codebook once
+    per corpus and ships it, never retraining per query batch).
     """
     from ..artifacts import load_or_train
 
-    # disk layer under the session memo (r12): a fresh session LOADS
-    # the trained codebook instead of retraining it — the
-    # train-once/serve-many production shape.
     return memo(
         "pq_codebook",
         vecs,
-        lambda: load_or_train(
-            spark,
-            "pq_codebook",
-            vecs,
-            "sub int, code int, c array<bigint>",
-            lambda: _train_codebook(vecs),
-            ["sub", "code"],
+        lambda: codebook_array(
+            load_or_train(
+                spark, "pq_codebook", vecs, lambda: _train_codebook(vecs), ["sub", "code"]
+            )
         ),
     )
 
@@ -516,9 +523,11 @@ def _pq_codes(spark, t):
     # code_key folds the M codes positionally (base-K), so it fully
     # determines the code vector — the oracle pins every assignment
     # without hashing arrays; code_sum is the cheap cross-check.
-    # (vec_id, sub, code) rows from the shared packed assignment: the
-    # codes array is built in sub order, so posexplode numbers subs.
-    codes = _shared_packed_codes(spark, t).select("vec_id", F.posexplode("codes").alias("sub", "code"))
+    # (vec_id, sub, code) rows from the vector index: the codes array
+    # is built in sub order, so posexplode numbers subs.
+    codes = vector_index(spark, t).select(
+        "vec_id", F.posexplode("codes").alias("sub", "code")
+    )
     return codes.groupBy("vec_id").agg(
         F.count(F.lit(1)).cast("int").alias("n_sub"),
         F.sum("code").cast("bigint").alias("code_sum"),
@@ -591,18 +600,6 @@ def _adc_topk(scored: DataFrame) -> DataFrame:
     )
 
 
-def _codebook_matrix(cent: DataFrame):
-    """The trained codebook as a [M x K x DSUB] int64 array — bounded
-    (128 x DSUB) at any corpus size, so collecting it is the same
-    artifact discipline as broadcasting it."""
-    import numpy as np
-
-    C = np.zeros((M_SUB, K_CODES, DSUB), dtype=np.int64)
-    for r in cent.collect():
-        C[r["sub"], r["code"]] = list(r["c"])
-    return C
-
-
 def _adc_score(C):
     """The ADC scorer of ``salted_topk_scan`` over the [M x K x DSUB]
     codebook ``C``: each query's [M x K] exact-int64 LUT, then M code
@@ -626,33 +623,31 @@ def _adc_score(C):
     return score
 
 
-def _adc_scored(
-    spark, t, vecs: DataFrame, cent: DataFrame, depth: int
-) -> DataFrame:
+def _adc_search(spark, t, key: str, groups: int, depth: int) -> DataFrame:
     """(query_id, neighbor_id, s): per-query local top-``depth`` ADC
-    scores over HYPERPLANE-BUCKET candidates — the first stage of the
-    one-shot search and the reranked variant (output-identical to the
-    ``_ADC_SCORED_CTES`` oracle block under the callers' merge
-    windows).  Buckets are corpus-scaled (``lsh_nbuckets``, occupancy
-    √N) and scanned by ``salted_topk_scan`` with the ``_adc_score``
-    scorer — the previous candidate-pair equi-join + per-(pair, sub)
-    LUT join + aggregation measured 290 s cold at sf25 on exactly this
-    path (the pre-r9 IVF-PQ disease with buckets in place of cells);
-    the kernel scans the same candidates at C speed with identical
-    BIGINT sums."""
-    nb = lsh_nbuckets(spark, t)
-    bucketed = vecs.select(
-        "vec_id", scaled_bucket_expr_spark("v", nb).alias("key")
+    scores within the vector index's ``key`` column (the hyperplane
+    ``bucket`` or the IVF ``cell``, over ``groups`` keys), scanned by
+    ``salted_topk_scan`` with the ``_adc_score`` scorer: members carry
+    their packed codes, queries their micro-unit ``u``.  The previous
+    candidate-pair equi-join + per-(pair, sub) LUT join + aggregation
+    measured 290-306 s cold at sf25 on these paths; the kernel scans
+    the same candidates at C speed with identical BIGINT sums."""
+    index = vector_index(spark, t)
+    corpus = index.select("vec_id", F.col(key).alias("key"), "codes")
+    qs = index.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+        F.col("vec_id").alias("query_id"), F.col(key).alias("key"), "u"
     )
-    corpus = _shared_packed_codes(spark, t).join(bucketed, "vec_id")
-    qs = vecs.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        scaled_bucket_expr_spark("v", nb).alias("key"),
-        "u",
-    )
-    return salted_topk_scan(
-        t, corpus, qs, nb, depth, _adc_score(_codebook_matrix(cent)), "long"
-    )
+    score = _adc_score(_shared_codebook(spark, _vectors(t)))
+    return salted_topk_scan(t, corpus, qs, groups, depth, score, "long")
+
+
+def _adc_scored(spark, t, depth: int) -> DataFrame:
+    """``_adc_search`` over HYPERPLANE-BUCKET candidates — the first
+    stage of the one-shot search and the reranked variant
+    (output-identical to the ``_ADC_SCORED_CTES`` oracle block under
+    the callers' merge windows).  Buckets are corpus-scaled
+    (``lsh_nbuckets``, occupancy √N)."""
+    return _adc_search(spark, t, "bucket", lsh_nbuckets(spark, t), depth)
 
 
 @_q(
@@ -675,9 +670,7 @@ def _knn_pq(spark, t):
     # int8 paths), and scores are the PQ reconstruction of squared L2
     # distance (query-to-centroid instead of query-to-vector).
     # Ranking compares exact BIGINT LUT sums — no float ordering.
-    vecs = _vectors(t)
-    cent = _shared_codebook(spark, vecs)
-    return _adc_topk(_adc_scored(spark, t, vecs, cent, TOP_K))
+    return _adc_topk(_adc_scored(spark, t, TOP_K))
 
 
 #: rerank shortlist depth: the ADC stage hands its best 4*TOP_K
@@ -734,12 +727,11 @@ def _knn_pq_refine(spark, t):
     PQ_SHORTLIST slim rows back to the corpus vectors — two shuffle
     equi-joins bounded by the shortlist, never by the corpus.
     """
-    vecs = _vectors(t)
-    cent = _shared_codebook(spark, vecs)
-    scored = _adc_scored(spark, t, vecs, cent, PQ_SHORTLIST)
+    scored = _adc_scored(spark, t, PQ_SHORTLIST)
     short = _adc_ranked(scored, PQ_SHORTLIST).select("query_id", "neighbor_id")
-    qu = vecs.select(F.col("vec_id").alias("query_id"), F.col("u").alias("qu"))
-    nu = vecs.select(
+    index = vector_index(spark, t)
+    qu = index.select(F.col("vec_id").alias("query_id"), F.col("u").alias("qu"))
+    nu = index.select(
         F.col("vec_id").alias("neighbor_id"), F.col("u").alias("nu")
     )
     exact = (
@@ -819,14 +811,15 @@ def _knn_ivfpq(spark, t):
     Jégou et al. — public architecture), composed from the two halves
     this module and ``similarity.py`` already certify separately:
     the LEARNED coarse quantizer assigns every vector to a centroid
-    cell (``ivf_cells`` — same artifact ``knn_ivf_kmeans`` searches),
-    and within the query's cell candidates are ranked by the PQ
-    asymmetric-distance LUT over the shared trained codebook — the
-    compressed-domain scan that makes the residency math work at
+    cell (the vector index's ``cell`` — the one ``knn_ivf_kmeans``
+    searches), and within the query's cell candidates are ranked by
+    the PQ asymmetric-distance LUT over the shared trained codebook —
+    the compressed-domain scan that makes the residency math work at
     100 TB: cells prune the corpus, 32-bit codes prune the bytes.
 
     Scale shape — the Faiss per-list scan, not a row-explosion join:
-    packed 32-bit codes cogroup with the queries of their (cell,
+    the vector index carries each vector's cell and packed 32-bit codes
+    from one pass, the codes cogroup with the queries of their (cell,
     salt) group in ``salted_topk_scan``, and the ``_adc_score`` scorer
     builds each query's [M x K] integer LUT and gathers M codes per
     candidate — the same arithmetic the previous form paid a
@@ -843,25 +836,4 @@ def _knn_ivfpq(spark, t):
     in-kernel via threshold + lexsort and in the merge window;
     ``adc_dist2`` is one IEEE division for display.
     """
-    from .similarity import _ivf_ncells, ivf_cells
-
-    vecs = _vectors(t)
-    score = _adc_score(_codebook_matrix(_shared_codebook(spark, vecs)))
-    cells = ivf_cells(spark, t)
-    corpus = _shared_packed_codes(spark, t).join(
-        cells.withColumnRenamed("cell", "key"), "vec_id"
-    )
-    # rename the query side's join product (both sides read the SAME
-    # persisted ``cells`` frame — an unqualified reference would be an
-    # ambiguous self-join).
-    q_cells = cells.select(
-        F.col("vec_id").alias("query_id"), F.col("cell").alias("key")
-    )
-    qs = (
-        vecs.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .select(F.col("vec_id").alias("query_id"), "u")
-        .join(q_cells, "query_id")
-    )
-    return _adc_topk(
-        salted_topk_scan(t, corpus, qs, _ivf_ncells(spark, t), TOP_K, score, "long")
-    )
+    return _adc_topk(_adc_search(spark, t, "cell", _ivf_ncells(spark, t), TOP_K))

@@ -143,7 +143,7 @@ def _semdedup(spark, t):
     # point.  Served as a materialized session artifact (the
     # PQ-codebook discipline), and shared with the IVF search paths so
     # cluster geometry cannot drift between search and dedup.
-    cvec = ivf_quantizer(spark, t)
+    quantizer = ivf_quantizer(spark, t)
     # Same planted near-dup corpus as dedup_embedding_cosine: every
     # 20th vector re-enters shifted by 1e6, so the gate has real
     # duplicates to find and the two dedup paths stay comparable.
@@ -156,16 +156,16 @@ def _semdedup(spark, t):
         "vec_id", F.expr("CAST(embedding AS ARRAY<DOUBLE>)").alias("v")
     )
     # Stage 2 — assignment: the SHARED nearest-centroid kernel
-    # (similarity.assign_to_centroids — broadcast centroid table,
-    # exact-integer matmul argmax, lowest-cell tie-break), so this
-    # gate and the IVF search paths can never drift apart
-    # semantically.  Persisted WITH the int32 micro-unit payload
+    # (similarity.assign_to_centroids — the centroid matrix rides
+    # the kernel closure, exact-integer matmul argmax, lowest-cell
+    # tie-break), so this gate and the IVF search paths can never
+    # drift apart semantically.  Persisted WITH the int32 micro-unit payload
     # (quantized once here, before the persist barrier, so the
     # interpreted HOF never re-evaluates per replicated row — the
     # pipeline_prep lesson): the assigned corpus feeds the occupancy
     # count and both cogroup sides.
     vb = persist_tracked(
-        vecs.join(assign_to_centroids(vecs, cvec), "vec_id").select(
+        vecs.join(assign_to_centroids(vecs, quantizer), "vec_id").select(
             "vec_id", micro_unit_col("v").alias("uv"), "cell"
         )
     )

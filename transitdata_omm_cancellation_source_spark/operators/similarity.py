@@ -41,7 +41,9 @@ from ..functions.hyperplane import (  # registry-free shared primitives
     DOT_D as _DOT_D,
     DOT_S as _DOT_S,
     IDOT_D as _IDOT_D,
+    IDOT_S as _IDOT_S,
     MICRO_D as _MICRO_D,
+    MICRO_S as _MICRO_S,
     broadcast_if_small,
     exact_idot_matmul,
     full_bucket_expr_duck,
@@ -105,14 +107,37 @@ def _cos_s() -> F.Column:
     return F.expr(f"{_DOT_S.format(a='q.v', b='c.v')} / sqrt(q.n2 * c.n2)")
 
 
-def _topk(scored: DataFrame) -> DataFrame:
-    """Per-query top-k with a deterministic tie-break (id asc)."""
+def _int_vectors(t) -> DataFrame:
+    """``_vectors`` plus the one-shot micro-unit quantization ``uv``
+    that ``_cos_int_s`` scores on."""
+    return _vectors(t).withColumn("uv", F.expr(_MICRO_S.format(v="v")))
+
+
+def _cos_int_s() -> F.Column:
+    """The Spark spelling of ``_COS_INT_D`` between the aliased ``q``
+    and ``c`` sides of a scored join."""
+    return F.expr(
+        f"CAST({_IDOT_S.format(a='q.uv', b='c.uv')} AS DOUBLE)"
+        f" / sqrt(CAST({_IDOT_S.format(a='q.uv', b='q.uv')} AS DOUBLE)"
+        f" * CAST({_IDOT_S.format(a='c.uv', b='c.uv')} AS DOUBLE))"
+    )
+
+
+def _cos_ranked(scored: DataFrame) -> DataFrame:
+    """Each query's best TOP_K rows by (cos DESC, neighbor_id ASC),
+    numbered ``rank``."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc()
     )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= TOP_K
+    )
+
+
+def _topk(scored: DataFrame) -> DataFrame:
+    """Per-query top-k with a deterministic tie-break (id asc)."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        _cos_ranked(scored)
         .select(
             "query_id",
             "neighbor_id",
@@ -189,19 +214,12 @@ def _knn_bruteforce(spark, t):
     # IEEE divide/sqrt) so the domination bound "approximate <= exact"
     # the recall tests assert compares IDENTICAL arithmetic — a raw-
     # double baseline would sit +-1e-6 off the quantized variants.
-    from ..functions.hyperplane import IDOT_S, MICRO_S
-
-    vecs = _vectors(t).withColumn("uv", F.expr(MICRO_S.format(v="v")))
+    vecs = _int_vectors(t)
     q = vecs.filter(
         (F.col("vec_id") % QUERY_MOD == 0) & (F.col("vec_id") < QUERY_CAP)
     )
     q_side = broadcast_if_small(
         q.alias("q"), QUERY_CAP // QUERY_MOD, row_bytes=8 * DIM + 100
-    )
-    cos_int = F.expr(
-        f"CAST({IDOT_S.format(a='q.uv', b='c.uv')} AS DOUBLE)"
-        f" / sqrt(CAST({IDOT_S.format(a='q.uv', b='q.uv')} AS DOUBLE)"
-        f" * CAST({IDOT_S.format(a='c.uv', b='c.uv')} AS DOUBLE))"
     )
     scored = (
         q_side
@@ -209,7 +227,7 @@ def _knn_bruteforce(spark, t):
         .select(
             F.col("q.vec_id").alias("query_id"),
             F.col("c.vec_id").alias("neighbor_id"),
-            cos_int.alias("cos"),
+            _cos_int_s().alias("cos"),
         )
     )
     return _topk(scored)
@@ -320,25 +338,38 @@ def _micro(vs):
     ).astype(np.int64)
 
 
-def _neg_cos(members, queries):
-    """``-cos`` under the ``_COS_INT_D`` integer contract: micro-unit
-    int64 dots (exact matmul), then double / sqrt(double * double) —
-    the correctly-rounded IEEE ops of the oracle over the same
-    integers."""
+def _ints(us):
+    """A column of micro-unit integer vectors as an int64 matrix."""
     import numpy as np
 
-    Uc, Uq = _micro(members["v"]), _micro(queries["qv"])
+    return np.stack(us.to_numpy()).astype(np.int64)
+
+
+def _neg_cos(Uc, Uq):
+    """``-cos`` under the ``_COS_INT_D`` integer contract between the
+    int64 micro-unit members ``Uc`` and queries ``Uq``: exact matmul
+    dots, then double / sqrt(double * double) — the correctly-rounded
+    IEEE ops of the oracle over the same integers."""
+    import numpy as np
+
     nc2 = (Uc * Uc).sum(axis=1).astype(np.float64)
     nq2 = (Uq * Uq).sum(axis=1).astype(np.float64)
     return -(exact_idot_matmul(Uq, Uc) / np.sqrt(nq2[:, None] * nc2[None, :]))
 
 
-def _cos_scan_topk(t, corpus: DataFrame, qs: DataFrame, groups: int) -> DataFrame:
+def _cos_scan_topk(
+    t, corpus: DataFrame, qs: DataFrame, groups: int, to_int=_micro
+) -> DataFrame:
     """The cosine searches' tail: ``salted_topk_scan`` with the
     ``_neg_cos`` scorer, its score negated back to ``cos`` (exact),
     then the ``_topk`` merge window.  ``corpus``: (vec_id, key, v);
-    ``qs``: (query_id, key, qv)."""
-    scored = salted_topk_scan(t, corpus, qs, groups, TOP_K, _neg_cos, "double")
+    ``qs``: (query_id, key, qv); ``to_int`` turns a ``v``/``qv``
+    column into micro-units (``_ints`` where it already holds them)."""
+
+    def score(members, queries):
+        return _neg_cos(to_int(members["v"]), to_int(queries["qv"]))
+
+    scored = salted_topk_scan(t, corpus, qs, groups, TOP_K, score, "double")
     return _topk(
         scored.select("query_id", "neighbor_id", (-F.col("s")).alias("cos"))
     )
@@ -512,15 +543,8 @@ def _knn_ivf(spark, t):
     # the kernelized ones in the recall-domination tests.  The scale
     # ceiling here is label cardinality itself (occupancy N/#labels) —
     # documented as the reason the LEARNED quantizer variant exists.
-    from ..functions.hyperplane import IDOT_S, MICRO_S
-
-    vecs = _vectors(t).withColumn("uv", F.expr(MICRO_S.format(v="v")))
+    vecs = _int_vectors(t)
     q = vecs.filter(F.col("vec_id") % QUERY_MOD == 0)
-    cos_int = F.expr(
-        f"CAST({IDOT_S.format(a='q.uv', b='c.uv')} AS DOUBLE)"
-        f" / sqrt(CAST({IDOT_S.format(a='q.uv', b='q.uv')} AS DOUBLE)"
-        f" * CAST({IDOT_S.format(a='c.uv', b='c.uv')} AS DOUBLE))"
-    )
     scored = (
         q.alias("q")
         .join(
@@ -531,7 +555,7 @@ def _knn_ivf(spark, t):
         .select(
             F.col("q.vec_id").alias("query_id"),
             F.col("c.vec_id").alias("neighbor_id"),
-            cos_int.alias("cos"),
+            _cos_int_s().alias("cos"),
         )
     )
     return _topk(scored)
@@ -611,9 +635,8 @@ def ivf_assign_cte() -> str:
 
 
 def centroid_vectors(cent_rows: DataFrame, key: str) -> DataFrame:
-    """(<key>, cv, cn2): long-form (key, dim, centroid) rows folded to
-    dim-ordered centroid vectors with their squared norms — the
-    broadcast side of every nearest-centroid assignment."""
+    """(c_key, cv): long-form (key, dim, centroid) rows folded to
+    dim-ordered centroid vectors."""
     return (
         cent_rows.groupBy(key)
         .agg(F.array_sort(F.collect_list(F.struct("dim", "centroid"))).alias("dc"))
@@ -621,7 +644,6 @@ def centroid_vectors(cent_rows: DataFrame, key: str) -> DataFrame:
             F.col(key).alias("c_key"),
             F.expr("transform(dc, x -> x.centroid)").alias("cv"),
         )
-        .withColumn("cn2", F.expr(_DOT_S.format(a="cv", b="cv")))
     )
 
 
@@ -631,16 +653,16 @@ def centroid_vectors(cent_rows: DataFrame, key: str) -> DataFrame:
 _ASSIGN_CHUNK = 512
 
 
-def assign_to_centroids(
-    vecs: DataFrame, cvec: DataFrame, prepartitioned: bool = False
-) -> DataFrame:
-    """(vec_id, cell): nearest-centroid assignment, lowest key as the
-    deterministic tie-break — THE assignment kernel, shared by
-    ``ivf_cells``, SemDeDup and the embedding-cosine dedup blocking so
-    the paths can never drift apart semantically.
+def assign_cells(U, keys, cv):
+    """Nearest-centroid cell of each row of the micro-unit matrix ``U``
+    under the quantizer (``keys`` ascending, centroid matrix ``cv``),
+    lowest key as the deterministic tie-break — THE per-batch
+    assignment step, run by ``assign_to_centroids`` and by the vector
+    index pass (``pq.vector_index``), so the paths can never drift
+    apart semantically.
 
-    EXACT-INTEGER SCORING AT MATMUL SPEED.  Vectors and (already
-    6-dp-rounded) centroids are quantized once to micro-units; the
+    EXACT-INTEGER SCORING AT MATMUL SPEED.  The (already 6-dp-rounded)
+    centroids are quantized to micro-units like the vectors; the
     assignment score is ``idot(u_v, u_c) / sqrt(idot(u_c, u_c))`` —
     the per-vector norm is a positive constant that cannot change the
     argmax, so it is omitted.  The integer dots are computed as a
@@ -653,102 +675,92 @@ def assign_to_centroids(
     integers, identical on both engines.  The per-row HOF-expression
     form this replaces evaluated one interpreted 64-dim fold per
     (vector, cell) — measured 628 s for the sf25 assignment
-    (500k x 512 cells) vs seconds for the matmul kernel.
-
-    Scale shape: the centroid matrix is a bounded (≤2^IVF_MAX_BITS
-    x DIM) task-local broadcast; the kernel is Arrow-batched
-    mapInPandas, embarrassingly parallel over the corpus scan, scored
-    in _ASSIGN_CHUNK-column chunks with a strict-> running best so
-    ties keep the LOWEST cell (matching the oracle's ORDER BY score
-    DESC, cell ASC).  The corpus is hash-repartitioned to full
-    parallelism first — a small parquet's few scan partitions would
-    serialize the kernel (same remedy as the PQ encode).
+    (500k x 512 cells) vs seconds for the matmul kernel.  Scored in
+    _ASSIGN_CHUNK-column chunks with a strict-> running best so ties
+    keep the LOWEST cell (matching the oracle's ORDER BY score DESC,
+    cell ASC).
     """
-    spark = vecs.sparkSession
-    cent_rows = sorted(
-        (r["c_key"], list(r["cv"])) for r in cvec.select("c_key", "cv").collect()
-    )
-    bc = spark.sparkContext.broadcast(cent_rows)
+    import numpy as np
+
+    U = U.astype(np.float64)
+    C = np.floor(cv * 1e6 + 0.5)
+    cn = np.sqrt((C * C).sum(axis=1))  # exact ints -> exact sqrt input
+    # A zero-norm centroid scores 0/0 for EVERY vector: NaN here, NULL
+    # in the DuckDB oracle (division by zero yields NULL — probed
+    # directly on the gate's duckdb, r13), and the oracle's ORDER BY
+    # score DESC puts NULLs LAST — so zero-norm centroids can never win
+    # while any real score exists.  numpy is the side that would
+    # diverge (np.argmax treats NaN as the max, poisoning every
+    # _ASSIGN_CHUNK containing a zero-norm column), so EXCLUDE
+    # zero-norm centroids from the scan; when ALL centroids are
+    # zero-norm every oracle score is NULL and rn = 1 falls to the
+    # lowest cell (keys are sorted ascending).  Pinned by
+    # tests/test_quantize_kmeans.py against the literal oracle ordering.
+    nz = np.flatnonzero(cn != 0.0)
+    if len(nz) == 0:
+        return np.full(len(U), keys[0], dtype=np.int32)
+    cmax = np.abs(C).max(initial=1.0)
+    keys, C, cn = keys[nz], C[nz], cn[nz]
+    # Exactness contract, enforced: every u·c product and every DIM-term
+    # partial sum must stay below 2^53 for the float64 matmul to equal
+    # the oracle's BIGINT fold.  Fail loudly on a corpus that breaks the
+    # documented magnitude bound.
+    if np.abs(U).max(initial=0.0) * cmax * DIM >= 2.0**53:
+        raise ValueError(
+            "assign_to_centroids: |u|*|c|*DIM exceeds the 2^53 "
+            "exact-integer float64 headroom; assignment would "
+            "diverge from the BIGINT oracle"
+        )
+    best = np.full(len(U), -np.inf)
+    best_ix = np.zeros(len(U), dtype=np.int64)
+    for lo in range(0, len(keys), _ASSIGN_CHUNK):
+        Cc = C[lo : lo + _ASSIGN_CHUNK]
+        score = (U @ Cc.T) / cn[lo : lo + _ASSIGN_CHUNK][None, :]
+        ix = np.argmax(score, axis=1)  # first max = lowest cell
+        sc = score[np.arange(len(U)), ix]
+        better = sc > best  # strict: earlier chunk wins ties
+        best[better] = sc[better]
+        best_ix[better] = ix[better] + lo
+    return keys[best_ix].astype(np.int32)
+
+
+def assign_to_centroids(
+    vecs: DataFrame, quantizer, prepartitioned: bool = False
+) -> DataFrame:
+    """(vec_id, cell): ``assign_cells`` of every (vec_id, v double[])
+    row of ``vecs`` under ``quantizer`` = (sorted keys, centroid
+    matrix), the form ``ivf_quantizer`` serves — shared by SemDeDup,
+    the embedding-cosine dedup blocking and the Lloyd rounds.
+
+    Scale shape: the centroid matrix is bounded (≤2^IVF_MAX_BITS x
+    DIM) and rides the kernel closure; the kernel is Arrow-batched
+    mapInPandas, embarrassingly parallel over the corpus.
+    """
+    keys, cv = quantizer
 
     def kernel(batches):
-        import numpy as np
         import pandas as pd
 
-        rows = bc.value
-        keys = np.array([k for k, _ in rows], dtype=np.int64)
-        C = np.floor(
-            np.array([cv for _, cv in rows], dtype=np.float64) * 1e6 + 0.5
-        )
-        cn = np.sqrt((C * C).sum(axis=1))  # exact ints -> exact sqrt input
-        cmax = np.abs(C).max(initial=1.0)
-        # A zero-norm centroid scores 0/0 for EVERY vector: NaN here,
-        # NULL in the DuckDB oracle (division by zero yields NULL —
-        # probed directly on the gate's duckdb, r13), and the oracle's
-        # ORDER BY score DESC puts NULLs LAST — so zero-norm centroids
-        # can never win while any real score exists.  numpy is the
-        # side that would diverge (np.argmax treats NaN as the max,
-        # poisoning every _ASSIGN_CHUNK containing a zero-norm
-        # column), so EXCLUDE zero-norm centroids from the scan; when
-        # ALL centroids are zero-norm every oracle score is NULL and
-        # rn = 1 falls to the lowest cell (keys are sorted ascending).
-        # Pinned by tests/test_quantize_kmeans.py against the literal
-        # oracle ordering.
-        nz = np.flatnonzero(cn != 0.0)
-        all_zero_cell = np.int32(keys[0]) if len(nz) == 0 else None
-        keys, C, cn = keys[nz], C[nz], cn[nz]
         for pdf in batches:
-            if all_zero_cell is not None:
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "cell": np.full(
-                            len(pdf), all_zero_cell, dtype=np.int32
-                        ),
-                    }
-                )
-                continue
-            U = np.floor(
-                np.stack(pdf["v"].to_numpy()).astype(np.float64) * 1e6 + 0.5
-            )
-            # Exactness contract, enforced: every u·c product and every
-            # DIM-term partial sum must stay below 2^53 for the float64
-            # matmul to equal the oracle's BIGINT fold.  Fail loudly on
-            # a corpus that breaks the documented magnitude bound.
-            if np.abs(U).max(initial=0.0) * cmax * DIM >= 2.0**53:
-                raise ValueError(
-                    "assign_to_centroids: |u|*|c|*DIM exceeds the 2^53 "
-                    "exact-integer float64 headroom; assignment would "
-                    "diverge from the BIGINT oracle"
-                )
-            best = np.full(len(U), -np.inf)
-            best_ix = np.zeros(len(U), dtype=np.int64)
-            for lo in range(0, len(keys), _ASSIGN_CHUNK):
-                Cc = C[lo : lo + _ASSIGN_CHUNK]
-                score = (U @ Cc.T) / cn[lo : lo + _ASSIGN_CHUNK][None, :]
-                ix = np.argmax(score, axis=1)  # first max = lowest cell
-                sc = score[np.arange(len(U)), ix]
-                better = sc > best  # strict: earlier chunk wins ties
-                best[better] = sc[better]
-                best_ix[better] = ix[better] + lo
             yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell": keys[best_ix].astype("int32")}
+                {"vec_id": pdf["vec_id"], "cell": assign_cells(_micro(pdf["v"]), keys, cv)}
             )
 
     # The corpus is hash-repartitioned to full parallelism first — a
-    # small parquet's few scan partitions would serialize the kernel
-    # (same remedy as the PQ encode).  An ITERATIVE caller that feeds
-    # an already-repartitioned (ideally persisted) frame passes
-    # ``prepartitioned=True`` to skip re-exchanging the corpus every
-    # round — the rows, not their placement, determine the output.
+    # small parquet's few scan partitions would serialize the kernel.
+    # An ITERATIVE caller that feeds an already-repartitioned (ideally
+    # persisted) frame passes ``prepartitioned=True`` to skip
+    # re-exchanging the corpus every round — the rows, not their
+    # placement, determine the output.
     src = vecs.select("vec_id", "v")
     if not prepartitioned:
-        src = src.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+        src = src.repartition(vecs.sparkSession.sparkContext.defaultParallelism, "vec_id")
     return src.mapInPandas(kernel, "vec_id long, cell int")
 
 
-def ivf_quantizer(spark, t) -> DataFrame:
-    """``cvec`` (c_key, cv, cn2): the TRAINED corpus-scaled coarse
-    quantizer, served as a materialized per-session artifact.
+def ivf_quantizer(spark, t):
+    """(keys, cv): the TRAINED corpus-scaled coarse quantizer as its
+    ascending cell keys and their [#cells x DIM] centroid matrix.
 
     #cells = sqrt_pow2(N) (the Faiss √N guideline on a power-of-two
     grid): a fixed cell count left an N²/#cells candidate term — the
@@ -760,14 +772,13 @@ def ivf_quantizer(spark, t) -> DataFrame:
     ``knn_ivf_kmeans``, the IVF-PQ composition, and SemDeDup — so the
     cluster geometry can never drift between search and dedup.  The
     table is ≤ 2^IVF_MAX_BITS rows (bounded at any corpus size), so it
-    follows the PQ-codebook artifact discipline: first use per
-    (session, corpus plan) trains and collects; later uses replay the
-    local relation (CONTRACTUALLY EAGER, see plans/registry.py
-    QuerySpec).  Since r12 the artifact also persists to disk under
+    follows the PQ-codebook artifact discipline: a value entry of the
+    session memo holds the two arrays, so only the first use per
+    (session, corpus plan) reads or trains it (CONTRACTUALLY EAGER, see
+    plans/registry.py QuerySpec).  The artifact persists to disk under
     the warehouse dir (``artifacts.load_or_train``): a fresh session
     LOADS instead of retraining — the production train-once/serve-many
-    shape, and the fix for the r11 decade table charging one session's
-    first kernel-scan query the whole training bill.
+    shape.
     """
     from ..artifacts import load_or_train
 
@@ -782,28 +793,11 @@ def ivf_quantizer(spark, t) -> DataFrame:
         )
         return centroid_vectors(_fold_centroids(seeded, key="scell"), "scell")
 
-    return memo(
-        "ivf_quantizer",
-        emb,
-        lambda: load_or_train(
-            spark,
-            "ivf_quantizer",
-            emb,
-            "c_key int, cv array<double>, cn2 double",
-            train,
-            ["c_key"],
-        ),
-    )
+    def serve():
+        cols = load_or_train(spark, "ivf_quantizer", emb, train, ["c_key"])
+        return cols["c_key"], cols["cv"]
 
-
-def ivf_cells(spark, t) -> DataFrame:
-    """(vec_id, cell): nearest-centroid assignment under the shared
-    corpus-scaled quantizer — shared by ``knn_ivf_kmeans`` and the
-    IVF-PQ composition.  Persisted: both sides of a cell-confined
-    search join read it."""
-    return persist_tracked(
-        assign_to_centroids(_vectors(t), ivf_quantizer(spark, t))
-    )
+    return memo("ivf_quantizer", emb, serve)
 
 
 def _ivf_kmeans_oracle() -> str:
@@ -844,15 +838,18 @@ def _knn_ivf_kmeans(spark, t):
     # paid an interpreted 64-dim fold per pair plus a global ranking
     # window.  A production IVF iterates Lloyd steps; one
     # deterministic step keeps the oracle exact while exercising the
-    # identical plan.
-    cand = _vectors(t).join(ivf_cells(spark, t), "vec_id")
-    corpus = cand.select("vec_id", F.col("cell").alias("key"), "v")
-    qs = cand.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+    # identical plan.  Cells and micro-units come from the vector
+    # index (``pq.vector_index``), the one per-vector pass.
+    from .pq import vector_index
+
+    index = vector_index(spark, t)
+    corpus = index.select("vec_id", F.col("cell").alias("key"), F.col("u").alias("v"))
+    qs = index.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("cell").alias("key"),
-        F.col("v").alias("qv"),
+        F.col("u").alias("qv"),
     )
-    return _cos_scan_topk(t, corpus, qs, _ivf_ncells(spark, t))
+    return _cos_scan_topk(t, corpus, qs, _ivf_ncells(spark, t), to_int=_ints)
 
 
 def _multiprobe_oracle() -> str:
@@ -1012,8 +1009,8 @@ def _kmeans_lloyd(spark, t):
     #   refold: the two-phase chunked deterministic centroid fold,
     #           keyed by the new cell — task memory bounded by
     #           CENTROID_CHUNK regardless of how hot a cell gets.
-    # Each round materializes the BOUNDED centroid table on the driver
-    # (assign_to_centroids broadcasts it task-local), so the loop runs
+    # Each round collects the BOUNDED centroid table into this process
+    # (assign_to_centroids takes it into its kernel), so the loop runs
     # one slim job per round instead of stacking an N x #cells
     # interpreted-expression mega-DAG.  Centroids are rounded to 6
     # decimals each round (part of the contract, see _lloyd_oracle),
@@ -1038,6 +1035,8 @@ def _kmeans_lloyd(spark, t):
     # construction (per-vector argmax; vec_id-keyed chunked fold —
     # tests/test_partitioning_invariance.py), so this is purely a
     # physical choice.
+    import numpy as np
+
     n = corpus_count(spark, t["embeddings"])
     par = max(
         1,
@@ -1049,15 +1048,14 @@ def _kmeans_lloyd(spark, t):
     emb = t["embeddings"].select("vec_id", "embedding")
     cent = _label_centroid(spark, t).withColumnRenamed("label", "cell")
     for _ in range(LLOYD_ROUNDS):
-        cvec = (
-            cent.groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "centroid"))).alias("dc"))
-            .select(
-                F.col("cell").alias("c_key"),
-                F.expr("transform(dc, x -> x.centroid)").alias("cv"),
-            )
+        rows = sorted(
+            (r["c_key"], r["cv"]) for r in centroid_vectors(cent, "cell").collect()
         )
-        assign = assign_to_centroids(vp, cvec, prepartitioned=True)
+        quantizer = (
+            np.array([k for k, _ in rows]),
+            np.array([cv for _, cv in rows], dtype=np.float64),
+        )
+        assign = assign_to_centroids(vp, quantizer, prepartitioned=True)
         cent = _fold_centroids(emb.join(assign, "vec_id"), key="cell")
     return cent
 
@@ -1124,14 +1122,7 @@ def _knn_label_vote(spark, t):
             _cos_s().alias("cos"),
         )
     )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    topk = (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "query_label", "neighbor_label")
-    )
+    topk = _cos_ranked(scored).select("query_id", "query_label", "neighbor_label")
     votes = topk.groupBy("query_id", "query_label", "neighbor_label").agg(
         F.count(F.lit(1)).alias("votes")
     )
