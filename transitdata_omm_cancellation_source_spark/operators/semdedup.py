@@ -45,8 +45,9 @@ exemplar survives, never HOW MANY.
 
 Scale shape (100 TB): centroids are a fixed-size broadcast (k x DIM
 rows, never corpus-proportional); assignment is the shared Arrow
-matmul kernel over the corpus scan; the pairwise stage is the
-bucket-PAIR (triangle) run scan (``operators/pairscan.py`` — built
+matmul kernel over the corpus scan, read from the embedding-dedup
+family's disk-backed frame (``dedup_fuzzy._cosine_vb``); the pairwise
+stage is the bucket-PAIR (triangle) run scan (``operators/pairscan.py`` — built
 after the r11 sf125 measurement showed the salted single-scan shape
 grinding one 90-minute task on a >100x-mean hot cell): per cell the
 ids split into an occupancy-sized number of buckets and the (lo <=
@@ -69,15 +70,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..caching import persist_tracked
 from ..plans.registry import registered_query as _q
 from .dedup_fuzzy import _COSINE_TAU as SEMDEDUP_TAU  # one shared tau
-from .pairscan import micro_unit_col, pair_scan
-from .similarity import (
-    assign_to_centroids,
-    ivf_assign_cte,
-    ivf_quantizer,
-)
+from .dedup_fuzzy import _cosine_vb
+from .pairscan import pair_scan
+from .similarity import ivf_assign_cte
 
 
 def _semdedup_oracle() -> str:
@@ -133,42 +130,16 @@ def _semdedup_oracle() -> str:
     _semdedup_oracle(),
 )
 def _semdedup(spark, t):
-    # Stage 1 — learned clusters: the SHARED corpus-scaled coarse
-    # quantizer (#cells = sqrt_pow2(N), trained on the raw corpus; the
-    # planted duplicates below are copies of raw vectors, so training
-    # on the raw side only cannot move any assignment they'd land in).
-    # SemDeDup's own prescription is cluster count growing with the
-    # corpus — a fixed k left the within-cluster pairwise stage
-    # quadratic; #cells ∝ √N makes it Θ(N^1.5), the IVF balance
-    # point.  Served as a materialized session artifact (the
-    # PQ-codebook discipline), and shared with the IVF search paths so
-    # cluster geometry cannot drift between search and dedup.
-    quantizer = ivf_quantizer(spark, t)
-    # Same planted near-dup corpus as dedup_embedding_cosine: every
-    # 20th vector re-enters shifted by 1e6, so the gate has real
-    # duplicates to find and the two dedup paths stay comparable.
-    corpus = t["embeddings"].select("vec_id", "embedding").unionAll(
-        t["embeddings"]
-        .filter(F.col("vec_id") % 20 == 0)
-        .select((F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding")
-    )
-    vecs = corpus.select(
-        "vec_id", F.expr("CAST(embedding AS ARRAY<DOUBLE>)").alias("v")
-    )
-    # Stage 2 — assignment: the SHARED nearest-centroid kernel
-    # (similarity.assign_to_centroids — the centroid matrix rides
-    # the kernel closure, exact-integer matmul argmax, lowest-cell
-    # tie-break), so this gate and the IVF search paths can never
-    # drift apart semantically.  Persisted WITH the int32 micro-unit payload
-    # (quantized once here, before the persist barrier, so the
-    # interpreted HOF never re-evaluates per replicated row — the
-    # pipeline_prep lesson): the assigned corpus feeds the occupancy
-    # count and both cogroup sides.
-    vb = persist_tracked(
-        vecs.join(assign_to_centroids(vecs, quantizer), "vec_id").select(
-            "vec_id", micro_unit_col("v").alias("uv"), "cell"
-        )
-    )
+    # Stages 1-2 — learned clusters and assignment: the embedding-dedup
+    # family's disk-backed frame (``dedup_fuzzy._cosine_vb``), i.e. the
+    # planted near-dup corpus of dedup_embedding_cosine (every 20th
+    # vector re-enters shifted by 1e6) assigned under the SHARED
+    # corpus-scaled quantizer (#cells = sqrt_pow2(N): SemDeDup's
+    # cluster count growing with the corpus keeps the within-cluster
+    # stage at Θ(N^1.5), the IVF balance point), with the int32
+    # micro-unit payload the scan reads.  One frame serves search and
+    # both dedup paths, so cluster geometry cannot drift between them.
+    vb = _cosine_vb(spark, t).select("vec_id", "uv", "cell")
     # Stage 3 — per-cluster bucket-PAIR (triangle) run scan in counts
     # mode (operators/pairscan.py — the module docstring carries the
     # measured negatives that force this exact shape).  Per cell the

@@ -19,13 +19,22 @@ cluster:
 - ``spark.sql.legacy.parquet.nanosAsLong`` because the events testdata
   carries parquet TIMESTAMP(NANOS), which Spark's vectorized reader
   otherwise rejects; the catalog converts ns->us JVM-side.
+- Python workers get their env from the session: the system Arrow
+  pool, high glibc malloc thresholds and no numpy hugepage madvise
+  (measured reasons at each setting below), and the daemon
+  ``pyworker``, which stops each task from re-reading pyspark.zip
+  and the Spark jar (static conf: a session built elsewhere keeps the
+  stock ``pyspark.daemon``, with the same results, only slower).
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+from . import pyworker
 
 # Runtime-settable confs every entry point (re-)applies, so the engine
 # behaves identically under a driver-owned SparkSession.
@@ -125,6 +134,13 @@ def get_spark(
         .config(
             "spark.executorEnv.NUMPY_MADVISE_HUGEPAGE",
             os.environ["NUMPY_MADVISE_HUGEPAGE"],
+        )
+        .config("spark.python.daemon.module", pyworker.__name__)
+        # the package's parent on the workers' path, so the daemon
+        # imports whatever the driver's working directory is
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            str(Path(pyworker.__file__).resolve().parent.parent),
         )
     )
     for key, value in RUNTIME_CONFS.items():
