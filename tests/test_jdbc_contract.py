@@ -137,11 +137,14 @@ def test_jdbc_backed_omm_view_is_read_on_every_call(spark, derby):
     assert second == full
 
 
-def test_jdbc_backed_poll_cycle_publishes_and_snapshots_one_read(spark, derby, tmp_path):
-    """Over a JDBC source there is no persisted candidate frame, so a
-    cycle with a sink persists its records: a row inserted between the
-    sink append and the snapshot write reaches neither, and the snapshot
-    holds exactly the rows just published."""
+def test_jdbc_backed_poll_cycle_publishes_and_snapshots_one_read(
+    spark, derby, tmp_path, monkeypatch
+):
+    """Over a JDBC source there is no persisted candidate frame, and the
+    cycle reads the source once: a row inserted after the cycle's one
+    write, before that write's file is published, reaches neither the
+    sink nor the snapshot, and the snapshot holds exactly the rows just
+    published."""
     from transitdata_omm_cancellation_source_spark.catalog import load_tables
     from transitdata_omm_cancellation_source_spark.plans.cancellation import (
         QueryParams,
@@ -150,6 +153,7 @@ def test_jdbc_backed_poll_cycle_publishes_and_snapshots_one_read(spark, derby, t
     from transitdata_omm_cancellation_source_spark.plans.omm_model import (
         register_omm_views,
     )
+    from transitdata_omm_cancellation_source_spark.streaming import poller
     from transitdata_omm_cancellation_source_spark.streaming.poller import (
         SnapshotStore,
         run_poll_cycle,
@@ -165,15 +169,16 @@ def test_jdbc_backed_poll_cycle_publishes_and_snapshots_one_read(spark, derby, t
     ad.filter(F.col("deviation_case_id") != held).write.format("jdbc").options(
         **opts
     ).option("createTableColumnTypes", "status VARCHAR(16), type VARCHAR(32)").save()
+    publish = poller._publish
 
-    class InsertBeforeReplace(SnapshotStore):
-        def replace(self, df):
-            ad.filter(F.col("deviation_case_id") == held).write.format("jdbc").options(
-                **opts
-            ).mode("append").save()
-            super().replace(df)
+    def insert_then_publish(src, dst):
+        ad.filter(F.col("deviation_case_id") == held).write.format("jdbc").options(
+            **opts
+        ).mode("append").save()
+        publish(src, dst)
 
-    store = InsertBeforeReplace(str(tmp_path / "snapshot"))
+    monkeypatch.setattr(poller, "_publish", insert_then_publish)
+    store = SnapshotStore(str(tmp_path / "snapshot"))
     sink = str(tmp_path / "sink")
     table_read(
         spark, url, "AD_POLL", driver=_DERBY, preferTimestampNTZ="true"
@@ -184,7 +189,7 @@ def test_jdbc_backed_poll_cycle_publishes_and_snapshots_one_read(spark, derby, t
     finally:
         spark.catalog.dropTempView("omm_affected_departures")
     published = sorted(r.key for r in spark.read.parquet(sink).collect())
-    snapshot = sorted(r.dvj_id for r in store.read(spark).collect())
+    snapshot = sorted(r.key for r in store.read(spark).collect())
     assert after == len(full)  # the inserted rows are in the source
     assert snapshot == published
     assert counts["total"] == counts["new"] == len(published) == len(

@@ -153,6 +153,33 @@ def test_poll_cycle_times_and_warns_with_fake_clock(spark, tmp_path):
     assert "cancel_departure_combo" in done[0]
 
 
+def test_cycle_record_names_its_version_and_published_files(spark, tmp_path):
+    """The cycle record carries the snapshot version the cycle wrote and
+    the sink files it published (none without a sink), so a replayed or
+    crashed cycle can be matched to what it sent."""
+    import os
+
+    load_tables(spark, SF_SMOKE)
+    logger, handler = _capture_logger("t.record")
+    sink = tmp_path / "sink"
+    for sink_dir in (str(sink), None):
+        store = SnapshotStore(str(tmp_path / f"snap-{sink_dir is None}"))
+        for n in (1, 2):
+            before = set(os.listdir(sink)) if sink.exists() else set()
+            run_poll_cycle(
+                spark, store, QueryParams(mode="NOW"), sink_dir=sink_dir, logger=logger
+            )
+            done = json.loads(handler.lines[-1])
+            assert done["message"] == "Poll cycle complete"
+            assert done["snapshot_version"] == store.current_version() == n
+            added = sorted(set(os.listdir(sink)) - before)
+            assert done["published"] == (added if sink_dir else [])
+            if sink_dir:
+                assert len(added) == 1 and added[0].startswith("part-")
+                version = os.path.join(store.path, f"v{n}", added[0])
+                assert os.path.samefile(version, sink / added[0])
+
+
 def test_f8_combo_count_matches_direct_aggregation(spark, tmp_path):
     """Every testdata candidate carries the F8 pair, so the even
     deviation cases are shadowed to another valid affected-departure

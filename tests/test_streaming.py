@@ -4,6 +4,7 @@ poller query, config/env source, JDBC template binding.
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
@@ -165,7 +166,6 @@ def test_torn_pointer_write_keeps_previous_version(spark, tmp_path, monkeypatch)
 def test_missing_pointer_recovers_highest_complete_version(spark, tmp_path):
     """Without LATEST the store falls back to the highest version whose
     write completed; a version without _SUCCESS was torn and is skipped."""
-    import os
     import shutil
 
     snap = tmp_path / "snap"
@@ -188,6 +188,9 @@ def test_missing_pointer_recovers_highest_complete_version(spark, tmp_path):
 def test_sink_schema_check_reads_one_file(spark, tmp_path, monkeypatch):
     """The check reads one part file's footer on the driver, never the
     whole sink: no Spark job runs, yet a format flip still raises."""
+    from transitdata_omm_cancellation_source_spark.plans.cancellation import (
+        cancellation_pipeline,
+    )
     from transitdata_omm_cancellation_source_spark.streaming import poller
     from transitdata_omm_cancellation_source_spark.streaming.messages import (
         encode_messages,
@@ -198,7 +201,7 @@ def test_sink_schema_check_reads_one_file(spark, tmp_path, monkeypatch):
     sink = tmp_path / "sink"
     for _ in range(2):
         run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=str(sink))
-    records = store.read(spark)
+    records = cancellation_pipeline(spark, QueryParams(mode="NOW"))
     read_metadata = poller.pq.read_metadata
     footers = []
 
@@ -219,28 +222,27 @@ def test_sink_schema_check_reads_one_file(spark, tmp_path, monkeypatch):
         )
 
 
-def test_steady_state_cycle_runs_three_jobs(spark, tmp_path):
+def test_steady_state_cycle_runs_two_jobs(spark, tmp_path):
     """Past its first two cycles a poll cycle runs the broadcast of the
-    previous snapshot's keys, the sink append and the snapshot write:
-    the diff counts ride on the first write, the footers give the
-    schemas, and A2 reads the persisted frame without a shuffle."""
+    previous snapshot's keys and its one write, with or without a sink:
+    the sink gets that write's file by a link, the diff counts ride on
+    the write, the footers give the schemas, and A2 reads the persisted
+    frame without a shuffle."""
     load_tables(spark, SF_SMOKE)
-    for sink, most in ((str(tmp_path / "sink"), 3), (None, 2)):
-        store = SnapshotStore(str(tmp_path / f"snap-{most}"))
+    for sink in (str(tmp_path / "sink"), None):
+        store = SnapshotStore(str(tmp_path / f"snap-{sink is None}"))
         for _ in range(2):
             run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=sink)
         jobs = jobs_run_by(
             spark,
             lambda: run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=sink),
         )
-        assert jobs <= most, (sink, jobs)
+        assert jobs <= 2, (sink, jobs)
 
 
 def test_each_sink_cycle_appends_one_file(spark, tmp_path):
     """The sink grows by one parquet file a cycle, not one per partition
     of the candidate frame."""
-    import os
-
     load_tables(spark, SF_SMOKE)
     store = SnapshotStore(str(tmp_path / "snap"))
     sink = tmp_path / "sink"
@@ -251,9 +253,181 @@ def test_each_sink_cycle_appends_one_file(spark, tmp_path):
     assert spark.read.parquet(str(sink)).count() == 3 * store.read(spark).count() > 0
 
 
+#: poll clocks whose batches mix new and repeated rows at sf0.001
+CLOCKS = ["2024-01-19 00:00:00", "2024-01-15 00:00:00", "2024-01-10 00:00:00"]
+
+
+def _at(now: str) -> QueryParams:
+    return QueryParams(now=now, today=now[:10], mode="NOW")
+
+
+def _diff(counts: dict) -> tuple:
+    return counts["total"], counts["new"], counts["repeated"]
+
+
+def _sink_rows(spark, sink: str):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in spark.read.parquet(sink).collect())
+
+
+def _crash_run(spark, tmp_path, name, monkeypatch, publish):
+    """The three ``CLOCKS`` cycles with a sink, the second one first run
+    with ``poller._publish`` replaced by ``publish`` (which raises) and
+    then run again: the store, the sink and the counts of the cycles
+    that completed."""
+    from transitdata_omm_cancellation_source_spark.streaming import poller
+
+    store = SnapshotStore(str(tmp_path / name / "snap"))
+    sink = str(tmp_path / name / "sink")
+    counts = [run_poll_cycle(spark, store, _at(CLOCKS[0]), sink_dir=sink)]
+    with monkeypatch.context() as m:
+        m.setattr(poller, "_publish", publish)
+        with pytest.raises(RuntimeError, match="crash"):
+            run_poll_cycle(spark, store, _at(CLOCKS[1]), sink_dir=sink)
+    counts += [run_poll_cycle(spark, store, _at(now), sink_dir=sink) for now in CLOCKS[1:]]
+    return store, sink, counts
+
+
+def _uninterrupted(spark, tmp_path):
+    store = SnapshotStore(str(tmp_path / "clean" / "snap"))
+    sink = str(tmp_path / "clean" / "sink")
+    counts = [run_poll_cycle(spark, store, _at(now), sink_dir=sink) for now in CLOCKS]
+    return sink, counts
+
+
+def _crash(*_args):
+    raise RuntimeError("crash")
+
+
+def test_crash_after_staging_write_leaves_an_uninterrupted_run(spark, tmp_path, monkeypatch):
+    """A cycle that dies after its write, before any file reaches the
+    sink, left neither a sink file nor a version: its retry and the next
+    cycle leave the sink and counts of a run without the crash."""
+    load_tables(spark, SF_SMOKE)
+    sink, want = _uninterrupted(spark, tmp_path)
+    store, crashed, got = _crash_run(spark, tmp_path, "crash", monkeypatch, _crash)
+    assert [_diff(c) for c in got] == [_diff(c) for c in want]
+    assert all(c["new"] and c["repeated"] for c in want[1:])  # both flags seen
+    assert _sink_rows(spark, crashed) == _sink_rows(spark, sink)
+    assert store.current_version() == 3
+    assert sorted(p.name for p in (tmp_path / "crash" / "snap").iterdir()) == [
+        "LATEST", "v2", "v3",
+    ]
+
+
+def test_crash_after_publish_republishes_the_batch(spark, tmp_path, monkeypatch):
+    """A cycle that dies after its file reached the sink, before the
+    version is renamed into place, is retried against the previous
+    version: the sink holds that batch twice (at-least-once, as the
+    reference's re-emit), and every cycle counts as in an uninterrupted
+    run."""
+    from transitdata_omm_cancellation_source_spark.streaming import poller
+
+    publish = poller._publish
+
+    def publish_then_crash(src, dst):
+        publish(src, dst)
+        raise RuntimeError("crash")
+
+    load_tables(spark, SF_SMOKE)
+    sink, want = _uninterrupted(spark, tmp_path)
+    _, crashed, got = _crash_run(spark, tmp_path, "crash", monkeypatch, publish_then_crash)
+    assert [_diff(c) for c in got] == [_diff(c) for c in want]
+    (second,) = want[1]["published"]
+    batch = _sink_rows(spark, os.path.join(sink, second))
+    assert sum(batch.values()) == want[1]["total"] > 0
+    assert _sink_rows(spark, crashed) == _sink_rows(spark, sink) + batch
+
+
+def test_first_cycle_crash_before_publish_adopts_no_version(spark, tmp_path, monkeypatch):
+    """Without ``LATEST`` the store adopts the highest complete
+    ``v{k}``; a first cycle that dies after its write but before
+    publishing must not leave one, or the next cycle would count as
+    repeated rows that were never sent."""
+    from transitdata_omm_cancellation_source_spark.streaming import poller
+
+    load_tables(spark, SF_SMOKE)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    sink = str(tmp_path / "sink")
+    monkeypatch.setattr(poller, "_publish", _crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        run_poll_cycle(spark, store, _at(CLOCKS[0]), sink_dir=sink)
+    monkeypatch.undo()
+    assert store.current_version() is None
+    again = run_poll_cycle(spark, store, _at(CLOCKS[0]), sink_dir=sink)
+    assert again["new"] == again["total"] > 0
+    assert spark.read.parquet(sink).count() == again["total"]
+
+
+def test_publish_across_filesystems_copies_without_dot_files(spark, tmp_path, monkeypatch):
+    """Where ``os.link`` cannot link (another filesystem), the file is
+    copied under a dot name and renamed: the sink gets the same rows and
+    keeps no temporary file."""
+    import errno
+
+    def no_link(*_args):
+        raise OSError(errno.EXDEV, "Invalid cross-device link")
+
+    load_tables(spark, SF_SMOKE)
+    sink, want = _uninterrupted(spark, tmp_path)
+    monkeypatch.setattr(os, "link", no_link)
+    store = SnapshotStore(str(tmp_path / "copy" / "snap"))
+    copied = str(tmp_path / "copy" / "sink")
+    got = [run_poll_cycle(spark, store, _at(now), sink_dir=copied) for now in CLOCKS]
+    monkeypatch.undo()
+    assert [_diff(c) for c in got] == [_diff(c) for c in want]
+    assert _sink_rows(spark, copied) == _sink_rows(spark, sink)
+    names = os.listdir(copied)
+    assert sorted(names) == sorted(n for c in got for n in c["published"])
+    assert all(os.stat(os.path.join(copied, n)).st_nlink == 1 for n in names)
+
+
+def test_cycles_match_the_oracle_across_shuffle_partitions(spark, tmp_path):
+    """Seven shuffle partitions with AQE coalescing off, so the candidate
+    frame's rows hash across partitions instead of meeting in one: each
+    sink cycle adds one file, the snapshot holds the cycle's batch, and
+    total/new/repeated equal the DuckDB oracle's, cycle by cycle."""
+    from transitdata_omm_cancellation_source_spark.caching import forget
+    from transitdata_omm_cancellation_source_spark.plans.cancellation import (
+        cancellation_oracle_sql,
+        cancellation_pipeline,
+    )
+    from transitdata_omm_cancellation_source_spark.testing import duckdb_connection
+
+    partitions, coalesce = "spark.sql.shuffle.partitions", (
+        "spark.sql.adaptive.coalescePartitions.enabled"
+    )
+    before = spark.conf.get(partitions)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    sink = tmp_path / "sink"
+    con = duckdb_connection(SF_SMOKE)
+    prev: set = set()
+    spark.conf.set(partitions, "7")
+    try:
+        load_tables(spark, SF_SMOKE)  # loading re-applies the engine confs
+        spark.conf.set(coalesce, "false")
+        forget("cancellation.candidates")  # rebuilt at 7 partitions
+        assert cancellation_pipeline(spark, _at(CLOCKS[0])).rdd.getNumPartitions() == 7
+        for n, now in enumerate(CLOCKS, 1):
+            counts = run_poll_cycle(spark, store, _at(now), sink_dir=str(sink))
+            rows = set(con.execute(cancellation_oracle_sql(_at(now))).df()["dvj_id"])
+            new = len(rows - prev)
+            assert _diff(counts) == (len(rows), new, len(rows) - new), now
+            assert len([f for f in os.listdir(sink) if f.startswith("part-")]) == n
+            assert store.read(spark).count() == counts["total"]
+            prev = rows
+    finally:
+        con.close()
+        spark.conf.set(partitions, before)
+        spark.conf.set(coalesce, "true")
+        forget("cancellation.candidates")
+
+
 def test_previous_snapshot_with_repeated_keys_counts_each_row_once(spark, tmp_path):
-    """A3 compares by dvj_id only: a previous snapshot holding two rows
-    per dvj_id (two deviation cases) still flags each current row once."""
+    """A3 compares by dvj_id only: a previous snapshot holding two
+    messages per key (two deviation cases) still flags each current row
+    once."""
     from pyspark.sql import functions as F
 
     from transitdata_omm_cancellation_source_spark.operators.diff import diff_counts
@@ -271,7 +445,7 @@ def test_previous_snapshot_with_repeated_keys_counts_each_row_once(spark, tmp_pa
     first = run_poll_cycle(spark, store, QueryParams(mode="NOW"))
     snap = store.read(spark)
     twice = snap.unionByName(
-        snap.withColumn("deviation_case_id", F.col("deviation_case_id") + 1_000_000)
+        snap.withColumn("event_time_ms", F.col("event_time_ms") + 1)
     )
     store.replace(twice)
     again = run_poll_cycle(spark, store, QueryParams(mode="NOW"))
@@ -284,14 +458,15 @@ def test_previous_snapshot_with_repeated_keys_counts_each_row_once(spark, tmp_pa
 def test_empty_batch_cycle(spark, tmp_path):
     """A clock past every valid_to selects nothing: the cycle reports
     zero counts (an Observation on an empty write still reports), appends
-    no sink rows and leaves an empty snapshot whose footer gives its
-    schema; the next cycle on a normal clock finds every row new."""
-    import os
-
+    no sink rows and leaves an empty snapshot whose footer gives the
+    message schema; the next cycle on a normal clock finds every row new."""
     from transitdata_omm_cancellation_source_spark.plans.cancellation import (
         cancellation_pipeline,
     )
     from transitdata_omm_cancellation_source_spark.streaming import poller
+    from transitdata_omm_cancellation_source_spark.streaming.messages import (
+        encode_messages,
+    )
 
     load_tables(spark, SF_SMOKE)
     past_all = QueryParams(now="2099-01-01 00:00:00", today="2099-01-01", mode="NOW")
@@ -308,7 +483,8 @@ def test_empty_batch_cycle(spark, tmp_path):
         version = os.path.join(store.path, f"v{store.current_version()}")
         footer = poller._footer_schema(spark, poller._part_file(version))
         assert [(f.name, f.dataType) for f in footer] == [
-            (f.name, f.dataType) for f in cancellation_pipeline(spark, past_all).schema
+            (f.name, f.dataType)
+            for f in encode_messages(cancellation_pipeline(spark, past_all)).schema
         ]
         assert store.read(spark).count() == 0
         normal = run_poll_cycle(spark, store, QueryParams(mode="NOW"))

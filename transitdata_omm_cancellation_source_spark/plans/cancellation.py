@@ -294,11 +294,8 @@ def _candidate_plan(spark: SparkSession) -> tuple[DataFrame, bool]:
 
 
 def cancellation_pipeline(
-    spark: SparkSession,
-    params: QueryParams | None = None,
-    *,
-    report_persisted: bool = False,
-) -> DataFrame | tuple[DataFrame, bool]:
+    spark: SparkSession, params: QueryParams | None = None
+) -> DataFrame:
     """scan → join → filter → project → decode → dedup (E1 through A2).
 
     Requires base testdata views (catalog.load_tables) to be registered;
@@ -311,13 +308,9 @@ def cancellation_pipeline(
     keyed on its input files, and each call runs F2/F3 and A2 over it
     with no Exchange.  A plan with a leaf that is not a file scan (a JDBC
     read) cannot be fingerprinted; it runs uncached, and Catalyst pushes
-    F2/F3 into the join as in ``raw_cancellations``.
-
-    ``report_persisted=True`` returns ``(records, persisted)`` instead,
-    ``persisted`` telling whether ``records`` reads the persisted
-    candidate frame: a caller that reads the records more than once
-    persists them itself only when it is false, or each read re-runs
-    the source query and may see other rows.
+    F2/F3 into the join as in ``raw_cancellations``, so a caller that
+    reads the records more than once re-runs the source query each time
+    and may see other rows (the poll cycle reads them once).
     """
     p = params or QueryParams()
     candidates, persistable = omm_plan(spark, _CANDIDATES, _candidate_plan)
@@ -328,8 +321,7 @@ def cancellation_pipeline(
     current = candidates.where(
         _temporal(p, "VALID_TO", "ad_status", "OPERATING_DAY_DATE", "dc_last_modified")
     )
-    records = dedup_cancellations(current).drop("dc_last_modified", "ad_status", *_CLOCK_INPUTS)
-    return (records, persistable) if report_persisted else records
+    return dedup_cancellations(current).drop("dc_last_modified", "ad_status", *_CLOCK_INPUTS)
 
 
 # ---------------------------------------------------------------------------

@@ -22,11 +22,13 @@ re-host:
 
 At the reference's scale a cycle moves a few thousand rows, so its cost
 is the number of Spark jobs it runs, not their data.  A steady-state
-cycle runs three: the broadcast of the previous snapshot's keys, the
-sink append and the snapshot write (two without a sink).  The A3 counts
-are observed on the first write instead of collected by a job of their
-own, and the snapshot and sink schemas come from a parquet footer read
-on the driver instead of a schema-inference job.
+cycle runs two: the broadcast of the previous snapshot's keys and the
+cycle's one write.  That write is the batch as published — the encoded
+messages, one parquet file — and it becomes the next snapshot version;
+with a sink, the same file is hard-linked into it, so publishing runs
+no job.  The A3 counts are observed on that write instead of collected
+by a job of their own, and the snapshot and sink schemas come from a
+parquet footer read on the driver instead of a schema-inference job.
 """
 
 from __future__ import annotations
@@ -44,7 +46,7 @@ from pyspark.sql.types import StructType
 
 from ..observability import get_json_logger, monotonic_ms, warn_if_slow
 # diff_counts is not called here; perfbench/spans.py patches it by name
-from ..operators.diff import SEEN, diff_aggregates, diff_counts, flag_seen  # noqa: F401
+from ..operators.diff import diff_aggregates, diff_counts, flag_seen  # noqa: F401
 from ..plans.cancellation import QueryParams, cancellation_pipeline
 from .messages import encode_messages
 
@@ -52,11 +54,17 @@ from .messages import encode_messages
 class SnapshotStore:
     """Versioned parquet store for the cross-poll snapshot (A3 state).
 
-    Writes go to a fresh ``v{n}`` directory, then a new ``LATEST``
-    pointer is renamed into place — a reader never observes a
-    half-written snapshot or pointer, and the previous version stays
-    readable while the new one writes (the same read-then-replace cycle
-    the reference does in memory at ``OmmCancellationHandler.java:225``).
+    A version holds the batch a cycle published: ``key | value |
+    event_time_ms | prop_dvj_id | prop_schema``, the reference's
+    ``previousCancellations`` (``OmmCancellationHandler.java:22,225``).
+    ``replace`` goes stage -> publish -> rename -> ``LATEST``: Spark
+    writes the batch into ``_staging``, a name ``current_version`` never
+    adopts; its part files are linked into the sink; the staging
+    directory is renamed to ``v{n}``; and a new ``LATEST`` pointer is
+    renamed into place.  A reader never observes a half-written snapshot
+    or pointer, the previous version stays readable while the new one
+    writes, and every version the no-``LATEST`` fallback can adopt has
+    been published.
     """
 
     def __init__(self, path: str):
@@ -91,9 +99,24 @@ class SnapshotStore:
         path = os.path.join(self.path, f"v{v}")
         return spark.read.schema(_footer_schema(spark, _part_file(path))).parquet(path)
 
-    def replace(self, df: DataFrame) -> None:
+    def replace(self, df: DataFrame, publish_dir: str | None = None) -> tuple[int, list[str]]:
+        """Write ``df`` as the next version, publishing its part files
+        into ``publish_dir`` first when one is given.  Returns the new
+        version and the names of the files published."""
         v = (self.current_version() or 0) + 1
-        df.write.mode("overwrite").parquet(os.path.join(self.path, f"v{v}"))
+        staging = os.path.join(self.path, _STAGING)
+        df.write.mode("overwrite").parquet(staging)
+        published = []
+        if publish_dir is not None:
+            os.makedirs(publish_dir, exist_ok=True)
+            for name in sorted(os.listdir(staging)):
+                if name.startswith("part-"):
+                    _publish(os.path.join(staging, name), os.path.join(publish_dir, name))
+                    published.append(name)
+        final = os.path.join(self.path, f"v{v}")
+        # a crash between an earlier rename and its LATEST flip left v{v}
+        shutil.rmtree(final, ignore_errors=True)
+        os.rename(staging, final)
         # write-then-rename: a torn write leaves the old pointer intact
         tmp = self._pointer() + ".tmp"
         with open(tmp, "w") as fh:
@@ -108,6 +131,24 @@ class SnapshotStore:
                 continue
             if k is not None and k < v - 1:
                 shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+        return v, published
+
+
+#: where ``replace`` writes a version before publishing it; not ``v{k}``,
+#: so ``current_version`` never adopts an unpublished batch
+_STAGING = "_staging"
+
+
+def _publish(src: str, dst: str) -> None:
+    """Put ``src`` into the sink as ``dst`` without a Spark job: a hard
+    link, or across filesystems a copy under a dot name (which Spark's
+    readers skip) renamed into place, so no reader sees half a file."""
+    try:
+        os.link(src, dst)
+    except OSError:
+        tmp = os.path.join(os.path.dirname(dst), "." + os.path.basename(dst))
+        shutil.copyfile(src, tmp)
+        os.replace(tmp, dst)
 
 
 #: Spark's own schema in the footer of every parquet file it writes
@@ -184,46 +225,37 @@ def run_poll_cycle(
 
     - ``cancel_departure_combo`` — F8 special-cased rows
       (``OmmCancellationHandler.java:243-247``), counted with the diff;
+    - ``snapshot_version`` and ``published`` — the version this cycle
+      wrote and the sink file names it published (empty without a sink),
+      so a replayed or crashed cycle can be matched to what it sent;
     - ``duration_ms`` — the cycle's wall time; a JSON-structured
       warning fires above the reference's 4000 ms SLO
       (``OmmConnector.java:86-89``).  ``clock`` is injectable for
       deterministic tests.
 
-    The counts are a ``pyspark.sql.Observation`` on the cycle's first
-    write, the sink append (or, without a sink, the snapshot write),
-    over the current rows flagged by ``flag_seen``; the order stays
-    publish, then replace state, and the counts are read only after that
-    write succeeded.  Over a file source ``cur`` reads the persisted
-    candidate frame, and re-deriving it for the snapshot write costs less
-    than the job that would fill a cache.  Over a source with no
-    candidate frame (a JDBC read) a cycle with a sink persists ``cur``,
-    so one read of the source serves both writes and the snapshot holds
-    the rows just published.  The append is one parquet file per cycle
-    (a few thousand rows), not one per partition of the candidate
-    frame, so the sink grows by one file a cycle on any session.
+    The cycle encodes the current rows, flagged by ``flag_seen`` against
+    the previous version's keys, and writes them once: one parquet file
+    (a few thousand rows, so the sink grows by one file a cycle on any
+    session), through ``SnapshotStore.replace``, which publishes that
+    file into the sink before it becomes the new version.  The counts
+    are a ``pyspark.sql.Observation`` on that write, read only after it
+    succeeded.  The source is read once, so over any source — the
+    persisted candidate frame or a JDBC read — the snapshot holds
+    exactly the rows just published.
     """
     logger = logger or get_json_logger()
     t0 = clock()
-    cur, persisted = cancellation_pipeline(spark, params, report_persisted=True)
-    keep = sink_dir is not None and not persisted
-    if keep:
-        cur.persist()
-    try:
-        counted = Observation()
-        flagged = flag_seen(cur, store.read(spark)).observe(
-            counted, *diff_aggregates(), F.expr(_F8_COMBO)
-        )
-        if sink_dir is None:
-            store.replace(flagged.drop(SEEN))
-        else:
-            messages = encode_messages(flagged, value_format=value_format)
-            _check_sink_schema(spark, sink_dir, messages)
-            messages.coalesce(1).write.mode("append").parquet(sink_dir)
-            store.replace(cur)
-    finally:
-        if keep:
-            cur.unpersist()
-    counts = counted.get
+    prev = store.read(spark)
+    counted = Observation()
+    flagged = flag_seen(
+        cancellation_pipeline(spark, params),
+        None if prev is None else prev.select(F.col("key").alias("dvj_id")),
+    ).observe(counted, *diff_aggregates(), F.expr(_F8_COMBO))
+    messages = encode_messages(flagged, value_format=value_format)
+    if sink_dir is not None:
+        _check_sink_schema(spark, sink_dir, messages)
+    version, published = store.replace(messages.coalesce(1), sink_dir)
+    counts = {**counted.get, "snapshot_version": version, "published": published}
     counts["duration_ms"] = clock() - t0
     warn_if_slow(logger, counts["duration_ms"])
     logger.info(
