@@ -142,9 +142,9 @@ def test_jdbc_backed_poll_cycle_publishes_and_snapshots_one_read(
 ):
     """Over a JDBC source there is no persisted candidate frame, and the
     cycle reads the source once: a row inserted after the cycle's one
-    write, before that write's file is published, reaches neither the
-    sink nor the snapshot, and the snapshot holds exactly the rows just
-    published."""
+    job (the batch's collect), before the batch's file is published,
+    reaches neither the sink nor the snapshot, and the snapshot holds
+    exactly the rows just published."""
     from transitdata_omm_cancellation_source_spark.catalog import load_tables
     from transitdata_omm_cancellation_source_spark.plans.cancellation import (
         QueryParams,

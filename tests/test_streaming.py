@@ -91,11 +91,11 @@ def test_snapshot_store_versioning(spark, tmp_path):
     store = SnapshotStore(str(tmp_path / "snap"))
     assert store.read(spark) is None
     df = spark.range(5).withColumnRenamed("id", "dvj_id")
-    store.replace(df)
+    store.replace(df.toArrow())
     assert store.current_version() == 1
     assert store.read(spark).count() == 5
-    store.replace(spark.range(3).withColumnRenamed("id", "dvj_id"))
-    store.replace(spark.range(2).withColumnRenamed("id", "dvj_id"))
+    store.replace(spark.range(3).withColumnRenamed("id", "dvj_id").toArrow())
+    store.replace(spark.range(2).withColumnRenamed("id", "dvj_id").toArrow())
     assert store.current_version() == 3  # v1 pruned, v2 kept, v3 current
     assert store.read(spark).count() == 2
 
@@ -109,12 +109,12 @@ def test_replace_prunes_every_stale_version(spark, tmp_path):
     snap = tmp_path / "snap"
     store = SnapshotStore(str(snap))
     for n in (3, 2, 4):
-        store.replace(spark.range(n).withColumnRenamed("id", "dvj_id"))
+        store.replace(spark.range(n).withColumnRenamed("id", "dvj_id").toArrow())
     # v1 left behind, as by a crash right after v3's LATEST replace
     shutil.copytree(snap / "v2", snap / "v1")
     (snap / "vnotes").mkdir()  # not a version: left alone
-    store.replace(spark.range(5).withColumnRenamed("id", "dvj_id"))
-    store.replace(spark.range(6).withColumnRenamed("id", "dvj_id"))
+    store.replace(spark.range(5).withColumnRenamed("id", "dvj_id").toArrow())
+    store.replace(spark.range(6).withColumnRenamed("id", "dvj_id").toArrow())
     assert store.current_version() == 5
     assert sorted(p.name for p in snap.iterdir()) == [
         "LATEST",
@@ -134,7 +134,7 @@ def test_torn_pointer_write_keeps_previous_version(spark, tmp_path, monkeypatch)
     from transitdata_omm_cancellation_source_spark.streaming import poller
 
     store = SnapshotStore(str(tmp_path / "snap"))
-    store.replace(spark.range(3).withColumnRenamed("id", "dvj_id"))
+    store.replace(spark.range(3).withColumnRenamed("id", "dvj_id").toArrow())
     assert store.current_version() == 1
 
     class _TornFile:
@@ -156,7 +156,7 @@ def test_torn_pointer_write_keeps_previous_version(spark, tmp_path, monkeypatch)
 
     monkeypatch.setattr(poller, "open", torn_open, raising=False)
     with pytest.raises(OSError, match="disk full"):
-        store.replace(spark.range(2).withColumnRenamed("id", "dvj_id"))
+        store.replace(spark.range(2).withColumnRenamed("id", "dvj_id").toArrow())
     monkeypatch.undo()
 
     assert store.current_version() == 1
@@ -170,8 +170,8 @@ def test_missing_pointer_recovers_highest_complete_version(spark, tmp_path):
 
     snap = tmp_path / "snap"
     store = SnapshotStore(str(snap))
-    store.replace(spark.range(3).withColumnRenamed("id", "dvj_id"))
-    store.replace(spark.range(10, 12).withColumnRenamed("id", "dvj_id"))
+    store.replace(spark.range(3).withColumnRenamed("id", "dvj_id").toArrow())
+    store.replace(spark.range(10, 12).withColumnRenamed("id", "dvj_id").toArrow())
     os.remove(snap / "LATEST")
     assert store.current_version() == 2
     assert sorted(r.dvj_id for r in store.read(spark).collect()) == [10, 11]
@@ -180,7 +180,7 @@ def test_missing_pointer_recovers_highest_complete_version(spark, tmp_path):
     os.remove(snap / "v3" / "_SUCCESS")
     assert store.current_version() == 2
     assert sorted(r.dvj_id for r in store.read(spark).collect()) == [10, 11]
-    store.replace(spark.range(7).withColumnRenamed("id", "dvj_id"))
+    store.replace(spark.range(7).withColumnRenamed("id", "dvj_id").toArrow())
     assert store.current_version() == 3
     assert store.read(spark).count() == 7
 
@@ -222,12 +222,13 @@ def test_sink_schema_check_reads_one_file(spark, tmp_path, monkeypatch):
         )
 
 
-def test_steady_state_cycle_runs_two_jobs(spark, tmp_path):
-    """Past its first two cycles a poll cycle runs the broadcast of the
-    previous snapshot's keys and its one write, with or without a sink:
-    the sink gets that write's file by a link, the diff counts ride on
-    the write, the footers give the schemas, and A2 reads the persisted
-    frame without a shuffle."""
+def test_steady_state_cycle_runs_one_job(spark, tmp_path):
+    """Past its first two cycles a poll cycle runs one job, the collect
+    of its batch, with or without a sink: the previous keys come from a
+    parquet file read on the driver, the diff, the write and the publish
+    run on the driver, the F8 count rides on the collect, the footers
+    give the schemas, and A2 reads the persisted frame without a
+    shuffle."""
     load_tables(spark, SF_SMOKE)
     for sink in (str(tmp_path / "sink"), None):
         store = SnapshotStore(str(tmp_path / f"snap-{sink is None}"))
@@ -237,7 +238,7 @@ def test_steady_state_cycle_runs_two_jobs(spark, tmp_path):
             spark,
             lambda: run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=sink),
         )
-        assert jobs <= 2, (sink, jobs)
+        assert jobs <= 1, (sink, jobs)
 
 
 def test_each_sink_cycle_appends_one_file(spark, tmp_path):
@@ -289,10 +290,13 @@ def _crash_run(spark, tmp_path, name, monkeypatch, publish):
     return store, sink, counts
 
 
-def _uninterrupted(spark, tmp_path):
+def _uninterrupted(spark, tmp_path, value_format="json"):
     store = SnapshotStore(str(tmp_path / "clean" / "snap"))
     sink = str(tmp_path / "clean" / "sink")
-    counts = [run_poll_cycle(spark, store, _at(now), sink_dir=sink) for now in CLOCKS]
+    counts = [
+        run_poll_cycle(spark, store, _at(now), sink_dir=sink, value_format=value_format)
+        for now in CLOCKS
+    ]
     return sink, counts
 
 
@@ -447,7 +451,7 @@ def test_previous_snapshot_with_repeated_keys_counts_each_row_once(spark, tmp_pa
     twice = snap.unionByName(
         snap.withColumn("event_time_ms", F.col("event_time_ms") + 1)
     )
-    store.replace(twice)
+    store.replace(twice.toArrow())
     again = run_poll_cycle(spark, store, QueryParams(mode="NOW"))
     assert first["total"] > 0
     assert (again["total"], again["new"], again["repeated"]) == (
@@ -455,9 +459,155 @@ def test_previous_snapshot_with_repeated_keys_counts_each_row_once(spark, tmp_pa
     )
 
 
+#: a clock past every valid_to: the batch is empty
+PAST_ALL = QueryParams(now="2099-01-01 00:00:00", today="2099-01-01", mode="NOW")
+
+
+def _spark_diff(spark, store, params) -> tuple:
+    """The Spark A3 operator over the records of ``params`` and the
+    store's current version: what the cycle's driver diff must count."""
+    from pyspark.sql import functions as F
+
+    from transitdata_omm_cancellation_source_spark.operators.diff import diff_counts
+    from transitdata_omm_cancellation_source_spark.plans.cancellation import (
+        cancellation_pipeline,
+    )
+
+    prev = store.read(spark)
+    if prev is not None:
+        prev = prev.select(F.col("key").alias("dvj_id"))
+    return tuple(diff_counts(cancellation_pipeline(spark, params), prev).first())
+
+
+@pytest.mark.parametrize(
+    "case", ["first_then_steady", "repeated_prev_keys", "empty_prev", "protobuf"]
+)
+def test_driver_diff_matches_the_spark_operator(spark, tmp_path, case):
+    """Over every ``CLOCKS`` cycle, the counts the cycle takes on the
+    driver equal ``diff_counts`` over the same records and the version
+    the cycle diffs against: with no version yet, with a previous
+    version holding each key twice, with a 0-row previous version, and
+    for protobuf messages."""
+    from pyspark.sql import functions as F
+
+    load_tables(spark, SF_SMOKE)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    value_format = "protobuf" if case == "protobuf" else "json"
+    got, want = [], []
+    for now in CLOCKS:
+        if case == "empty_prev":
+            run_poll_cycle(spark, store, PAST_ALL)
+            assert store.read(spark).count() == 0
+        elif case == "repeated_prev_keys" and store.current_version() is not None:
+            snap = store.read(spark)
+            twice = snap.unionByName(
+                snap.withColumn("event_time_ms", F.col("event_time_ms") + 1)
+            )
+            store.replace(twice.toArrow())
+        want.append(_spark_diff(spark, store, _at(now)))
+        got.append(_diff(run_poll_cycle(spark, store, _at(now), value_format=value_format)))
+    assert got == want
+    if case == "empty_prev":
+        assert all(new == total > 0 for total, new, _ in want)
+    else:
+        assert want[0][1] == want[0][0] > 0  # the first cycle: every row new
+        assert all(new and repeated for _, new, repeated in want[1:])
+
+
+@pytest.mark.parametrize("value_format", ["json", "protobuf"])
+def test_cycle_continues_a_store_and_sink_written_by_spark(spark, tmp_path, value_format):
+    """A store and sink whose last version Spark's writer made (one
+    ``coalesce(1)`` part file in ``v1``, linked into the sink): the next
+    cycle diffs against that version, passes the sink schema check and
+    leaves the counts and sink rows of a run that wrote every file on
+    the driver; the sink reads as one schema across both writers."""
+    from transitdata_omm_cancellation_source_spark.plans.cancellation import (
+        cancellation_pipeline,
+    )
+    from transitdata_omm_cancellation_source_spark.streaming import poller
+    from transitdata_omm_cancellation_source_spark.streaming.messages import (
+        encode_messages,
+    )
+
+    load_tables(spark, SF_SMOKE)
+    clean, want = _uninterrupted(spark, tmp_path, value_format)
+    snap, sink = tmp_path / "spark" / "snap", tmp_path / "spark" / "sink"
+    messages = encode_messages(
+        cancellation_pipeline(spark, _at(CLOCKS[0])), value_format=value_format
+    )
+    messages.coalesce(1).write.parquet(str(snap / "v1"))
+    (snap / "LATEST").write_text("1")
+    old = poller._part_file(str(snap / "v1"))
+    sink.mkdir()
+    os.link(old, sink / os.path.basename(old))
+    store = SnapshotStore(str(snap))
+    got = run_poll_cycle(
+        spark, store, _at(CLOCKS[1]), sink_dir=str(sink), value_format=value_format
+    )
+    assert _diff(got) == _diff(want[1]) and got["repeated"] > 0
+    (new,) = got["published"]
+    footers = [
+        poller._footer_schema(spark, str(sink / f)) for f in (os.path.basename(old), new)
+    ]
+    assert footers[0] == footers[1] == messages.schema
+    # names + types: Spark reads a directory back as nullable
+    read = spark.read.parquet(str(sink)).schema
+    assert [(f.name, f.dataType) for f in read] == [
+        (f.name, f.dataType) for f in messages.schema
+    ]
+    assert _sink_rows(spark, str(sink)) == _sink_rows(spark, clean) - _sink_rows(
+        spark, os.path.join(clean, want[2]["published"][0])
+    )
+
+
+def test_crash_inside_the_driver_write_adopts_no_version(spark, tmp_path, monkeypatch):
+    """A cycle whose parquet write dies after creating its file leaves
+    no ``_SUCCESS``, no new version and no sink file: the retry and the
+    next cycle leave the counts and sink rows of an uninterrupted run.
+    ``_SUCCESS`` is opened only once the part file is closed, footer and
+    all."""
+    import builtins
+
+    import pyarrow.parquet as pq
+
+    from transitdata_omm_cancellation_source_spark.streaming import poller
+
+    def torn_write(_table, where, **_kwargs):
+        with open(where, "wb") as fh:
+            fh.write(b"PAR1")  # the header; the footer never comes
+        raise RuntimeError("crash")
+
+    closed = []
+
+    def open_after_close(path, *args, **kwargs):
+        if os.path.basename(path) == "_SUCCESS":
+            part = poller._part_file(os.path.dirname(path))
+            closed.append(pq.read_metadata(part).num_rows)
+        return builtins.open(path, *args, **kwargs)
+
+    load_tables(spark, SF_SMOKE)
+    sink, want = _uninterrupted(spark, tmp_path)
+    store = SnapshotStore(str(tmp_path / "crash" / "snap"))
+    crashed = str(tmp_path / "crash" / "sink")
+    monkeypatch.setattr(poller, "open", open_after_close, raising=False)
+    got = [run_poll_cycle(spark, store, _at(CLOCKS[0]), sink_dir=crashed)]
+    with monkeypatch.context() as m:
+        m.setattr(pq, "write_table", torn_write)
+        with pytest.raises(RuntimeError, match="crash"):
+            run_poll_cycle(spark, store, _at(CLOCKS[1]), sink_dir=crashed)
+    staging = tmp_path / "crash" / "snap" / "_staging"
+    assert [p.name.startswith("part-") for p in staging.iterdir()] == [True]
+    assert store.current_version() == 1
+    assert os.listdir(crashed) == got[0]["published"]
+    got += [run_poll_cycle(spark, store, _at(now), sink_dir=crashed) for now in CLOCKS[1:]]
+    assert [_diff(c) for c in got] == [_diff(c) for c in want]
+    assert _sink_rows(spark, crashed) == _sink_rows(spark, sink)
+    assert closed == [c["total"] for c in got]
+
+
 def test_empty_batch_cycle(spark, tmp_path):
     """A clock past every valid_to selects nothing: the cycle reports
-    zero counts (an Observation on an empty write still reports), appends
+    zero counts (an Observation on an empty collect still reports), appends
     no sink rows and leaves an empty snapshot whose footer gives the
     message schema; the next cycle on a normal clock finds every row new."""
     from transitdata_omm_cancellation_source_spark.plans.cancellation import (
@@ -469,13 +619,12 @@ def test_empty_batch_cycle(spark, tmp_path):
     )
 
     load_tables(spark, SF_SMOKE)
-    past_all = QueryParams(now="2099-01-01 00:00:00", today="2099-01-01", mode="NOW")
     for sink in (str(tmp_path / "sink"), None):
         store = SnapshotStore(str(tmp_path / f"snap-{sink is None}"))
         if sink is not None:
             run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=sink)
         sunk = spark.read.parquet(sink).count() if sink else 0
-        empty = run_poll_cycle(spark, store, past_all, sink_dir=sink)
+        empty = run_poll_cycle(spark, store, PAST_ALL, sink_dir=sink)
         assert (empty["total"], empty["new"], empty["repeated"]) == (0, 0, 0)
         assert empty["cancel_departure_combo"] == 0
         if sink is not None:
@@ -484,7 +633,7 @@ def test_empty_batch_cycle(spark, tmp_path):
         footer = poller._footer_schema(spark, poller._part_file(version))
         assert [(f.name, f.dataType) for f in footer] == [
             (f.name, f.dataType)
-            for f in encode_messages(cancellation_pipeline(spark, past_all)).schema
+            for f in encode_messages(cancellation_pipeline(spark, PAST_ALL)).schema
         ]
         assert store.read(spark).count() == 0
         normal = run_poll_cycle(spark, store, QueryParams(mode="NOW"))

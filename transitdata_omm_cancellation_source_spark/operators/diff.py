@@ -10,14 +10,18 @@ Spark plans as an ExistenceJoin (broadcast or shuffled hash) — O(n) per
 executor, valid at any scale, and with no ``distinct`` stage: a key the
 previous batch holds twice still flags each current row once.
 
-``diff_counts`` aggregates the flag into the log line's counts; the poll
-cycle instead observes the same aggregates (``diff_aggregates``) on its
-first write, so the counts cost no job of their own.
+``diff_counts`` aggregates the flag into the log line's counts.  The
+poll cycle computes the same counts on the driver, from the batch it
+collects anyway: a set-membership test of its keys against the previous
+version's ``key`` column (``pyarrow.compute.is_in``), which likewise
+counts each current row once.  This operator stays the relational form
+for frames that live in Spark (the registry's ``a3_snapshot_diff_counts``)
+and the reference the cycle's counts are tested against.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: the existence flag ``flag_seen`` adds: true when the previous batch
@@ -35,17 +39,12 @@ def flag_seen(cur: DataFrame, prev: DataFrame | None, key: str = "dvj_id") -> Da
     return c.select("*", seen.alias(SEEN))
 
 
-def diff_aggregates() -> list[Column]:
-    """(total, new, repeated) over a ``flag_seen`` frame — the reference's
-    log line (``OmmCancellationHandler.java:206-224``)."""
-    return [
+def diff_counts(cur: DataFrame, prev: DataFrame | None, key: str = "dvj_id") -> DataFrame:
+    """One-row DataFrame (total, new, repeated) — the reference's log line
+    (``OmmCancellationHandler.java:206-224``): one aggregation pass over
+    the existence flag."""
+    return flag_seen(cur, prev, key).agg(
         F.expr("count(1) AS total"),
         F.expr(f"count_if(NOT {SEEN}) AS new"),
         F.expr(f"count_if({SEEN}) AS repeated"),
-    ]
-
-
-def diff_counts(cur: DataFrame, prev: DataFrame | None, key: str = "dvj_id") -> DataFrame:
-    """One-row DataFrame (total, new, repeated): one aggregation pass over
-    the existence flag."""
-    return flag_seen(cur, prev, key).agg(*diff_aggregates())
+    )

@@ -13,8 +13,7 @@ re-host:
                          simplest correct form of A3's state
 - the driver-held snapshot -> a versioned parquet ``SnapshotStore``
                          (survives restarts, unlike the reference's
-                         in-memory list; distributed, so a 100 TB
-                         snapshot never funnels through the driver)
+                         in-memory list)
 - at-least-once re-emit: each cycle re-publishes the full current
                          result set, exactly like the reference —
                          intentionally NOT deduplicated on send
@@ -22,13 +21,15 @@ re-host:
 
 At the reference's scale a cycle moves a few thousand rows, so its cost
 is the number of Spark jobs it runs, not their data.  A steady-state
-cycle runs two: the broadcast of the previous snapshot's keys and the
-cycle's one write.  That write is the batch as published — the encoded
-messages, one parquet file — and it becomes the next snapshot version;
-with a sink, the same file is hard-linked into it, so publishing runs
-no job.  The A3 counts are observed on that write instead of collected
-by a job of their own, and the snapshot and sink schemas come from a
-parquet footer read on the driver instead of a schema-inference job.
+cycle runs one: the collect of the encoded batch as an Arrow table.
+Everything after it happens on the driver, as in the reference's
+handler: the A3 diff is a set-membership count of the batch's keys
+against the previous version's ``key`` column, read from that version's
+parquet file; the batch is written as one parquet file that becomes the
+next snapshot version; and with a sink, the same file is hard-linked
+into it.  The F8 count is an ``Observation`` on the collect, and the
+snapshot and sink schemas come from parquet footers read on the driver
+instead of a schema-inference job.
 """
 
 from __future__ import annotations
@@ -36,17 +37,21 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.streaming import StreamingQueryListener
 from pyspark.sql.types import StructType
 
 from ..observability import get_json_logger, monotonic_ms, warn_if_slow
 # diff_counts is not called here; perfbench/spans.py patches it by name
-from ..operators.diff import diff_aggregates, diff_counts, flag_seen  # noqa: F401
+from ..operators.diff import diff_counts  # noqa: F401
 from ..plans.cancellation import QueryParams, cancellation_pipeline
 from .messages import encode_messages
 
@@ -56,15 +61,22 @@ class SnapshotStore:
 
     A version holds the batch a cycle published: ``key | value |
     event_time_ms | prop_dvj_id | prop_schema``, the reference's
-    ``previousCancellations`` (``OmmCancellationHandler.java:22,225``).
-    ``replace`` goes stage -> publish -> rename -> ``LATEST``: Spark
-    writes the batch into ``_staging``, a name ``current_version`` never
-    adopts; its part files are linked into the sink; the staging
-    directory is renamed to ``v{n}``; and a new ``LATEST`` pointer is
-    renamed into place.  A reader never observes a half-written snapshot
-    or pointer, the previous version stays readable while the new one
-    writes, and every version the no-``LATEST`` fallback can adopt has
-    been published.
+    ``previousCancellations`` (``OmmCancellationHandler.java:22,225``),
+    as one parquet file.  ``replace`` goes stage -> publish -> rename ->
+    ``LATEST``: the driver writes the batch into ``_staging``, a name
+    ``current_version`` never adopts; its part file is linked into the
+    sink; the staging directory is renamed to ``v{n}``; and a new
+    ``LATEST`` pointer is renamed into place.  A reader never observes a
+    half-written snapshot or pointer, the previous version stays
+    readable while the new one writes, and every version the
+    no-``LATEST`` fallback can adopt has been published.
+
+    The batch passes through the driver, which bounds it by the driver's
+    memory (``spark.driver.maxResultSize`` fails an oversized one
+    loudly).  That bound is the reference's own: the batch is the live
+    cancellations, the set its handler holds in a driver-side list; and
+    a batch published as one sink file passes through one process,
+    whichever process writes it.
     """
 
     def __init__(self, path: str):
@@ -90,29 +102,53 @@ class SnapshotStore:
         ]
         return max(complete, default=None)
 
+    def _current_dir(self) -> str | None:
+        v = self.current_version()
+        return None if v is None else os.path.join(self.path, f"v{v}")
+
     def read(self, spark: SparkSession) -> DataFrame | None:
         """The current version, its schema taken from one part file's
         footer so that no schema-inference job runs."""
-        v = self.current_version()
-        if v is None:
+        path = self._current_dir()
+        if path is None:
             return None
-        path = os.path.join(self.path, f"v{v}")
         return spark.read.schema(_footer_schema(spark, _part_file(path))).parquet(path)
 
-    def replace(self, df: DataFrame, publish_dir: str | None = None) -> tuple[int, list[str]]:
-        """Write ``df`` as the next version, publishing its part files
+    def keys(self) -> pa.ChunkedArray:
+        """The current version's ``key`` column, read on the driver from
+        its part file with no Spark job; empty before the first version."""
+        path = self._current_dir()
+        if path is None:
+            return pa.chunked_array([], pa.string())
+        return pq.read_table(_part_file(path), columns=["key"])["key"]
+
+    def replace(self, table: pa.Table, publish_dir: str | None = None) -> tuple[int, list[str]]:
+        """Write ``table`` as the next version, publishing its part file
         into ``publish_dir`` first when one is given.  Returns the new
-        version and the names of the files published."""
+        version and the names of the files published.
+
+        The part file is named and laid out as Spark's writer would
+        (snappy, Spark's schema under its footer key), so ``read``,
+        ``_footer_schema`` and Spark's readers of the sink treat it as
+        one of theirs; ``_SUCCESS`` follows once that file is closed."""
         v = (self.current_version() or 0) + 1
         staging = os.path.join(self.path, _STAGING)
-        df.write.mode("overwrite").parquet(staging)
+        shutil.rmtree(staging, ignore_errors=True)
+        os.makedirs(staging)
+        part = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+        spark_schema = from_arrow_schema(table.schema).json()
+        pq.write_table(
+            table.replace_schema_metadata({_SPARK_SCHEMA_KEY: spark_schema}),
+            os.path.join(staging, part),
+            compression="snappy",
+        )
+        with open(os.path.join(staging, "_SUCCESS"), "w"):
+            pass
         published = []
         if publish_dir is not None:
             os.makedirs(publish_dir, exist_ok=True)
-            for name in sorted(os.listdir(staging)):
-                if name.startswith("part-"):
-                    _publish(os.path.join(staging, name), os.path.join(publish_dir, name))
-                    published.append(name)
+            _publish(os.path.join(staging, part), os.path.join(publish_dir, part))
+            published.append(part)
         final = os.path.join(self.path, f"v{v}")
         # a crash between an earlier rename and its LATEST flip left v{v}
         shutil.rmtree(final, ignore_errors=True)
@@ -151,7 +187,8 @@ def _publish(src: str, dst: str) -> None:
         os.replace(tmp, dst)
 
 
-#: Spark's own schema in the footer of every parquet file it writes
+#: Spark's own schema in the footer of every parquet file it (and
+#: ``SnapshotStore.replace``) writes
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
@@ -176,7 +213,7 @@ def _footer_schema(spark: SparkSession, part: str) -> StructType:
 
 #: F8 — the deviation/affected-departure type pair the reference logs
 #: specially (``OmmCancellationHandler.java:243-247``), counted per
-#: cycle with the diff counts
+#: cycle on the batch's collect
 _F8_COMBO = (
     "count_if(deviation_cases_type = 'CANCEL_DEPARTURE'"
     " AND affected_departures_type = 'CANCEL_ENTIRE_DEPARTURE') AS cancel_departure_combo"
@@ -218,7 +255,8 @@ def run_poll_cycle(
     logger=None,
     value_format: str = "json",
 ) -> dict:
-    """One tick: pipeline -> diff vs snapshot -> publish -> replace state.
+    """One tick: pipeline -> collect -> diff vs snapshot -> publish ->
+    replace state.
 
     Returns the reference's log-line counts {total, new, repeated}
     (``OmmCancellationHandler.java:206-224``) plus:
@@ -233,29 +271,39 @@ def run_poll_cycle(
       (``OmmConnector.java:86-89``).  ``clock`` is injectable for
       deterministic tests.
 
-    The cycle encodes the current rows, flagged by ``flag_seen`` against
-    the previous version's keys, and writes them once: one parquet file
-    (a few thousand rows, so the sink grows by one file a cycle on any
-    session), through ``SnapshotStore.replace``, which publishes that
-    file into the sink before it becomes the new version.  The counts
-    are a ``pyspark.sql.Observation`` on that write, read only after it
-    succeeded.  The source is read once, so over any source — the
-    persisted candidate frame or a JDBC read — the snapshot holds
-    exactly the rows just published.
+    The cycle's one Spark job collects the encoded batch as an Arrow
+    table; F8 is a ``pyspark.sql.Observation`` on that collect.  The
+    rest runs on the driver.  A3 counts the batch's rows whose key the
+    previous version holds — each current row once, however often the
+    previous batch holds its key, as ``diff_counts``'s ``EXISTS`` does.
+    ``SnapshotStore.replace`` then writes the table as one parquet file
+    (the sink grows by one file a cycle) and publishes it into the sink
+    before it becomes the new version.  The source is read once, so over
+    any source — the persisted candidate frame or a JDBC read — the
+    snapshot holds exactly the rows just published.
     """
     logger = logger or get_json_logger()
     t0 = clock()
-    prev = store.read(spark)
     counted = Observation()
-    flagged = flag_seen(
-        cancellation_pipeline(spark, params),
-        None if prev is None else prev.select(F.col("key").alias("dvj_id")),
-    ).observe(counted, *diff_aggregates(), F.expr(_F8_COMBO))
-    messages = encode_messages(flagged, value_format=value_format)
+    messages = encode_messages(
+        cancellation_pipeline(spark, params).observe(counted, F.expr(_F8_COMBO)),
+        value_format=value_format,
+    )
     if sink_dir is not None:
         _check_sink_schema(spark, sink_dir, messages)
-    version, published = store.replace(messages.coalesce(1), sink_dir)
-    counts = {**counted.get, "snapshot_version": version, "published": published}
+    table = messages.toArrow()
+    # skip_nulls: a null key matches nothing, as under SQL's ``=``
+    seen = pc.is_in(table["key"], value_set=store.keys(), skip_nulls=True)
+    repeated = pc.sum(seen, min_count=0).as_py()
+    version, published = store.replace(table, sink_dir)
+    counts = {
+        "total": table.num_rows,
+        "new": table.num_rows - repeated,
+        "repeated": repeated,
+        **counted.get,
+        "snapshot_version": version,
+        "published": published,
+    }
     counts["duration_ms"] = clock() - t0
     warn_if_slow(logger, counts["duration_ms"])
     logger.info(
